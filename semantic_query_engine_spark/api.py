@@ -11,11 +11,18 @@ Reference endpoints -> methods:
        preserving the reference's divergence on this path)
 - POST /upload_text    (A22/A23, /root/reference/app/embedding_gen.py:315-409)
     -> .upload_text(user_id, filename, content, batch_ts)
-- kNN search           (A15) -> .search(query, k) -> DataFrame
+- kNN search           (A15) -> .search(query, k, qvec=None) -> DataFrame
 
 State:
-- chunk index: a DataFrame (persist via plans.index_build.write_index)
-- semantic LFU cache (A12-A14): a DataFrame maintained by operators.cache
+- chunk index: a DataFrame (persist via plans.index_build.write_index),
+  the cached build plus each upload's chunks, materialized once per
+  upload and folded into a new base every MAX_UPLOAD_SEGMENTS uploads
+- semantic LFU cache (A12-A14): plain driver memory, at most
+  `cache_capacity` rows of a numpy matrix — like the reference's
+  client-side scan over a Redis list.  operators.cache holds the same
+  rules as DataFrame plans, for cache tables kept in Spark.
+- query embedding: computed on the driver (TfIdfEmbedder.embed_one),
+  so a cache-miss ask runs one Spark job, the top-k over the index
 - conversation memory (A21): per-chat in-process buffer, like the
   reference's dict — but INITIALIZED (the reference's memory_store is
   never created in __init__, /root/reference/app/main.py:408-411 vs
@@ -27,6 +34,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import Iterator, Optional
 
+import numpy as np
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
@@ -34,11 +42,13 @@ from .functions.vectors import cosine, vector_lit
 from .ml.embedder import TfIdfEmbedder
 from .operators import cache as cache_ops
 from .operators.chunking import chunk_documents
-from .operators.retrieval import topk_similar
 from .plans.rag import SYSTEM_RULES
 from .functions.plan import truncate_eager
 
 DEFAULT_TOP_K = 3  # /root/reference/app/main.py:467
+# uploads kept as separate materialized segments before they are folded
+# into one new base: bounds the union a search plans over
+MAX_UPLOAD_SEGMENTS = 8
 
 
 def _default_generator(prompt: str) -> str:
@@ -68,11 +78,21 @@ class SemanticQueryEngine:
         # delta loop, app/main.py:638-643) plugs in here; None falls
         # back to word-chunking the completed answer
         self.generate_stream = generate_stream_fn
+        if cache_capacity < 1:
+            raise ValueError("cache_capacity must be at least 1")
         self.cache_capacity = cache_capacity
         self.cache_threshold = cache_threshold
         self.index: Optional[DataFrame] = None
+        # the materialized part of the index that uploads are unioned onto
+        self._base: Optional[DataFrame] = None
+        self._upload_segments = 0
         self._embedder: Optional[TfIdfEmbedder] = None
-        self._cache: Optional[DataFrame] = None
+        # the LFU cache: row i is entry _cache_ids[i]; ids are the insert
+        # sequence, so (freq, id) is the eviction order
+        self._cache_emb = np.empty((0, dim))
+        self._cache_ids = np.empty(0, dtype=np.int64)
+        self._cache_freq = np.empty(0, dtype=np.int64)
+        self._cache_responses: list[str] = []
         self._cache_seq = 0
         # A21 — initialized, unlike the reference (app/main.py:408-411)
         self.memory_store: dict[str, list[tuple[str, str]]] = {}
@@ -84,7 +104,9 @@ class SemanticQueryEngine:
     def build_from_documents(self, docs: DataFrame) -> "SemanticQueryEngine":
         """Index build (A27): clean -> chunk -> embed -> normalize.
         Skips nothing here — idempotence guards live on the persisted
-        path (plans.index_build.index_is_empty)."""
+        path (plans.index_build.index_is_empty).  doc_id is indexed as a
+        string, the type upload ids have."""
+        docs = docs.withColumn("doc_id", F.col("doc_id").cast("string"))
         chunks = chunk_documents(docs, chunk_size=self.chunk_size)
         if chunks.isEmpty():
             # without this, MLlib's IDF.fit dies with the cryptic
@@ -98,7 +120,8 @@ class SemanticQueryEngine:
         self._embedder = TfIdfEmbedder(
             dim=self.dim, text_col="chunk_text", out_col="embedding"
         ).fit(chunks)
-        self.index = self._embedder.transform(chunks).cache()
+        self.index = self._base = self._embedder.transform(chunks).cache()
+        self._upload_segments = 0
         return self
 
     def build_from_corpus_dir(self, corpus_dir: str) -> "SemanticQueryEngine":
@@ -110,7 +133,10 @@ class SemanticQueryEngine:
         self, user_id: str, filename: str, content: str, batch_ts: int
     ) -> str:
         """A23: validate filename/extension, derive doc_id stem_ts,
-        index the chunks under the tenant.  Returns the doc_id."""
+        index the chunks under the tenant.  Returns the doc_id.
+
+        The upload's embedded chunks are materialized here, once, so
+        later searches scan them instead of re-running their plan."""
         if not filename:
             raise ValueError("filename must be non-empty")
         if not filename.endswith(".txt"):
@@ -125,15 +151,22 @@ class SemanticQueryEngine:
             self._embedder = TfIdfEmbedder(
                 dim=self.dim, text_col="chunk_text", out_col="embedding"
             ).fit(chunks)
-        embedded = self._embedder.transform(chunks).withColumn(
-            "user_id", F.lit(user_id)
+        embedded = (
+            self._embedder.transform(chunks)
+            .withColumn("user_id", F.lit(user_id))
+            .transform(truncate_eager)
         )
-        base = self.index
-        self.index = (
-            embedded
-            if base is None
-            else base.unionByName(embedded, allowMissingColumns=True)
-        )
+        if self.index is None:
+            self.index = self._base = embedded
+            return doc_id
+        self.index = self.index.unionByName(embedded, allowMissingColumns=True)
+        self._upload_segments += 1
+        if self._upload_segments > MAX_UPLOAD_SEGMENTS:
+            folded = self.index.transform(truncate_eager)
+            if self._base is not None:
+                self._base.unpersist()
+            self.index = self._base = folded
+            self._upload_segments = 0
         return doc_id
 
     # ------------------------------------------------------------------
@@ -145,18 +178,20 @@ class SemanticQueryEngine:
             raise RuntimeError("no index built; call build_from_documents first")
         return self.index
 
-    def _embed_query(self, query: str) -> list[float]:
-        """A6: embed one query through the same model; empty -> zeros
-        (/root/reference/app/main.py:172-180)."""
+    def _embed_query(self, query: str) -> np.ndarray:
+        """A6: embed one query through the same model, on the driver;
+        empty -> zeros (reference app/main.py:172-180)."""
         if not query or not query.strip():
-            return [0.0] * self.dim
-        one = self.spark.createDataFrame([(query,)], "chunk_text string")
-        row = self._embedder.transform(one).select("embedding").head()
-        return [float(x) for x in row.embedding]
+            return np.zeros(self.dim)
+        return self._embedder.embed_one(query)
 
-    def search(self, query: str, k: int = DEFAULT_TOP_K) -> DataFrame:
-        """A15: top-k chunks for a text query."""
-        qvec = self._embed_query(query)
+    def search(
+        self, query: str, k: int = DEFAULT_TOP_K, qvec: Optional[np.ndarray] = None
+    ) -> DataFrame:
+        """A15: top-k chunks for a text query (or its embedding `qvec`,
+        when the caller already has it)."""
+        if qvec is None:
+            qvec = self._embed_query(query)
         index = self._require_index()
         scored = index.withColumn(
             "score", cosine(F.col("embedding"), vector_lit(qvec))
@@ -188,37 +223,52 @@ class SemanticQueryEngine:
         parts.append(f"Question: {query}")
         return "\n\n".join(parts)
 
-    def _cache_probe(self, qvec: list[float]) -> Optional[str]:
-        """A12: top-1 cosine over cache entries >= threshold; bumps freq
-        on hit."""
-        if self._cache is None:
+    def _cache_probe(self, qvec: np.ndarray) -> Optional[str]:
+        """A12: the entry of highest cosine >= threshold (ties: lowest
+        entry id); bumps its freq on hit.  Same rule and arithmetic as
+        operators.cache.probe, so a score at the threshold decides the
+        same way."""
+        if not self._cache_ids.size:
             return None
-        hit = cache_ops.probe(self._cache, qvec, self.cache_threshold).collect()
-        if not hit:
+        scores = _cosine_rows(self._cache_emb, qvec)
+        ok = np.flatnonzero(scores >= self.cache_threshold)
+        if not ok.size:
             return None
-        self._cache = cache_ops.bump_freq(self._cache, hit[0].entry_id)
-        return hit[0].response
+        best = ok[np.lexsort((self._cache_ids[ok], -scores[ok]))[0]]
+        self._cache_freq[best] += 1
+        return self._cache_responses[best]
 
-    def _cache_put(self, qvec: list[float], response: str) -> None:
-        """A14: insert with freq=1, LFU-evicting at capacity."""
+    def _cache_put(self, qvec: np.ndarray, response: str) -> None:
+        """A14: insert with freq=1; at capacity the new entry replaces
+        the LFU one, lowest (freq, insert order)."""
         self._cache_seq += 1
-        entry = self.spark.createDataFrame(
-            [(self._cache_seq, qvec, response, 1, self._cache_seq)],
-            "entry_id long, embedding array<double>, response string, "
-            "freq long, insert_seq long",
-        )
-        if self._cache is None:
-            self._cache = entry
-        else:
-            self._cache = cache_ops.put(self._cache, entry, self.cache_capacity)
-        # Each probe/put chains another column rewrite onto the cache
-        # plan; unchecked, lineage grows per interaction and every probe
-        # replays the whole rewrite history.  Truncate it periodically —
-        # the same pattern operators/graph.py uses for its loop.  The
-        # cache is capacity-bounded (<= `cache_capacity` rows) so the
-        # materialization is tiny.
-        if self._cache_seq % 16 == 0:
-            self._cache = self._cache.transform(truncate_eager)
+        row = np.asarray(qvec, dtype=np.float64)
+        if self._cache_ids.size < self.cache_capacity:
+            self._cache_emb = np.vstack([self._cache_emb, row])
+            self._cache_ids = np.append(self._cache_ids, self._cache_seq)
+            self._cache_freq = np.append(self._cache_freq, 1)
+            self._cache_responses.append(response)
+            return
+        i = np.lexsort((self._cache_ids, self._cache_freq))[0]
+        self._cache_emb[i] = row
+        self._cache_ids[i] = self._cache_seq
+        self._cache_freq[i] = 1
+        self._cache_responses[i] = response
+
+    def _lookup(
+        self, query: str, top_k: int
+    ) -> tuple[Optional[np.ndarray], Optional[str], list[Row]]:
+        """The shared front of ask / ask_stream: guard -> embed (once) ->
+        cache probe -> retrieve.  Returns (query vector, the answer when
+        it is already known — guard message or cache hit — else None,
+        the retrieved hits)."""
+        if not query or not query.strip():
+            return None, "No query provided.", []  # guard (app/main.py:477-481)
+        qvec = self._embed_query(query)
+        cached = self._cache_probe(qvec)
+        if cached is not None:
+            return qvec, cached, []
+        return qvec, None, self.search(query, top_k, qvec=qvec).collect()
 
     def ask(
         self, query: str, chat_id: Optional[str] = None, top_k: int = DEFAULT_TOP_K
@@ -226,13 +276,9 @@ class SemanticQueryEngine:
         """A20, the flagship path: guards -> embed -> cache probe ->
         retrieve -> assemble -> prompt -> generate -> memory+cache write.
         """
-        if not query or not query.strip():
-            return "No query provided."  # guard (app/main.py:477-481)
-        qvec = self._embed_query(query)
-        cached = self._cache_probe(qvec)
-        if cached is not None:
-            return cached
-        hits = self.search(query, top_k).collect()
+        qvec, answer, hits = self._lookup(query, top_k)
+        if answer is not None:
+            return answer
         context = self._assemble_context(hits)
         history = ""
         if chat_id is not None:
@@ -260,15 +306,10 @@ class SemanticQueryEngine:
         the reference's delta loop at app/main.py:638-643) and the
         full answer is accumulated for the post-stream cache write.
         Otherwise the completed answer is chunked by words."""
-        if not query or not query.strip():
-            yield "No query provided."
+        qvec, answer, hits = self._lookup(query, top_k)
+        if answer is not None:
+            yield answer
             return
-        qvec = self._embed_query(query)
-        cached = self._cache_probe(qvec)
-        if cached is not None:
-            yield cached
-            return
-        hits = self.search(query, top_k).collect()
         prompt = self._build_prompt(query, self._assemble_context(hits), "")
         if self.generate_stream is not None:
             parts: list[str] = []
@@ -286,7 +327,27 @@ class SemanticQueryEngine:
     # ------------------------------------------------------------------
 
     def cache_stats(self) -> dict:
-        if self._cache is None:
-            return {"entries": 0}
-        rows = self._cache.select("entry_id", "freq").collect()
-        return {"entries": len(rows), "total_hits": sum(r.freq for r in rows)}
+        return {
+            "entries": int(self._cache_ids.size),
+            "total_hits": int(self._cache_freq.sum()),
+        }
+
+
+def _seq_dot(m: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """Row-wise m @ v, summed left to right from 0.0 as
+    functions.vectors.dot folds it, so scores are bit-identical to the
+    Spark plans' (a BLAS dot may reorder the sum)."""
+    acc = np.zeros(m.shape[0])
+    for j in range(m.shape[1]):
+        acc = acc + m[:, j] * v[j]
+    return acc
+
+
+def _cosine_rows(m: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """functions.vectors.cosine of each row of m against v, zero-norm
+    guard included."""
+    nm = np.sqrt(_seq_dot(m * m, np.ones(m.shape[1])))
+    nv = np.sqrt(_seq_dot(v[None, :] * v, np.ones(len(v)))[0])
+    with np.errstate(divide="ignore", invalid="ignore"):
+        s = _seq_dot(m, v) / (nm * nv)
+    return np.where((nm == 0.0) | (nv == 0.0), 0.0, s)

@@ -132,9 +132,13 @@ def with_cosine(
     # the temp names collide with df.select('*', ...) below if the input
     # already carries them (e.g. two nested with_cosine calls with the
     # same `out`) — fail loudly at plan-build time instead of with an
-    # ambiguous-column analyzer error downstream (ADVICE r14)
+    # ambiguous-column analyzer error downstream (ADVICE r14).  A norm
+    # temp exists only when the caller did not pass that norm.
     taken = set(df.columns)
-    for tmp in (dot_tmp, f"__{out}_norm_a", f"__{out}_norm_b"):
+    temps = [dot_tmp]
+    temps += [f"__{out}_norm_a"] if norm_a is None else []
+    temps += [f"__{out}_norm_b"] if norm_b is None else []
+    for tmp in temps:
         if tmp in taken:
             raise ValueError(
                 f"with_cosine temp column {tmp!r} already exists in the "

@@ -22,14 +22,60 @@ L2-normalizable array<double>.
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable, Iterator
 from typing import Optional
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_DIM = 64  # fixture dim; the reference uses 1024 (app/main.py:38)
+
+# MLlib Tokenizer splits the lower-cased text on Java's `\s`
+_JAVA_SPACE = re.compile(r"[ \t\n\x0B\f\r]")
+_HASH_SEED = 42  # HashingTF's murmur3 seed
+_M32 = 0xFFFFFFFF
+
+
+def _tokenize(text: str) -> list[str]:
+    """MLlib Tokenizer: `text.toLowerCase.split("\\s")`.  Java's split
+    keeps leading empty tokens (runs of whitespace hash "" too) and
+    drops trailing ones; a string without a separator is its own token."""
+    tokens = _JAVA_SPACE.split(text.lower())
+    if len(tokens) == 1:
+        return tokens
+    while tokens and not tokens[-1]:
+        tokens.pop()
+    return tokens
+
+
+def _mix_k1(k1: int) -> int:
+    k1 = (k1 * 0xCC9E2D51) & _M32
+    k1 = ((k1 << 15) | (k1 >> 17)) & _M32
+    return (k1 * 0x1B873593) & _M32
+
+
+def murmur3_32(data: bytes) -> int:
+    """murmur3_x86_32 of `data` with HashingTF's seed (it hashes a
+    term's UTF-8 bytes), as a signed 32-bit int."""
+    h1 = _HASH_SEED
+    n = len(data)
+    aligned = n - n % 4
+    for i in range(0, aligned, 4):
+        h1 ^= _mix_k1(int.from_bytes(data[i : i + 4], "little"))
+        h1 = ((h1 << 13) | (h1 >> 19)) & _M32
+        h1 = (h1 * 5 + 0xE6546B64) & _M32
+    if aligned < n:
+        h1 ^= _mix_k1(int.from_bytes(data[aligned:], "little"))
+    h1 ^= n
+    h1 ^= h1 >> 16
+    h1 = (h1 * 0x85EBCA6B) & _M32
+    h1 ^= h1 >> 13
+    h1 = (h1 * 0xC2B2AE35) & _M32
+    h1 ^= h1 >> 16
+    return h1 - (1 << 32) if h1 & 0x80000000 else h1
 
 
 class TfIdfEmbedder:
@@ -40,6 +86,7 @@ class TfIdfEmbedder:
         self.text_col = text_col
         self.out_col = out_col
         self._model = None
+        self._idf: Optional[tuple] = None  # (model, its IDF vector)
 
     def fit(self, docs: DataFrame) -> "TfIdfEmbedder":
         from pyspark.ml import Pipeline
@@ -67,6 +114,20 @@ class TfIdfEmbedder:
         return out.withColumn(self.out_col, vector_to_array(F.col("__tfidf"))).drop(
             "__tokens", "__tf", "__tfidf"
         )
+
+    def embed_one(self, text: str) -> np.ndarray:
+        """One text's embedding computed on the driver, bit-identical to
+        `transform` (no Spark job): Tokenizer, then HashingTF's term
+        counts at `murmur3 mod dim`, then times the fitted IDF vector,
+        which is fetched from the model once, on first use."""
+        if self._model is None:
+            raise RuntimeError("call fit() first")
+        if self._idf is None or self._idf[0] is not self._model:
+            self._idf = (self._model, self._model.stages[-1].idf.toArray())
+        tf = np.zeros(self.dim)
+        for tok in _tokenize(text):
+            tf[murmur3_32(tok.encode("utf-8")) % self.dim] += 1.0
+        return tf * self._idf[1]
 
 
 def embed_with_pandas_udf(

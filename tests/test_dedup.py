@@ -64,7 +64,7 @@ def test_simhash_identical_and_perturbed(spark):
         )
         col_form = {
             r.doc_id: r.sig
-            for r in base.select(
+            for r in df.select(
                 "doc_id", simhash(F.col("text"), portable).alias("sig")
             ).collect()
         }
