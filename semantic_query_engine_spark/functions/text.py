@@ -45,6 +45,22 @@ def words_of(c: ColumnOrName) -> Column:
     return F.filter(F.split(clean_text(c), r"\s+"), lambda w: w != F.lit(""))
 
 
+def sql_ident(name: str) -> str:
+    """Backquoted SQL identifier for a column name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def words_sql(c: str) -> str:
+    """words_of rendered as ONE SQL expression over the SQL operand `c`
+    (same functions, same arguments), for plans assembled from parsed
+    strings instead of py4j-composed Columns.  The filter's lambda
+    variable is `__w`, so `c` must not reference a column of that name."""
+    return (
+        rf"filter(split(trim(regexp_replace({c}, '\n', ' ')), '\\s+'), "
+        "__w -> __w != '')"
+    )
+
+
 def token_count(c: ColumnOrName) -> Column:
     return F.size(words_of(c))
 

@@ -19,9 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import fingerprint, words_of
+from ..functions.text import fingerprint, sql_ident, words_sql
 from ..functions.vectors import cosine_from_norms, l2_norm
 from ..functions.plan import truncate_plan
+from .simhash import portable_word_hash, portable_word_hash_sql
 
 
 def exact_dedup(
@@ -40,24 +41,31 @@ def exact_dedup(
     return docs.join(keep, id_col, "left_semi")
 
 
-def word_shingles(text_col, n: int = 3):
-    """Distinct word n-gram shingle array for one document."""
-    ws = words_of(text_col)
-    count = F.greatest(F.lit(1), F.size(ws) - F.lit(n - 1))
-    grams = F.transform(
-        F.sequence(F.lit(0), count - 1),
-        lambda i: F.array_join(F.slice(ws, i + 1, n), " "),
+def _shingles_sql(text: str, n: int) -> str:
+    """Distinct word n-gram shingle array of the SQL operand `text`, as
+    ONE SQL expression: words_of's tokens (empty/whitespace text yields
+    the single shingle ''), the n-grams as space-joined slices, then
+    array_distinct.  The one definition of the shingle rule."""
+    ws = words_sql(text)
+    return (
+        f"array_distinct(transform(sequence(0, greatest(1, size({ws}) - {n - 1}) - 1), "
+        f"__i -> array_join(slice({ws}, __i + 1, {n}), ' ')))"
     )
-    return F.array_distinct(grams)
+
+
+def word_shingles(text_col: str, n: int = 3):
+    """Distinct word n-gram shingle array for one document; `text_col`
+    is a column name."""
+    return F.expr(_shingles_sql(sql_ident(text_col), n))
 
 
 def shingle_table(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
 ) -> DataFrame:
     """(id, shingle) exploded table + per-doc shingle counts."""
-    return docs.select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(F.col(text_col), n)).alias("shingle"),
+    return docs.selectExpr(
+        f"{sql_ident(id_col)} AS id",
+        f"explode({_shingles_sql(sql_ident(text_col), n)}) AS shingle",
     )
 
 
@@ -133,9 +141,59 @@ def jaccard_pairs(
 def _p64(col) -> F.Column:
     """md5-derived signed 64-bit hash (DuckDB-reproducible) — see
     simhash.portable_word_hash."""
-    from .simhash import portable_word_hash
-
     return portable_word_hash(col)
+
+
+def _band_table(
+    sh: DataFrame, num_perm: int, n_bands: int, portable: bool
+) -> DataFrame:
+    """(id, band, key) banding table over an (id, shingle) table; see
+    minhash_band_table."""
+    if num_perm % n_bands:
+        raise ValueError("num_perm must divide into n_bands")
+    r = num_perm // n_bands
+    if portable:
+        # permutation i = md5-derived hash of "i|shingle"; band key =
+        # the r signature slots rendered as one string (an equality key
+        # needs no hashing — portable mode trades key bytes for a
+        # DuckDB-reproducible pipeline; production mode hashes them)
+        slot = portable_word_hash_sql("concat(CAST(__i AS STRING), '|', shingle)")
+        key_of = lambda mhs: "concat_ws(',', {})".format(  # noqa: E731
+            ", ".join(f"CAST({m} AS STRING)" for m in mhs)
+        )
+    else:
+        # xxhash64(shingle, i): i is an INT lambda variable, the same
+        # type (and therefore the same hash) as a literal int seed
+        slot = "xxhash64(shingle, __i)"
+        key_of = lambda mhs: f"xxhash64({', '.join(mhs)})"  # noqa: E731
+    # The signature is an element-wise min over num_perm hash slots.
+    # r14 shape: ONE posexplode of a num_perm-wide hash array + ONE
+    # min() aggregate keyed (id, slot), reassembled per id with
+    # array_sort(collect_list(struct)).  The previous shape — num_perm
+    # separate min() aggregates in one groupBy — generated a whole-
+    # stage-codegen class so large that javac+JIT warmup dominated the
+    # first executions (measured 7.6/3.3/2.7/2.4 s across runs at
+    # sf0.1 vs 6.7/5.4/1.8/1.8 for this shape) and steady state was
+    # ~25% slower.  Values are identical: min per slot is min per
+    # slot, whatever the grouping.  Shuffle volume is the same
+    # (id, slot, min-hash) triples after map-side combine vs one
+    # num_perm-wide row per id.
+    e = sh.selectExpr(
+        "id",
+        f"posexplode(transform(sequence(0, {num_perm - 1}), __i -> {slot})) AS (i, h)",
+    )
+    sig = e.groupBy("id", "i").agg(F.expr("min(h) AS mh"))
+    # slot index is unique per id, so the struct sort reassembles the
+    # signature in slot order deterministically
+    asm = sig.groupBy("id").agg(
+        F.expr("array_sort(collect_list(struct(i, mh))) AS a")
+    )
+    bands = ", ".join(
+        f"named_struct('band', {b}, 'key', "
+        f"{key_of([f'a[{b * r + j}].mh' for j in range(r)])})"
+        for b in range(n_bands)
+    )
+    return asm.selectExpr("id", f"inline(array({bands}))")
 
 
 def minhash_band_table(
@@ -157,62 +215,19 @@ def minhash_band_table(
     near-dup candidate generation becomes an equality join on
     (band, key).  For a pair at Jaccard s the detect probability is
     1-(1-s^r)^b (r=4, b=16: s=0.8 -> 0.9998, s=0.15 -> 0.008 — high
-    recall at the near-dup range, tiny false-candidate rate)."""
-    if num_perm % n_bands:
-        raise ValueError("num_perm must divide into n_bands")
-    r = num_perm // n_bands
-    sh = shingle_table(docs, text_col, id_col, n)
-    # The signature is an element-wise min over num_perm hash slots.
-    # r14 shape: ONE posexplode of a num_perm-wide hash array + ONE
-    # min() aggregate keyed (id, slot), reassembled per id with
-    # array_sort(collect_list(struct)).  The previous shape — num_perm
-    # separate min() aggregates in one groupBy — generated a whole-
-    # stage-codegen class so large that javac+JIT warmup dominated the
-    # first executions (measured 7.6/3.3/2.7/2.4 s across runs at
-    # sf0.1 vs 6.7/5.4/1.8/1.8 for this shape) and steady state was
-    # ~25% slower.  Values are identical: min per slot is min per
-    # slot, whatever the grouping.  Shuffle volume is the same
-    # (id, slot, min-hash) triples after map-side combine vs one
-    # num_perm-wide row per id.
-    if portable:
-        # permutation i = md5-derived hash of "i|shingle"; band key =
-        # the r signature slots rendered as one string (an equality key
-        # needs no hashing — portable mode trades key bytes for a
-        # DuckDB-reproducible pipeline; production mode hashes them)
-        hs = F.transform(
-            F.sequence(F.lit(0), F.lit(num_perm - 1)),
-            lambda i: _p64(
-                F.concat(i.cast("string"), F.lit("|"), F.col("shingle"))
-            ),
-        )
-        key_of = lambda b: F.concat_ws(  # noqa: E731
-            ",", *[F.col("a")[b * r + j]["mh"].cast("string") for j in range(r)]
-        )
-    else:
-        # xxhash64(shingle, i): i rides as an INT column element, the
-        # same type (and therefore the same hash) as the old F.lit(i)
-        hs = F.transform(
-            F.sequence(F.lit(0), F.lit(num_perm - 1)),
-            lambda i: F.xxhash64(F.col("shingle"), i),
-        )
-        key_of = lambda b: F.xxhash64(  # noqa: E731
-            *[F.col("a")[b * r + j]["mh"] for j in range(r)]
-        )
-    e = sh.select("id", F.posexplode(hs).alias("i", "h"))
-    sig = e.groupBy("id", "i").agg(F.min("h").alias("mh"))
-    # slot index is unique per id, so the struct sort reassembles the
-    # signature in slot order deterministically
-    asm = sig.groupBy("id").agg(
-        F.array_sort(F.collect_list(F.struct("i", "mh"))).alias("a")
-    )
-    bands = F.array(
-        *[
-            F.struct(F.lit(b).alias("band"), key_of(b).alias("key"))
-            for b in range(n_bands)
-        ]
-    )
-    return asm.select("id", F.explode(bands).alias("bb")).select(
-        "id", F.col("bb.band").alias("band"), F.col("bb.key").alias("key")
+    recall at the near-dup range, tiny false-candidate rate).
+
+    PLAN NOTE (the simhash_from_hashes_named class): the slot hash
+    array, the n_bands band keys and the shingle array are each ONE SQL
+    string parsed JVM-side.  Composed as Python Columns — one py4j
+    round-trip per function, literal, cast and field access, for
+    num_perm slots and n_bands x r key fields — the same plan cost
+    ~3,400-5,900 py4j calls and ~0.15 s per build; as strings it costs
+    ~70-180 calls and ~0.02 s.  Values are bit-identical to the Column
+    form in both hash modes (tests/test_dedup.py keeps that form as the
+    reference and compares band tables and pairs with exact ==)."""
+    return _band_table(
+        shingle_table(docs, text_col, id_col, n), num_perm, n_bands, portable
     )
 
 
@@ -236,51 +251,47 @@ def minhash_lsh_pairs(
     the candidate pairs back to the (id, shingle-hash) table, so
     precision is exact and banding only affects recall.  Shingles cross
     the shuffle as 8-byte xxhash64 values, not strings (64-bit collisions
-    are negligible next to the reference-class HashingTF 2^18 buckets)."""
+    are negligible next to the reference-class HashingTF 2^18 buckets).
+
+    PLAN NOTE: the band table and the confirm table both derive from ONE
+    lazily truncated (id, shingle) table, so `docs` (and, under a lazy
+    caller, its whole upstream scan + dedup) is tokenized and shingled
+    once, not once per derivation; with the SQL-string band keys (see
+    minhash_band_table) building this plan costs ~230-420 py4j calls,
+    down from 4,300-5,700 for the Column-composed form."""
+    # (id, shingle) feeds the signature build AND the confirm table's
+    # sizes/ea/eb: truncated once, the tokenize+shingle+explode chain
+    # runs once per document.
+    sh = shingle_table(docs, text_col, id_col, n).transform(truncate_plan)
     # Truncate the band table before the self-join (r14): both sides
     # derive from `bt`, so the 64-permutation signature aggregation ran
     # TWICE without it (the same shared-tiny-table rule dedup_eval_lsh
     # applies to its own bt).  n_bands rows of (id, band, key) per doc.
-    bt = minhash_band_table(
-        docs, num_perm, n_bands, text_col, id_col, n, portable
-    ).transform(truncate_plan)
-    a, b = bt.alias("a"), bt.alias("b")
+    bt = _band_table(sh, num_perm, n_bands, portable).transform(truncate_plan)
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") < F.col("b.id")),
+        bt.alias("a")
+        .join(
+            bt.alias("b"),
+            F.expr("a.band = b.band AND a.key = b.key AND a.id < b.id"),
         )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .selectExpr("a.id AS id_a", "b.id AS id_b")
         .distinct()
     )
-    sh_hash = _p64(F.col("shingle")) if portable else F.xxhash64("shingle")
-    # Truncated for the same reason as jaccard_pairs' sh: feeds sizes,
-    # ea and eb — 3 derivations of the shingle explode + hash without it.
-    sh = shingle_table(docs, text_col, id_col, n).select(
-        "id", sh_hash.alias("sh")
-    ).transform(truncate_plan)
-    sizes = sh.groupBy("id").agg(F.count("*").alias("ns"))
-    ea = sh.select(F.col("id").alias("id_a"), "sh")
-    eb = sh.select(F.col("id").alias("id_b"), "sh")
+    sh_hash = portable_word_hash_sql("shingle") if portable else "xxhash64(shingle)"
+    hs = sh.selectExpr("id", f"{sh_hash} AS sh")
+    sizes = hs.groupBy("id").agg(F.expr("count(*) AS ns"))
     inter = (
-        cand.join(ea, "id_a")
-        .join(eb, ["id_b", "sh"])
+        cand.join(hs.selectExpr("id AS id_a", "sh"), "id_a")
+        .join(hs.selectExpr("id AS id_b", "sh"), ["id_b", "sh"])
         .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
+        .agg(F.expr("count(*) AS inter"))
     )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("ns").alias("na"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("ns").alias("nb"))
-    dist = 1.0 - F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
-    ).cast("double")
+    dist = "1.0D - CAST(inter AS DOUBLE) / CAST(na + nb - inter AS DOUBLE)"
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("jaccard_dist", F.round(dist, 6))
+        inter.join(sizes.selectExpr("id AS id_a", "ns AS na"), "id_a")
+        .join(sizes.selectExpr("id AS id_b", "ns AS nb"), "id_b")
+        .selectExpr("id_a", "id_b", f"round({dist}, 6) AS jaccard_dist")
         .filter(F.col("jaccard_dist") <= F.lit(threshold))
-        .select("id_a", "id_b", "jaccard_dist")
     )
 
 

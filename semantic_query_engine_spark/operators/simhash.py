@@ -42,6 +42,15 @@ def portable_word_hash(w) -> F.Column:
     return F.shiftleft(hi, 32).bitwiseOR(lo)
 
 
+def portable_word_hash_sql(w: str) -> str:
+    """portable_word_hash rendered as one SQL expression over the SQL
+    operand `w` (same functions, same arguments, same types)."""
+    half = "CAST(conv(substring(md5({w}), {start}, 8), 16, 10) AS BIGINT)"
+    hi = half.format(w=w, start=1)
+    lo = half.format(w=w, start=9)
+    return f"(shiftleft({hi}, 32) | {lo})"
+
+
 def word_hashes(text_col, portable: bool = False) -> F.Column:
     """array<long> of per-word 64-bit hashes — the tokenize+hash stage,
     meant to be PRE-PROJECTED as a real column before simhash_from_hashes

@@ -1163,7 +1163,7 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     def grams(df: DataFrame, id_alias: str) -> DataFrame:
         return df.select(
             F.col("doc_id").alias(id_alias),
-            F.explode(word_shingles(F.col("text"), 8)).alias("gram"),
+            F.explode(word_shingles("text", 8)).alias("gram"),
         )
 
     tg = grams(trainset, "doc_id")

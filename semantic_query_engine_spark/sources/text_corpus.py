@@ -64,8 +64,12 @@ def read_text_corpus(
 ) -> DataFrame:
     """(doc_id, text) — doc_id is the bare filename stem, matching the
     reference's use of the filename as doc_id (app/main.py:446-449)."""
-    raw = spark.read.text(f"{corpus_dir}/*{suffix}", wholetext=True).select(
-        F.input_file_name().alias("path"), F.col("value").alias("text")
+    # a directory plus pathGlobFilter, not a `dir/*.txt` glob path:
+    # for a glob, Spark's FileStreamSink probe logs a FileNotFoundException
+    raw = (
+        spark.read.option("pathGlobFilter", f"*{suffix}")
+        .text(corpus_dir, wholetext=True)
+        .select(F.input_file_name().alias("path"), F.col("value").alias("text"))
     )
     fname = F.element_at(F.split(F.col("path"), "/"), -1)
     return (

@@ -59,3 +59,29 @@ def test_requeue_still_poisoned_keeps_faster_upper_bound():
     t, frac = bench._merge_requeue(2.0, 0.06, 4.0, 0.19)
     assert t == 2.0
     assert frac == 0.19
+
+
+def test_requeue_failed_child_keeps_sweep():
+    # a re-queue child that fails (run_group -> None) keeps the
+    # original row with its poisoned stamp; the other rows' retries
+    # still run and the sweep's timings survive
+    timings = {"a": 5.0, "b": 2.0, "c": 1.0}
+    poisoned = {"a": 0.2, "b": 0.1}
+    calls = []
+
+    def run_group(group):
+        calls.append(group)
+        if group == ["a"]:
+            return None
+        return {
+            "timings": {"b": 1.5},
+            "poisoned": {},
+            "steal_retakes": 1,
+            "steal_worst": 0.01,
+        }
+
+    requeued, retakes, worst = bench._requeue_poisoned(timings, poisoned, run_group)
+    assert calls == [["a"], ["b"]]
+    assert timings == {"a": 5.0, "b": 1.5, "c": 1.0}
+    assert poisoned == {"a": 0.2}
+    assert (requeued, retakes, worst) == (1, 1, 0.01)

@@ -793,3 +793,239 @@ def test_ivfpq_knn_join_exact_at_full_breadth(spark):
     ) == sorted(
         [(r["probe_id"], r["knn_rank"], r["vec_id"], round(r["score"], 6)) for r in want]
     )
+
+
+# --- MinHash-LSH SQL-string plans vs the Column-composed form --------
+#
+# The reference below is the Column-composed implementation the SQL
+# strings in operators/dedup.py replaced, kept verbatim in behaviour:
+# the SQL plans must reproduce its shingles, band tables and pairs
+# bit for bit.  `slot_order=-1` reverses each band key's slot order —
+# the mutation the comparison must catch.
+
+
+def _ref_word_shingles(text_col, n):
+    from semantic_query_engine_spark.functions.text import words_of
+
+    ws = words_of(text_col)
+    count = F.greatest(F.lit(1), F.size(ws) - F.lit(n - 1))
+    grams = F.transform(
+        F.sequence(F.lit(0), count - 1),
+        lambda i: F.array_join(F.slice(ws, i + 1, n), " "),
+    )
+    return F.array_distinct(grams)
+
+
+def _ref_shingle_table(docs, n):
+    return docs.select(
+        F.col("doc_id").alias("id"),
+        F.explode(_ref_word_shingles(F.col("text"), n)).alias("shingle"),
+    )
+
+
+def _ref_band_table(docs, portable, num_perm=64, n_bands=16, n=2, slot_order=1):
+    from semantic_query_engine_spark.operators.dedup import _p64
+
+    r = num_perm // n_bands
+    sh = _ref_shingle_table(docs, n)
+    slots = lambda b: [b * r + j for j in range(r)][::slot_order]  # noqa: E731
+    if portable:
+        hs = F.transform(
+            F.sequence(F.lit(0), F.lit(num_perm - 1)),
+            lambda i: _p64(F.concat(i.cast("string"), F.lit("|"), F.col("shingle"))),
+        )
+        key_of = lambda b: F.concat_ws(  # noqa: E731
+            ",", *[F.col("a")[k]["mh"].cast("string") for k in slots(b)]
+        )
+    else:
+        hs = F.transform(
+            F.sequence(F.lit(0), F.lit(num_perm - 1)),
+            lambda i: F.xxhash64(F.col("shingle"), i),
+        )
+        key_of = lambda b: F.xxhash64(*[F.col("a")[k]["mh"] for k in slots(b)])  # noqa: E731
+    e = sh.select("id", F.posexplode(hs).alias("i", "h"))
+    sig = e.groupBy("id", "i").agg(F.min("h").alias("mh"))
+    asm = sig.groupBy("id").agg(
+        F.array_sort(F.collect_list(F.struct("i", "mh"))).alias("a")
+    )
+    bands = F.array(
+        *[F.struct(F.lit(b).alias("band"), key_of(b).alias("key")) for b in range(n_bands)]
+    )
+    return asm.select("id", F.explode(bands).alias("bb")).select(
+        "id", F.col("bb.band").alias("band"), F.col("bb.key").alias("key")
+    )
+
+
+def _ref_lsh_pairs(docs, portable, threshold=0.5, n=2):
+    from semantic_query_engine_spark.operators.dedup import _p64
+
+    bt = _ref_band_table(docs, portable, n=n)
+    a, b = bt.alias("a"), bt.alias("b")
+    cand = (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .distinct()
+    )
+    sh_hash = _p64(F.col("shingle")) if portable else F.xxhash64("shingle")
+    sh = _ref_shingle_table(docs, n).select("id", sh_hash.alias("sh"))
+    sizes = sh.groupBy("id").agg(F.count("*").alias("ns"))
+    ea = sh.select(F.col("id").alias("id_a"), "sh")
+    eb = sh.select(F.col("id").alias("id_b"), "sh")
+    inter = (
+        cand.join(ea, "id_a")
+        .join(eb, ["id_b", "sh"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("inter"))
+    )
+    sa = sizes.select(F.col("id").alias("id_a"), F.col("ns").alias("na"))
+    sb = sizes.select(F.col("id").alias("id_b"), F.col("ns").alias("nb"))
+    dist = 1.0 - F.col("inter").cast("double") / (
+        F.col("na") + F.col("nb") - F.col("inter")
+    ).cast("double")
+    return (
+        inter.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("jaccard_dist", F.round(dist, 6))
+        .filter(F.col("jaccard_dist") <= F.lit(threshold))
+        .select("id_a", "id_b", "jaccard_dist")
+    )
+
+
+_EDGE_TEXTS = [
+    "",
+    "   ",
+    "\n\t \n",
+    "one",
+    "two words",
+    "tabs\tand\nnewlines  and   runs    of spaces",
+    "  leading and trailing whitespace  ",
+    "vertical\x0btab and\x0cform feed\rcarriage return",
+    "a a a a a a a a",
+    "x y x y x y x y",
+    "naïve café résumé über straße",
+    "emoji 😀 and 𝔘𝔫𝔦𝔠𝔬𝔡𝔢 4-byte 😀 text",
+    "日本語 の テキスト です",
+    None,
+]
+
+
+def _bag(df):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.collect())
+
+
+def test_minhash_sql_plans_bit_identical_to_column_form(spark, sf_dir):
+    """shingle_table (n=2, 3), minhash_band_table and minhash_lsh_pairs
+    in both hash modes equal the Column-composed reference exactly, on
+    the fixture pool with its 80%-prefix copies, on edge texts, and on
+    an identical + an 80%-prefix pair; a band key with its slot order
+    flipped must NOT match (the comparison can see key layout)."""
+    from semantic_query_engine_spark.operators.dedup import (
+        minhash_band_table,
+        minhash_lsh_pairs,
+        shingle_table,
+    )
+    from semantic_query_engine_spark.queries.dedup_q import _docs_with_truncated_copies
+
+    base = " ".join(f"w{i % 37} t{i}" for i in range(50))
+    words = base.split()
+    rows = [(i + 1, t) for i, t in enumerate(_EDGE_TEXTS)]
+    rows += [
+        (100, base),
+        (101, base),                                         # identical
+        (102, " ".join(words[: int(len(words) * 0.8)])),     # 80% prefix
+    ]
+    edge = spark.createDataFrame(rows, "doc_id long, text string")
+    fixture = _docs_with_truncated_copies(spark, sf_dir)
+
+    for name, docs in (("edge", edge), ("fixture", fixture)):
+        for n in (2, 3):
+            got, want = shingle_table(docs, n=n), _ref_shingle_table(docs, n)
+            assert got.dtypes == want.dtypes
+            assert _bag(got) == _bag(want), (name, n)
+        for portable in (False, True):
+            got = minhash_band_table(docs, portable=portable)
+            want = _ref_band_table(docs, portable)
+            assert got.dtypes == want.dtypes
+            got_bag = _bag(got)
+            assert got_bag == _bag(want), (name, portable)
+            flipped = _bag(_ref_band_table(docs, portable, slot_order=-1))
+            assert got_bag != flipped, (name, portable)
+            got_p = minhash_lsh_pairs(docs, portable=portable)
+            want_p = _ref_lsh_pairs(docs, portable)
+            assert got_p.dtypes == want_p.dtypes
+            got_pairs = _bag(got_p)
+            assert got_pairs == _bag(want_p), (name, portable)
+            if name == "edge":
+                # the planted pairs are found: identical at distance 0,
+                # the 80% prefix well inside the 0.5 threshold
+                dist = {(a, b): d for a, b, d in got_pairs}
+                assert dist[(100, 101)] == 0.0
+                assert dist[(100, 102)] <= 0.5
+
+
+def test_minhash_lsh_plan_build_py4j_budget(spark, monkeypatch):
+    """Building a minhash_lsh_pairs plan (no action) stays under 1,000
+    Python-to-JVM calls in both hash modes; the Column-composed form
+    issued 4,300-5,700 (one round-trip per function, literal, cast and
+    field access of every slot and band key)."""
+    from semantic_query_engine_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e g")], "doc_id long, text string"
+    )
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    for portable in (False, True):
+        calls = 0
+
+        def counting(*args, **kwargs):
+            nonlocal calls
+            calls += 1
+            return send(*args, **kwargs)
+
+        with monkeypatch.context() as m:
+            m.setattr(client, "send_command", counting)
+            minhash_lsh_pairs(docs, portable=portable)
+        assert calls < 1000, (portable, calls)
+    assert client.send_command == send
+
+
+def test_connected_components_string_ids_match_bigint(spark):
+    """String ids get the same labeling as the equivalent bigint ids on
+    both the driver union-find path and the star rounds.  Ids are
+    zero-padded so string order equals numeric order."""
+    from itertools import combinations
+
+    from semantic_query_engine_spark.operators.graph import connected_components
+
+    pairs = (
+        [(i, i + 1) for i in range(12)]
+        + list(combinations(range(100, 105), 2))
+        + [(200, 200), (300, 301)]
+    )
+    num = spark.createDataFrame(pairs, "id_a long, id_b long")
+    s = lambda x: f"PMC{x:06d}"  # noqa: E731
+    txt = spark.createDataFrame(
+        [(s(a), s(b)) for a, b in pairs], "id_a string, id_b string"
+    )
+    nodes_num = spark.createDataFrame([(999,)], "node long")
+    nodes_txt = spark.createDataFrame([(s(999),)], "node string")
+    for threshold in (250_000, 0):
+        want = {
+            s(r.node): s(r.component)
+            for r in connected_components(
+                num, nodes=nodes_num, driver_cc_threshold=threshold
+            ).collect()
+        }
+        out = connected_components(txt, nodes=nodes_txt, driver_cc_threshold=threshold)
+        assert out.dtypes == [("node", "string"), ("component", "string")]
+        got = {r.node: r.component for r in out.collect()}
+        assert got == want, threshold
+        assert got[s(12)] == s(0) and got[s(999)] == s(999)

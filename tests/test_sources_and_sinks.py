@@ -22,6 +22,31 @@ def test_text_corpus_scan(spark, tmp_path):
     assert by_id["PMC1"] == "alpha beta\ngamma"  # wholetext keeps newlines
 
 
+def test_text_corpus_directory_read_matches_glob_read(spark, tmp_path):
+    """The corpus is read as a directory with pathGlobFilter (a glob
+    path made Spark log a FileNotFoundException trace on every read);
+    the rows must be exactly those of the old `dir/*.txt` glob read:
+    non-PMC names, other suffixes and subdirectories stay out."""
+    from semantic_query_engine_spark.sources.text_corpus import read_text_corpus
+
+    (tmp_path / "PMC10.txt").write_text("one two\nthree")
+    (tmp_path / "PMC11.txt").write_text("four")
+    (tmp_path / "other.txt").write_text("not a PMC file")
+    (tmp_path / "PMC12.md").write_text("wrong suffix")
+    (tmp_path / "sub").mkdir()
+    (tmp_path / "sub" / "PMC13.txt").write_text("nested")
+    got = sorted(tuple(r) for r in read_text_corpus(spark, str(tmp_path)).collect())
+    fname = F.element_at(F.split(F.input_file_name(), "/"), -1)
+    glob_read = (
+        spark.read.text(f"{tmp_path}/*.txt", wholetext=True)
+        .select(fname.alias("fname"), F.col("value").alias("text"))
+        .filter(F.col("fname").startswith("PMC"))
+        .select(F.regexp_replace("fname", r"\.txt$", "").alias("doc_id"), "text")
+    )
+    assert got == sorted(tuple(r) for r in glob_read.collect())
+    assert got == [("PMC10", "one two\nthree"), ("PMC11", "four")]
+
+
 def test_index_build_write_and_guard(spark, sf_dir, tmp_path):
     from semantic_query_engine_spark.plans.index_build import (
         build_index,
