@@ -190,9 +190,9 @@ class SemanticQueryEngine:
     ) -> DataFrame:
         """A15: top-k chunks for a text query (or its embedding `qvec`,
         when the caller already has it)."""
+        index = self._require_index()
         if qvec is None:
             qvec = self._embed_query(query)
-        index = self._require_index()
         scored = index.withColumn(
             "score", cosine(F.col("embedding"), vector_lit(qvec))
         )
@@ -264,6 +264,7 @@ class SemanticQueryEngine:
         the retrieved hits)."""
         if not query or not query.strip():
             return None, "No query provided.", []  # guard (app/main.py:477-481)
+        self._require_index()
         qvec = self._embed_query(query)
         cached = self._cache_probe(qvec)
         if cached is not None:

@@ -66,7 +66,7 @@ def token_count(c: ColumnOrName) -> Column:
 
 
 def stopword_count_ws(ws: Column) -> Column:
-    """stopword_count over a pre-tokenized words column.
+    """Stopword count over a pre-tokenized words column.
 
     The `_ws` family exists for PLAN reasons, not convenience: each
     `words_of()` call builds fresh lambda variables (unique exprIds),
@@ -82,19 +82,11 @@ def stopword_count_ws(ws: Column) -> Column:
     return F.size(F.filter(ws, lambda w: F.array_contains(stops, F.lower(w))))
 
 
-def stopword_count(c: ColumnOrName) -> Column:
-    return stopword_count_ws(words_of(c))
-
-
 def stopword_ratio_ws(ws: Column) -> Column:
     n = F.size(ws)
     return F.when(n == 0, F.lit(0.0)).otherwise(
         stopword_count_ws(ws).cast("double") / n.cast("double")
     )
-
-
-def stopword_ratio(c: ColumnOrName) -> Column:
-    return stopword_ratio_ws(words_of(c))
 
 
 def punct_ratio(c: ColumnOrName) -> Column:
@@ -107,10 +99,6 @@ def punct_ratio(c: ColumnOrName) -> Column:
 def avg_word_len_ws(ws: Column) -> Column:
     total = F.aggregate(ws, F.lit(0.0), lambda acc, w: acc + F.length(w).cast("double"))
     return F.when(F.size(ws) == 0, F.lit(0.0)).otherwise(total / F.size(ws).cast("double"))
-
-
-def avg_word_len(c: ColumnOrName) -> Column:
-    return avg_word_len_ws(words_of(c))
 
 
 def quality_score_ws(ws: Column, text: ColumnOrName) -> Column:

@@ -22,11 +22,6 @@ from ..functions.text import words_of
 DEFAULT_CHUNK_SIZE = 512  # /root/reference/app/main.py:37
 
 
-def chunk_array(text_col, chunk_size: int = DEFAULT_CHUNK_SIZE) -> Column:
-    """Array of <=chunk_size-word chunk strings for one document."""
-    return chunk_array_from_words(words_of(text_col), chunk_size)
-
-
 def chunk_array_from_words(ws: Column, chunk_size: int = DEFAULT_CHUNK_SIZE) -> Column:
     """Chunk array from a pre-tokenized words column.  Zero words ->
     zero chunks, matching the reference's range(0, len(words), size)

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from typing import Iterable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import const_array, cosine, l2_normalize, vector_lit
@@ -78,25 +78,6 @@ def build_pq(
                     C[c] = members.mean(axis=0)
         books.append([[float(x) for x in row] for row in C])
     return books
-
-
-def _sub_dists(vec: Column, book: list[list[float]], j: int, sub: int) -> Column:
-    """array of squared L2 distances from subvector j to each codeword.
-    The codebook enters as ONE nested-array literal and the k distances
-    come from ONE transform() over it — k separate aggregate expressions
-    would blow up planning/codegen time m*k-fold (measured: 29 s -> <1 s
-    to encode the fixture).  Literal, not a broadcast 1-row data side:
-    Catalyst folds it to a single Literal and codegen specializes the
-    loop (the data-side variant measured 5x slower to evaluate)."""
-    subvec = F.slice(vec, j * sub + 1, sub)
-    return F.transform(
-        const_array(book),
-        lambda cw: F.aggregate(
-            F.zip_with(subvec, cw, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-    )
 
 
 def pq_encode(
@@ -317,7 +298,11 @@ def ivfpq_knn_join(
         .select("__pid", "__pvec", "__pnv", "cluster_id")
     )
     # step 2: per-probe ADC table, one nested transform over the
-    # codebook literal (same expression discipline as _sub_dists)
+    # codebook literal.  k separate aggregate expressions would blow up
+    # planning/codegen time m*k-fold (measured: 29 s -> <1 s to encode
+    # the fixture); a literal, not a broadcast 1-row data side, lets
+    # codegen specialize the loop (the data-side variant measured 5x
+    # slower to evaluate)
     dtab = F.transform(
         books,
         lambda book, j: F.transform(

@@ -509,8 +509,9 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure window algebra in both engines; the density and detection
     guarantees are unchanged (a superset of the paper's selection).
 
-    Plan shape (round-13 rework; the join plan is kept verbatim in
-    tools/winnow_plan_ab.py as the A/B baseline): TWO chained windows
+    Plan shape (round-13 rework; the join plan and its A/B are in
+    SCALE.md's winnow_fingerprints row, the A/B script in git history
+    at 555b90b): TWO chained windows
     over ONE doc-keyed exchange+sort and nothing else — the trailing
     W-row min computes each window's anchor value mh, and a position p
     is selected iff some FULL window covering it has mh equal to p's
@@ -1005,8 +1006,8 @@ def paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 100 TB the stats exceed the threshold and AQE picks the shuffled
     # form anyway, so the hint only removes the mis-estimated local
     # regime (the same class as winnow_fingerprints' r13 finding, and
-    # what paragraph_shuffle_ab.py's broadcast-off config always
-    # measured)
+    # what the broadcast-off A/B in SCALE.md "Round 12: paragraph_dedup
+    # slim-shuffle rework" always measured)
     first = keyed.groupBy("h").agg(F.min("k").alias("kk")).hint("shuffle_hash")
     keptpos = (
         keyed.join(first, "h")

@@ -780,8 +780,6 @@ def _planted_query_index(spark: SparkSession, sf_dir: str, spread: bool = False)
     return index, qvec
 
 
-_ANN_Q = "(SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = 0)"
-
 _ANN_TOPK_ORACLE = f"""
     WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
     planted AS (

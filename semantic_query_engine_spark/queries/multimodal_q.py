@@ -620,10 +620,10 @@ _SCENE_JUMP = 128  # seed jump at the planted cut: only the value mod 256
 _SCENE_HAM = 11  # boundary threshold, MEASURED (round 13): the midpoint
 # of the fixture-wide separation gap — steady +1-drift steps reach
 # hamming 9 (sf0.01) while planted-cut steps never fall below 14
-# (sf0.001/0.01/0.1/sf1 all swept; tools/video_fade_analysis.py
-# --thresholds).  The original 8 (borrowed from the simhash near-dup
-# default) sat BELOW the steady tail and produced 1 false boundary at
-# sf0.01; 11 is exact (0 false, 0 missed) on all four fixtures.
+# (sf0.001/0.01/0.1/sf1 all swept; SCALE.md "Round 13: video boundary
+# threshold measured").  The original 8 (borrowed from the simhash
+# near-dup default) sat BELOW the steady tail and produced 1 false
+# boundary at sf0.01; 11 is exact (0 false, 0 missed) on all four fixtures.
 
 
 def _video_oracle(cap: int = 1200) -> str:
@@ -700,7 +700,8 @@ def video_scene_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Gradual transitions (round 13, VERDICT r12 #8): a planted k-frame
     fade was built and MEASURED at rates 6-16 seed-units/frame
-    (tools/video_fade_analysis.py --fade) and rejected — on this
+    (SCALE.md "Round 13: video boundary threshold measured") and
+    rejected — on this
     content the fade's worst single step (hamming 19-26) overlaps the
     hard-cut minimum (14) at every rate, so no threshold can both stay
     quiet across the fade and fire on every cut; exhaustive

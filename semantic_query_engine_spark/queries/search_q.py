@@ -88,8 +88,8 @@ def _bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # empty-token runs).  Expressing the gate this way keeps it at the
     # scan as 3 substring probes; written as `total > 0` it was pushed
     # below the tf projection and re-evaluated the whole
-    # split+filter subtree once per term per row (plans/r14/
-    # bm25_topk_before.txt node (3)).
+    # split+filter subtree once per term per row (OPTIMIZATION_r14.md
+    # finding 1).
     padded_text = F.concat(F.lit(" "), F.col("text"), F.lit(" "))
     term_hit = F.contains(padded_text, F.lit(f" {TERMS[0]} "))
     for t in TERMS[1:]:

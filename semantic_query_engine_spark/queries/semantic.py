@@ -387,8 +387,9 @@ def embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumers divide by n downstream.
 
     Scale shape (round-13 rework; the pre-rework dim-exploded-join
-    plan is kept verbatim in tools/drift_shuffle_ab.py as the A/B
-    baseline): the two snapshots join on vec_id at ARRAY level — one
+    plan and its A/B are in SCALE.md "Round 13: embedding_drift
+    array-level join", the A/B script in git history at 555b90b): the
+    two snapshots join on vec_id at ARRAY level — one
     4-8 KB vector payload per side per vector rides the exchange —
     then zip_with pairs the components row-locally and posexplode
     feeds the dim-keyed combining agg, whose map-side partials shrink

@@ -957,11 +957,11 @@ def _bpe_learn(
     symbol table is r chained replace() selects over the persisted
     base, so every pair count re-evaluates ALL prior merges and the
     analyzer re-walks an r-deep plan — per-round cost grows ~linearly
-    in depth and training is O(n^2) overall (measured:
-    tools/bpe_depth_probe.py, SCALE.md r13).  A localCheckpoint every
+    in depth and training is O(n^2) overall (measured: SCALE.md
+    "Round 13: BPE production depth").  A localCheckpoint every
     K jobs materializes the vocab-sized table (cheap by construction)
     and resets the chain, making per-round cost flat at production
-    depth.  0 disables (the probe's baseline mode); values are
+    depth.  0 disables (the measured baseline mode); values are
     identical either way, so the generated oracle is untouched."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(

@@ -2,8 +2,9 @@
 
 `tempfile.mkdtemp` under /tmp leaked one directory per bench/gate
 process per sf_dir (the IVF/IVF-PQ layout caches in queries/dedup_q.py,
-the streaming checkpoint dirs in queries/streaming_q.py, and
-tools/scale_ann_probe.py) — repeated invocations accumulated orphaned
+the streaming checkpoint dirs in queries/streaming_q.py, and the
+round-9 ANN scale probe, SCALE.md; removed, in git history at 555b90b)
+— repeated invocations accumulated orphaned
 parquet trees nothing ever removed.  This helper replaces those with a
 fixed, gitignored per-repo location:
 

@@ -1,8 +1,10 @@
-"""SparkSession builder tuned for the local[32] test harness while staying
-cluster-correct: AQE on (runtime re-plan, skew-join splitting, partition
-coalescing), Arrow on (Pandas-UDF fast path), shuffle partitions sized to
-the local core count instead of the 200 default.  On a real cluster the
-same builder works — only master/memory change.
+"""SparkSession builder sized to the machine it runs on while staying
+cluster-correct: local[<cores this process may use>] with a driver heap
+of half the physical memory, AQE on (runtime re-plan, skew-join
+splitting, partition coalescing), Arrow on (Pandas-UDF fast path),
+shuffle partitions sized to the core count instead of the 200 default.
+On a real cluster the same builder works — SPARK_GRAFT_MASTER,
+SPARK_GRAFT_CPUS and SPARK_DRIVER_MEM set master and memory.
 """
 
 from __future__ import annotations
@@ -40,25 +42,35 @@ def state_store_provider(master: str, requested: str = "") -> str | None:
     return None if master.startswith("local") else _ROCKSDB_PROVIDER
 
 
+def resources(env=os.environ) -> tuple[str, int, str]:
+    """(master, cores, driver memory) for a new session.  Defaults fit
+    the machine: the CPU-affinity count, and half of physical memory
+    (at least 1g).  SPARK_GRAFT_MASTER, SPARK_GRAFT_CPUS and
+    SPARK_DRIVER_MEM override them for a deployment."""
+    cpus = int(env.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+    master = env.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+    half = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2
+    memory = env.get("SPARK_DRIVER_MEM", f"{max(1, half >> 30)}g")
+    return master, cpus, memory
+
+
 def get_spark(app_name: str = "semantic-query-engine-spark") -> SparkSession:
     """Return the active session if one exists (the driver harness owns its
-    own session), else build one for $SPARK_GRAFT_MASTER (default
-    local[$SPARK_GRAFT_CPUS])."""
+    own session), else build one with `resources()`."""
     active = SparkSession.getActiveSession()
     if active is not None:
         return active
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+    master, cpus, memory = resources()
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", memory)
         # only meaningful off local[*] (local-cluster / standalone):
         # executors are separate JVMs whose 1g default OOMs the scale
         # sweeps; local[*] ignores it (work runs in the driver heap)

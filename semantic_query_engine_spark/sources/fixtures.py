@@ -116,14 +116,6 @@ _SPREAD_MIN_BYTES = 64 * 1024
 _SPREAD_ROWS_PER_TASK = 256
 
 
-def _parquet_rows(path: str) -> int | None:
-    """Row count from the parquet footer (driver-side metadata read,
-    ~ms, amortized by the plan cache).  None when unreadable (e.g. a
-    directory table) — caller falls back to the full-core floor."""
-    meta = _parquet_meta(path)
-    return meta[0] if meta else None
-
-
 def _parquet_meta(path: str) -> tuple[int, int] | None:
     """(num_rows, num_row_groups) from the parquet footer; None when
     unreadable (e.g. a directory table)."""

@@ -43,6 +43,20 @@ def test_empty_query_guard(engine):
     assert engine.ask("  ") == "No query provided."
 
 
+def test_read_path_before_build_raises_facade_error(spark):
+    from semantic_query_engine_spark.api import SemanticQueryEngine
+
+    fresh = SemanticQueryEngine(spark)
+    assert fresh.ask("  ") == "No query provided."  # the guard still runs first
+    for call in (
+        lambda: fresh.ask("x"),
+        lambda: list(fresh.ask_stream("x")),
+        lambda: fresh.search("x"),
+    ):
+        with pytest.raises(RuntimeError, match="no index built"):
+            call()
+
+
 def test_search_topk(engine):
     hits = engine.search("fast key order sort", k=3).collect()
     assert len(hits) == 3

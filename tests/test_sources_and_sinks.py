@@ -611,12 +611,13 @@ def test_video_scene_detect_finds_planted_cuts(spark, sf_dir):
 
 def test_video_scene_threshold_sits_in_measured_gap(spark, sf_dir):
     """The round-13 threshold calibration (VERDICT r12 #8, measured in
-    tools/video_fade_analysis.py): _SCENE_HAM = 11 sits inside the
-    fixture-wide separation gap — steady steps reach hamming 9, cuts
-    never fall below 14 — so on this fixture the detector is EXACT:
-    every planted cut detected, zero false boundaries (the original
-    threshold 8 fired a false boundary at sf0.01).  Asserted from the
-    registered query's own output, per frame."""
+    SCALE.md "Round 13: video boundary threshold measured"):
+    _SCENE_HAM = 11 sits inside the fixture-wide separation gap — steady
+    steps reach hamming 9, cuts never fall below 14 — so on this
+    fixture the detector is EXACT: every planted cut detected, zero
+    false boundaries (the original threshold 8 fired a false boundary
+    at sf0.01).  Asserted from the registered query's own output, per
+    frame."""
     from collections import defaultdict
 
     from semantic_query_engine_spark.queries.multimodal_q import (
