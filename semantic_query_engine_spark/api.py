@@ -12,6 +12,7 @@ Reference endpoints -> methods:
 - POST /upload_text    (A22/A23, /root/reference/app/embedding_gen.py:315-409)
     -> .upload_text(user_id, filename, content, batch_ts)
 - kNN search           (A15) -> .search(query, k, qvec=None) -> DataFrame
+       (scored by operators.retrieval.score_against)
 
 State:
 - chunk index: a DataFrame (persist via plans.index_build.write_index),
@@ -38,10 +39,10 @@ import numpy as np
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from .functions.vectors import cosine, vector_lit
 from .ml.embedder import TfIdfEmbedder
 from .operators import cache as cache_ops
 from .operators.chunking import chunk_documents
+from .operators.retrieval import _seq_dot, score_against
 from .plans.rag import SYSTEM_RULES
 from .functions.plan import truncate_eager
 
@@ -193,13 +194,13 @@ class SemanticQueryEngine:
         index = self._require_index()
         if qvec is None:
             qvec = self._embed_query(query)
-        scored = index.withColumn(
-            "score", cosine(F.col("embedding"), vector_lit(qvec))
-        )
+        if len(qvec) != self.dim:
+            # zip_with would pad the shorter side with nulls: null scores
+            raise ValueError(f"query vector has {len(qvec)} dims, the index {self.dim}")
         return (
-            scored.orderBy(F.desc("score"), F.asc("chunk_key"))
+            score_against(index, qvec).orderBy(F.desc("score"), F.asc("chunk_key"))
             .limit(k)
-            .select("doc_id", "chunk_id", "chunk_key", "chunk_text", "score")
+            .selectExpr("doc_id", "chunk_id", "chunk_key", "chunk_text", "score")
         )
 
     def _assemble_context(self, hits: list[Row]) -> str:
@@ -332,16 +333,6 @@ class SemanticQueryEngine:
             "entries": int(self._cache_ids.size),
             "total_hits": int(self._cache_freq.sum()),
         }
-
-
-def _seq_dot(m: np.ndarray, v: np.ndarray) -> np.ndarray:
-    """Row-wise m @ v, summed left to right from 0.0 as
-    functions.vectors.dot folds it, so scores are bit-identical to the
-    Spark plans' (a BLAS dot may reorder the sum)."""
-    acc = np.zeros(m.shape[0])
-    for j in range(m.shape[1]):
-        acc = acc + m[:, j] * v[j]
-    return acc
 
 
 def _cosine_rows(m: np.ndarray, v: np.ndarray) -> np.ndarray:

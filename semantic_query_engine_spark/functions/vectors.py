@@ -16,6 +16,7 @@ and both engines fold the list left-to-right).
 
 from __future__ import annotations
 
+import math
 from typing import Iterable, Union
 
 from pyspark.sql import Column
@@ -29,28 +30,23 @@ def _col(c: ColumnOrName) -> Column:
 
 
 def const_array(values) -> Column:
-    """A (possibly nested) literal double-array column rendered as ONE
-    SQL string and parsed JVM-side (r14, guide §1.2 per-task/driver
-    work): `F.lit(list)` / `F.array(*[F.lit(x) ...])` issues one py4j
-    round-trip PER ELEMENT, so the PQ codebook (1,024 doubles) and SRP
-    plane (2,048 doubles) constants cost seconds of driver time per
-    plan CONSTRUCTION (measured: ann_ivfpq_topk spent 3.8 s of a 5.6 s
-    build inside py4j send_command).  repr(float) round-trips exactly
-    through Java's Double.parseDouble, so the folded Literal is
-    bit-identical to the per-element form.  Finite values only (the
-    plan constants here are hashes/centroids/codebooks by
-    construction)."""
-    import math
+    """A (possibly nested) literal double-array column, parsed JVM-side
+    from ONE SQL string: `F.lit(list)` issues one py4j round-trip per
+    element (a 2,048-double constant cost seconds of plan build).
+    repr(float) round-trips exactly through Double.parseDouble, so the
+    Literal is bit-identical to the per-element form.  Finite values
+    only."""
+    return F.expr(const_sql(values))
 
-    def render(v) -> str:
-        if isinstance(v, (list, tuple)):
-            return "array(" + ",".join(render(x) for x in v) + ")"
-        f = float(v)
-        if not math.isfinite(f):
-            raise ValueError(f"non-finite plan constant: {v!r}")
-        return repr(f) + "D"
 
-    return F.expr(render(values))
+def const_sql(v) -> str:
+    """const_array's SQL text, e.g. `array(0.5D,1.0D)`."""
+    if isinstance(v, (list, tuple)):
+        return "array(" + ",".join(const_sql(x) for x in v) + ")"
+    f = float(v)
+    if not math.isfinite(f):
+        raise ValueError(f"non-finite plan constant: {v!r}")
+    return repr(f) + "D"
 
 
 def vector_lit(values: Iterable[float]) -> Column:
@@ -78,9 +74,11 @@ def cosine(a: ColumnOrName, b: ColumnOrName) -> Column:
     referenced twice (guard + denominator), and the analyzer re-binds
     higher-order-function lambda variables per occurrence, so codegen
     subexpression elimination cannot unify them — 5 array aggregates
-    per row instead of 3.  Per-row-hot paths should use with_cosine()
-    (norm pre-projection) instead; this form is fine for bounded sides
-    (centroid tables, 1-row probes)."""
+    per row instead of 3.  Per-row hot paths should use
+    operators.retrieval.score_against to score against a constant
+    query, or with_cosine() (norm pre-projection) for two columns; this
+    form is fine for bounded sides (centroid tables, 1-row probes) and
+    is the reference the faster forms are tested against."""
     na, nb = l2_norm(a), l2_norm(b)
     return F.when((na == F.lit(0.0)) | (nb == F.lit(0.0)), F.lit(0.0)).otherwise(
         dot(a, b) / (na * nb)

@@ -44,26 +44,21 @@ from pyspark.sql import functions as F
 from ..functions.plan import truncate_plan
 
 
-def _large_star(edges: DataFrame, dedup: bool = False) -> DataFrame:
+def _large_star(edges: DataFrame) -> DataFrame:
     """One large-star round: (u,v) edges -> (v, min(N(u)+{u})) for v>u.
 
-    `dedup=False` (default) omits the historical `.distinct()` on the
-    output: duplicate edges cannot change a window `min`, the row count
-    out equals the row count in (each undirected edge passes the v>u
-    filter exactly once), and the following small-star round ends in
-    its own `.distinct()` — so the dedup bought nothing but one extra
-    full-edge-volume shuffle per round.  In the round-10 multi-JVM
-    plateau experiment (SCALE.md) this is the "fused" configuration;
-    `dedup=True` preserves the measured round-9 baseline shape."""
+    The output is not deduplicated: duplicate edges cannot change a
+    window `min`, and the following small-star round ends in its own
+    `.distinct()`, so a distinct here would only add one full-edge-volume
+    shuffle per round."""
     sym = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     w = Window.partitionBy("u")
     m = F.least(F.min("v").over(w), F.col("u"))
-    out = (
+    return (
         sym.withColumn("m", m)
         .filter(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
     )
-    return out.distinct() if dedup else out
 
 
 def _small_star(edges: DataFrame) -> DataFrame:
@@ -106,7 +101,6 @@ def connected_components(
     nodes: DataFrame | None = None,
     max_iter: int = 50,
     driver_cc_threshold: int = 250_000,
-    fuse_large_star: bool = True,
 ) -> DataFrame:
     """(node, component) for every node, component = min node id in its
     connected component.  `edges` is undirected pairs; `nodes` optionally
@@ -134,14 +128,6 @@ def connected_components(
     max_iter bounds large+small round PAIRS; convergence needs
     O(log n) of them, so 50 covers any graph that fits in storage —
     the loud failure below guards algorithm bugs, not graph shape.
-
-    `fuse_large_star=True` (default) drops the large-star round's
-    historical output `.distinct()` — 3 instead of 4 full-edge-volume
-    shuffles per round pair; see _large_star.  The labeling is
-    IDENTICAL either way (duplicate edges never change a window min,
-    and small-star's terminal distinct restores the set semantics the
-    convergence fingerprint compares); the flag exists so the round-10
-    multi-JVM transfer experiment (SCALE.md) can measure both shapes.
     """
     # Truncate the caller's pair pipeline ONCE (r14): `edges` is
     # typically an expensive near-dup join (jaccard_pairs & co), and it
@@ -194,9 +180,7 @@ def connected_components(
     prev = None
     converged = False
     for _ in range(max_iter):
-        e = _small_star(
-            _large_star(e, dedup=not fuse_large_star)
-        ).transform(truncate_plan)
+        e = _small_star(_large_star(e)).transform(truncate_plan)
         # one-row fingerprint action materializes the lazy checkpoint;
         # (count, xor of content hashes) is order-insensitive, cannot
         # overflow under ANSI mode (sum of hashes can), and changes

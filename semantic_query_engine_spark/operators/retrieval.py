@@ -2,9 +2,10 @@
 (/root/reference/app/main.py:347-373, SURVEY A15) re-expressed Spark-first.
 
 Strategy ladder (SURVEY §4.3):
-1. exact brute force (this module): broadcast the query vector as a plan
-   constant, score every row with a codegen'd cosine expression, take
-   top-k.  Catalyst compiles orderBy().limit(k) to TakeOrderedAndProject:
+1. exact brute force (this module): score_against pre-projects each
+   row's dot with the query literal and its L2 norm (parsed SQL
+   strings) over a query norm folded on the driver, 2 array aggregates
+   per row; orderBy().limit(k) compiles to TakeOrderedAndProject:
    per-partition top-k then a k-row merge on the driver — embarrassingly
    parallel, no full sort, no shuffle of the scored set.  At 100 TB this
    is a single scan whose cost is bounded by I/O.
@@ -19,10 +20,11 @@ from __future__ import annotations
 
 from typing import Iterable, Optional
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import l2_norm, vector_lit, with_cosine
+from ..functions.vectors import const_sql, l2_norm, with_cosine
 
 DEFAULT_TOP_K = 3  # /root/reference/app/main.py:467,601
 
@@ -34,12 +36,34 @@ def score_against(
 ) -> DataFrame:
     """Add a cosine `score` column against a constant query vector
     (the reference normalizes then HNSW-searches; here the scoring
-    expression itself is the index probe)."""
-    # with_cosine (r14): the norms land in a pre-projection so each is
-    # computed once per row (the constant query vector's norm included —
-    # HOF aggregates over literals are not constant-folded), 3 array
-    # aggregates per row instead of cosine()'s 5
-    return with_cosine(index, F.col(vec_col), vector_lit(query_vec), "score")
+    expression itself is the index probe).  Values are bit-identical
+    to functions.vectors.cosine."""
+    q = np.array([float(x) for x in query_vec])
+    qn = const_sql(np.sqrt(_seq_dot(q[None, :], q)[0]))
+
+    def dot(b: str) -> str:
+        return (
+            f"aggregate(zip_with(`{vec_col}`, {b}, (x, y) -> CAST(x AS DOUBLE)"
+            " * CAST(y AS DOUBLE)), 0D, (acc, p) -> acc + p)"
+        )
+
+    d, n = dot(const_sql(list(q))), f"sqrt({dot(f'`{vec_col}`')})"
+    score = f"CASE WHEN __n = 0D OR {qn} = 0D THEN 0D ELSE __d / (__n * {qn}) END"
+    return (
+        index.selectExpr("*", f"{d} AS __d", f"{n} AS __n")
+        .withColumn("score", F.expr(score))
+        .drop("__d", "__n")
+    )
+
+
+def _seq_dot(m: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """Row-wise m @ v, summed left to right from 0.0 as
+    functions.vectors.dot folds it, so scores are bit-identical to the
+    Spark plans' (a BLAS dot may reorder the sum)."""
+    acc = np.zeros(m.shape[0])
+    for j in range(m.shape[1]):
+        acc = acc + m[:, j] * v[j]
+    return acc
 
 
 def topk_similar(

@@ -4,6 +4,7 @@ streamed ask, tenant upload validation."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -61,6 +62,67 @@ def test_search_topk(engine):
     hits = engine.search("fast key order sort", k=3).collect()
     assert len(hits) == 3
     assert hits[0].score >= hits[1].score >= hits[2].score
+
+
+def test_search_rejects_query_vector_of_wrong_length(engine):
+    for n in (engine.dim // 2, engine.dim * 2):
+        with pytest.raises(ValueError, match="dims"):
+            engine.search("x", 3, qvec=np.ones(n))
+
+
+def test_search_plan_build_py4j_budget(engine, spark, monkeypatch):
+    """Building one search plan (no action) stays under 50
+    Python-to-JVM calls; a Column-composed cosine() plan issued ~430."""
+    engine.search("warm the embedder up", k=3)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = 0
+
+    def counting(*args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return send(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(client, "send_command", counting)
+        engine.search("fast key order sort", k=3)
+    assert calls < 50, calls
+    assert client.send_command == send
+
+
+def test_search_scores_bit_identical_to_cosine_across_uploads(spark, sf_dir):
+    """The facade's ranking of EVERY index row — (chunk_key, score),
+    ties by chunk_key — equals a cosine() Column plan over the same
+    index, after uploads and again after they fold into the base, for a
+    text query and the all-zero (empty) query."""
+    from semantic_query_engine_spark.api import MAX_UPLOAD_SEGMENTS, SemanticQueryEngine
+    from semantic_query_engine_spark.functions.vectors import cosine, vector_lit
+    from semantic_query_engine_spark.sources.fixtures import load_table
+
+    docs = load_table(spark, sf_dir, "documents").limit(20).select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text"
+    )
+    eng = SemanticQueryEngine(spark, chunk_size=32).build_from_documents(docs)
+
+    def check():
+        n = eng.index.count()
+        for q in ("upload nebula fjord key order", "  "):
+            qvec = eng._embed_query(q)
+            want = (
+                eng.index.withColumn("score", cosine("embedding", vector_lit(qvec)))
+                .orderBy(F.desc("score"), F.asc("chunk_key"))
+                .select("chunk_key", "score")
+            )
+            got = eng.search(q, k=n).select("chunk_key", "score")
+            assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
+
+    for i in range(MAX_UPLOAD_SEGMENTS):
+        eng.upload_text("u", f"f{i}.txt", f"upload {i} nebula fjord", batch_ts=i)
+    assert eng._upload_segments == MAX_UPLOAD_SEGMENTS
+    check()
+    eng.upload_text("u", "g.txt", "upload nebula fjord after fold", batch_ts=99)
+    assert eng._upload_segments == 0
+    check()
 
 
 def test_ask_stream_chunks_and_caches(engine):

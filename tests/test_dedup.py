@@ -531,38 +531,6 @@ def test_checked_ann_rows_hold_recall_gate(spark, sf_dir):
         planted = {r.vec_id for r in rows if r.vec_id >= _PLANT_BASE}
         assert len(planted) == n_rows, (fn.__name__, len(planted))
 
-def test_connected_components_fused_large_star_identical(spark):
-    """The fused 3-shuffle round (large-star output distinct dropped,
-    round 10) must label the SAME graph identically to the historical
-    4-shuffle round — duplicate edges cannot change a window min, and
-    small-star's terminal distinct restores set semantics before the
-    convergence fingerprint.  Pinned on a graph shaped to produce
-    duplicate large-star outputs: two stars sharing spokes plus a long
-    chain (multiple (v, m) collisions per round)."""
-    from semantic_query_engine_spark.operators.graph import connected_components
-
-    pairs = (
-        [(0, i) for i in range(2, 10)]      # star at 0
-        + [(1, i) for i in range(2, 10)]    # star at 1 sharing all spokes
-        + [(i, i + 1) for i in range(50, 70)]  # 21-node chain
-    )
-    edges = spark.createDataFrame(pairs, ["id_a", "id_b"])
-    fused = {
-        r.node: r.component
-        for r in connected_components(
-            edges, driver_cc_threshold=0, fuse_large_star=True
-        ).collect()
-    }
-    unfused = {
-        r.node: r.component
-        for r in connected_components(
-            edges, driver_cc_threshold=0, fuse_large_star=False
-        ).collect()
-    }
-    assert fused == unfused
-    assert fused[9] == 0 and fused[70] == 50
-
-
 def test_retrieval_eval_srp_metric_bounds(spark, sf_dir):
     """Eval-harness sanity: one row per probe; recall@3 and MRR in
     [0, 1]; MRR > 0 exactly when recall > 0 (a hit implies a rank);
