@@ -41,32 +41,42 @@ def exact_dedup(
     return docs.join(keep, id_col, "left_semi")
 
 
-def _shingles_sql(text: str, n: int) -> str:
-    """Distinct word n-gram shingle array of the SQL operand `text`, as
-    ONE SQL expression: words_of's tokens (empty/whitespace text yields
-    the single shingle ''), the n-grams as space-joined slices, then
-    array_distinct.  The one definition of the shingle rule."""
-    ws = words_sql(text)
+def _shingles_sql(ws: str, n: int) -> str:
+    """Distinct word n-gram shingle array of the SQL operand `ws`, a
+    words array (words_sql's tokens; empty/whitespace text yields the
+    single shingle ''), as ONE SQL expression: the n-grams as
+    space-joined slices, then array_distinct.  The one definition of
+    the shingle rule.
+
+    `ws` must be a pre-projected column, not the words_sql expression
+    itself: the slice sits inside the transform lambda, so an inline
+    tokenizer would re-split the whole document once per shingle
+    (O(words^2) per document)."""
     return (
         f"array_distinct(transform(sequence(0, greatest(1, size({ws}) - {n - 1}) - 1), "
         f"__i -> array_join(slice({ws}, __i + 1, {n}), ' ')))"
     )
 
 
-def word_shingles(text_col: str, n: int = 3):
-    """Distinct word n-gram shingle array for one document; `text_col`
-    is a column name."""
-    return F.expr(_shingles_sql(sql_ident(text_col), n))
+def word_shingles(words_col: str, n: int = 3):
+    """Distinct word n-gram shingle array for one document;
+    `words_col` names a column holding the document's words array
+    (words_of / words_sql projected by the caller first)."""
+    return F.expr(_shingles_sql(sql_ident(words_col), n))
 
 
 def shingle_table(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
 ) -> DataFrame:
-    """(id, shingle) exploded table + per-doc shingle counts."""
+    """(id, shingle) exploded table: one row per distinct word n-gram of
+    each document.
+
+    The words array is projected on its own first, so each document is
+    tokenized once; the explode (a Generate) keeps the two projections
+    apart, as in operators/chunking.chunk_documents."""
     return docs.selectExpr(
-        f"{sql_ident(id_col)} AS id",
-        f"explode({_shingles_sql(sql_ident(text_col), n)}) AS shingle",
-    )
+        f"{sql_ident(id_col)} AS id", f"{words_sql(sql_ident(text_col))} AS __ws"
+    ).selectExpr("id", f"explode({_shingles_sql('__ws', n)}) AS shingle")
 
 
 def jaccard_pairs(

@@ -75,7 +75,10 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 def _union_find_labels(pairs) -> dict:
     """Exact union-find with min-id roots (driver-side small-graph path).
-    `pairs` is any iterable of (u, v) pairs of mutually ordered ids."""
+    `pairs` is any iterable of (u, v) pairs of mutually ordered ids.
+    Every endpoint is registered, so a self-loop's node is its own
+    root; a None endpoint is registered as its own root and unions
+    with nothing (a null id matches no other id, as in SQL)."""
     parent: dict = {}
 
     def find(x):
@@ -88,7 +91,7 @@ def _union_find_labels(pairs) -> dict:
 
     for u, v in pairs:
         ru, rv = find(u), find(v)
-        if ru != rv:
+        if ru != rv and u is not None and v is not None:
             lo, hi = (ru, rv) if ru < rv else (rv, ru)
             parent[hi] = lo
     return {x: find(x) for x in parent}
@@ -107,12 +110,15 @@ def connected_components(
     supplies isolated vertices (single-row column of ids) so they appear
     in the output as their own singleton components.  Ids may be of any
     ordered type (bigint, string): both paths only compare them, and
-    the output keeps the input ids' type.
+    the output keeps the input ids' type.  A self-loop's node and the
+    endpoints of an edge with a null id are singletons of their own; a
+    null id appears once, as (null, null).
 
-    Size-adaptive: when the distinct edge set fits
-    `driver_cc_threshold` rows, it is pulled to the driver via Arrow
-    (two id columns — 4 MB of bigint ids at the 250k default) and solved
-    with exact union-find: a near-dup graph that small does not
+    Size-adaptive: when the distinct (u, v) pairs of `edges`, self-loops
+    included, number at most `driver_cc_threshold`, they are pulled to
+    the driver via Arrow (two id columns — 4 MB of bigint ids at the
+    250k default) and solved with exact union-find; singletons then
+    come only from `nodes`.  A near-dup graph that small does not
     justify paying several distributed stages PER ROUND (measured
     ~5s/round of pure stage overhead on a 200-edge fixture graph).
     The union-find dict itself is Python objects — roughly 100-200
@@ -129,14 +135,44 @@ def connected_components(
     O(log n) of them, so 50 covers any graph that fits in storage —
     the loud failure below guards algorithm bugs, not graph shape.
     """
-    # Truncate the caller's pair pipeline ONCE (r14): `edges` is
-    # typically an expensive near-dup join (jaccard_pairs & co), and it
-    # used to be re-derived three times — for `e` and for BOTH legs of
-    # `all_nodes`.  The projection is 2 longs a row, the lightweight
-    # proxy the CC loop was already designed around.
-    ep = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).transform(truncate_plan)
+    ep = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    # One probe job decides the path AND delivers the edges: pull at
+    # most threshold+1 distinct pairs (limit stops early on big
+    # graphs).  Arrow, not pandas: a bigint column holding a null
+    # would come back as float64.
+    head = ep.distinct().limit(driver_cc_threshold + 1).toArrow()
+    if head.num_rows <= driver_cc_threshold:
+        labels = _union_find_labels(
+            zip(head.column("u").to_pylist(), head.column("v").to_pylist())
+        )
+        import pandas as pd  # Arrow-path createDataFrame, no Row objects
+
+        id_type = ep.schema["u"].dataType.simpleString()
+        member = edges.sparkSession.createDataFrame(
+            pd.DataFrame(
+                {
+                    "node": pd.Series(list(labels.keys()), dtype=object),
+                    "component": pd.Series(list(labels.values()), dtype=object),
+                }
+            ),
+            f"node {id_type}, component {id_type}",
+        )
+        if nodes is None:
+            return member
+        extra = nodes.select(F.col(nodes.columns[0]).alias("node")).distinct()
+        # null-safe: a null node already labeled by an edge is not re-added
+        selfmap = extra.alias("n").join(
+            member.alias("m"), F.expr("n.node <=> m.node"), "left_anti"
+        ).select("node", F.col("node").alias("component"))
+        return member.union(selfmap)
+
+    # The star rounds re-read `edges` per consumer: truncate the caller's
+    # pair pipeline (typically an expensive near-dup join) once, and the
+    # deduplicated loop input once more.  Edges are 2 ids a row.  With
+    # the probe above, this path derives `edges` twice in all; the
+    # driver path, which every fixture-scale graph takes, derives it
+    # once and pays for no checkpoint.
+    ep = ep.transform(truncate_plan)
     e = (
         ep.filter(F.col("u") != F.col("v"))
         .distinct()
@@ -149,33 +185,6 @@ def connected_components(
         first = nodes.columns[0]
         all_nodes = all_nodes.union(nodes.select(F.col(first).alias("node")))
     all_nodes = all_nodes.distinct()  # single-use: no checkpoint needed
-
-    # One probe job decides the path AND delivers the edges: pull at
-    # most threshold+1 rows via Arrow (limit stops early on big
-    # graphs).  Replaces the count()-then-collect pair — at fixture
-    # scale the saved action is a whole Spark job per CC call.
-    head = e.limit(driver_cc_threshold + 1).toPandas()
-    if len(head) <= driver_cc_threshold:
-        labels = _union_find_labels(
-            zip(head["u"].tolist(), head["v"].tolist())
-        )
-        spark = edges.sparkSession
-        import pandas as pd  # Arrow-path createDataFrame, no Row objects
-
-        id_type = ep.schema["u"].dataType.simpleString()
-        member = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "node": pd.Series(list(labels.keys())),
-                    "component": pd.Series(list(labels.values())),
-                }
-            ),
-            f"node {id_type}, component {id_type}",
-        )
-        selfmap = all_nodes.join(
-            member.select("node"), "node", "left_anti"
-        ).select("node", F.col("node").alias("component"))
-        return member.union(selfmap)
 
     prev = None
     converged = False

@@ -7,6 +7,12 @@ One declarative pipeline: scan and chunking are map-only; the embedder
 adds either a JVM ML stage (TF-IDF) or an Arrow-batched UDF stage; the
 write is partitioned parquet.  At 100 TB this is a single pass over the
 corpus with no shuffle except the optional partitionBy clustering.
+
+The chunk table is materialized once (`truncate_plan`: a lazy,
+executor-local checkpoint) and both the IDF fit and the transform +
+write read it, so the caller's upstream pipeline (scan, dedup,
+anti-joins) runs once per build, not once for the fit and again for
+the transform.
 """
 
 from __future__ import annotations
@@ -19,7 +25,7 @@ from pyspark.sql import functions as F
 from ..functions.vectors import l2_normalize
 from ..ml.embedder import TfIdfEmbedder
 from ..operators.chunking import chunk_documents
-from ..functions.plan import truncate_eager
+from ..functions.plan import truncate_eager, truncate_plan
 
 
 def build_index(
@@ -34,6 +40,7 @@ def build_index(
     chunks = chunk_documents(docs, chunk_size=chunk_size)
     if user_col is not None:
         chunks = chunks.join(docs.select("doc_id", user_col), "doc_id")
+    chunks = chunks.transform(truncate_plan)
     embedder = TfIdfEmbedder(dim=dim, text_col="chunk_text", out_col="raw_emb").fit(
         chunks
     )

@@ -958,8 +958,13 @@ def paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     no collect_list of text.  Scalar keys stay exact: pos <= ~1e1
     paragraphs/doc << 1e5, and doc_id*1e5 fits a BIGINT at any
     fixture scale."""
-    docs = load_table(spark, sf_dir, "documents")
-    w = words_of(F.col("text"))
+    # the words array in its own projection: `groups` slices it inside a
+    # per-paragraph lambda, where an inline tokenizer would re-split the
+    # document once per paragraph
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", words_of(F.col("text")).alias("__ws")
+    )
+    w = F.col("__ws")
     # greatest(1, ...): an empty/whitespace-only doc has size(w)=0, and
     # an unguarded F.sequence(0, -1) yields the DESCENDING array [0,-1]
     # — fabricating two empty paragraphs where the oracle (whose

@@ -1159,10 +1159,11 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     trainset = pool.filter(F.col("doc_id") % 10 != 0).unionByName(planted)
 
     def grams(df: DataFrame, id_alias: str) -> DataFrame:
+        # tokenize once per document, in its own projection: the
+        # explode keeps it apart from the per-shingle slice lambda
         return df.select(
-            F.col("doc_id").alias(id_alias),
-            F.explode(word_shingles("text", 8)).alias("gram"),
-        )
+            F.col("doc_id").alias(id_alias), words_of(F.col("text")).alias("__ws")
+        ).select(id_alias, F.explode(word_shingles("__ws", 8)).alias("gram"))
 
     tg = grams(trainset, "doc_id")
     eg = grams(evalset, "eval_id")

@@ -997,3 +997,72 @@ def test_connected_components_string_ids_match_bigint(spark):
         got = {r.node: r.component for r in out.collect()}
         assert got == want, threshold
         assert got[s(12)] == s(0) and got[s(999)] == s(999)
+
+
+def test_connected_components_without_nodes_on_both_paths(spark):
+    """nodes=None: every endpoint is labeled, a self-loop-only node is
+    its own singleton, a pair and a chain collapse to their min id —
+    the same rows, once each, on the driver path and the star rounds,
+    for bigint and for string ids."""
+    from semantic_query_engine_spark.operators.graph import connected_components
+
+    pairs = [(5, 5), (8, 9), (3, 2), (2, 1), (4, 3)]
+    want = [(1, 1), (2, 1), (3, 1), (4, 1), (5, 5), (8, 8), (9, 8)]
+    s = lambda x: f"PMC{x:06d}"  # noqa: E731
+    cases = [
+        (spark.createDataFrame(pairs, "id_a long, id_b long"), want),
+        (
+            spark.createDataFrame(
+                [(s(a), s(b)) for a, b in pairs], "id_a string, id_b string"
+            ),
+            [(s(n), s(c)) for n, c in want],
+        ),
+    ]
+    for edges, rows in cases:
+        for threshold in (250_000, 0):
+            got = sorted(
+                tuple(r)
+                for r in connected_components(
+                    edges, driver_cc_threshold=threshold
+                ).collect()
+            )
+            assert got == rows, threshold
+
+
+def test_connected_components_null_endpoint_on_both_paths(spark):
+    """An edge with a null endpoint labels its other endpoint as a
+    singleton, and the null id appears once as (null, null), with or
+    without `nodes` (which may hold a null itself) — on both paths."""
+    from semantic_query_engine_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame(
+        [(1, None), (2, 3), (None, None), (4, 4), (None, 5), (5, 6)],
+        "id_a long, id_b long",
+    )
+    nodes = spark.createDataFrame([(7,), (None,)], "node long")
+    base = [(1, 1), (2, 2), (3, 2), (4, 4), (5, 5), (6, 5), (None, None)]
+    for threshold in (10_000, 0):
+        for n, want in ((None, base), (nodes, base + [(7, 7)])):
+            got = sorted(
+                (tuple(r) for r in connected_components(
+                    edges, nodes=n, driver_cc_threshold=threshold
+                ).collect()),
+                key=str,
+            )
+            assert got == sorted(want, key=str), (threshold, n is None)
+
+
+def test_shingle_table_tokenizes_each_document_once(spark):
+    """The optimized shingle plan splits each document once, in its own
+    projection: exactly one split(), and none inside a lambda (where it
+    would re-run once per shingle, O(words^2) per document)."""
+    from semantic_query_engine_spark.operators.dedup import shingle_table
+    from tools.plan_audit import _tokenizes_in_lambda
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "x y")], "doc_id long, text string"
+    )
+    for n in (2, 3):
+        plan = shingle_table(docs, n=n)._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("split(") == 1, plan
+        assert not _tokenizes_in_lambda(plan), plan

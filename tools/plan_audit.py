@@ -11,6 +11,11 @@ query's plan and flag the shapes that kill 100 TB runs —
 - ROW_PYTHON: BatchEvalPython (row-at-a-time Python in the plan; the
   Arrow-batched nodes — ArrowEvalPython, MapInPandas, FlatMapGroupsIn
   Pandas — are fine and NOT flagged)
+- TOKENIZE_IN_LAMBDA: a `split(` inside a higher-order function's
+  lambda body.  A tokenizer over the whole document placed inside a
+  per-element lambda (an n-gram `transform` slicing an inline words
+  array) re-splits the document once per element — O(words^2) per
+  document; the words array belongs in its own projection
 
 Usage: python tools/plan_audit.py [sf_dir] [--markdown]
 Exit code 1 if any query has a flag not covered by an allowlist entry,
@@ -207,6 +212,24 @@ def _has_unpartitioned_window(plan: str) -> bool:
     return False
 
 
+def _tokenizes_in_lambda(plan: str) -> bool:
+    """True when the body of any `lambdafunction(...)` in the plan
+    string contains `split(`.  The argument list is matched by paren
+    depth; it ends early at `...`, where the plan printer abbreviates a
+    long scan-metadata string (a pushed-down filter) mid-expression."""
+    start = plan.find("lambdafunction(")
+    while start != -1:
+        i = start + len("lambdafunction(")
+        depth = 1
+        while i < len(plan) and depth and not plan.startswith("...", i):
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        if "split(" in plan[start:i]:
+            return True
+        start = plan.find("lambdafunction(", start + 1)
+    return False
+
+
 def audit_one(spark, name: str, sf_dir: str) -> list[str]:
     df = REGISTRY[name].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -219,6 +242,8 @@ def audit_one(spark, name: str, sf_dir: str) -> list[str]:
         flags.append("BNLJ")
     if "BatchEvalPython" in plan and name not in ALLOWED_ROW_PYTHON:
         flags.append("ROW_PYTHON")
+    if _tokenizes_in_lambda(plan):
+        flags.append("TOKENIZE_IN_LAMBDA")
     return flags
 
 
@@ -280,7 +305,8 @@ def main() -> None:
             print(
                 "NONE — no unpartitioned window (plan-level or "
                 "setup-side source-level), no CartesianProduct, no "
-                "row-at-a-time Python, no unexcused "
+                "row-at-a-time Python, no tokenizer (split) inside a "
+                "lambda, no unexcused "
                 "BroadcastNestedLoopJoin in any registered query plan."
             )
         print("\n## Accepted bounded nested-loop joins\n")
