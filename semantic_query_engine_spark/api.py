@@ -16,6 +16,7 @@ Reference endpoints -> methods:
 
 State:
 - chunk index: a DataFrame (persist via plans.index_build.write_index),
+  built and extended through plans.index_build (rows L2-normalized):
   the cached build plus each upload's chunks, materialized once per
   upload and folded into a new base every MAX_UPLOAD_SEGMENTS uploads
 - semantic LFU cache (A12-A14): plain driver memory, at most
@@ -39,10 +40,10 @@ import numpy as np
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-from .ml.embedder import TfIdfEmbedder
 from .operators import cache as cache_ops
 from .operators.chunking import chunk_documents
 from .operators.retrieval import _seq_dot, score_against
+from .plans.index_build import embed_index, fit_index
 from .plans.rag import SYSTEM_RULES
 from .functions.plan import truncate_eager
 
@@ -87,7 +88,7 @@ class SemanticQueryEngine:
         # the materialized part of the index that uploads are unioned onto
         self._base: Optional[DataFrame] = None
         self._upload_segments = 0
-        self._embedder: Optional[TfIdfEmbedder] = None
+        self._embedder = None  # the build's, from plans.index_build.fit_index
         # the LFU cache: row i is entry _cache_ids[i]; ids are the insert
         # sequence, so (freq, id) is the eviction order
         self._cache_emb = np.empty((0, dim))
@@ -103,25 +104,13 @@ class SemanticQueryEngine:
     # ------------------------------------------------------------------
 
     def build_from_documents(self, docs: DataFrame) -> "SemanticQueryEngine":
-        """Index build (A27): clean -> chunk -> embed -> normalize.
+        """Index build (A27) by plans.index_build.fit_index, cached.
         Skips nothing here — idempotence guards live on the persisted
         path (plans.index_build.index_is_empty).  doc_id is indexed as a
         string, the type upload ids have."""
         docs = docs.withColumn("doc_id", F.col("doc_id").cast("string"))
-        chunks = chunk_documents(docs, chunk_size=self.chunk_size)
-        if chunks.isEmpty():
-            # without this, MLlib's IDF.fit dies with the cryptic
-            # "Haven't seen any document yet" — e.g. when a corpus dir
-            # contains no files matching the PMC*.txt name filter (A3)
-            raise ValueError(
-                "no documents to index: the input produced 0 chunks "
-                "(for corpus dirs, only files matching the reference's "
-                "PMC*.txt name filter are scanned)"
-            )
-        self._embedder = TfIdfEmbedder(
-            dim=self.dim, text_col="chunk_text", out_col="embedding"
-        ).fit(chunks)
-        self.index = self._base = self._embedder.transform(chunks).cache()
+        self._embedder, index = fit_index(docs, self.chunk_size, self.dim)
+        self.index = self._base = index.cache()
         self._upload_segments = 0
         return self
 
@@ -136,36 +125,26 @@ class SemanticQueryEngine:
         """A23: validate filename/extension, derive doc_id stem_ts,
         index the chunks under the tenant.  Returns the doc_id.
 
-        The upload's embedded chunks are materialized here, once, so
-        later searches scan them instead of re-running their plan."""
+        Requires a build, whose embedder embeds the chunks; they are
+        materialized here, once, so searches do not re-run their plan."""
         if not filename:
             raise ValueError("filename must be non-empty")
         if not filename.endswith(".txt"):
             raise ValueError("only .txt uploads are accepted")
+        index = self._require_index()
         stem = filename[: -len(".txt")]
         doc_id = f"{stem}_{batch_ts}"
-        docs = self.spark.createDataFrame(
-            [(doc_id, content, user_id)], "doc_id string, text string, user_id string"
-        )
-        chunks = chunk_documents(docs, chunk_size=self.chunk_size)
-        if self._embedder is None:
-            self._embedder = TfIdfEmbedder(
-                dim=self.dim, text_col="chunk_text", out_col="embedding"
-            ).fit(chunks)
+        docs = self.spark.createDataFrame([(doc_id, content)], "doc_id string, text string")
         embedded = (
-            self._embedder.transform(chunks)
+            embed_index(chunk_documents(docs, chunk_size=self.chunk_size), self._embedder)
             .withColumn("user_id", F.lit(user_id))
             .transform(truncate_eager)
         )
-        if self.index is None:
-            self.index = self._base = embedded
-            return doc_id
-        self.index = self.index.unionByName(embedded, allowMissingColumns=True)
+        self.index = index.unionByName(embedded, allowMissingColumns=True)
         self._upload_segments += 1
         if self._upload_segments > MAX_UPLOAD_SEGMENTS:
             folded = self.index.transform(truncate_eager)
-            if self._base is not None:
-                self._base.unpersist()
+            self._base.unpersist()
             self.index = self._base = folded
             self._upload_segments = 0
         return doc_id

@@ -1,24 +1,23 @@
-"""The batch index-build job (SURVEY A27, write path §3.3:
+"""The one index build (SURVEY A27, write path §3.3:
 /root/reference/app/main.py:413-456): read -> clean -> chunk -> embed ->
 normalize -> write, with the reference's guards (skip-if-indexed A11,
 chunk/embedding count invariant A24, multi-tenant partitioning A10).
-
-One declarative pipeline: scan and chunking are map-only; the embedder
-adds either a JVM ML stage (TF-IDF) or an Arrow-batched UDF stage; the
-write is partitioned parquet.  At 100 TB this is a single pass over the
-corpus with no shuffle except the optional partitionBy clustering.
+The batch pass (`build_index`) and the facade's build and uploads
+(`fit_index`, `embed_index`) all store rows in one format: `embedding`
+L2-normalized, as the reference indexes it (app/main.py:315-316).
 
 The chunk table is materialized once (`truncate_plan`: a lazy,
-executor-local checkpoint) and both the IDF fit and the transform +
-write read it, so the caller's upstream pipeline (scan, dedup,
-anti-joins) runs once per build, not once for the fit and again for
-the transform.
+executor-local checkpoint) and both the IDF fit and the transform read
+it, so the caller's upstream pipeline (scan, dedup, anti-joins) runs
+once per build.
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -26,6 +25,32 @@ from ..functions.vectors import l2_normalize
 from ..ml.embedder import TfIdfEmbedder
 from ..operators.chunking import chunk_documents
 from ..functions.plan import truncate_eager, truncate_plan
+
+
+def embed_index(chunks: DataFrame, embedder: TfIdfEmbedder) -> DataFrame:
+    """chunks -> chunks + `embedding`, L2-normalized: the at-rest
+    format of every index row, built or uploaded."""
+    return embedder.transform(chunks).withColumn("embedding", l2_normalize("embedding"))
+
+
+def fit_index(
+    docs: DataFrame, chunk_size: int = 512, dim: int = 64, user_col: Optional[str] = None
+) -> tuple[TfIdfEmbedder, DataFrame]:
+    """documents -> (embedder fitted on their chunks, `build_index`'s
+    index).  No words -> ValueError, translated, not probed with a job."""
+    chunks = chunk_documents(docs, chunk_size=chunk_size)
+    if user_col is not None:
+        chunks = chunks.join(docs.select("doc_id", user_col), "doc_id")
+    chunks = chunks.transform(truncate_plan)
+    embedder = TfIdfEmbedder(dim=dim, text_col="chunk_text", out_col="embedding")
+    try:
+        embedder.fit(chunks)
+    except Py4JJavaError as e:
+        if "Haven't seen any document yet" not in str(e.java_exception):
+            raise
+        msg = "no documents to index: the input produced 0 chunks (corpus dirs: PMC*.txt only)"
+        raise ValueError(msg) from None
+    return embedder, embed_index(chunks, embedder)
 
 
 def build_index(
@@ -37,15 +62,7 @@ def build_index(
     """documents(doc_id, text[, user]) -> chunk index
     (doc_id, chunk_id, chunk_key, chunk_text, embedding L2-normalized).
     """
-    chunks = chunk_documents(docs, chunk_size=chunk_size)
-    if user_col is not None:
-        chunks = chunks.join(docs.select("doc_id", user_col), "doc_id")
-    chunks = chunks.transform(truncate_plan)
-    embedder = TfIdfEmbedder(dim=dim, text_col="chunk_text", out_col="raw_emb").fit(
-        chunks
-    )
-    embedded = embedder.transform(chunks)
-    return embedded.withColumn("embedding", l2_normalize("raw_emb")).drop("raw_emb")
+    return fit_index(docs, chunk_size, dim, user_col)[1]
 
 
 def write_index(
@@ -65,11 +82,14 @@ def write_index(
 
 def index_is_empty(spark: SparkSession, path: str) -> bool:
     """Idempotence guard (SURVEY A11): build only when no data exists
-    (/root/reference/app/main.py:422-424)."""
+    (reference app/main.py:422-424).  Only an absent path is
+    empty: a damaged index raises, so `upsert_index` never overwrites it."""
     try:
         return spark.read.parquet(path).isEmpty()
-    except Exception:  # noqa: BLE001 - path absent == empty
-        return True
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":
+            return True
+        raise
 
 
 def check_count_invariant(docs: DataFrame, index: DataFrame, chunk_size: int) -> None:

@@ -175,3 +175,96 @@ def test_upload_text_validation_and_tenancy(engine):
     assert doc_id == "notes_123"
     indexed = engine.index.filter(F.col("doc_id") == doc_id).collect()
     assert indexed and all(r.user_id == "u1" for r in indexed)
+
+
+def _docs(spark, sf_dir, n):
+    from semantic_query_engine_spark.sources.fixtures import load_table
+
+    return load_table(spark, sf_dir, "documents").limit(n).select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text"
+    )
+
+
+def test_facade_index_equals_build_index(spark, sf_dir):
+    """The facade builds its index through plans.index_build: on the same
+    string-id documents it equals build_index row for row, bit for bit."""
+    from semantic_query_engine_spark.api import SemanticQueryEngine
+    from semantic_query_engine_spark.plans.index_build import build_index
+
+    docs = _docs(spark, sf_dir, 20).localCheckpoint()
+    eng = SemanticQueryEngine(spark, chunk_size=32, dim=48).build_from_documents(docs)
+    want = build_index(docs, chunk_size=32, dim=48)
+    assert eng.index.columns == want.columns
+    rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
+    assert rows(eng.index) == rows(want)
+
+
+def test_facade_index_rows_normalized_across_uploads(spark, sf_dir):
+    """Every index row — built, uploaded, and folded — is L2-normalized
+    or all-zero.  l2_normalize divides by ||x|| + 1e-9, so a row's norm
+    is 1 - 1e-9 / (||x|| + 1e-9): within 1e-8 of 1 for raw norms >= 0.1."""
+    from semantic_query_engine_spark.api import MAX_UPLOAD_SEGMENTS, SemanticQueryEngine
+
+    eng = SemanticQueryEngine(spark, chunk_size=32).build_from_documents(_docs(spark, sf_dir, 20))
+
+    def check():
+        m = np.array([r.embedding for r in eng.index.select("embedding").collect()])
+        norms = np.linalg.norm(m, axis=1)
+        assert np.all((norms == 0.0) | (np.abs(norms - 1.0) <= 1e-8)), norms
+
+    for i in range(MAX_UPLOAD_SEGMENTS):
+        eng.upload_text("u", f"f{i}.txt", f"upload {i} nebula fjord", batch_ts=i)
+    assert eng._upload_segments == MAX_UPLOAD_SEGMENTS
+    check()
+    eng.upload_text("u", "g.txt", "upload nebula fjord after fold", batch_ts=99)
+    assert eng._upload_segments == 0
+    check()
+
+
+def test_upload_before_build_raises_facade_error(spark):
+    """Uploads extend a built index; before a build they raise like reads,
+    after the filename checks, and leave no index behind."""
+    from semantic_query_engine_spark.api import SemanticQueryEngine
+
+    fresh = SemanticQueryEngine(spark)
+    with pytest.raises(ValueError):
+        fresh.upload_text("u1", "notes.pdf", "alpha beta", batch_ts=1)
+    with pytest.raises(RuntimeError, match="no index built"):
+        fresh.upload_text("u1", "notes.txt", "alpha beta", batch_ts=1)
+    assert fresh.index is None
+
+
+def test_empty_input_raises_value_error_on_both_entry_points(spark, tmp_path):
+    """Documents without a word raise the facade's ValueError from
+    build_index and from a corpus dir with no PMC*.txt files, not
+    MLlib's "Haven't seen any document yet"."""
+    from semantic_query_engine_spark.api import SemanticQueryEngine
+    from semantic_query_engine_spark.plans.index_build import build_index
+
+    blank = spark.createDataFrame([("a", ""), ("b", "  \n\t ")], "doc_id string, text string")
+    with pytest.raises(ValueError, match="no documents to index"):
+        build_index(blank, chunk_size=16, dim=32)
+    (tmp_path / "notes.txt").write_text("words outside the name filter")
+    with pytest.raises(ValueError, match="no documents to index"):
+        SemanticQueryEngine(spark).build_from_corpus_dir(str(tmp_path))
+
+
+# Spark jobs of a facade build plus the index count below; 7 when the
+# facade probed for chunks with isEmpty and read its input once for
+# the IDF fit and again for the transform.
+FACADE_BUILD_JOBS = 5
+
+
+def test_facade_build_job_budget(spark, sf_dir):
+    from semantic_query_engine_spark.api import SemanticQueryEngine
+
+    docs = _docs(spark, sf_dir, 20)
+    sc = spark.sparkContext
+    group = "facade-build-job-budget"
+    sc.setJobGroup(group, group)
+    try:
+        SemanticQueryEngine(spark, chunk_size=32).build_from_documents(docs).index.count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= FACADE_BUILD_JOBS, jobs

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -670,3 +671,25 @@ def test_dhash64_none_sentinel_is_quarantined_by_filter():
         if sig is not None:
             sigs.append(sig)
     assert len(sigs) == 2 and all(isinstance(s, int) for s in sigs)
+
+
+def test_upsert_index_onto_damaged_index_raises(spark, tmp_path):
+    """Only an absent path counts as an empty index: an upsert onto an
+    index with a damaged parquet file raises and leaves its files as
+    they were, instead of overwriting it with the delta."""
+    from py4j.protocol import Py4JJavaError
+
+    from semantic_query_engine_spark.plans.index_build import upsert_index
+
+    path = tmp_path / "idx"
+    schema = "doc_id int, chunk_id int, chunk_text string, version int"
+    base = spark.createDataFrame([(i, 0, f"t{i}", 1) for i in range(5)], schema)
+    base.coalesce(1).write.parquet(str(path))
+    (part,) = path.glob("*.parquet")
+    part.write_bytes(b"PAR1 not a parquet file PAR1")
+    before = {p.name: p.read_bytes() for p in path.iterdir()}
+
+    delta = spark.createDataFrame([(9, 0, "new", 2)], schema)
+    with pytest.raises(Py4JJavaError):
+        upsert_index(spark, str(path), delta, ["doc_id", "chunk_id"], "version")
+    assert {p.name: p.read_bytes() for p in path.iterdir()} == before
