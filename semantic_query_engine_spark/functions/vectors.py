@@ -85,19 +85,6 @@ def cosine(a: ColumnOrName, b: ColumnOrName) -> Column:
     )
 
 
-def cosine_from_norms(
-    a: ColumnOrName, b: ColumnOrName, na: ColumnOrName, nb: ColumnOrName
-) -> Column:
-    """cosine(a,b) given PRE-PROJECTED L2 norms — arithmetic and
-    zero-norm guard identical to cosine() (same operation order, so
-    bit-identical results); the norms are plain column references, so
-    each is computed once however often it is mentioned."""
-    na, nb = _col(na), _col(nb)
-    return F.when((na == F.lit(0.0)) | (nb == F.lit(0.0)), F.lit(0.0)).otherwise(
-        dot(a, b) / (na * nb)
-    )
-
-
 def with_cosine(
     df,
     a: ColumnOrName,

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint, sql_ident, words_sql
-from ..functions.vectors import cosine_from_norms, l2_norm
+from ..functions.vectors import l2_norm, with_cosine
 from ..functions.plan import truncate_plan
 from .simhash import portable_word_hash, portable_word_hash_sql
 
@@ -419,31 +419,22 @@ def embedding_near_dups(
             l2_norm(vec_col).alias("__nb"),
         )
         pairs = cand.join(va, "id_a").join(vb, "id_b")
-        # one shared guard+dot/norm expression (ADVICE r14): identical
-        # arithmetic to the previous inline form, single source of truth
-        sim = F.round(cosine_from_norms("vec_a", "vec_b", "__na", "__nb"), 6)
-        return (
-            pairs.select("id_a", "id_b", sim.alias("sim"))
-            .filter(F.col("sim") >= F.lit(threshold))
-            .select("id_a", "id_b", "sim")
+    else:
+        a = embeddings.select(
+            F.col(id_col).alias("id_a"),
+            F.col(vec_col).alias("vec_a"),
+            l2_norm(vec_col).alias("__na"),
+            *( [F.col(block_col).alias("blk")] if block_col else [] ),
         )
-    a = embeddings.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("vec_a"),
-        l2_norm(vec_col).alias("__na"),
-        *( [F.col(block_col).alias("blk")] if block_col else [] ),
-    )
-    b = embeddings.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vec_b"),
-        l2_norm(vec_col).alias("__nb"),
-        *( [F.col(block_col).alias("blk")] if block_col else [] ),
-    )
-    joined = a.join(b, "blk") if block_col else a.crossJoin(b)
-    sim = F.round(cosine_from_norms("vec_a", "vec_b", "__na", "__nb"), 6)
-    return (
-        joined.filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", sim.alias("sim"))
-        .filter(F.col("sim") >= F.lit(threshold))
-        .select("id_a", "id_b", "sim")
+        b = embeddings.select(
+            F.col(id_col).alias("id_b"),
+            F.col(vec_col).alias("vec_b"),
+            l2_norm(vec_col).alias("__nb"),
+            *( [F.col(block_col).alias("blk")] if block_col else [] ),
+        )
+        joined = a.join(b, "blk") if block_col else a.crossJoin(b)
+        pairs = joined.filter(F.col("id_a") < F.col("id_b"))
+    sim = with_cosine(pairs, "vec_a", "vec_b", "sim", norm_a="__na", norm_b="__nb")
+    return sim.select("id_a", "id_b", F.round("sim", 6).alias("sim")).filter(
+        F.col("sim") >= F.lit(threshold)
     )

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vectors import l2_norm, with_cosine
+from ..ml.generator import deterministic_answer
 from ..sources.fixtures import load_table
 
 SYSTEM_RULES = (
@@ -108,12 +109,7 @@ def rag_ask(
     )
     return prompted.withColumn(
         "answer",
-        F.format_string(
-            "Based on %s retrieved documents (best doc %s, score %.6f): see context.",
-            F.col("n_docs").cast("string"),
-            F.col("top_doc_id").cast("string"),
-            F.col("top_score"),
-        ),
+        deterministic_answer(F.col("n_docs"), F.col("top_doc_id"), F.col("top_score")),
     ).select(
         "query_id", "n_docs", "top_doc_id", "top_score", "context", "prompt", "answer"
     )

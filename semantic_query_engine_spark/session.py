@@ -83,18 +83,8 @@ def get_spark(app_name: str = "semantic-query-engine-spark") -> SparkSession:
         # whole-stage-codegen classes (the 1024-dim vector plans compile
         # in seconds, not millis) on every eviction round-trip
         .config("spark.sql.codegen.cache.maxEntries", "2000")
-        # UI off by default (test/bench noise); SPARK_GRAFT_UI=true for
-        # tools that read shuffle metrics from the REST API.  Normalized
-        # to a strict true/false so a value like "1" yields UI-off
-        # instead of an invalid-boolean session-build failure (ADVICE
-        # r13): accepted truthy spellings are true/1/yes (any case).
-        .config(
-            "spark.ui.enabled",
-            str(
-                os.environ.get("SPARK_GRAFT_UI", "").strip().lower()
-                in ("true", "1", "yes")
-            ).lower(),
-        )
+        # no web UI: nothing reads it, and it costs startup and ports
+        .config("spark.ui.enabled", "false")
     )
     # Streaming state-store provider: RocksDB (off-heap, incremental
     # snapshots) by default on non-local masters, heap-backed default

@@ -2,15 +2,13 @@
 `pyspark.sql.datasource.DataSourceStreamReader` API): a deterministic
 synthetic event firehose.
 
-The batch half of the custom-source surface is corpus_datasource.py;
-this is the streaming half: offset tracking (initialOffset /
-latestOffset / commit), per-batch partition planning, and
-EXECUTOR-SIDE partition reads — the same contract a Kafka-like
-connector implements, demonstrated end-to-end through the micro-batch
-engine.  Content is a pure function of the row index, so a DuckDB
-oracle can regenerate the identical stream with `range()` and the
-result is hash-checkable — the determinism Spark's built-in `rate`
-source cannot give.
+It covers offset tracking (initialOffset / latestOffset / commit),
+per-batch partition planning, and EXECUTOR-SIDE partition reads — the
+contract a Kafka-like connector implements, demonstrated end-to-end
+through the micro-batch engine.  Content is a pure function of the
+row index, so a DuckDB oracle can regenerate the identical stream with
+`range()` and the result is hash-checkable — the determinism Spark's
+built-in `rate` source cannot give.
 
 Scale shape: `partitions(start, end)` splits each micro-batch's id
 range into N independent slices read in parallel on executors; the

@@ -70,24 +70,12 @@ def test_search_rejects_query_vector_of_wrong_length(engine):
             engine.search("x", 3, qvec=np.ones(n))
 
 
-def test_search_plan_build_py4j_budget(engine, spark, monkeypatch):
+def test_search_plan_build_py4j_budget(engine, count_py4j_calls):
     """Building one search plan (no action) stays under 50
     Python-to-JVM calls; a Column-composed cosine() plan issued ~430."""
     engine.search("warm the embedder up", k=3)
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    calls = 0
-
-    def counting(*args, **kwargs):
-        nonlocal calls
-        calls += 1
-        return send(*args, **kwargs)
-
-    with monkeypatch.context() as m:
-        m.setattr(client, "send_command", counting)
-        engine.search("fast key order sort", k=3)
+    calls = count_py4j_calls(lambda: engine.search("fast key order sort", k=3))
     assert calls < 50, calls
-    assert client.send_command == send
 
 
 def test_search_scores_bit_identical_to_cosine_across_uploads(spark, sf_dir):

@@ -938,7 +938,7 @@ def test_minhash_sql_plans_bit_identical_to_column_form(spark, sf_dir):
                 assert dist[(100, 102)] <= 0.5
 
 
-def test_minhash_lsh_plan_build_py4j_budget(spark, monkeypatch):
+def test_minhash_lsh_plan_build_py4j_budget(spark, count_py4j_calls):
     """Building a minhash_lsh_pairs plan (no action) stays under 1,000
     Python-to-JVM calls in both hash modes; the Column-composed form
     issued 4,300-5,700 (one round-trip per function, literal, cast and
@@ -948,21 +948,9 @@ def test_minhash_lsh_plan_build_py4j_budget(spark, monkeypatch):
     docs = spark.createDataFrame(
         [(1, "a b c d e f"), (2, "a b c d e g")], "doc_id long, text string"
     )
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
     for portable in (False, True):
-        calls = 0
-
-        def counting(*args, **kwargs):
-            nonlocal calls
-            calls += 1
-            return send(*args, **kwargs)
-
-        with monkeypatch.context() as m:
-            m.setattr(client, "send_command", counting)
-            minhash_lsh_pairs(docs, portable=portable)
+        calls = count_py4j_calls(lambda: minhash_lsh_pairs(docs, portable=portable))
         assert calls < 1000, (portable, calls)
-    assert client.send_command == send
 
 
 def test_connected_components_string_ids_match_bigint(spark):

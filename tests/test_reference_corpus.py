@@ -36,25 +36,3 @@ def test_corpus_ingest_parity(spark):
         assert len(r.chunk_text.split()) <= 512
         assert r.chunk_key == f"{r.doc_id}_{r.chunk_id}"
 
-
-def test_latin1_fallback_byte_faithful(spark, tmp_path):
-    """The faithful source must reproduce the reference's decode chain
-    EXACTLY (app/main.py:430-437): whole-file UTF-8, else whole-file
-    latin-1 — byte-for-byte, including bytes that are invalid UTF-8."""
-    from semantic_query_engine_spark.sources.text_corpus import (
-        read_text_corpus_faithful,
-    )
-
-    bad = b"caf\xe9 latin-1 only \xff\xfe tail"
-    good = "café plain utf-8".encode("utf-8")
-    (tmp_path / "PMC1.txt").write_bytes(bad)
-    (tmp_path / "PMC2.txt").write_bytes(good)
-    (tmp_path / "ignored.txt").write_bytes(b"filtered out")
-
-    rows = {
-        r.doc_id: r.text
-        for r in read_text_corpus_faithful(spark, str(tmp_path)).collect()
-    }
-    assert set(rows) == {"PMC1", "PMC2"}
-    assert rows["PMC1"] == bad.decode("latin-1")
-    assert rows["PMC2"] == good.decode("utf-8")

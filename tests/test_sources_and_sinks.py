@@ -48,6 +48,48 @@ def test_text_corpus_directory_read_matches_glob_read(spark, tmp_path):
     assert got == [("PMC10", "one two\nthree"), ("PMC11", "four")]
 
 
+def test_latin1_fallback_byte_faithful(spark, tmp_path):
+    """The corpus reader reproduces the reference's decode chain
+    exactly (app/main.py:430-437): whole-file UTF-8, else whole-file
+    latin-1, byte for byte, including bytes that are invalid UTF-8."""
+    from semantic_query_engine_spark.sources.text_corpus import read_text_corpus
+
+    bad = b"caf\xe9 latin-1 only \xff\xfe tail"
+    good = "café plain utf-8".encode("utf-8")
+    (tmp_path / "PMC1.txt").write_bytes(bad)
+    (tmp_path / "PMC2.txt").write_bytes(good)
+    (tmp_path / "ignored.txt").write_bytes(b"filtered out")
+
+    rows = {r.doc_id: r.text for r in read_text_corpus(spark, str(tmp_path)).collect()}
+    assert set(rows) == {"PMC1", "PMC2"}
+    assert rows["PMC1"] == bad.decode("latin-1")
+    assert rows["PMC2"] == good.decode("utf-8")
+
+
+def test_text_corpus_doc_id_is_the_raw_filename_stem(spark, tmp_path):
+    """doc_id is the filename stem as the reference sees it (os.listdir):
+    a space or a percent sign stays as it is, not URI-escaped."""
+    from semantic_query_engine_spark.sources.text_corpus import read_text_corpus
+
+    (tmp_path / "PMC 3.txt").write_text("space")
+    (tmp_path / "PMC%6.txt").write_text("percent")
+    got = sorted(tuple(r) for r in read_text_corpus(spark, str(tmp_path)).collect())
+    assert got == [("PMC 3", "space"), ("PMC%6", "percent")]
+
+
+def test_facade_corpus_build_decodes_latin1(spark, tmp_path):
+    """build_from_corpus_dir indexes a latin-1 PMC file with the
+    reference's characters, not U+FFFD replacements."""
+    from semantic_query_engine_spark.api import SemanticQueryEngine
+
+    (tmp_path / "PMC1.txt").write_bytes(b"caf\xe9 au lait near the fjord")
+    (tmp_path / "PMC2.txt").write_text("plain ascii text about sorting keys")
+    eng = SemanticQueryEngine(spark, chunk_size=32).build_from_corpus_dir(str(tmp_path))
+    texts = [r.chunk_text for r in eng.index.filter(F.col("doc_id") == "PMC1").collect()]
+    assert len(texts) == 1 and "café" in texts[0], texts
+    assert "\ufffd" not in texts[0]
+
+
 def test_index_build_write_and_guard(spark, sf_dir, tmp_path):
     from semantic_query_engine_spark.plans.index_build import (
         build_index,
@@ -169,23 +211,6 @@ def test_upsert_index_latest_wins(spark, tmp_path):
         (2, 0): ("keep", 1),
         (3, 0): ("added", 2),
     }
-
-
-def test_custom_corpus_datasource(spark, tmp_path):
-    """The Spark-4 Python DataSource reads the reference's corpus layout
-    (PMC*.txt only, latin-1 fallback) with one partition per file."""
-    from semantic_query_engine_spark.sources.corpus_datasource import (
-        register_corpus_source,
-    )
-
-    (tmp_path / "PMC7.txt").write_text("seven")
-    (tmp_path / "PMC8.txt").write_bytes("caf\xe9".encode("latin-1"))
-    (tmp_path / "other.txt").write_text("nope")
-    register_corpus_source(spark)
-    df = spark.read.format("pmc_corpus").option("path", str(tmp_path)).load()
-    assert df.rdd.getNumPartitions() == 2  # one per matching file
-    got = {r.doc_id: r.text for r in df.collect()}
-    assert got == {"PMC7": "seven", "PMC8": "café"}
 
 
 def test_multimodal_resize_deterministic_shape(spark, sf_dir):
