@@ -23,10 +23,10 @@ instruments tools/scale_run.py proved honest in round 13 —
     why BENCH_r13's tail looked like a regression while same-HEAD
     isolated runs were flat.  One JVM per query costs ~8 s of startup
     each, all OUTSIDE the timed region.
-SPARK_GRAFT_BENCH_INSTRUMENT=legacy reproduces the rounds-1-13
-shared-JVM .count() harness so the old and new series can be compared
-(BENCH_COMPARE_r14.md); SPARK_GRAFT_BENCH_BATCH=N shares one JVM across
-N consecutive queries to trade isolation for wall-clock.
+The rounds-1-13 shared-JVM .count() harness is gone; its bridge to
+this instrument is committed in BENCH_COMPARE_r14.md.
+SPARK_GRAFT_BENCH_BATCH=N shares one JVM across N consecutive queries
+to trade isolation for wall-clock.
 
 Each query runs $SPARK_GRAFT_BENCH_RUNS times (default 3) and reports
 the MEDIAN after $SPARK_GRAFT_BENCH_WARMUP (default 1) untimed
@@ -359,53 +359,6 @@ def _time_queries(
     return timings, steal_worst, retakes, poisoned
 
 
-def _legacy_main() -> None:
-    """The rounds-1-13 instrument, VERBATIM semantics: one shared JVM
-    for the whole sweep, .count() materialization.  Kept so the old and
-    new series stay comparable (BENCH_COMPARE_r14.md); known to measure
-    partially-pruned plans through an aging JVM (VERDICT r13 #1)."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ.setdefault(
-        "PYSPARK_SUBMIT_ARGS",
-        "--conf spark.ui.showConsoleProgress=false pyspark-shell",
-    )
-    from semantic_query_engine_spark.session import get_spark
-    from semantic_query_engine_spark.streaming.jobs import drop_live_sinks
-    from tools.harness_util import release_persistent_rdds
-
-    registry, bench_only = _bench_fns()
-
-    def q_fn(name):
-        return registry[name].fn if name in registry else bench_only[name]
-
-    load_before = list(os.getloadavg())
-    jvms_before = _foreign_jvms()
-    spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    names = [n for n in HEADLINE if n in registry or n in bench_only]
-    only = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
-    if only:
-        wanted = {w.strip() for w in only.split(",") if w.strip()}
-        names = [n for n in names if n in wanted]
-    q_fn(names[0])(spark, sf_dir).limit(1).collect()
-    runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
-    warmup = max(0, int(os.environ.get("SPARK_GRAFT_BENCH_WARMUP", "1")))
-    timings: dict[str, float] = {}
-    for name in names:
-        for _ in range(warmup):
-            q_fn(name)(spark, sf_dir).count()
-            drop_live_sinks(spark)
-        samples = []
-        for _ in range(runs):
-            t0 = time.time()
-            q_fn(name)(spark, sf_dir).count()
-            samples.append(time.time() - t0)
-        timings[name] = round(sorted(samples)[len(samples) // 2], 4)
-        drop_live_sinks(spark)
-        release_persistent_rdds(spark)
-    _emit(timings, sf_dir, load_before, jvms_before, "legacy-count-sharedjvm")
-
-
 def _emit(
     timings: dict[str, float],
     sf_dir: str,
@@ -648,42 +601,8 @@ def _parent_main() -> int:
     return 0
 
 
-def _legacy_parent() -> int:
-    """Legacy mode keeps the old clean-stderr re-exec: the JVM writes
-    unavoidable startup noise to stderr before any log4j control
-    exists, and callers that capture combined output record those
-    frames in the BENCH tail (VERDICT r6 #2)."""
-    import subprocess
-    import tempfile
-
-    with tempfile.NamedTemporaryFile(
-        mode="w+", prefix="bench_stderr_", suffix=".log", delete=False
-    ) as errf:
-        env = dict(os.environ, SPARK_GRAFT_BENCH_CHILD="legacy")
-        rc = subprocess.call(
-            [sys.executable, os.path.abspath(__file__)],
-            stderr=errf,
-            env=env,
-        )
-        if rc != 0:
-            errf.seek(0)
-            sys.stderr.write(errf.read())
-            sys.stderr.write(f"\n[bench] stderr retained at {errf.name}\n")
-    if rc == 0:
-        os.unlink(errf.name)  # don't leak one log per clean run
-    return rc
-
-
 if __name__ == "__main__":
-    child = os.environ.get("SPARK_GRAFT_BENCH_CHILD")
-    if child == "isolated":
+    if os.environ.get("SPARK_GRAFT_BENCH_CHILD") == "isolated":
         _child_main()
-    elif child == "legacy":
-        _legacy_main()
-    elif (
-        os.environ.get("SPARK_GRAFT_BENCH_INSTRUMENT", "isolated")
-        == "legacy"
-    ):
-        raise SystemExit(_legacy_parent())
     else:
         raise SystemExit(_parent_main())

@@ -1,7 +1,4 @@
-"""Vector math over ArrayType(FloatType) columns — pure Catalyst
-expressions (aggregate / zip_with / transform), no Python UDFs, so the
-whole similarity pipeline stays inside whole-stage codegen and scales
-linearly with executors.
+"""Vector math over array columns, rendered once as parsed SQL.
 
 Reference semantics replicated:
 - cosine_similarity with zero-norm guard -> 0.0
@@ -9,24 +6,26 @@ Reference semantics replicated:
 - L2 normalization with +1e-9 denominator
   (/root/reference/app/main.py:315-316,353-354, SURVEY A8)
 
-All element math is cast to double first so results are bit-identical to
-a DuckDB oracle computing in double (float32->double conversion is exact,
-and both engines fold the list left-to-right).
+Each rule is written once, as a private renderer of SQL text: the dot
+fold (`_dot`), the norm (`_norm`), the zero-norm guard (`_guard`) and
+the normalize rule (`_normalize`).  The public functions wrap them in
+`F.expr` / `selectExpr`, so a plan is parsed JVM-side from one string
+instead of composed node by node through Python-to-JVM (py4j) calls.
+Their operands are SQL text: a column name, a `const_sql` literal or a
+function call.  Everything stays a Catalyst higher-order function
+inside whole-stage codegen; no Python UDFs.
+
+All element math is cast to double first and folded left to right from
+0D, so results are bit-identical to a DuckDB oracle computing in double
+(float32->double conversion is exact).
 """
 
 from __future__ import annotations
 
 import math
-from typing import Iterable, Union
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-ColumnOrName = Union[Column, str]
-
-
-def _col(c: ColumnOrName) -> Column:
-    return c if isinstance(c, Column) else F.col(c)
 
 
 def const_array(values) -> Column:
@@ -49,113 +48,101 @@ def const_sql(v) -> str:
     return repr(f) + "D"
 
 
-def vector_lit(values: Iterable[float]) -> Column:
-    """A literal vector column (e.g. the broadcast query embedding of
-    SURVEY A6 — the reference embeds the query once and sends it with
-    every search request; Spark folds it into the plan as a constant)."""
-    return const_array([float(v) for v in values])
-
-
-def dot(a: ColumnOrName, b: ColumnOrName) -> Column:
-    """Inner product, accumulated in double (SURVEY A7)."""
-    prods = F.zip_with(_col(a), _col(b), lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
-
-
-def l2_norm(a: ColumnOrName) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: ColumnOrName, b: ColumnOrName) -> Column:
-    """cosine(a,b) with the reference's zero-norm guard -> 0.0
-    (/root/reference/app/main.py:62-63).
-
-    Cost note (r14): as ONE expression the two norm subtrees are each
-    referenced twice (guard + denominator), and the analyzer re-binds
-    higher-order-function lambda variables per occurrence, so codegen
-    subexpression elimination cannot unify them — 5 array aggregates
-    per row instead of 3.  Per-row hot paths should use
-    operators.retrieval.score_against to score against a constant
-    query, or with_cosine() (norm pre-projection) for two columns; this
-    form is fine for bounded sides (centroid tables, 1-row probes) and
-    is the reference the faster forms are tested against."""
-    na, nb = l2_norm(a), l2_norm(b)
-    return F.when((na == F.lit(0.0)) | (nb == F.lit(0.0)), F.lit(0.0)).otherwise(
-        dot(a, b) / (na * nb)
+def _dot(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
+        " 0D, (acc, p) -> acc + p)"
     )
+
+
+def _norm(a: str) -> str:
+    return f"sqrt({_dot(a, a)})"
+
+
+def _guard(d: str, na: str, nb: str) -> str:
+    return f"CASE WHEN {na} = 0D OR {nb} = 0D THEN 0D ELSE {d} / ({na} * {nb}) END"
+
+
+def _normalize(a: str, eps: float) -> str:
+    # the denominator rides in as an array so the row norm is evaluated
+    # once per row: inside the lambda body Spark would evaluate it once
+    # per element, and it does not hoist it out
+    denom = f"{_norm(a)} + {const_sql(eps)}"
+    return f"zip_with({a}, array_repeat({denom}, size({a})), (x, d) -> CAST(x AS DOUBLE) / d)"
+
+
+def dot(a: str, b: str) -> Column:
+    """Inner product, accumulated in double (SURVEY A7)."""
+    return F.expr(_dot(a, b))
+
+
+def l2_norm(a: str) -> Column:
+    return F.expr(_norm(a))
+
+
+def cosine(a: str, b: str) -> Column:
+    """cosine(a,b) with the reference's zero-norm guard -> 0.0
+    (/root/reference/app/main.py:62-63).  Fine for bounded sides
+    (centroid tables, pair tables); per-row hot paths use
+    operators.retrieval.score_against against a constant query, or
+    with_cosine() to pre-project the norms."""
+    return F.expr(_guard(_dot(a, b), _norm(a), _norm(b)))
 
 
 def with_cosine(
     df,
-    a: ColumnOrName,
-    b: ColumnOrName,
+    a: str,
+    b: str,
     out: str,
-    norm_b: ColumnOrName | None = None,
-    norm_a: ColumnOrName | None = None,
+    norm_b: str | None = None,
+    norm_a: str | None = None,
 ):
     """Append cosine(a, b) as column `out` via a norm PRE-PROJECTION
-    (guide §1.2 "don't compute things twice"): the norms land as real
-    columns in their own Project, and CollapseProject keeps that
-    Project separate because a non-cheap alias referenced more than
-    once is not inlined (SPARK-36718 — the same mechanism the r14
+    (guide §1.2 "don't compute things twice"): the dot and the norms
+    land as real columns in their own Project, and CollapseProject
+    keeps that Project separate because a non-cheap alias referenced
+    more than once is not inlined (SPARK-36718 — the same mechanism the
     tokenize-once rework relies on, pinned by tests/test_scale_shapes.py
-    ::test_text_heuristics_tokenize_once).  Per row this computes 2 array
-    aggregates + 1 dot instead of cosine()'s 5 — and only 1 + dot when
-    the caller passes `norm_b`, a norm already computed on a bounded
-    side (e.g. the 1-row broadcast query vector).
+    ::test_text_heuristics_tokenize_once).  A caller that already holds
+    a norm passes it as `norm_a`/`norm_b` (SQL text: a column computed
+    once on a bounded side, or a driver-folded `const_sql` literal the
+    guard constant-folds), and that norm is not recomputed per row.
 
-    The DOT PRODUCT is pre-projected too: because the norm aliases
-    block the collapse, the dot survives as a real column, so a
-    threshold filter on `out` that Catalyst pushes below the cosine
-    projection (the bm25 plan class — pushdown substitutes the alias
-    regardless of cost) lands on CHEAP COLUMN REFERENCES instead of
-    re-running the aggregates.
+    While a norm temp keeps that Project apart, the dot is a real
+    column too, so a threshold filter on `out` that Catalyst pushes
+    below the guard (the bm25 plan class — pushdown substitutes the
+    alias regardless of cost) lands on cheap column references instead
+    of re-running the aggregates.  With both norms passed, the dot is
+    inlined and such a filter re-runs the dot alone.
 
-    Values are bit-identical to cosine(): same guard, same operation
-    order, norms evaluated by the same l2_norm tree."""
-    dot_tmp = f"__{out}_dot"
-    # the temp names collide with df.select('*', ...) below if the input
-    # already carries them (e.g. two nested with_cosine calls with the
-    # same `out`) — fail loudly at plan-build time instead of with an
-    # ambiguous-column analyzer error downstream (ADVICE r14).  A norm
-    # temp exists only when the caller did not pass that norm.
+    Values are bit-identical to cosine(): the same fold, guard and
+    division order."""
+    temps = {f"__{out}_dot": _dot(a, b)}
+    if norm_a is None:
+        norm_a = f"`__{out}_norm_a`"
+        temps[f"__{out}_norm_a"] = _norm(a)
+    if norm_b is None:
+        norm_b = f"`__{out}_norm_b`"
+        temps[f"__{out}_norm_b"] = _norm(b)
+    # a temp name already in the input would collide in the select below
+    # (e.g. two nested with_cosine calls with the same `out`): fail at
+    # plan-build time, not with an ambiguous-column analyzer error later
     taken = set(df.columns)
-    temps = [dot_tmp]
-    temps += [f"__{out}_norm_a"] if norm_a is None else []
-    temps += [f"__{out}_norm_b"] if norm_b is None else []
     for tmp in temps:
         if tmp in taken:
             raise ValueError(
                 f"with_cosine temp column {tmp!r} already exists in the "
                 f"input; pick a different `out` name"
             )
-    proj = [dot(a, b).alias(dot_tmp)]
-    drops = [dot_tmp]
-    if norm_a is None:
-        na_tmp = f"__{out}_norm_a"
-        proj.append(l2_norm(a).alias(na_tmp))
-        na_col: ColumnOrName = na_tmp
-        drops.append(na_tmp)
-    else:
-        na_col = norm_a
-    if norm_b is None:
-        nb_tmp = f"__{out}_norm_b"
-        proj.append(l2_norm(b).alias(nb_tmp))
-        nb_col: ColumnOrName = nb_tmp
-        drops.append(nb_tmp)
-    else:
-        nb_col = norm_b
-    na_c, nb_c = _col(na_col), _col(nb_col)
-    sim = F.when(
-        (na_c == F.lit(0.0)) | (nb_c == F.lit(0.0)), F.lit(0.0)
-    ).otherwise(F.col(dot_tmp) / (na_c * nb_c))
-    return df.select("*", *proj).withColumn(out, sim).drop(*drops)
+    return (
+        df.selectExpr("*", *(f"{sql} AS `{name}`" for name, sql in temps.items()))
+        .withColumn(out, F.expr(_guard(f"`__{out}_dot`", norm_a, norm_b)))
+        .drop(*temps)
+    )
 
 
-def l2_normalize(a: ColumnOrName, eps: float = 1e-9) -> Column:
+def l2_normalize(a: str, eps: float = 1e-9) -> Column:
     """x / (||x|| + eps), the reference's pre-index / pre-search step
     (/root/reference/app/main.py:315-316). Keeping vectors normalized at
     rest makes query-time cosine a single dot product."""
-    c = _col(a)
-    denom = l2_norm(c) + F.lit(eps)
-    return F.transform(c, lambda x: x.cast("double") / denom)
+    return F.expr(_normalize(a, eps))

@@ -26,8 +26,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine, l2_norm, l2_normalize, vector_lit, with_cosine
-from .retrieval import topk_similar
+from ..functions.vectors import l2_norm, l2_normalize, with_cosine
+from .retrieval import score_against, topk_similar
 
 SEED = 42
 
@@ -224,9 +224,9 @@ def ivf_topk(
     cluster-partitioned layout (write_ivf_index) Catalyst applies
     dynamic partition pruning — no driver-side collect anywhere in the
     plan."""
-    q = vector_lit(query_vec)
     near = (
-        centroids.select("cluster_id", cosine("centroid", q).alias("csim"))
+        score_against(centroids, query_vec, "centroid")
+        .select("cluster_id", F.col("score").alias("csim"))
         .orderBy(F.desc("csim"), F.asc("cluster_id"))
         .limit(nprobe)
         # Semantically a no-op (cosine is always >= -1) but load-bearing
@@ -294,8 +294,8 @@ def ivf_knn_join(
     )
     cands = with_cosine(
         probe_clusters.join(assigned, "cluster_id"),
-        F.col(index_vec),
-        F.col("__pvec"),
+        index_vec,
+        "__pvec",
         "score",
         norm_b="__pnorm",
     ).select(F.col("__pid").alias(probe_id), F.col(index_id), "score")

@@ -33,7 +33,8 @@ from typing import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import const_array, cosine, l2_normalize, vector_lit
+from ..functions.vectors import const_array, cosine, l2_normalize
+from .retrieval import score_against
 
 SEED = 42
 
@@ -157,11 +158,11 @@ def pq_topk(
         .limit(refine)
         .select(id_col)
     )
-    qlit = vector_lit([float(x) for x in q])
+    # bounded: cand is limit(refine) rows
+    refined = index.join(F.broadcast(cand), id_col, "left_semi")
     return (
-        # bounded: cand is limit(refine) rows
-        index.join(F.broadcast(cand), id_col, "left_semi")
-        .select(F.col(id_col), F.round(cosine(vec_col, qlit), 6).alias("score"))
+        score_against(refined, q, vec_col)
+        .select(F.col(id_col), F.round("score", 6).alias("score"))
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
     )

@@ -2,11 +2,11 @@
 (/root/reference/app/main.py:347-373, SURVEY A15) re-expressed Spark-first.
 
 Strategy ladder (SURVEY §4.3):
-1. exact brute force (this module): score_against pre-projects each
-   row's dot with the query literal and its L2 norm (parsed SQL
-   strings) over a query norm folded on the driver, 2 array aggregates
-   per row; orderBy().limit(k) compiles to TakeOrderedAndProject:
-   per-partition top-k then a k-row merge on the driver — embarrassingly
+1. exact brute force (this module): score_against is
+   functions.vectors.with_cosine over the query literal, with the query
+   norm folded on the driver: each row's dot and L2 norm are
+   pre-projected, 2 array aggregates per row; orderBy().limit(k)
+   compiles to TakeOrderedAndProject: per-partition top-k then a k-row merge on the driver — embarrassingly
    parallel, no full sort, no shuffle of the scored set.  At 100 TB this
    is a single scan whose cost is bounded by I/O.
 2. LSH (operators/ann.py): MLlib BucketedRandomProjectionLSH for
@@ -36,23 +36,14 @@ def score_against(
 ) -> DataFrame:
     """Add a cosine `score` column against a constant query vector
     (the reference normalizes then HNSW-searches; here the scoring
-    expression itself is the index probe).  Values are bit-identical
-    to functions.vectors.cosine."""
+    expression itself is the index probe): with_cosine over the query
+    literal, whose norm is folded on the driver, so per row the plan
+    computes one dot and the row norm.  Values are bit-identical to
+    functions.vectors.cosine."""
     q = np.array([float(x) for x in query_vec])
-    qn = const_sql(np.sqrt(_seq_dot(q[None, :], q)[0]))
-
-    def dot(b: str) -> str:
-        return (
-            f"aggregate(zip_with(`{vec_col}`, {b}, (x, y) -> CAST(x AS DOUBLE)"
-            " * CAST(y AS DOUBLE)), 0D, (acc, p) -> acc + p)"
-        )
-
-    d, n = dot(const_sql(list(q))), f"sqrt({dot(f'`{vec_col}`')})"
-    score = f"CASE WHEN __n = 0D OR {qn} = 0D THEN 0D ELSE __d / (__n * {qn}) END"
-    return (
-        index.selectExpr("*", f"{d} AS __d", f"{n} AS __n")
-        .withColumn("score", F.expr(score))
-        .drop("__d", "__n")
+    qn = np.sqrt(_seq_dot(q[None, :], q)[0])
+    return with_cosine(
+        index, f"`{vec_col}`", const_sql(list(q)), "score", norm_b=const_sql(qn)
     )
 
 
@@ -91,7 +82,6 @@ def knn_join(
     probe_vec: str = "probe_vec",
     index_id: str = "vec_id",
     index_vec: str = "embedding",
-    broadcast_probes: bool = True,
     exclude_self: bool = False,
 ) -> DataFrame:
     """kNN join: every probe row -> its k nearest index rows (the
@@ -101,8 +91,7 @@ def knn_join(
     index so scoring is a map-only stage over index splits; the only
     shuffle is the per-probe top-k window, keyed by probe_id — cardinality
     |probes| * |index| rows never materialize beyond the window's
-    per-partition top-k with AQE.  For probe sets too big to broadcast,
-    flip broadcast_probes off and let AQE pick the join.
+    per-partition top-k with AQE.
     """
     p = probes.select(
         F.col(probe_id).alias("__pid"),
@@ -111,13 +100,12 @@ def knn_join(
         # twice per (index row x probe) pair (r14, with_cosine)
         l2_norm(probe_vec).alias("__pnorm"),
     )
-    if broadcast_probes:
-        # bounded: caller-gated (broadcast_probes flag) for small probe sets
-        p = F.broadcast(p)
     scored = with_cosine(
-        index.crossJoin(p),
-        F.col(index_vec),
-        F.col("__pvec"),
+        # bounded: a batch of probe queries, sized by the caller, never
+        # by the index
+        index.crossJoin(F.broadcast(p)),
+        index_vec,
+        "__pvec",
         "score",
         norm_b="__pnorm",
     ).select(F.col("__pid").alias(probe_id), F.col(index_id), "score")

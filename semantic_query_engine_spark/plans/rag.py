@@ -32,15 +32,15 @@ def rag_ask(
     sf_dir: str,
     query_vec_id: int = 0,
     top_k: int = 3,  # /root/reference/app/main.py:467
-    cache_threshold: float = 0.96,  # /root/reference/app/main.py:44
 ) -> DataFrame:
     """One-row answer DataFrame: (query_id, n_docs, context, prompt,
     answer, top_doc_id, top_score).
 
     The query embedding is taken in-plan from the embeddings fixture
     (broadcast 1-row join) — the analog of embed_query (SURVEY A6).
-    Cache probe excludes the query row itself, so the path demonstrated
-    is the cache-miss -> retrieve -> assemble -> generate pipeline.
+    There is no cache probe: the path demonstrated is the cache-miss
+    -> retrieve -> assemble -> generate pipeline, and retrieval excludes
+    the query row itself.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")

@@ -1213,8 +1213,6 @@ def decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     for eval sets too big to broadcast, swap in the SRP-banded
     candidate join of `dedup_semantic` (operators/dedup.py) — same
     output contract."""
-    from ..functions.vectors import cosine
-
     pool = (
         load_table(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") < 400)
@@ -1229,8 +1227,7 @@ def decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("v", lambda x: x * F.lit(1.001)).alias("v"),
     )
     trainset = pool.filter(F.col("vec_id") % 25 != 0).unionByName(planted)
-    from ..functions.vectors import dot as vdot
-    from ..functions.vectors import l2_norm
+    from ..functions.vectors import l2_norm, with_cosine
 
     ev = evalset.select(
         F.col("vec_id").alias("eval_id"),
@@ -1241,21 +1238,15 @@ def decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # train-side norm pre-projected per row; the sim>=0.98 filter gets
     # pushed below the scoring projection (bm25 plan class) but then
-    # re-evaluates one dot, not cosine()'s full 5-aggregate tree
+    # re-evaluates one dot, not the norms
     train = trainset.select(
         F.col("vec_id").alias("train_id"), "v", l2_norm("v").alias("__tn")
     )
-    sim = F.round(
-        F.when(
-            (F.col("__tn") == F.lit(0.0)) | (F.col("__evn") == F.lit(0.0)),
-            F.lit(0.0),
-        ).otherwise(vdot("v", "ev") / (F.col("__tn") * F.col("__evn"))),
-        6,
-    )
+    # bounded: eval-benchmark vectors — sized by the suite, not the corpus
+    pairs = train.crossJoin(F.broadcast(ev))
     return (
-        # bounded: eval-benchmark vectors — sized by the suite, not the corpus
-        train.crossJoin(F.broadcast(ev))
-        .select("train_id", "eval_id", sim.alias("sim"))
+        with_cosine(pairs, "v", "ev", "sim", norm_a="__tn", norm_b="__evn")
+        .select("train_id", "eval_id", F.round("sim", 6).alias("sim"))
         .filter(F.col("sim") >= 0.98)
     )
 
@@ -1663,7 +1654,7 @@ def retrieval_eval_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ik = index.select("vec_id", "embedding", srp_key(F.col("embedding")).alias("key"))
     cand = pk.join(ik, "key").select(
-        "probe_id", "vec_id", cosine(F.col("embedding"), F.col("probe_vec")).alias("c")
+        "probe_id", "vec_id", cosine("embedding", "probe_vec").alias("c")
     )
     # cand feeds BOTH the ranked-hits leg and the per-probe candidate
     # count; without truncation each leg re-runs the SRP bucketing scan

@@ -109,11 +109,11 @@ def vector_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     norm before, squared norm after (≈1) — checks the +1e-9-denominator
     semantics exactly."""
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 100)
-    normed = l2_normalize("embedding")
-    return emb.select(
+    normed = emb.select("vec_id", "embedding", l2_normalize("embedding").alias("normed"))
+    return normed.select(
         "vec_id",
         F.round(l2_norm("embedding"), 6).alias("norm"),
-        F.round(dot(normed, normed), 6).alias("unit_norm_sq"),
+        F.round(dot("normed", "normed"), 6).alias("unit_norm_sq"),
     )
 
 
@@ -652,7 +652,7 @@ def semantic_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") != 0)
         # bounded: single query row
         .crossJoin(F.broadcast(q))
-        .select("vec_id", "embedding", cosine("embedding", F.col("qv")).alias("simq"))
+        .select("vec_id", "embedding", cosine("embedding", "qv").alias("simq"))
     )
     pool = cand.orderBy(F.desc("simq"), F.asc("vec_id")).limit(_MMR_POOL)
     pool = pool.transform(truncate_eager)  # 20 rows; reused K+1 times

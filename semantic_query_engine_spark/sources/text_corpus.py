@@ -27,6 +27,10 @@ def read_text_corpus(spark: SparkSession, corpus_dir: str) -> DataFrame:
     doc_id is the bare filename stem, matching the reference's use of
     the filename as doc_id (app/main.py:446-449).
 
+    An empty file yields no row: Spark's file scan skips zero-length
+    files.  The index is the same either way, because the reference
+    chunks an empty document into zero chunks.
+
     `is_valid_utf8` is the expression twin of the reference's
     try/except UnicodeDecodeError and ISO-8859-1 decoding is total, so
     the fallback branch cannot throw.  All codegen'd expressions; no

@@ -80,11 +80,11 @@ def test_search_plan_build_py4j_budget(engine, count_py4j_calls):
 
 def test_search_scores_bit_identical_to_cosine_across_uploads(spark, sf_dir):
     """The facade's ranking of EVERY index row — (chunk_key, score),
-    ties by chunk_key — equals a cosine() Column plan over the same
+    ties by chunk_key — equals a cosine() plan over the same
     index, after uploads and again after they fold into the base, for a
     text query and the all-zero (empty) query."""
     from semantic_query_engine_spark.api import MAX_UPLOAD_SEGMENTS, SemanticQueryEngine
-    from semantic_query_engine_spark.functions.vectors import cosine, vector_lit
+    from semantic_query_engine_spark.functions.vectors import const_sql, cosine
     from semantic_query_engine_spark.sources.fixtures import load_table
 
     docs = load_table(spark, sf_dir, "documents").limit(20).select(
@@ -97,7 +97,7 @@ def test_search_scores_bit_identical_to_cosine_across_uploads(spark, sf_dir):
         for q in ("upload nebula fjord key order", "  "):
             qvec = eng._embed_query(q)
             want = (
-                eng.index.withColumn("score", cosine("embedding", vector_lit(qvec)))
+                eng.index.withColumn("score", cosine("embedding", const_sql(list(qvec))))
                 .orderBy(F.desc("score"), F.asc("chunk_key"))
                 .select("chunk_key", "score")
             )

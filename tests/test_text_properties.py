@@ -67,10 +67,10 @@ def test_normalize_and_cosine_guards(spark):
             ]
         ),
     )
-    out = df.select(
+    out = df.select("id", "v", l2_normalize("v").alias("nv")).select(
         "id",
         l2_norm("v").alias("norm"),
-        l2_norm(l2_normalize("v")).alias("unit"),
+        l2_norm("nv").alias("unit"),
         cosine("v", "v").alias("self_cos"),
     ).collect()
     by_id = {r.id: r for r in out}

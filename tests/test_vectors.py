@@ -1,18 +1,104 @@
-"""functions.vectors: with_cosine's temp-column collision guard, and
-cosine() as the reference that operators.retrieval.score_against's
-parsed SQL form must equal bit for bit."""
+"""functions.vectors: the parsed-SQL vector rules equal, bit for bit,
+the Column-composed forms below (the package's earlier rendering, kept
+here as the reference); with_cosine's temp-column collision guard;
+operators.retrieval.score_against against the reference cosine; and
+the plan-build cost and plan shape of the SQL forms."""
 
 from __future__ import annotations
 
+import random
+
 import pytest
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from semantic_query_engine_spark.functions.vectors import (
+    const_array,
     cosine,
+    dot,
     l2_norm,
-    vector_lit,
+    l2_normalize,
     with_cosine,
 )
+
+
+def _col(c) -> Column:
+    return c if isinstance(c, Column) else F.col(c)
+
+
+def dot_ref(a, b) -> Column:
+    prods = F.zip_with(_col(a), _col(b), lambda x, y: x.cast("double") * y.cast("double"))
+    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
+
+
+def l2_norm_ref(a) -> Column:
+    return F.sqrt(dot_ref(a, a))
+
+
+def cosine_ref(a, b) -> Column:
+    na, nb = l2_norm_ref(a), l2_norm_ref(b)
+    return F.when((na == F.lit(0.0)) | (nb == F.lit(0.0)), F.lit(0.0)).otherwise(
+        dot_ref(a, b) / (na * nb)
+    )
+
+
+def l2_normalize_ref(a, eps: float = 1e-9) -> Column:
+    denom = l2_norm_ref(a) + F.lit(eps)
+    return F.transform(_col(a), lambda x: x.cast("double") / denom)
+
+
+def _exact(df) -> list[str]:
+    """Rows as repr strings: equal only when every double is the same
+    bit pattern up to NaN payloads (repr tells -0.0 from 0.0)."""
+    return [repr(tuple(r)) for r in df.orderBy("id").collect()]
+
+
+def _pairs(spark, elem: str):
+    rnd = random.Random(7)
+    wide_a = [rnd.uniform(-1, 1) for _ in range(1024)]
+    wide_b = [rnd.uniform(-1, 1) for _ in range(1024)]
+    rows = [
+        (1, [0.25, -1.5, 3.0, 0.1], [0.3, 1.7, -0.2, 0.9]),
+        (2, [0.0, 0.0, 0.0, 0.0], [0.3, 1.7, -0.2, 0.9]),  # zero vector
+        (3, [1.1, 2.2, -0.3, 0.7], [0.0, 0.0, 0.0, 0.0]),  # zero vector
+        (4, [1.1, 2.2, -0.3, 0.7], [1.1, 2.2, -0.3, 0.7]),  # tie with 5
+        (5, [1.1, 2.2, -0.3, 0.7], [1.1, 2.2, -0.3, 0.7]),
+        (6, [], []),  # empty arrays
+        (7, None, [1.0, 2.0, 3.0, 4.0]),  # null array
+        (8, [1.0, None, 2.0, 0.5], [1.0, 2.0, 3.0, 4.0]),  # null element
+        (9, [1e-30, -2e-30, 3e-30, 0.0], [7.5, -0.125, 3.0, 1e6]),
+        (10, wide_a, wide_b),  # the reference's 1,024 dims
+    ]
+    return spark.createDataFrame(rows, f"id int, a array<{elem}>, b array<{elem}>")
+
+
+@pytest.mark.parametrize("elem", ["float", "double"])
+def test_sql_forms_bit_identical_to_column_reference(spark, elem):
+    df = _pairs(spark, elem)
+    got = df.select(
+        "id",
+        dot("a", "b").alias("dot"),
+        l2_norm("a").alias("norm"),
+        cosine("a", "b").alias("cos"),
+        l2_normalize("a").alias("unit"),
+    )
+    want = df.select(
+        "id",
+        dot_ref("a", "b").alias("dot"),
+        l2_norm_ref("a").alias("norm"),
+        cosine_ref("a", "b").alias("cos"),
+        l2_normalize_ref("a").alias("unit"),
+    )
+    assert got.schema == want.schema
+    assert _exact(got) == _exact(want)
+
+    # with_cosine with both norms passed, one passed, and none passed
+    normed = df.select("*", l2_norm("a").alias("na"), l2_norm("b").alias("nb"))
+    want = _exact(df.select("id", cosine_ref("a", "b").alias("s")))
+    for kw in ({"norm_a": "na", "norm_b": "nb"}, {"norm_b": "nb"}, {}):
+        out = with_cosine(normed, "a", "b", "s", **kw)
+        assert out.columns == normed.columns + ["s"], kw
+        assert _exact(out.select("id", "s")) == want, kw
 
 
 def test_with_cosine_guard_skips_norms_the_caller_passes(spark):
@@ -31,13 +117,39 @@ def test_with_cosine_guard_skips_norms_the_caller_passes(spark):
         with_cosine(df.withColumn("__score_dot", F.lit(0.0)), "a", "b", "score", norm_b="nb")
 
 
+def test_l2_normalize_folds_the_row_norm_outside_the_lambda(spark):
+    """The row norm is an aggregate over the whole row; inside the
+    per-element lambda it re-ran once per element (O(dim^2) per row).
+    The plan audit's ROW_AGGREGATE_IN_LAMBDA check flags that shape."""
+    from tools.plan_audit import _aggregates_row_in_lambda
+
+    df = _pairs(spark, "float")
+
+    def plan(c: Column) -> str:
+        return df.select(c.alias("n"))._jdf.queryExecution().optimizedPlan().toString()
+
+    assert _aggregates_row_in_lambda(plan(l2_normalize_ref("a")))
+    assert not _aggregates_row_in_lambda(plan(l2_normalize("a")))
+
+
+def test_vector_plan_build_py4j_budget(spark, count_py4j_calls):
+    """Building a with_cosine plan or an l2_normalize expression (no
+    action) parses one SQL string per expression; the Column-composed
+    forms issued ~550 and ~170 Python-to-JVM calls."""
+    df = _pairs(spark, "float")
+    with_cosine(df, "a", "b", "s")  # warm up
+    l2_normalize("a")
+    assert count_py4j_calls(lambda: with_cosine(df, "a", "b", "s")) < 50
+    assert count_py4j_calls(lambda: l2_normalize("a")) < 20
+
+
 def _scores(df) -> list[tuple]:
     return [tuple(r) for r in df.collect()]
 
 
 @pytest.mark.parametrize("elem", ["float", "double"])
 def test_score_against_sql_form_bit_identical_to_cosine(spark, elem):
-    """score_against equals cosine(vec, vector_lit(q)) exactly, on a
+    """score_against equals cosine(vec, const_array(q)) exactly, on a
     zero-norm row, tied duplicate rows (ranked by id) and an all-zero
     query; cache.probe (threshold_probe) hits a score at exactly the
     threshold and misses one ulp above it."""
@@ -59,7 +171,7 @@ def test_score_against_sql_form_bit_identical_to_cosine(spark, elem):
     ]
     df = spark.createDataFrame(rows, f"vec_id long, embedding array<{elem}>")
     for q in ([0.3, 1.7, -0.2, 0.9], [0.0, 0.0, 0.0, 0.0], [1.1, 2.2, -0.3, 0.7]):
-        want = df.select("vec_id", cosine("embedding", vector_lit(q)).alias("score"))
+        want = df.select("vec_id", cosine_ref("embedding", const_array(q)).alias("score"))
         got = score_against(df, q).select("vec_id", "score")
         assert got.dtypes == want.dtypes
         assert sorted(_scores(got)) == sorted(_scores(want)), q
@@ -67,7 +179,7 @@ def test_score_against_sql_form_bit_identical_to_cosine(spark, elem):
         assert _scores(topk_similar(df, q, k=4)) == ranked, q
 
     q = [0.3, 1.7, -0.2, 0.9]
-    best = df.select(cosine("embedding", vector_lit(q)).alias("s")).agg(F.max("s")).head()[0]
+    best = df.select(cosine_ref("embedding", const_array(q)).alias("s")).agg(F.max("s")).head()[0]
     entries = df.select(
         F.col("vec_id").alias("entry_id"),
         F.col("embedding").cast("array<double>").alias("embedding"),

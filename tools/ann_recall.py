@@ -83,7 +83,7 @@ def lsh_knn_join(probes, index, k: int, num_tables: int, bucket_length: float):
         return df.select(
             F.col("vec_id").alias(id_name),
             array_to_vector(
-                l2_normalize(F.col("embedding")).cast("array<double>")
+                l2_normalize("embedding").cast("array<double>")
             ).alias("features"),
         )
 

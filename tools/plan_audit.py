@@ -16,6 +16,12 @@ query's plan and flag the shapes that kill 100 TB runs —
   per-element lambda (an n-gram `transform` slicing an inline words
   array) re-splits the document once per element — O(words^2) per
   document; the words array belongs in its own projection
+- ROW_AGGREGATE_IN_LAMBDA: an `aggregate(` inside a lambda body whose
+  array operand contains no variable of an enclosing lambda.  A fold
+  over the row's own array (a norm) placed inside a per-element lambda
+  (a normalize `transform`) re-runs once per element — O(dim^2) per
+  row; Spark does not hoist it, so the fold must sit outside every
+  lambda
 
 Usage: python tools/plan_audit.py [sf_dir] [--markdown]
 Exit code 1 if any query has a flag not covered by an allowlist entry,
@@ -212,11 +218,11 @@ def _has_unpartitioned_window(plan: str) -> bool:
     return False
 
 
-def _tokenizes_in_lambda(plan: str) -> bool:
-    """True when the body of any `lambdafunction(...)` in the plan
-    string contains `split(`.  The argument list is matched by paren
-    depth; it ends early at `...`, where the plan printer abbreviates a
-    long scan-metadata string (a pushed-down filter) mid-expression."""
+def _lambda_functions(plan: str):
+    """The text of every `lambdafunction(...)` in the plan string,
+    matched by paren depth; it ends early at `...`, where the plan
+    printer abbreviates a long scan-metadata string (a pushed-down
+    filter) mid-expression."""
     start = plan.find("lambdafunction(")
     while start != -1:
         i = start + len("lambdafunction(")
@@ -224,9 +230,57 @@ def _tokenizes_in_lambda(plan: str) -> bool:
         while i < len(plan) and depth and not plan.startswith("...", i):
             depth += {"(": 1, ")": -1}.get(plan[i], 0)
             i += 1
-        if "split(" in plan[start:i]:
-            return True
+        yield plan[start:i]
         start = plan.find("lambdafunction(", start + 1)
+
+
+def _tokenizes_in_lambda(plan: str) -> bool:
+    """True when the body of any `lambdafunction(...)` in the plan
+    string contains `split(`."""
+    return any("split(" in fn for fn in _lambda_functions(plan))
+
+
+_LAMBDA_VAR = re.compile(r"lambda \w+#\d+")
+
+
+def _call_args(text: str, i: int) -> list[str] | None:
+    """Top-level arguments of the call whose `(` ends just before
+    `text[i]`, split by paren depth; None when the text ends or is cut
+    at `...` before the call closes."""
+    args, depth, begin = [], 1, i
+    while i < len(text) and not text.startswith("...", i):
+        ch = text[i]
+        if ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+            if not depth:
+                return args + [text[begin:i]]
+        elif ch == "," and depth == 1:
+            args.append(text[begin:i])
+            begin = i + 1
+        i += 1
+    return None
+
+
+def _aggregates_row_in_lambda(plan: str) -> bool:
+    """True when a lambda body holds an `aggregate(` whose array
+    operand has no free lambda variable: the variables it uses are all
+    bound by lambdas inside the operand itself (a zip_with's own
+    (x, y)), so it folds the same row array for every element of the
+    enclosing lambda."""
+    for fn in _lambda_functions(plan):
+        for m in re.finditer(r"\baggregate\(", fn):
+            args = _call_args(fn, m.end())
+            if args is None:
+                continue
+            operand = args[0]
+            bound = set()
+            for inner in re.finditer(r"lambdafunction\(", operand):
+                for param in (_call_args(operand, inner.end()) or [])[1:]:
+                    bound.update(_LAMBDA_VAR.findall(param))
+            if set(_LAMBDA_VAR.findall(operand)) <= bound:
+                return True
     return False
 
 
@@ -244,6 +298,8 @@ def audit_one(spark, name: str, sf_dir: str) -> list[str]:
         flags.append("ROW_PYTHON")
     if _tokenizes_in_lambda(plan):
         flags.append("TOKENIZE_IN_LAMBDA")
+    if _aggregates_row_in_lambda(plan):
+        flags.append("ROW_AGGREGATE_IN_LAMBDA")
     return flags
 
 
@@ -306,7 +362,7 @@ def main() -> None:
                 "NONE — no unpartitioned window (plan-level or "
                 "setup-side source-level), no CartesianProduct, no "
                 "row-at-a-time Python, no tokenizer (split) inside a "
-                "lambda, no unexcused "
+                "lambda, no row aggregate inside a lambda, no unexcused "
                 "BroadcastNestedLoopJoin in any registered query plan."
             )
         print("\n## Accepted bounded nested-loop joins\n")
