@@ -134,7 +134,12 @@ class SemanticQueryEngine:
         index = self._require_index()
         stem = filename[: -len(".txt")]
         doc_id = f"{stem}_{batch_ts}"
-        docs = self.spark.createDataFrame([(doc_id, content)], "doc_id string, text string")
+        # one partition: createDataFrame spreads a local list over the
+        # default parallelism, and every partition of every segment
+        # is one more task per search
+        docs = self.spark.createDataFrame(
+            [(doc_id, content)], "doc_id string, text string"
+        ).coalesce(1)
         embedded = (
             embed_index(chunk_documents(docs, chunk_size=self.chunk_size), self._embedder)
             .withColumn("user_id", F.lit(user_id))
@@ -143,7 +148,9 @@ class SemanticQueryEngine:
         self.index = index.unionByName(embedded, allowMissingColumns=True)
         self._upload_segments += 1
         if self._upload_segments > MAX_UPLOAD_SEGMENTS:
-            folded = self.index.transform(truncate_eager)
+            # a union keeps the sum of its inputs' partitions
+            parts = self._base.rdd.getNumPartitions()
+            folded = self.index.coalesce(parts).transform(truncate_eager)
             self._base.unpersist()
             self.index = self._base = folded
             self._upload_segments = 0

@@ -2,22 +2,34 @@
 
 Reference semantics replicated:
 - cosine_similarity with zero-norm guard -> 0.0
-  (/root/reference/app/main.py:59-64, SURVEY A7)
+  (reference app/main.py:59-64, SURVEY A7)
 - L2 normalization with +1e-9 denominator
-  (/root/reference/app/main.py:315-316,353-354, SURVEY A8)
+  (reference app/main.py:315-316,353-354, SURVEY A8)
 
-Each rule is written once, as a private renderer of SQL text: the dot
-fold (`_dot`), the norm (`_norm`), the zero-norm guard (`_guard`) and
-the normalize rule (`_normalize`).  The public functions wrap them in
-`F.expr` / `selectExpr`, so a plan is parsed JVM-side from one string
-instead of composed node by node through Python-to-JVM (py4j) calls.
-Their operands are SQL text: a column name, a `const_sql` literal or a
-function call.  Everything stays a Catalyst higher-order function
-inside whole-stage codegen; no Python UDFs.
+Each rule is written once, as a private renderer of SQL text:
+- `_dot`: the inner product, folded in double from 0D;
+- `_norm`: the L2 norm, sqrt of the self dot;
+- `_guard`: the cosine zero-norm guard over a dot and two norms;
+- `_normalize`: x / (||x|| + eps), the row norm evaluated once per row;
+- `_sqdist`: the squared L2 distance, folded in double from 0D (PQ
+  codeword assignment and ADC distance tables, operators/pq);
+- `_micro`: the 1e-6 integer quantization of each component;
+- `_idot`: the integer dot, folded in a long from 0L — exact, so any
+  evaluation order gives the same sum (the ±1 projections of
+  queries/semantic and queries/dedup_q, the alignment score of
+  queries/multimodal_q).
+The double and integer dots stay two rules because their accumulators
+differ.  The public functions wrap the renderers in `F.expr` /
+`selectExpr`, and the package's operators compose them into their own
+SQL strings, so a plan is parsed JVM-side from one string instead of
+composed node by node through Python-to-JVM (py4j) calls.  Their
+operands are SQL text: a column name, a `const_sql` literal or a
+function call.  Everything stays a Catalyst higher-order function; no
+Python UDFs.
 
-All element math is cast to double first and folded left to right from
-0D, so results are bit-identical to a DuckDB oracle computing in double
-(float32->double conversion is exact).
+The double rules cast every element to double first and fold left to
+right from 0D, so results are bit-identical to a DuckDB oracle
+computing in double (float32->double conversion is exact).
 """
 
 from __future__ import annotations
@@ -61,6 +73,21 @@ def _norm(a: str) -> str:
 
 def _guard(d: str, na: str, nb: str) -> str:
     return f"CASE WHEN {na} = 0D OR {nb} = 0D THEN 0D ELSE {d} / ({na} * {nb}) END"
+
+
+def _sqdist(a: str, b: str) -> str:
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) - CAST(y AS DOUBLE)),"
+        " 0D, (acc, d) -> acc + d * d)"
+    )
+
+
+def _micro(a: str) -> str:
+    return f"transform({a}, x -> CAST(round(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT))"
+
+
+def _idot(a: str, b: str) -> str:
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, (acc, p) -> acc + p)"
 
 
 def _normalize(a: str, eps: float) -> str:
@@ -108,15 +135,22 @@ def with_cosine(
     once on a bounded side, or a driver-folded `const_sql` literal the
     guard constant-folds), and that norm is not recomputed per row.
 
-    While a norm temp keeps that Project apart, the dot is a real
-    column too, so a threshold filter on `out` that Catalyst pushes
-    below the guard (the bm25 plan class — pushdown substitutes the
-    alias regardless of cost) lands on cheap column references instead
-    of re-running the aggregates.  With both norms passed, the dot is
-    inlined and such a filter re-runs the dot alone.
+    A caller that passes both norms is a pair join with its norms
+    pre-projected per side, filtered on `out` by a threshold.  Catalyst
+    pushes such a filter through any Project (substituting the alias
+    regardless of cost) into the join condition, where the dot would
+    run once and then again in the output projection.  So with both
+    norms passed the cosine is a generated column (`inline` of a
+    one-struct array): a filter on a Generate's output stays above it,
+    and every pair evaluates its dot once.  With a norm temp the
+    Project form stays, for the callers that rank rather than filter
+    (the facade's search among them).
 
     Values are bit-identical to cosine(): the same fold, guard and
     division order."""
+    if norm_a is not None and norm_b is not None:
+        sim = _guard(_dot(a, b), norm_a, norm_b)
+        return df.selectExpr("*", f"inline(array(named_struct('{out}', {sim})))")
     temps = {f"__{out}_dot": _dot(a, b)}
     if norm_a is None:
         norm_a = f"`__{out}_norm_a`"

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint, sql_ident, words_sql
-from ..functions.vectors import l2_norm, with_cosine
+from ..functions.vectors import _dot, const_sql, l2_norm, with_cosine
 from ..functions.plan import truncate_plan
 from .simhash import portable_word_hash, portable_word_hash_sql
 
@@ -86,7 +86,6 @@ def jaccard_pairs(
     id_col: str = "doc_id",
     n: int = 3,
     max_shingle_freq: int | None = None,
-    truncate: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by word-n-gram Jaccard >= threshold.
 
@@ -113,12 +112,8 @@ def jaccard_pairs(
     # sides, so the tokenize+shingle+explode chain (and the stop-
     # shingle semi join, when capped) ran 3x per document.  (id,
     # shingle) is the lightweight proxy a staged dedup run writes
-    # anyway; payload text never enters it.  truncate=False skips the
-    # checkpoint so plan tests can see the pre-truncation shape (the
-    # valve's LeftSemi etc.) that the checkpoint otherwise hides behind
-    # a Scan ExistingRDD.
-    if truncate:
-        sh = sh.transform(truncate_plan)
+    # anyway; payload text never enters it.
+    sh = sh.transform(truncate_plan)
     sizes = sh.groupBy("id").agg(F.count("*").alias("n_shingles"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -273,10 +268,12 @@ def minhash_lsh_pairs(
     # sizes/ea/eb: truncated once, the tokenize+shingle+explode chain
     # runs once per document.
     sh = shingle_table(docs, text_col, id_col, n).transform(truncate_plan)
-    # Truncate the band table before the self-join (r14): both sides
-    # derive from `bt`, so the 64-permutation signature aggregation ran
-    # TWICE without it (the same shared-tiny-table rule dedup_eval_lsh
-    # applies to its own bt).  n_bands rows of (id, band, key) per doc.
+    # Truncate the band table before the self-join.  AQE would share
+    # the signature aggregation's exchange between the two sides
+    # without it (ReusedExchange), saving one job, but each side then
+    # re-runs the final aggregate and the band Generate: measured
+    # alternating in one process, a perfbench curation pass cost ~9%
+    # more CPU and a 200-doc call ~11% more.
     bt = _band_table(sh, num_perm, n_bands, portable).transform(truncate_plan)
     cand = (
         bt.alias("a")
@@ -327,36 +324,24 @@ def srp_band_table(
     """(id, band, key) sign-random-projection signature table.
     bit_i = sign(v . h_(band,i)); key packs the band's bits.  The
     hyperplanes ride along as one literal array, the band index is
-    exploded FIRST so the per-row key expression stays small (bits
-    aggregates, not bands*bits) — planning and codegen stay cheap.
-    Map-only: no shuffle, no fitted model."""
-    # one sql-string literal: F.lit(list) pays a py4j round-trip per
-    # element (2,048 doubles here) at every plan construction
-    from ..functions.vectors import const_array
+    exploded FIRST so the per-row key expression stays small (one fold
+    over the bits, not bands*bits) — planning and codegen stay cheap.
+    Map-only: no shuffle, no fitted model.
 
-    planes = const_array(_srp_planes(n_bands, bits, dim, seed))
-
-    def _elem(i: int):
-        def _f(x, j):
-            idx = (F.col("band") * bits + F.lit(i)) * dim + j + 1
-            return x.cast("double") * F.element_at(planes, idx.cast("int"))
-
-        return _f
-
-    key = F.lit(0).cast("long")
-    for i in range(bits):
-        dot = F.aggregate(
-            F.transform(F.col(vec_col), _elem(i)), F.lit(0.0), lambda a, x: a + x
-        )
-        key = key + F.when(dot >= 0, F.lit(1 << i)).otherwise(F.lit(0)).cast("long")
-    return (
-        embeddings.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias(vec_col),
-            F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
-        )
-        .select("id", "band", key.alias("key"))
+    The key is ONE SQL string (functions.vectors' dot over a slice of
+    the plane literal, as wide as the vector), parsed JVM-side: the
+    Column-composed form cost ~1,000 py4j calls per plan build."""
+    planes = const_sql(_srp_planes(n_bands, bits, dim, seed))
+    plane = f"slice({planes}, (band * {bits} + i) * {dim} + 1, size(__v))"
+    key = (
+        f"aggregate(sequence(0, {bits - 1}), 0L, (k, i) -> "
+        f"k + CASE WHEN {_dot('__v', plane)} >= 0D THEN shiftleft(1L, i) ELSE 0L END)"
     )
+    return embeddings.selectExpr(
+        f"{sql_ident(id_col)} AS id",
+        f"{sql_ident(vec_col)} AS __v",
+        f"explode(sequence(0, {n_bands - 1})) AS band",
+    ).selectExpr("id", "band", f"{key} AS key")
 
 
 def embedding_near_dups(

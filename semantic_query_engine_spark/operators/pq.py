@@ -13,8 +13,9 @@ DataFrame terms:
   on samples too); the collect is bounded by the training-sample size,
   never the corpus.
 - pq_encode: assigning each subvector to its nearest codeword is a pure
-  expression — m x k zip_with/aggregate dot products inside whole-stage
-  codegen; map-only, no shuffle, no UDF, no fitted-model broadcast.
+  expression — m x k zip_with/aggregate squared distances inside
+  whole-stage codegen; map-only, no shuffle, no UDF, no fitted-model
+  broadcast.
 - pq_topk: the query's distance table (m x k floats) is computed
   driver-side from the query vector alone and enters the plan as a
   LITERAL; scoring a vector is m array lookups + adds.  Optional exact
@@ -33,7 +34,7 @@ from typing import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import const_array, cosine, l2_normalize
+from ..functions.vectors import _sqdist, const_array, const_sql, cosine, l2_normalize
 from .retrieval import score_against
 
 SEED = 42
@@ -91,32 +92,33 @@ def pq_encode(
     entirely in codegen (the 100 TB path: encoding is a map-only scan;
     the encoded index is ~m bytes/vector).
 
-    The m assignments come from ONE transform over sequence(0, m-1)
-    with ALL codebooks as a single nested literal — the per-subspace
-    loop built an O(m*k) expression tree whose analysis + Janino
-    compile dominated the tiny-data bench (~2s of the ivfpq query)."""
-    sub = len(codebooks[0][0])
-    m = len(codebooks)
+    The m assignments are the argmins of ONE distance table
+    (_dist_table) over ALL codebooks as a single nested literal — the
+    per-subspace loop built an O(m*k) expression tree whose analysis +
+    Janino compile dominated the tiny-data bench (~2s of the ivfpq
+    query)."""
     nv = index.select(F.col(id_col), l2_normalize(vec_col).alias("__nv"))
-    # one literal, rendered as one sql string (const_array): F.lit of
-    # the nested list costs one py4j call per double
-    books = const_array(codebooks)
-
-    def code_for(j):
-        book = F.element_at(books, j + 1)
-        subvec = F.slice(F.col("__nv"), j * sub + 1, F.lit(sub))
-        d = F.transform(
-            book,
-            lambda cw: F.aggregate(
-                F.zip_with(subvec, cw, lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        )
-        return (F.array_position(d, F.array_min(d)) - 1).cast("int")
-
-    codes = F.transform(F.sequence(F.lit(0), F.lit(m - 1)), code_for)
+    d = _dist_table("__nv", codebooks)
+    codes = F.expr(f"transform({d}, t -> CAST(array_position(t, array_min(t)) - 1 AS INT))")
     return nv.select(id_col, codes.alias("codes"))
+
+
+def _dist_table(nv: str, codebooks: list[list[list[float]]]) -> str:
+    """SQL text of the m x k squared-L2 distance table from the
+    normalized vector `nv` (SQL text) to every codeword: one nested
+    transform over the codebooks rendered as one literal (F.lit of the
+    nested list costs one py4j call per double).  k separate aggregate
+    expressions per subspace would blow up planning/codegen time
+    m*k-fold (measured: 29 s -> <1 s to encode the fixture).  `nv`
+    rides in through array_repeat, outside every lambda: CollapseProject
+    inlines a once-referenced normalize, and inside the lambda it would
+    re-run once per codeword."""
+    m, sub = len(codebooks), len(codebooks[0][0])
+    d = _sqdist(f"slice(v, j * {sub} + 1, {sub})", "cw")
+    return (
+        f"transform(array_repeat({nv}, {m}), (v, j) -> "
+        f"transform(element_at({const_sql(codebooks)}, j + 1), cw -> {d}))"
+    )
 
 
 def pq_topk(
@@ -275,9 +277,6 @@ def ivfpq_knn_join(
     knn_rank) like ivf_knn_join."""
     from pyspark.sql import Window
 
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    books = const_array(codebooks)  # m x k x sub nested literal (plan constant)
     p = probes.select(
         F.col(probe_id).alias("__pid"),
         F.col(probe_vec).alias("__pvec"),
@@ -298,27 +297,10 @@ def ivfpq_knn_join(
         .filter(F.col("__cr") <= nprobe)
         .select("__pid", "__pvec", "__pnv", "cluster_id")
     )
-    # step 2: per-probe ADC table, one nested transform over the
-    # codebook literal.  k separate aggregate expressions would blow up
-    # planning/codegen time m*k-fold (measured: 29 s -> <1 s to encode
-    # the fixture); a literal, not a broadcast 1-row data side, lets
-    # codegen specialize the loop (the data-side variant measured 5x
-    # slower to evaluate)
-    dtab = F.transform(
-        books,
-        lambda book, j: F.transform(
-            book,
-            lambda cw: F.aggregate(
-                F.zip_with(
-                    F.slice(F.col("__pnv"), j * F.lit(sub) + 1, F.lit(sub)),
-                    cw,
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-        ),
-    )
+    # step 2: per-probe ADC table over the codebook literal; a literal,
+    # not a broadcast 1-row data side, lets codegen specialize the loop
+    # (the data-side variant measured 5x slower to evaluate)
+    dtab = F.expr(_dist_table("__pnv", codebooks))
     with_tab = probe_clusters.select("__pid", "__pvec", "cluster_id", dtab.alias("__dtab"))
     # step 3: cluster-keyed candidates, m-lookup ADC score
     adc = F.aggregate(

@@ -1598,7 +1598,8 @@ def retrieval_eval_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     index scan (kNN shape); metrics are per-probe aggregates over
     ≤ k rows.  Evaluation cost is independent of corpus size except
     the one gold scan — which is the point of sampling probes."""
-    from .semantic import _SRP_MAT_SPARK
+    from ..functions.vectors import _micro
+    from .semantic import _srp_project
 
     # spread=True: the 16-plane SRP projection over every vector is
     # heavy per-row map work (measured 1.95 s spread vs 3.46 s not).
@@ -1620,26 +1621,12 @@ def retrieval_eval_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # transform.  SF-bounded table; at corpus scale each consumer's
     # storage scan is the materialization.
     index = index.transform(truncate_plan)
-    mat = F.expr(_SRP_MAT_SPARK)
-    powers = F.expr(
-        "array(" + ", ".join(str(1 << j) + "L" for j in range(16)) + ")"
-    )
+    powers = "array(" + ", ".join(str(1 << j) + "L" for j in range(16)) + ")"
 
-    def srp_key(vcol):
-        qv = F.transform(vcol, lambda x: F.round(x * 1_000_000, 0).cast("long"))
-        bits = F.transform(
-            mat,
-            lambda row: F.aggregate(
-                F.zip_with(row, qv, lambda s, v: s * v),
-                F.lit(0).cast("long"),
-                lambda acc, e: acc + e,
-            )
-            >= 0,
-        )
-        return F.aggregate(
-            F.zip_with(bits, powers, lambda b, p: F.when(b, p).otherwise(0)),
-            F.lit(0).cast("long"),
-            lambda acc, e: acc + e,
+    def srp_key(vcol: str):
+        return F.expr(
+            f"aggregate(zip_with({_srp_project(_micro(vcol))}, {powers}, "
+            "(s, w) -> IF(s >= 0L, w, 0L)), 0L, (k, b) -> k + b)"
         )
 
     from ..functions.vectors import cosine
@@ -1650,9 +1637,9 @@ def retrieval_eval_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     gold = knn_join(probes, index, k=3).select("probe_id", "vec_id")
     pk = probes.select(
-        "probe_id", "probe_vec", srp_key(F.col("probe_vec")).alias("key")
+        "probe_id", "probe_vec", srp_key("probe_vec").alias("key")
     )
-    ik = index.select("vec_id", "embedding", srp_key(F.col("embedding")).alias("key"))
+    ik = index.select("vec_id", "embedding", srp_key("embedding").alias("key"))
     cand = pk.join(ik, "key").select(
         "probe_id", "vec_id", cosine("embedding", "probe_vec").alias("c")
     )
@@ -2183,11 +2170,14 @@ def dedup_eval_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pool = _docs_with_truncated_copies(spark, sf_dir)
     bt = minhash_band_table(pool, num_perm=64, n_bands=16, n=2, portable=True)
     # Truncate the two shared tiny tables: bt feeds BOTH sides of the
-    # self-join (the 64-perm signature build would run twice) and sh
-    # feeds ea/eb/sizes (three shingle derivations); downstream,
-    # truth/cand each feed multiple 1-row aggregates.  The pool is
-    # capped at ~200 rows, so materializing is microseconds while the
-    # saved re-derivations dominate the query's cost.
+    # self-join (without the checkpoint AQE shares its signature
+    # exchange, one job fewer, but each side re-runs the final
+    # aggregate and band Generate: measured slower, as in
+    # minhash_lsh_pairs) and sh feeds ea/eb/sizes (three shingle
+    # derivations); downstream, truth/cand each feed multiple 1-row
+    # aggregates.  The pool is capped at ~200 rows, so materializing is
+    # microseconds while the saved re-derivations dominate the query's
+    # cost.
     bt = bt.transform(truncate_plan)
     a, b = bt.alias("a"), bt.alias("b")
     cand = (

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.vectors import l2_norm
 from ..operators.prefix import exclusive_prefix_sum
 from ..sources.fixtures import load_table
 from ..streaming.jobs import read_events_stream, run_to_memory
@@ -753,18 +754,12 @@ def profile_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen (zip_with + aggregate), no UDF, no shuffle beyond the
     final 1-row reduce."""
     emb = load_table(spark, sf_dir, "embeddings")
-    e = F.transform("embedding", lambda x: x.cast("double"))
-    dot = F.aggregate(
-        F.zip_with("e", "e", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     n = emb.select(
-        e.alias("e"), F.size("embedding").alias("dim")
-    ).withColumn("nrm", F.sqrt(dot))
+        "embedding", F.size("embedding").alias("dim"), l2_norm("embedding").alias("nrm")
+    )
     return n.agg(
         F.count("*").alias("n_vectors"),
-        F.sum(F.col("e").isNull().cast("long")).alias("n_null"),
+        F.sum(F.col("embedding").isNull().cast("long")).alias("n_null"),
         F.min("dim").cast("long").alias("dim_min"),
         F.max("dim").cast("long").alias("dim_max"),
         F.sum((F.col("nrm") == 0).cast("long")).alias("n_zero"),

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vectors import _idot, _micro
 from ..operators.multimodal import (
     FEATURE_BINS,
     attach_binary_payload,
@@ -590,21 +591,10 @@ def imagetext_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("imagetext_alignment: embedding dim < 16"),
             ).isNull()
         )
-        .select(
-            F.col("vec_id").alias("id"),
-            F.transform(
-                F.slice("embedding", 1, 16),
-                lambda x: F.round(x.cast("double") * 1000000).cast("long"),
-            ).alias("micro"),
-        )
+        .selectExpr("vec_id AS id", f"{_micro('slice(embedding, 1, 16)')} AS micro")
     )
-    scored = prof.join(emb, "id").select(
-        F.col("id").alias("doc_id"),
-        F.aggregate(
-            F.zip_with("bands", "micro", lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("score"),
+    scored = prof.join(emb, "id").selectExpr(
+        "id AS doc_id", f"{_idot('bands', 'micro')} AS score"
     )
     return scored.select(
         "doc_id", "score", (F.col("score") >= 0).alias("aligned")

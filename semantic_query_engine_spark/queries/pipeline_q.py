@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vectors import dot
 from ..plans.rag import SYSTEM_RULES, rag_ask
 from ..sources.fixtures import load_table
 from .registry import register
@@ -89,12 +90,7 @@ def index_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         "chunk_id",
         "chunk_key",
         F.size("embedding").alias("dim"),
-        F.round(
-            F.aggregate(
-                "embedding", F.lit(0.0), lambda acc, x: acc + x * x
-            ),
-            4,
-        ).alias("unit_norm_sq"),
+        F.round(dot("embedding", "embedding"), 4).alias("unit_norm_sq"),
     )
 
 

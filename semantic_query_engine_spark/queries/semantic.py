@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.vectors import cosine, dot, l2_norm, l2_normalize, with_cosine
+from ..functions.vectors import _idot, _micro, cosine, dot, l2_norm, l2_normalize, with_cosine
 from ..sources.fixtures import load_table
 from .registry import register
 from ..functions.plan import truncate_eager
@@ -741,6 +741,17 @@ _SRP_MAT_DUCK = (
 )
 
 
+def _srp_project(qv: str) -> str:
+    """SQL text of the ±1 projection of the quantized vector `qv`
+    (SQL text): one exact integer dot per matrix row.  `qv` rides in
+    through array_repeat, outside the lambda, so an inlined quantizer
+    runs once per row, not once per matrix row."""
+    return (
+        f"zip_with({_SRP_MAT_SPARK}, array_repeat({qv}, {len(_SRP_MAT)}), "
+        f"(r, q) -> {_idot('r', 'q')})"
+    )
+
+
 @register(
     "embedding_project_srp",
     oracle=f"""
@@ -780,23 +791,8 @@ def embedding_project_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiply-adds JVM-side.  At 100 TB this is the throughput-bound
     kind of operator Spark is best at."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qdf = emb.select(
-        "vec_id",
-        F.transform(
-            F.col("embedding"),
-            lambda x: F.round(x.cast("double") * 1_000_000, 0).cast("long"),
-        ).alias("qv"),
-    )
-    mat = F.expr(_SRP_MAT_SPARK)
-    proj = F.transform(
-        mat,
-        lambda row: F.aggregate(
-            F.zip_with(row, F.col("qv"), lambda s, v: s * v),
-            F.lit(0).cast("long"),
-            lambda acc, e: acc + e,
-        ),
-    )
-    return qdf.select("vec_id", F.posexplode(proj)).select(
+    proj = _srp_project(_micro("embedding"))
+    return emb.selectExpr("vec_id", f"posexplode({proj})").select(
         "vec_id",
         F.col("pos").cast("int").alias("j"),
         F.round(F.col("col") / 1_000_000.0, 6).alias("val"),

@@ -113,6 +113,23 @@ def test_search_scores_bit_identical_to_cosine_across_uploads(spark, sf_dir):
     check()
 
 
+def test_index_partitions_bounded_across_uploads(spark, sf_dir):
+    """Each upload adds one partition and a fold returns to the base's
+    count: a search runs one task per partition, so an index that kept
+    every upload's default-parallelism spread grew without bound."""
+    from semantic_query_engine_spark.api import MAX_UPLOAD_SEGMENTS, SemanticQueryEngine
+    from semantic_query_engine_spark.sources.fixtures import load_table
+
+    docs = load_table(spark, sf_dir, "documents").limit(20).select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text"
+    )
+    eng = SemanticQueryEngine(spark, chunk_size=32).build_from_documents(docs)
+    base = eng.index.rdd.getNumPartitions()
+    for i in range(3 * MAX_UPLOAD_SEGMENTS):
+        eng.upload_text("u", f"f{i}.txt", f"upload {i} nebula fjord", batch_ts=i)
+        assert eng.index.rdd.getNumPartitions() <= base + MAX_UPLOAD_SEGMENTS, i
+
+
 def test_ask_stream_chunks_and_caches(engine):
     q = "merge part scan query table unique"
     chunks = list(engine.ask_stream(q, chunk_words=3))

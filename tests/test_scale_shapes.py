@@ -186,36 +186,32 @@ def test_minhash_lsh_no_cartesian_all_codegen(spark, sf_dir):
     assert "EvalPython" not in plan
 
 
-def test_jaccard_capped_has_stop_shingle_semi_join(spark, sf_dir):
+def test_jaccard_capped_has_stop_shingle_semi_join(spark, sf_dir, monkeypatch):
     """The skew valve must materialize as a semi-join pruning hot
     shingle keys BEFORE the candidate self-join: LeftSemi on shingle in
     the optimized plan, and the valve actually removes rows (the
-    synthetic corpus has bigrams above the cap).  The registered query
+    synthetic corpus has bigrams above the cap).  The operator
     truncates the valved shingle table behind a localCheckpoint (r14),
     which hides the LeftSemi behind a Scan ExistingRDD — so the plan
-    class is pinned on the un-truncated operator shape the checkpoint
-    materializes."""
+    class is pinned with the truncation replaced by the identity, on
+    the operator shape the checkpoint materializes."""
     from pyspark.sql import functions as F
 
-    from semantic_query_engine_spark.operators.dedup import (
-        jaccard_pairs,
-        shingle_table,
-    )
+    from semantic_query_engine_spark.operators import dedup
     from semantic_query_engine_spark.queries.dedup_q import (
         _STOP_SHINGLE_CAP,
         _docs_with_truncated_copies,
     )
 
     docs = _docs_with_truncated_copies(spark, sf_dir)
+    monkeypatch.setattr(dedup, "truncate_plan", lambda df: df)
     plan = _optimized(
-        jaccard_pairs(
-            docs, n=2, max_shingle_freq=_STOP_SHINGLE_CAP, truncate=False
-        )
+        dedup.jaccard_pairs(docs, n=2, max_shingle_freq=_STOP_SHINGLE_CAP)
     )
     assert "LeftSemi" in plan
     # the cap must bite on this corpus, else the test proves nothing
     hot = (
-        shingle_table(docs, n=2)
+        dedup.shingle_table(docs, n=2)
         .groupBy("shingle")
         .agg(F.count("*").alias("df"))
         .filter(F.col("df") > _STOP_SHINGLE_CAP)

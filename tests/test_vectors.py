@@ -132,6 +132,37 @@ def test_l2_normalize_folds_the_row_norm_outside_the_lambda(spark):
     assert not _aggregates_row_in_lambda(plan(l2_normalize("a")))
 
 
+def test_with_cosine_both_norms_evaluates_the_dot_once(spark):
+    """A threshold filter on the cosine of a pair join with both norms
+    pre-projected: pushed into the join condition, the dot ran there
+    and again in the output projection (the audit's
+    AGGREGATE_IN_JOIN_AND_PROJECT shape).  with_cosine evaluates it
+    once and keeps the same rows, bit for bit."""
+    from tools.plan_audit import _aggregates_in_join_and_project
+
+    df = _pairs(spark, "double")
+    pairs = df.select("id", "a", l2_norm("a").alias("na")).crossJoin(
+        df.select(F.col("id").alias("id_b"), "b", l2_norm("b").alias("nb"))
+    )
+
+    def passing(scored):
+        return scored.select(
+            (F.col("id") * 100 + F.col("id_b")).alias("id"), F.round("s", 6).alias("s")
+        ).filter("s >= 0.1")
+
+    na, nb = F.col("na"), F.col("nb")
+    ref = passing(
+        pairs.withColumn(
+            "s", F.when((na == 0.0) | (nb == 0.0), 0.0).otherwise(dot_ref("a", "b") / (na * nb))
+        )
+    )
+    got = passing(with_cosine(pairs, "a", "b", "s", norm_a="na", norm_b="nb"))
+    plan = lambda d: d._jdf.queryExecution().executedPlan().toString()  # noqa: E731
+    assert _aggregates_in_join_and_project(plan(ref))
+    assert not _aggregates_in_join_and_project(plan(got))
+    assert _exact(got) == _exact(ref) != []
+
+
 def test_vector_plan_build_py4j_budget(spark, count_py4j_calls):
     """Building a with_cosine plan or an l2_normalize expression (no
     action) parses one SQL string per expression; the Column-composed
@@ -188,3 +219,173 @@ def test_score_against_sql_form_bit_identical_to_cosine(spark, elem):
     hit = cache.probe(entries, q, threshold=best).collect()
     assert [(r.entry_id, r.score, r.response) for r in hit] == [(3, best, "r3")]
     assert cache.probe(entries, q, threshold=math.nextafter(best, 2.0)).collect() == []
+
+
+# -- the operator folds: SRP keys, PQ distance tables, integer projection.
+# The Column-composed forms below are the package's earlier renderings,
+# kept as the reference the SQL forms must equal exactly.
+
+
+def srp_band_table_ref(df, n_bands, bits, dim, seed=42, id_col="vec_id", vec_col="embedding"):
+    from semantic_query_engine_spark.operators.dedup import _srp_planes
+
+    planes = const_array(_srp_planes(n_bands, bits, dim, seed))
+
+    def _elem(i: int):
+        def _f(x, j):
+            idx = (F.col("band") * bits + F.lit(i)) * dim + j + 1
+            return x.cast("double") * F.element_at(planes, idx.cast("int"))
+
+        return _f
+
+    key = F.lit(0).cast("long")
+    for i in range(bits):
+        d = F.aggregate(F.transform(F.col(vec_col), _elem(i)), F.lit(0.0), lambda a, x: a + x)
+        key = key + F.when(d >= 0, F.lit(1 << i)).otherwise(F.lit(0)).cast("long")
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.col(vec_col).alias(vec_col),
+        F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
+    ).select("id", "band", key.alias("key"))
+
+
+def dist_table_ref(nv, codebooks) -> Column:
+    sub = len(codebooks[0][0])
+    return F.transform(
+        const_array(codebooks),
+        lambda book, j: F.transform(
+            book,
+            lambda cw: F.aggregate(
+                F.zip_with(
+                    F.slice(_col(nv), j * F.lit(sub) + 1, F.lit(sub)),
+                    cw,
+                    lambda x, y: (x - y) * (x - y),
+                ),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ),
+        ),
+    )
+
+
+def pq_codes_ref(nv, codebooks) -> Column:
+    sub = len(codebooks[0][0])
+    books = const_array(codebooks)
+
+    def code_for(j):
+        book = F.element_at(books, j + 1)
+        subvec = F.slice(_col(nv), j * sub + 1, F.lit(sub))
+        d = F.transform(
+            book,
+            lambda cw: F.aggregate(
+                F.zip_with(subvec, cw, lambda x, y: (x - y) * (x - y)),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            ),
+        )
+        return (F.array_position(d, F.array_min(d)) - 1).cast("int")
+
+    return F.transform(F.sequence(F.lit(0), F.lit(len(codebooks) - 1)), code_for)
+
+
+def int_project_ref(mat_sql: str, v) -> Column:
+    qv = F.transform(_col(v), lambda x: F.round(x.cast("double") * 1_000_000, 0).cast("long"))
+    return F.transform(
+        F.expr(mat_sql),
+        lambda row: F.aggregate(
+            F.zip_with(row, qv, lambda s, e: s * e), F.lit(0).cast("long"), lambda acc, e: acc + e
+        ),
+    )
+
+
+def _vectors(spark, elem: str, dim: int):
+    rnd = random.Random(11)
+
+    def vec():
+        return [rnd.uniform(-1, 1) for _ in range(dim)]
+
+    base = vec()
+    rows = [(i, vec()) for i in range(1, 9)]
+    rows += [
+        (20, [0.0] * dim),  # zero vector: every dot is 0, every sign bit set
+        (21, list(base)),  # 21 and 22 tie: same keys, cosine 1
+        (22, list(base)),
+        (23, [x * 1.0001 for x in base]),  # near copy of the tie
+        (24, [5e-7, -5e-7, 1.5e-6, -2.5e-6] + [0.0] * (dim - 4)),  # half-micro rounding
+        (25, vec()[: dim // 2]),  # short vector
+        (26, None),
+        (27, [1.0, None] + [0.5] * (dim - 2)),  # null element
+    ]
+    return spark.createDataFrame(rows, f"vec_id long, embedding array<{elem}>")
+
+
+@pytest.mark.parametrize("elem", ["float", "double"])
+def test_srp_band_keys_and_pairs_bit_identical_to_reference(spark, monkeypatch, elem):
+    from semantic_query_engine_spark.operators import dedup
+
+    df = _vectors(spark, elem, 16)
+    got = dedup.srp_band_table(df, 6, 4, 16)
+    want = srp_band_table_ref(df, 6, 4, 16)
+    assert got.dtypes == want.dtypes
+    rows = lambda d: sorted(tuple(r) for r in d.collect())  # noqa: E731
+    assert rows(got) == rows(want)
+
+    pairs = rows(dedup.embedding_near_dups(df, threshold=0.9, srp_bands=6, srp_dim=16))
+    monkeypatch.setattr(dedup, "srp_band_table", srp_band_table_ref)
+    assert pairs == rows(dedup.embedding_near_dups(df, threshold=0.9, srp_bands=6, srp_dim=16))
+    assert (21, 22, 1.0) in pairs
+
+
+@pytest.mark.parametrize("elem", ["float", "double"])
+def test_pq_codes_and_adc_tables_bit_identical_to_reference(spark, elem):
+    from semantic_query_engine_spark.operators.pq import _dist_table, pq_encode
+
+    rnd = random.Random(5)
+    # m=4 subspaces of 2 dims, k=3 codewords; codewords 0 and 1 of the
+    # first book are equal, so every first-subspace distance ties
+    books = [[[rnd.uniform(-1, 1) for _ in range(2)] for _ in range(3)] for _ in range(4)]
+    books[0][1] = list(books[0][0])
+    df = _vectors(spark, elem, 8).filter("size(embedding) = 8")
+    nv = df.select("vec_id", l2_normalize("embedding").alias("nv"))
+    got = nv.select("vec_id", F.expr(_dist_table("nv", books)).alias("t"))
+    want = nv.select("vec_id", dist_table_ref("nv", books).alias("t"))
+    assert got.dtypes == want.dtypes
+    assert _exact(got.withColumnRenamed("vec_id", "id")) == _exact(
+        want.withColumnRenamed("vec_id", "id")
+    )
+    codes = pq_encode(df, books).withColumnRenamed("vec_id", "id")
+    ref = nv.select(F.col("vec_id").alias("id"), pq_codes_ref("nv", books).alias("codes"))
+    assert codes.dtypes == ref.dtypes
+    assert _exact(codes) == _exact(ref)
+    assert all(r.codes[0] != 1 for r in codes.collect() if r.codes)
+
+
+@pytest.mark.parametrize("elem", ["float", "double"])
+def test_integer_projection_bit_identical_to_reference(spark, elem):
+    from semantic_query_engine_spark.functions.vectors import _idot, _micro
+    from semantic_query_engine_spark.queries.semantic import _SRP_MAT_SPARK, _srp_project
+
+    df = _vectors(spark, elem, 64).withColumnRenamed("vec_id", "id")
+    got = df.select("id", F.expr(_srp_project(_micro("embedding"))).alias("p"))
+    want = df.select("id", int_project_ref(_SRP_MAT_SPARK, "embedding").alias("p"))
+    assert got.dtypes == want.dtypes
+    assert _exact(got) == _exact(want)
+    # the alignment score's form: one integer dot of two long arrays
+    q = df.select("id", F.expr(_micro("embedding")).alias("a"), F.expr(_micro("reverse(embedding)")).alias("b"))
+    got = q.select("id", F.expr(_idot("a", "b")).alias("s"))
+    want = q.select(
+        "id",
+        F.aggregate(F.zip_with("a", "b", lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, x: acc + x).alias("s"),
+    )
+    assert _exact(got) == _exact(want)
+
+
+def test_srp_band_table_plan_build_py4j_budget(spark, count_py4j_calls):
+    """One srp_band_table plan build (no action) parses two SQL strings;
+    the Column-composed form issued ~1,000 Python-to-JVM calls at 8
+    bands x 4 bits x dim 64."""
+    from semantic_query_engine_spark.operators.dedup import srp_band_table
+
+    df = _vectors(spark, "float", 64)
+    srp_band_table(df, 8, 4, 64)  # warm up
+    assert count_py4j_calls(lambda: srp_band_table(df, 8, 4, 64)) <= 50

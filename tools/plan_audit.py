@@ -22,6 +22,11 @@ query's plan and flag the shapes that kill 100 TB runs —
   (a normalize `transform`) re-runs once per element — O(dim^2) per
   row; Spark does not hoist it, so the fold must sit outside every
   lambda
+- AGGREGATE_IN_JOIN_AND_PROJECT: the same `aggregate(` call in a join
+  condition and in the Project directly above the join.  A filter
+  pushed into the join condition (a threshold on a cosine, say)
+  evaluates the fold there, and the projection evaluates it again for
+  every pair that passes
 
 Usage: python tools/plan_audit.py [sf_dir] [--markdown]
 Exit code 1 if any query has a flag not covered by an allowlist entry,
@@ -284,6 +289,32 @@ def _aggregates_row_in_lambda(plan: str) -> bool:
     return False
 
 
+_TREE_PREFIX = re.compile(r"[\s:+\-]*(?:\*\(\d+\) )?")
+
+
+def _aggregates_in_join_and_project(plan: str) -> bool:
+    """True when a join node's line and the Project line directly above
+    it (its parent in the printed tree) hold the same `aggregate(...)`
+    call text; the printed expression ids make equal text the same
+    expression."""
+    nodes = []
+    for line in plan.splitlines():
+        m = _TREE_PREFIX.match(line)
+        nodes.append((m.end(), line[m.end():]))
+    for i, (depth, text) in enumerate(nodes):
+        node = text.split(" ", 1)[0]
+        if "Join" not in node and node != "CartesianProduct":
+            continue
+        parent = next((t for d, t in reversed(nodes[:i]) if d < depth), "")
+        if not parent.startswith("Project "):
+            continue
+        for m in re.finditer(r"\baggregate\(", text):
+            args = _call_args(text, m.end())
+            if args is not None and "aggregate(" + ",".join(args) + ")" in parent:
+                return True
+    return False
+
+
 def audit_one(spark, name: str, sf_dir: str) -> list[str]:
     df = REGISTRY[name].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -300,6 +331,8 @@ def audit_one(spark, name: str, sf_dir: str) -> list[str]:
         flags.append("TOKENIZE_IN_LAMBDA")
     if _aggregates_row_in_lambda(plan):
         flags.append("ROW_AGGREGATE_IN_LAMBDA")
+    if _aggregates_in_join_and_project(plan):
+        flags.append("AGGREGATE_IN_JOIN_AND_PROJECT")
     return flags
 
 
@@ -362,7 +395,9 @@ def main() -> None:
                 "NONE — no unpartitioned window (plan-level or "
                 "setup-side source-level), no CartesianProduct, no "
                 "row-at-a-time Python, no tokenizer (split) inside a "
-                "lambda, no row aggregate inside a lambda, no unexcused "
+                "lambda, no row aggregate inside a lambda, no array "
+                "aggregate in both a join condition and its projection, "
+                "no unexcused "
                 "BroadcastNestedLoopJoin in any registered query plan."
             )
         print("\n## Accepted bounded nested-loop joins\n")
