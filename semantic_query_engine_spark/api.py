@@ -148,7 +148,7 @@ class SemanticQueryEngine:
         self.index = index.unionByName(embedded, allowMissingColumns=True)
         self._upload_segments += 1
         if self._upload_segments > MAX_UPLOAD_SEGMENTS:
-            # a union keeps the sum of its inputs' partitions
+            # a union of unpartitioned inputs keeps the sum of their partitions
             parts = self._base.rdd.getNumPartitions()
             folded = self.index.coalesce(parts).transform(truncate_eager)
             self._base.unpersist()
