@@ -21,8 +21,8 @@ State:
   upload and folded into a new base every MAX_UPLOAD_SEGMENTS uploads
 - semantic LFU cache (A12-A14): plain driver memory, at most
   `cache_capacity` rows of a numpy matrix — like the reference's
-  client-side scan over a Redis list.  operators.cache holds the same
-  rules as DataFrame plans, for cache tables kept in Spark.
+  client-side scan over a Redis list.  tests/test_driver_serving checks
+  its decisions against DataFrame plans of the same rules.
 - query embedding: computed on the driver (TfIdfEmbedder.embed_one),
   so a cache-miss ask runs one Spark job, the top-k over the index
 - conversation memory (A21): per-chat in-process buffer, like the
@@ -213,8 +213,9 @@ class SemanticQueryEngine:
     def _cache_probe(self, qvec: np.ndarray) -> Optional[str]:
         """A12: the entry of highest cosine >= threshold (ties: lowest
         entry id); bumps its freq on hit.  Same rule and arithmetic as
-        operators.cache.probe, so a score at the threshold decides the
-        same way."""
+        score_against filtered at the threshold (the DataFrame probe of
+        tests/test_driver_serving), so a score at the threshold decides
+        the same way."""
         if not self._cache_ids.size:
             return None
         scores = _cosine_rows(self._cache_emb, qvec)

@@ -5,11 +5,14 @@ list, does a client-side linear cosine scan with hit threshold 0.96,
 bumps freq on hit, and evicts the first minimum-freq entry at capacity
 (/root/reference/app/main.py:42-44,67-128, SURVEY A12-A14).
 
-Spark-native: the cache is a small DataFrame (at rest: one parquet
-table); probe / bump / evict / put are declarative plans.  The LFU
-tie-break is made deterministic via (freq, insert_seq) ordering —
-the reference's "first minimum in list order" is list-position-dependent
-(/root/reference/app/main.py:107-114); insert_seq is its stable analog.
+Here the cache is a small DataFrame (at rest: one parquet table);
+eviction and put are declarative plans.  The facade keeps its cache in
+driver memory (api.py) and calls none of these: the registry query
+cache_evict_lfu calls eviction_candidate, and perfbench/ask.py wraps
+put and evict_lfu.  The LFU tie-break is made deterministic via
+(freq, insert_seq) ordering — the reference's "first minimum in list
+order" is list-position-dependent (/root/reference/app/main.py:107-114);
+insert_seq is its stable analog.
 
 Schema: (entry_id long, embedding array<double>, response string,
          freq long, insert_seq long)
@@ -17,43 +20,11 @@ Schema: (entry_id long, embedding array<double>, response string,
 
 from __future__ import annotations
 
-from typing import Iterable, Optional
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .retrieval import threshold_probe
-
 CACHE_CAPACITY = 1000  # /root/reference/app/main.py:42
 CACHE_SIM_THRESHOLD = 0.96  # /root/reference/app/main.py:44
-
-
-def probe(
-    cache: DataFrame,
-    query_vec: Iterable[float],
-    threshold: float = CACHE_SIM_THRESHOLD,
-) -> DataFrame:
-    """0-or-1-row hit: argmax cosine over entries, floored at threshold
-    (SURVEY A12)."""
-    return threshold_probe(
-        cache,
-        query_vec,
-        threshold,
-        id_col="entry_id",
-        vec_col="embedding",
-        payload_col="response",
-    )
-
-
-def bump_freq(cache: DataFrame, entry_id: int) -> DataFrame:
-    """freq+1 for the hit entry (/root/reference/app/main.py:92-96) as a
-    columnar rewrite — the MERGE-style update of a tiny managed table."""
-    return cache.withColumn(
-        "freq",
-        F.when(F.col("entry_id") == F.lit(entry_id), F.col("freq") + 1).otherwise(
-            F.col("freq")
-        ),
-    )
 
 
 def eviction_candidate(cache: DataFrame) -> DataFrame:

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from ..functions.text import fingerprint, sql_ident, words_sql
 from ..functions.vectors import _dot, const_sql, l2_norm, with_cosine
 from ..functions.plan import truncate_plan
-from .simhash import portable_word_hash, portable_word_hash_sql
+from .simhash import portable_word_hash_sql
 
 
 def exact_dedup(
@@ -141,12 +141,6 @@ def jaccard_pairs(
         .filter(F.col("jaccard") >= F.lit(threshold))
         .select("id_a", "id_b", "jaccard")
     )
-
-
-def _p64(col) -> F.Column:
-    """md5-derived signed 64-bit hash (DuckDB-reproducible) — see
-    simhash.portable_word_hash."""
-    return portable_word_hash(col)
 
 
 def _band_table(

@@ -34,7 +34,8 @@ from typing import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import _sqdist, const_array, const_sql, cosine, l2_normalize
+from ..functions.text import sql_ident
+from ..functions.vectors import _sqdist, const_sql, cosine, l2_normalize
 from .retrieval import score_against
 
 SEED = 42
@@ -121,6 +122,17 @@ def _dist_table(nv: str, codebooks: list[list[list[float]]]) -> str:
     )
 
 
+def _adc(codes: str, dtab: str) -> str:
+    """SQL text of the asymmetric-distance (ADC) score: the sum of each
+    subspace's table entry at the vector's code,
+    sum_j dtab[j][codes[j]], folded left to right from 0D.  `dtab` is
+    an m x k distance table (SQL text: a column or a literal)."""
+    return (
+        f"aggregate(zip_with({codes}, {dtab}, (c, t) -> element_at(t, c + 1)),"
+        " 0D, (acc, x) -> acc + x)"
+    )
+
+
 def pq_topk(
     encoded: DataFrame,
     index: DataFrame,
@@ -142,20 +154,16 @@ def pq_topk(
 
     q = np.asarray(list(query_vec), dtype="float64")
     q = q / (np.linalg.norm(q) + 1e-9)
-    m = len(codebooks)
     sub = len(codebooks[0][0])
     tables = []
     for j, book in enumerate(codebooks):
         qs = q[j * sub : (j + 1) * sub]
         tables.append([float(((qs - np.asarray(cw)) ** 2).sum()) for cw in book])
 
-    approx = F.lit(0.0)
-    for j in range(m):
-        approx = approx + F.element_at(
-            const_array(tables[j]), F.element_at("codes", j + 1) + 1
-        )
     cand = (
-        encoded.select(id_col, approx.alias("adc_dist"))
+        encoded.selectExpr(
+            sql_ident(id_col), f"{_adc('codes', const_sql(tables))} AS adc_dist"
+        )
         .orderBy(F.asc("adc_dist"), F.asc(id_col))
         .limit(refine)
         .select(id_col)
@@ -303,15 +311,8 @@ def ivfpq_knn_join(
     dtab = F.expr(_dist_table("__pnv", codebooks))
     with_tab = probe_clusters.select("__pid", "__pvec", "cluster_id", dtab.alias("__dtab"))
     # step 3: cluster-keyed candidates, m-lookup ADC score
-    adc = F.aggregate(
-        F.zip_with(
-            "codes", F.col("__dtab"), lambda c, t: F.element_at(t, c + 1)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cands = with_tab.join(codes, "cluster_id").select(
-        "__pid", "__pvec", F.col(index_id), adc.alias("__adc")
+    cands = with_tab.join(codes, "cluster_id").selectExpr(
+        "__pid", "__pvec", sql_ident(index_id), f"{_adc('codes', '__dtab')} AS __adc"
     )
     wr = Window.partitionBy("__pid").orderBy(F.asc("__adc"), F.asc(index_id))
     shortlist = (

@@ -18,7 +18,7 @@ Strategy ladder (SURVEY §4.3):
 
 from __future__ import annotations
 
-from typing import Iterable, Optional
+from typing import Iterable
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -118,21 +118,3 @@ def knn_join(
         scored.withColumn("knn_rank", F.row_number().over(w))
         .filter(F.col("knn_rank") <= k)
     )
-
-
-def threshold_probe(
-    index: DataFrame,
-    query_vec: Iterable[float],
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    payload_col: Optional[str] = None,
-) -> DataFrame:
-    """Top-1 similarity with a floor — the reference's semantic-cache hit
-    test (sim >= 0.96 -> return cached answer,
-    /root/reference/app/main.py:67-98, SURVEY A12).  Returns 0 or 1 rows."""
-    scored = score_against(index, query_vec, vec_col).filter(
-        F.col("score") >= F.lit(threshold)
-    )
-    cols = [id_col, "score"] + ([payload_col] if payload_col else [])
-    return scored.select(*cols).orderBy(F.desc("score"), F.asc(id_col)).limit(1)

@@ -43,7 +43,7 @@ def _prefix_copy_pool(
     docs = load_table(spark, sf_dir, "documents")
     if limit is not None:
         docs = docs.filter(F.col("doc_id") < limit)
-    base = docs.select("doc_id", words_of(F.col("text")).alias("w"))
+    base = docs.select("doc_id", words_of("text").alias("w"))
     planted = base.filter(F.col("doc_id") < 150)
     keep = F.ceil(F.size("w") * 0.8).cast("int")
     copies = planted.select(
@@ -229,7 +229,7 @@ def substring_dedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary overlaps, NOT the whole corpus.  The oracle applies the
     IDENTICAL cap, so this stays hash-exact, like dedup_jaccard_capped."""
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", words_of(F.col("text")).alias("ow")
+        "doc_id", words_of("text").alias("ow")
     )
     base = docs.select(
         "doc_id",
@@ -536,7 +536,7 @@ def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread=True: per-row winnowing hash windows dominate (scan-spread
     # A/B: 0.82 s spread vs 1.04 s not — sources/fixtures.py).
     docs = load_table(spark, sf_dir, "documents", spread=True).select(
-        "doc_id", words_of(F.col("text")).alias("w")
+        "doc_id", words_of("text").alias("w")
     )
     spans = (
         docs.filter(F.size("w") >= _K)
@@ -730,7 +730,7 @@ def source_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.select(
         "source",
         "lang",
-        F.size(words_of(F.col("text"))).cast("long").alias("toks"),
+        F.size(words_of("text")).cast("long").alias("toks"),
         F.col("n_chars").cast("long").alias("chars"),
     )
     per = d.groupBy("source").agg(
@@ -962,7 +962,7 @@ def paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-paragraph lambda, where an inline tokenizer would re-split the
     # document once per paragraph
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", words_of(F.col("text")).alias("__ws")
+        "doc_id", words_of("text").alias("__ws")
     )
     w = F.col("__ws")
     # greatest(1, ...): an empty/whitespace-only doc has size(w)=0, and
@@ -1155,7 +1155,7 @@ def curation_attrition(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text",
         )
     )
-    ws = words_of(F.col("text"))
+    ws = words_of("text")
     base = pool.select(
         "doc_id",
         "lang",

@@ -39,7 +39,7 @@ def _docs_with_truncated_copies(
     ).select(
         "doc_id", "text"
     )
-    ws = words_of(F.col("text"))
+    ws = words_of("text")
     keep = F.ceil(F.size(ws) * 0.8).cast("int")
     variants = docs.select(
         (F.col("doc_id") + 10000).alias("doc_id"),
@@ -1027,7 +1027,7 @@ def ann_ivfpq_knn_join_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _trunc_80(df: DataFrame, id_shift: int = 10000) -> DataFrame:
     """id+shift copy of each doc keeping the first 80% of its words."""
-    ws = words_of(F.col("text"))
+    ws = words_of("text")
     keep = F.ceil(F.size(ws) * 0.8).cast("int")
     return df.select(
         (F.col("doc_id") + id_shift).alias("doc_id"),
@@ -1150,7 +1150,7 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
     )
     evalset = pool.filter(F.col("doc_id") % 10 == 0)
-    ws = words_of(F.col("text"))
+    ws = words_of("text")
     keep = F.ceil(F.size(ws) * 0.5).cast("int")
     planted = evalset.select(
         (F.col("doc_id") + 30000).alias("doc_id"),
@@ -1162,7 +1162,7 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         # tokenize once per document, in its own projection: the
         # explode keeps it apart from the per-shingle slice lambda
         return df.select(
-            F.col("doc_id").alias(id_alias), words_of(F.col("text")).alias("__ws")
+            F.col("doc_id").alias(id_alias), words_of("text").alias("__ws")
         ).select(id_alias, F.explode(word_shingles("__ws", 8)).alias("gram"))
 
     tg = grams(trainset, "doc_id")
@@ -1782,7 +1782,7 @@ def _incr_hist_newb(spark: SparkSession, sf_dir: str):
     shingles — must pass as new)."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     hist = docs.select(
-        F.col("doc_id").alias("id"), words_of(F.col("text")).alias("ws")
+        F.col("doc_id").alias("id"), words_of("text").alias("ws")
     )
     keep = F.ceil(F.size("ws") * 0.8).cast("int")
     newb = hist.filter(F.col("id") % 8 == 0).select(
@@ -2009,7 +2009,7 @@ def neardup_keep_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = edges.select("id_a", "id_b").transform(truncate_eager)
     cc = connected_components(edges, nodes=pool.select("doc_id"))
     wc = pool.select(
-        "doc_id", F.size(words_of(F.col("text"))).cast("long").alias("n_words")
+        "doc_id", F.size(words_of("text")).cast("long").alias("n_words")
     )
     w = Window.partitionBy("component").orderBy(
         F.desc("n_words"), F.asc("doc_id")
@@ -2191,11 +2191,11 @@ def dedup_eval_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .transform(truncate_plan)
     )
-    from ..operators.dedup import _p64
+    from ..operators.simhash import portable_word_hash_sql
 
     sh = (
         shingle_table(pool, n=2)
-        .select("id", _p64(F.col("shingle")).alias("sh"))
+        .selectExpr("id", f"{portable_word_hash_sql('shingle')} AS sh")
         .transform(truncate_plan)
     )
     sizes = sh.groupBy("id").agg(F.count("*").alias("ns"))
@@ -2369,20 +2369,21 @@ def dedup_eval_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pool-capped at 100 docs exactly like dedup_eval_lsh."""
     from functools import reduce
 
-    from ..operators.dedup import _p64, shingle_table
+    from ..operators.dedup import shingle_table
+    from ..operators.simhash import portable_word_hash_sql
 
     num_perm = 64
     pool = _docs_with_truncated_copies(spark, sf_dir)
     sh = shingle_table(pool, n=2)
+    slot = "concat('{}|', shingle)".format
     perm = [
-        F.min(_p64(F.concat(F.lit(f"{i}|"), F.col("shingle")))).alias(f"mh_{i}")
-        for i in range(num_perm)
+        F.expr(f"min({portable_word_hash_sql(slot(i))}) AS mh_{i}") for i in range(num_perm)
     ]
     # tiny (200 rows x 65 cols); checkpointing makes the sharing real —
     # three band tables derive from ONE computed signature relation
     sig = sh.groupBy("id").agg(*perm).transform(truncate_eager)
 
-    shp = sh.select("id", _p64(F.col("shingle")).alias("sh"))
+    shp = sh.selectExpr("id", f"{portable_word_hash_sql('shingle')} AS sh")
     sizes = shp.groupBy("id").agg(F.count("*").alias("ns"))
     ea = shp.select(F.col("id").alias("id_a"), "sh")
     eb = shp.select(F.col("id").alias("id_b"), "sh")

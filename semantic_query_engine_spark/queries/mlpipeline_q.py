@@ -393,10 +393,10 @@ def training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spread=True: quality tokenize + md5 fingerprint per row dominate
     # (scan-spread A/B: 1.97 s spread vs 2.77 s not — fixtures.py).
     docs = load_table(spark, sf_dir, "documents", spread=True)
-    # tokenize once (see functions/text.py:stopword_count_ws): quality
+    # tokenize once (see the functions/text module docstring): quality
     # and the dedup fingerprint share one words array per row
     pre = docs.select(
-        "doc_id", "text", TX.words_of(F.col("text")).alias("ws")
+        "doc_id", "text", TX.words_of("text").alias("ws")
     )
     # ALL text-derived scalars (quality, dedup fp, token count) are
     # computed in ONE pre-gate projection and truncated BEFORE the
@@ -410,8 +410,8 @@ def training_data_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 100 TB this is the same slim-staging tradeoff as `t` below.
     slim = pre.select(
         "doc_id",
-        TX.quality_score_ws(F.col("ws"), F.col("text")).alias("quality"),
-        TX.fingerprint_ws(F.col("ws")).alias("fp"),
+        TX.quality_score_ws("ws", "text").alias("quality"),
+        TX.fingerprint_ws("ws").alias("fp"),
         F.size(F.split("text", " ")).alias("n_tokens"),
     ).transform(truncate_plan)
     q = slim.filter(F.col("quality") >= 0.6)
@@ -569,17 +569,17 @@ def training_data_prep_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     base = docs.filter(F.col("doc_id") < 200)
     small = docs.filter(F.col("doc_id") < 100)
-    ws = words_of(F.col("text"))
+    ws = words_of("text")
     keep_w = F.ceil(F.size(ws) * 0.8).cast("int")
     planted = small.select(
         (F.col("doc_id") + 10000).alias("doc_id"),
         F.array_join(F.slice(ws, 1, keep_w), " ").alias("text"),
     )
     pool = base.unionByName(planted)
-    # tokenize once (see functions/text.py:stopword_count_ws); ws is
+    # tokenize once (see the functions/text module docstring); ws is
     # dropped again before k's checkpoint so the array is never
     # materialized or shuffled
-    pre = pool.select("doc_id", "text", words_of(F.col("text")).alias("ws"))
+    pre = pool.select("doc_id", "text", words_of("text").alias("ws"))
     # pre-gate scalar projection + truncation BEFORE the quality filter
     # (same rework as training_data_prep: a filter below the scoring
     # projection is predicate-pushed with the words array re-expanded
@@ -588,8 +588,8 @@ def training_data_prep_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     slim = pre.select(
         "doc_id",
         "text",
-        TX.quality_score_ws(F.col("ws"), F.col("text")).alias("quality"),
-        TX.fingerprint_ws(F.col("ws")).alias("fp"),
+        TX.quality_score_ws("ws", "text").alias("quality"),
+        TX.fingerprint_ws("ws").alias("fp"),
         F.size(F.split("text", " ")).alias("n_tokens"),
     ).transform(truncate_plan)
     q = slim.filter(F.col("quality") >= 0.6)
@@ -834,7 +834,7 @@ def dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", spread=True)
     ws = docs.select(
         "doc_id",
-        F.transform(words_of(F.col("text")), lambda w: F.lower(w)).alias("ws"),
+        F.transform(words_of("text"), lambda w: F.lower(w)).alias("ws"),
     ).filter(F.size("ws") >= 2)
     fb = ws.select(
         "doc_id",
@@ -1070,7 +1070,7 @@ def span_corruption_masks(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     w = docs.select(
         "doc_id",
-        F.transform(words_of(F.col("text")), lambda x: F.lower(x)).alias("ws"),
+        F.transform(words_of("text"), lambda x: F.lower(x)).alias("ws"),
     )
     pos = w.select(
         "doc_id",
@@ -1225,7 +1225,7 @@ def fim_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     from ..functions.text import words_of
 
-    w = docs.select("doc_id", words_of(F.col("text")).alias("ws"))
+    w = docs.select("doc_id", words_of("text").alias("ws"))
     n = F.size("ws").cast("long")
     a = (
         F.expr(_bucket_expr("doc_id || ':fim1'", "instr", "STRING"))
@@ -1328,7 +1328,7 @@ def dataset_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.select(
             split.alias("split"),
-            token_count(F.col("text")).alias("toks"),
+            token_count("text").alias("toks"),
             fp.alias("fp"),
         )
         .groupBy("split")
@@ -1386,7 +1386,7 @@ def shard_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     withe = docs.select(
         "doc_id",
-        token_count(F.col("text")).alias("toks"),
+        token_count("text").alias("toks"),
         F.explode(F.array(F.lit(0), F.lit(1))).alias("epoch"),
     )
     bucket = F.expr(_bucket_expr("doc_id || ':' || epoch", "instr", "STRING"))

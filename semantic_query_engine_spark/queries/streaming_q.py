@@ -854,12 +854,12 @@ def stream_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def upsert(batch_df: DataFrame, _bid: int) -> None:
-        # tokenize once per row (functions/text.py:stopword_count_ws)
+        # tokenize once per row (the functions/text module docstring)
         batch_df.select(
-            "doc_id", TX.words_of(F.col("text")).alias("ws")
+            "doc_id", TX.words_of("text").alias("ws")
         ).select(
             "doc_id",
-            TX.fingerprint_ws(F.col("ws")).alias("fp"),
+            TX.fingerprint_ws("ws").alias("fp"),
             F.size("ws").alias("n_tokens"),
         ).write.mode("append").parquet(target)
 

@@ -60,7 +60,7 @@ def tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs stage anywhere; at 100 TB the vocabulary table is the only
     reused artifact and it is orders smaller than the corpus."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    toks = docs.select("doc_id", F.explode(TX.words_of(F.col("text"))).alias("word"))
+    toks = docs.select("doc_id", F.explode(TX.words_of("text")).alias("word"))
     tf = toks.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
     df = toks.groupBy("word").agg(F.countDistinct("doc_id").alias("df"))
     n = docs.agg(F.count("*").alias("n_docs"))
@@ -178,7 +178,7 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 300)
-        .select("doc_id", TX.words_of(F.col("text")).alias("ws"))
+        .select("doc_id", TX.words_of("text").alias("ws"))
     )
     keep = F.ceil(F.size("ws") * 0.8).cast("int")
     planted = docs.filter(F.col("doc_id") % 20 == 0).select(
@@ -516,7 +516,7 @@ def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge rule.  This is how industrial BPE trainers actually run:
     rounds iterate on the compact vocab table, never the raw text."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    toks = docs.select(F.explode(TX.words_of(F.col("text"))).alias("w"))
+    toks = docs.select(F.explode(TX.words_of("text")).alias("w"))
     wf = toks.groupBy("w").agg(F.count("*").alias("freq"))
     words = wf.select(
         F.trim(F.regexp_replace("w", "(.)", "$1 ")).alias("seq"), "freq"

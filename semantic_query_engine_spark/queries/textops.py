@@ -115,13 +115,13 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting + stopword stats — the text-analysis extension
     (north star, BASELINE.json:6) over the documents table."""
     docs = load_table(spark, sf_dir, "documents")
-    pre = docs.select("doc_id", "text", TX.words_of(F.col("text")).alias("ws"))
+    pre = docs.select("doc_id", "text", TX.words_of("text").alias("ws"))
     ws = F.col("ws")
     return pre.select(
         "doc_id",
         F.size(ws).alias("n_tokens"),
-        TX.stopword_count_ws(ws).alias("n_stopwords"),
-        F.round(TX.stopword_ratio_ws(ws), 6).alias("stop_ratio"),
+        TX.stopword_count_ws("ws").alias("n_stopwords"),
+        F.round(TX.stopword_ratio_ws("ws"), 6).alias("stop_ratio"),
         F.length("text").alias("n_chars_raw"),
     )
 
@@ -144,9 +144,9 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID heuristic (stopword-hit ratio) vs the fixture's lang
     label — deterministic, JVM-side, oracle-checkable."""
     docs = load_table(spark, sf_dir, "documents")
-    pre = docs.select("doc_id", "lang", TX.words_of(F.col("text")).alias("ws"))
+    pre = docs.select("doc_id", "lang", TX.words_of("text").alias("ws"))
     return pre.select(
-        "doc_id", "lang", TX.lang_id_ws(F.col("ws")).alias("lang_pred")
+        "doc_id", "lang", TX.lang_id_ws("ws").alias("lang_pred")
     )
 
 
@@ -195,10 +195,10 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     + word-length sanity + punctuation-soup penalty, composed exactly as
     in functions/text.py:quality_score — fully oracle-checked."""
     docs = load_table(spark, sf_dir, "documents")
-    pre = docs.select("doc_id", "text", TX.words_of(F.col("text")).alias("ws"))
+    pre = docs.select("doc_id", "text", TX.words_of("text").alias("ws"))
     return pre.select(
         "doc_id",
-        TX.quality_score_ws(F.col("ws"), F.col("text")).alias("quality"),
+        TX.quality_score_ws("ws", "text").alias("quality"),
     )
 
 
@@ -229,7 +229,7 @@ def repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored from its own token array inside whole-stage codegen, so the
     operator streams a 100 TB corpus at scan speed."""
     docs = load_table(spark, sf_dir, "documents")
-    docs = docs.select("doc_id", TX.words_of(F.col("text")).alias("ws"))
+    docs = docs.select("doc_id", TX.words_of("text").alias("ws"))
     ws = F.col("ws")
 
     def ngrams(n: int):
@@ -278,7 +278,7 @@ def term_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver), never a global sort of the vocabulary."""
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
-        "doc_id", F.explode(TX.words_of(F.col("text"))).alias("word")
+        "doc_id", F.explode(TX.words_of("text")).alias("word")
     )
     counts = words.groupBy("word").agg(
         F.count("*").alias("cnt"), F.countDistinct("doc_id").alias("n_docs")
@@ -303,8 +303,8 @@ def doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.chunking import overlap_chunk_array_from_words
 
     docs = load_table(spark, sf_dir, "documents")
-    tokenized = docs.select("doc_id", TX.words_of(F.col("text")).alias("__ws"))
-    chunks = overlap_chunk_array_from_words(F.col("__ws"), 16, 12)
+    tokenized = docs.select("doc_id", TX.words_of("text").alias("__ws"))
+    chunks = overlap_chunk_array_from_words("__ws", 16, 12)
     return tokenized.select(
         "doc_id", F.posexplode(chunks).alias("chunk_id", "chunk_text")
     )
@@ -350,7 +350,7 @@ def unigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tokenize re-ran from the scan once per leg (3 corpus passes).
     words = (
         docs.select(
-            "doc_id", F.explode(TX.words_of(F.col("text"))).alias("__w")
+            "doc_id", F.explode(TX.words_of("text")).alias("__w")
         )
         .select("doc_id", F.lower("__w").alias("word"))
         .transform(truncate_plan)
@@ -438,10 +438,10 @@ def curation_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CollapseProject keeps this Project node because the expression is
     # non-cheap and multi-referenced.  Measured at sf0.1 (noop sink):
     # 5.3-7.4 s -> 1.25 s, bit-identical output.
-    pre = docs.select("doc_id", "text", TX.words_of(F.col("text")).alias("ws"))
+    pre = docs.select("doc_id", "text", TX.words_of("text").alias("ws"))
     ws = F.col("ws")
-    quality = TX.quality_score_ws(ws, F.col("text"))
-    langp = TX.lang_id_ws(ws)
+    quality = TX.quality_score_ws("ws", "text")
+    langp = TX.lang_id_ws("ws")
     cnt = F.greatest(F.lit(1), F.size(ws) - F.lit(1))
     g2 = F.transform(
         F.sequence(F.lit(0), cnt - 1),
@@ -523,7 +523,7 @@ def bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan-speed; the identical pattern runs in the DuckDB oracle (both
     dialects share it because the lookahead-free form was chosen)."""
     docs = load_table(spark, sf_dir, "documents")
-    ct = TX.clean_text(F.col("text"))
+    ct = TX.clean_text("text")
     ws_n = F.size(F.split(ct, r"\s+"))
     bpe_n = F.size(F.regexp_extract_all(ct, F.lit(_BPE_PAT), F.lit(0)))
     return docs.select(
@@ -597,7 +597,7 @@ def bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arrays.
     ws = docs.select(
         "doc_id",
-        F.transform(TX.words_of(F.col("text")), lambda w: F.lower(w)).alias("ws"),
+        F.transform(TX.words_of("text"), lambda w: F.lower(w)).alias("ws"),
     ).transform(truncate_plan)
     toks = ws.select("doc_id", F.explode("ws").alias("word"))
     bg = (
@@ -704,7 +704,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     beyond the token explode every text operator pays."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", F.explode(TX.words_of(F.col("text"))).alias("__w")
+        "doc_id", F.explode(TX.words_of("text")).alias("__w")
     ).select("doc_id", F.lower("__w").alias("word"))
     counts = toks.groupBy("word").agg(F.count("*").alias("cnt"))
     vocab = (
@@ -761,7 +761,7 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the emitted ranking is deterministic cross-engine."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(TX.words_of(F.col("text"))).alias("w0")
+        F.explode(TX.words_of("text")).alias("w0")
     ).select(F.lower("w0").alias("w"))
     wf = toks.groupBy("w").agg(F.count("*").alias("freq"))
     # single-char words contribute no pairs (sequence(1, 0) would emit a
@@ -965,7 +965,7 @@ def _bpe_learn(
     identical either way, so the generated oracle is untouched."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(TX.words_of(F.col("text"))).alias("w0")
+        F.explode(TX.words_of("text")).alias("w0")
     ).select(F.lower("w0").alias("w"))
     wf = toks.groupBy("w").agg(F.count("*").alias("freq"))
     base = wf.select(
@@ -1188,7 +1188,7 @@ def bpe_encode_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     base.unpersist()
     docs = load_table(spark, sf_dir, "documents")
     dtoks = docs.select(
-        "doc_id", F.explode(TX.words_of(F.col("text"))).alias("w0")
+        "doc_id", F.explode(TX.words_of("text")).alias("w0")
     ).select("doc_id", F.lower("w0").alias("w"))
     return (
         dtoks.join(wsym, "w")

@@ -78,6 +78,26 @@ def test_search_plan_build_py4j_budget(engine, count_py4j_calls):
     assert calls < 50, calls
 
 
+def test_upload_py4j_budget(spark, sf_dir, count_py4j_calls):
+    """One upload_text — its plan build (createDataFrame ->
+    chunk_documents -> embed_index) and the materializing action —
+    stays under 200 Python-to-JVM calls; with the chunker and tokenizer
+    composed as Columns it issued ~480.  chunk_documents alone parses
+    three SQL strings (~20 calls; ~350 as Columns)."""
+    from semantic_query_engine_spark.api import SemanticQueryEngine
+    from semantic_query_engine_spark.operators.chunking import chunk_documents
+    from semantic_query_engine_spark.sources.fixtures import load_table
+
+    docs = load_table(spark, sf_dir, "documents").limit(5).select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text"
+    )
+    eng = SemanticQueryEngine(spark, chunk_size=32).build_from_documents(docs)
+    eng.upload_text("u1", "warm.txt", "warm the upload path up", 1)
+    calls = count_py4j_calls(lambda: eng.upload_text("u1", "a.txt", "fast key order sort", 2))
+    assert calls < 200, calls
+    assert count_py4j_calls(lambda: chunk_documents(docs, chunk_size=32)) <= 50
+
+
 def test_search_scores_bit_identical_to_cosine_across_uploads(spark, sf_dir):
     """The facade's ranking of EVERY index row — (chunk_key, score),
     ties by chunk_key — equals a cosine() plan over the same

@@ -1,10 +1,14 @@
 """Semantic LFU cache semantics (SURVEY A12-A14,
 /root/reference/app/main.py:42-44,67-128): probe threshold, freq bump,
-LFU eviction with deterministic tie-break, capacity ceiling."""
+LFU eviction with deterministic tie-break, capacity ceiling.  The probe
+and freq bump are the DataFrame reference model of
+tests/test_driver_serving; eviction and put are operators/cache."""
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
+
+from test_driver_serving import bump_freq, probe
 
 from semantic_query_engine_spark.operators import cache as C
 
@@ -31,16 +35,16 @@ def test_probe_hit_and_miss(spark):
             (2, [0.0, 1.0], "resp_b", 1, 2),
         ],
     )
-    hit = C.probe(cache, [1.0, 0.0]).collect()
+    hit = probe(cache, [1.0, 0.0]).collect()
     assert len(hit) == 1 and hit[0].response == "resp_a"
     # orthogonal query: below 0.96 -> miss (reference app/main.py:89-90)
-    miss = C.probe(cache, [0.7, 0.714]).collect()
+    miss = probe(cache, [0.7, 0.714]).collect()
     assert miss == []
 
 
 def test_bump_freq(spark):
     cache = _cache(spark, [(1, [1.0], "a", 1, 1), (2, [1.0], "b", 5, 2)])
-    out = {r.entry_id: r.freq for r in C.bump_freq(cache, 1).collect()}
+    out = {r.entry_id: r.freq for r in bump_freq(cache, 1).collect()}
     assert out == {1: 2, 2: 5}
 
 
@@ -86,11 +90,11 @@ def test_cache_persistence_roundtrip(spark, tmp_path):
     cache.write.mode("overwrite").parquet(path)
 
     reloaded = spark.read.parquet(path)
-    hit = C.probe(reloaded, [0.6, 0.8]).collect()
+    hit = probe(reloaded, [0.6, 0.8]).collect()
     assert hit and hit[0].response == "resp_c"
 
     entry = _cache(spark, [(9, [0.5, 0.5], "resp_new", 1, 9)])
-    updated = C.put(C.bump_freq(reloaded, hit[0].entry_id), entry, capacity=3)
+    updated = C.put(bump_freq(reloaded, hit[0].entry_id), entry, capacity=3)
     # capacity 3: entry 2 (min freq) evicted, new entry present
     # (write to a NEW location: parquet reads are lazy, so overwriting
     # the file a plan still reads from would corrupt the rewrite)

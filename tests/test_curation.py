@@ -85,7 +85,7 @@ def test_substring_dedup_cap_suppresses_boilerplate(spark, sf_dir):
     capped = {r["doc_id"]: r for r in capped_rows}
 
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", words_of(F.col("text")).alias("ow")
+        "doc_id", words_of("text").alias("ow")
     )
     base = docs.select(
         "doc_id", F.concat("ow", F.array(*[F.lit(x) for x in _BOILER])).alias("w")
@@ -129,7 +129,7 @@ def test_winnow_fingerprints_guarantee_and_density(spark):
     # run the registered query's exact plan over a local frame by
     # rebuilding it (the registered callable reads the fixture table)
     spans = (
-        docs.select("doc_id", words_of(F.col("text")).alias("w"))
+        docs.select("doc_id", words_of("text").alias("w"))
         .filter(F.size("w") >= _K)
         .select(
             "doc_id",
@@ -399,7 +399,7 @@ def test_curation_attrition_funnel_reconciles(spark, sf_dir):
     planted_surviving = (
         docs.filter(F.col("doc_id") % 9 == 0)
         .filter(F.col("lang") == "en")
-        .filter(F.size(words_of(F.col("text"))) >= _ATTR_TOK_FLOOR)
+        .filter(F.size(words_of("text")) >= _ATTR_TOK_FLOOR)
         .count()
     )
     assert rows[2].n_removed == planted_surviving

@@ -7,6 +7,43 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from test_text_properties import EDGE_TEXTS, words_ref
+
+# -- The word hash and SimHash as Column compositions: the package's
+# earlier renderings, kept as the reference the SQL forms of
+# operators/simhash must equal exactly.
+
+
+def portable_word_hash_ref(w):
+    m = F.md5(w)
+    hi = F.conv(F.substring(m, 1, 8), 16, 10).cast("long")
+    lo = F.conv(F.substring(m, 9, 8), 16, 10).cast("long")
+    return F.shiftleft(hi, 32).bitwiseOR(lo)
+
+
+def word_hashes_ref(text_col, portable=False):
+    word_hash = portable_word_hash_ref if portable else F.xxhash64
+    return F.transform(words_ref(text_col), lambda w: word_hash(w))
+
+
+def simhash_from_hashes_ref(hashes):
+    def vote(j):
+        return F.aggregate(
+            hashes,
+            F.lit(0).cast("long"),
+            lambda acc, h: acc + (F.shiftright(h, j).bitwiseAND(F.lit(1)) * 2 - 1),
+        )
+
+    sig = F.lit(0).cast("long")
+    for j in range(64):
+        bit = F.when(vote(j) > 0, F.lit(1)).otherwise(F.lit(0)).cast("long")
+        sig = sig.bitwiseOR(F.shiftleft(bit, j))
+    return sig
+
+
+def simhash_ref(text_col, portable=False):
+    return simhash_from_hashes_ref(word_hashes_ref(text_col, portable))
+
 
 def test_minhash_lsh_recovers_planted_pairs(spark, sf_dir):
     """The production xxhash64 LSH pipeline (the raw operator, not the
@@ -31,7 +68,10 @@ def test_minhash_lsh_recovers_planted_pairs(spark, sf_dir):
 
 
 def test_simhash_identical_and_perturbed(spark):
-    from semantic_query_engine_spark.operators.simhash import simhash
+    from semantic_query_engine_spark.operators.simhash import (
+        simhash_from_hashes_named,
+        word_hashes,
+    )
 
     df = spark.createDataFrame(
         [
@@ -44,37 +84,69 @@ def test_simhash_identical_and_perturbed(spark):
             [T.StructField("doc_id", T.LongType()), T.StructField("text", T.StringType())]
         ),
     )
-    sigs = {r.doc_id: r.sig for r in df.select("doc_id", simhash(F.col("text")).alias("sig")).collect()}
-    assert sigs[1] == sigs[2]  # identical text -> identical signature
-    ham_13 = bin((sigs[1] ^ sigs[3]) & ((1 << 64) - 1)).count("1")
-    ham_14 = bin((sigs[1] ^ sigs[4]) & ((1 << 64) - 1)).count("1")
-    assert ham_13 < ham_14  # one-word edit is closer than unrelated text
-
-    # the fast-to-build SQL-string form (r15: one F.expr parse instead
-    # of ~1.4 s of py4j Column composition per plan) must produce the
-    # exact same signatures as the Column form, in both hash modes
-    from semantic_query_engine_spark.operators.simhash import (
-        simhash_from_hashes_named,
-        word_hashes,
-    )
-
     for portable in (False, True):
-        base = df.select(
-            "doc_id", word_hashes(F.col("text"), portable).alias("_wh")
-        )
-        col_form = {
-            r.doc_id: r.sig
-            for r in df.select(
-                "doc_id", simhash(F.col("text"), portable).alias("sig")
-            ).collect()
-        }
-        sql_form = {
+        base = df.select("doc_id", word_hashes("text", portable).alias("_wh"))
+        sigs = {
             r.doc_id: r.sig
             for r in base.select(
                 "doc_id", simhash_from_hashes_named("_wh").alias("sig")
             ).collect()
         }
-        assert col_form == sql_form, (portable, col_form, sql_form)
+        assert sigs[1] == sigs[2]  # identical text -> identical signature
+        ham_13 = bin((sigs[1] ^ sigs[3]) & ((1 << 64) - 1)).count("1")
+        ham_14 = bin((sigs[1] ^ sigs[4]) & ((1 << 64) - 1)).count("1")
+        assert ham_13 < ham_14  # one-word edit is closer than unrelated text
+        # the SQL form equals the Column form, in both hash modes
+        ref = {
+            r.doc_id: r.sig
+            for r in df.select(
+                "doc_id", simhash_ref(F.col("text"), portable).alias("sig")
+            ).collect()
+        }
+        assert sigs == ref, (portable, sigs, ref)
+
+
+def test_word_hash_and_simhash_sql_equal_column_forms(spark):
+    """word_hashes, the SimHash vote and simhash_pairs, parsed from SQL,
+    equal the Column compositions exactly on edge texts (empty,
+    whitespace of every kind, non-ASCII, 4-byte UTF-8, null, 511-1,100
+    words) in both hash modes; the pairs equal a brute-force banded
+    Hamming join over the reference signatures."""
+    from semantic_query_engine_spark.operators.simhash import (
+        N_BANDS,
+        simhash_from_hashes_named,
+        simhash_pairs,
+        word_hashes,
+    )
+
+    texts = EDGE_TEXTS + [EDGE_TEXTS[-1] + " tail", EDGE_TEXTS[-2].replace("the", "a")]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    for portable in (False, True):
+        got = docs.select("doc_id", word_hashes("text", portable).alias("wh")).select(
+            "doc_id", "wh", simhash_from_hashes_named("wh").alias("sig")
+        )
+        want = docs.select("doc_id", word_hashes_ref(F.col("text"), portable).alias("wh"))
+        want = want.select("doc_id", "wh", simhash_from_hashes_ref(F.col("wh")).alias("sig"))
+        assert got.schema == want.schema
+        rows = sorted(tuple(r) for r in got.collect())
+        assert rows == sorted(tuple(r) for r in want.collect()), portable
+
+        width = 64 // N_BANDS
+        mask = (1 << width) - 1
+        sig = {i: s & ((1 << 64) - 1) for i, _, s in rows}
+        bands = {
+            i: {(b, (s >> b * width) & mask) for b in range(N_BANDS)} for i, s in sig.items()
+        }
+        brute = sorted(
+            (a, b, bin(sig[a] ^ sig[b]).count("1"))
+            for a in sig
+            for b in sig
+            if a < b and bands[a] & bands[b] and bin(sig[a] ^ sig[b]).count("1") <= 8
+        )
+        pairs = simhash_pairs(docs, portable=portable)
+        assert pairs.columns == ["id_a", "id_b", "hamming"]
+        assert sorted(tuple(r) for r in pairs.collect()) == brute, portable
+        assert brute  # the planted near-duplicates pair up
 
 
 def test_ivf_matches_bruteforce(spark, sf_dir):
@@ -773,9 +845,7 @@ def test_ivfpq_knn_join_exact_at_full_breadth(spark):
 
 
 def _ref_word_shingles(text_col, n):
-    from semantic_query_engine_spark.functions.text import words_of
-
-    ws = words_of(text_col)
+    ws = words_ref(text_col)
     count = F.greatest(F.lit(1), F.size(ws) - F.lit(n - 1))
     grams = F.transform(
         F.sequence(F.lit(0), count - 1),
@@ -792,15 +862,15 @@ def _ref_shingle_table(docs, n):
 
 
 def _ref_band_table(docs, portable, num_perm=64, n_bands=16, n=2, slot_order=1):
-    from semantic_query_engine_spark.operators.dedup import _p64
-
     r = num_perm // n_bands
     sh = _ref_shingle_table(docs, n)
     slots = lambda b: [b * r + j for j in range(r)][::slot_order]  # noqa: E731
     if portable:
         hs = F.transform(
             F.sequence(F.lit(0), F.lit(num_perm - 1)),
-            lambda i: _p64(F.concat(i.cast("string"), F.lit("|"), F.col("shingle"))),
+            lambda i: portable_word_hash_ref(
+                F.concat(i.cast("string"), F.lit("|"), F.col("shingle"))
+            ),
         )
         key_of = lambda b: F.concat_ws(  # noqa: E731
             ",", *[F.col("a")[k]["mh"].cast("string") for k in slots(b)]
@@ -825,8 +895,6 @@ def _ref_band_table(docs, portable, num_perm=64, n_bands=16, n=2, slot_order=1):
 
 
 def _ref_lsh_pairs(docs, portable, threshold=0.5, n=2):
-    from semantic_query_engine_spark.operators.dedup import _p64
-
     bt = _ref_band_table(docs, portable, n=n)
     a, b = bt.alias("a"), bt.alias("b")
     cand = (
@@ -839,7 +907,7 @@ def _ref_lsh_pairs(docs, portable, threshold=0.5, n=2):
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .distinct()
     )
-    sh_hash = _p64(F.col("shingle")) if portable else F.xxhash64("shingle")
+    sh_hash = portable_word_hash_ref(F.col("shingle")) if portable else F.xxhash64("shingle")
     sh = _ref_shingle_table(docs, n).select("id", sh_hash.alias("sh"))
     sizes = sh.groupBy("id").agg(F.count("*").alias("ns"))
     ea = sh.select(F.col("id").alias("id_a"), "sh")

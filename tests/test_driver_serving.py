@@ -1,8 +1,8 @@
 """The serving path's driver-resident state: the query embedding
 (TfIdfEmbedder.embed_one) must equal the Spark pipeline's bit for bit,
-the facade's in-memory LFU cache must decide exactly as the
-operators.cache DataFrame plans do, and uploads (materialized once,
-folded into a new base) must leave search results exact."""
+the facade's in-memory LFU cache must decide exactly as the DataFrame
+plans below and operators.cache.put do, and uploads (materialized
+once, folded into a new base) must leave search results exact."""
 
 from __future__ import annotations
 
@@ -14,6 +14,33 @@ import pytest
 from pyspark.sql import functions as F
 
 from semantic_query_engine_spark.operators import cache as C
+from semantic_query_engine_spark.operators.retrieval import score_against
+
+# -- The LFU cache's probe and freq bump as DataFrame plans over a cache
+# table (entry_id, embedding, response, freq, insert_seq): the
+# reference model the facade's driver-memory cache must decide like.
+
+
+def probe(cache, query_vec, threshold=C.CACHE_SIM_THRESHOLD):
+    """0-or-1-row hit: the highest cosine >= threshold, ties by lowest
+    entry_id (SURVEY A12, /root/reference/app/main.py:67-98)."""
+    return (
+        score_against(cache, query_vec)
+        .filter(F.col("score") >= F.lit(threshold))
+        .select("entry_id", "score", "response")
+        .orderBy(F.desc("score"), F.asc("entry_id"))
+        .limit(1)
+    )
+
+
+def bump_freq(cache, entry_id):
+    """freq+1 for the hit entry (/root/reference/app/main.py:92-96)."""
+    return cache.withColumn(
+        "freq",
+        F.when(F.col("entry_id") == F.lit(entry_id), F.col("freq") + 1).otherwise(
+            F.col("freq")
+        ),
+    )
 
 EDGE_CASES = [
     "",
@@ -125,11 +152,11 @@ def test_driver_cache_matches_dataframe_cache(spark, sf_dir):
     for q in asks:
         calls = model.calls
         answer = eng.ask(q)
-        hit = [] if cache is None else C.probe(cache, qvec[q], eng.cache_threshold).collect()
+        hit = [] if cache is None else probe(cache, qvec[q], eng.cache_threshold).collect()
         if hit:
             hits += 1
             assert model.calls == calls and answer == hit[0].response, q
-            cache = C.bump_freq(cache, hit[0].entry_id)
+            cache = bump_freq(cache, hit[0].entry_id)
         else:
             assert model.calls == calls + 1, q
             seq += 1

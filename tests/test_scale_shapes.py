@@ -529,7 +529,7 @@ def test_monitor_invariants_skew_and_shards(spark, sf_dir):
 
 
 def test_text_heuristics_tokenize_once(spark, sf_dir):
-    """The tokenize-once contract (functions/text.py:stopword_count_ws):
+    """The tokenize-once contract (the functions/text module docstring):
     queries composing several text heuristics must pre-project the words
     array into a real column, because each words_of() instantiation
     carries fresh lambda exprIds and Catalyst CSE cannot unify the

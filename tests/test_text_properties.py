@@ -12,8 +12,225 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from semantic_query_engine_spark.functions import text as TX
 from semantic_query_engine_spark.functions.vectors import cosine, l2_norm, l2_normalize
-from semantic_query_engine_spark.operators.chunking import chunk_documents
+from semantic_query_engine_spark.operators.chunking import (
+    chunk_array_from_words,
+    chunk_documents,
+    overlap_chunk_array_from_words,
+)
+
+# -- The text rules as Column compositions: the package's earlier
+# renderings, kept as the reference the SQL forms of functions/text and
+# operators/chunking must equal exactly.
+
+
+def words_ref(c):
+    cleaned = F.trim(F.regexp_replace(c, "\n", " "))
+    return F.filter(F.split(cleaned, r"\s+"), lambda w: w != F.lit(""))
+
+
+def stopword_count_ref(ws):
+    stops = F.array(*[F.lit(s) for s in TX.STOPWORDS])
+    return F.size(F.filter(ws, lambda w: F.array_contains(stops, F.lower(w))))
+
+
+def stopword_ratio_ref(ws):
+    n = F.size(ws)
+    return F.when(n == 0, F.lit(0.0)).otherwise(
+        stopword_count_ref(ws).cast("double") / n.cast("double")
+    )
+
+
+def punct_ratio_ref(txt):
+    n = F.length(txt)
+    punct = F.length(F.regexp_replace(txt, r"[^.,;:!?'\"()-]", ""))
+    return F.when(n == 0, F.lit(0.0)).otherwise(punct.cast("double") / n.cast("double"))
+
+
+def avg_word_len_ref(ws):
+    total = F.aggregate(ws, F.lit(0.0), lambda acc, w: acc + F.length(w).cast("double"))
+    return F.when(F.size(ws) == 0, F.lit(0.0)).otherwise(total / F.size(ws).cast("double"))
+
+
+def quality_score_ref(ws, text):
+    sw = stopword_ratio_ref(ws)
+    pr = punct_ratio_ref(text)
+    awl = avg_word_len_ref(ws)
+    len_ok = F.when((awl >= 2.0) & (awl <= 12.0), F.lit(1.0)).otherwise(F.lit(0.0))
+    score = (
+        F.least(F.lit(1.0), sw * 2.0) * 0.5
+        + len_ok * 0.3
+        + (1.0 - F.least(F.lit(1.0), pr * 5.0)) * 0.2
+    )
+    return F.round(score, 6)
+
+
+def lang_id_ref(ws, threshold=0.08):
+    return F.when(stopword_ratio_ref(ws) >= F.lit(threshold), F.lit("en")).otherwise(
+        F.lit("unk")
+    )
+
+
+def fingerprint_ref(ws):
+    return F.md5(F.lower(F.array_join(ws, " ")).cast("binary"))
+
+
+def chunks_ref(ws, chunk_size):
+    n_chunks = F.ceil(F.size(ws) / F.lit(float(chunk_size))).cast("int")
+    return F.when(n_chunks <= 0, F.array().cast("array<string>")).otherwise(
+        F.transform(
+            F.sequence(F.lit(0), F.greatest(F.lit(1), n_chunks) - 1),
+            lambda i: F.array_join(F.slice(ws, i * chunk_size + 1, chunk_size), " "),
+        )
+    )
+
+
+def overlap_chunks_ref(ws, chunk_size, stride):
+    overlap = chunk_size - stride
+    n_chunks = F.greatest(
+        F.lit(1),
+        F.ceil((F.size(ws) - F.lit(overlap)) / F.lit(float(stride))).cast("int"),
+    )
+    return F.when(F.size(ws) == 0, F.array().cast("array<string>")).otherwise(
+        F.transform(
+            F.sequence(F.lit(0), n_chunks - 1),
+            lambda i: F.array_join(F.slice(ws, i * stride + 1, chunk_size), " "),
+        )
+    )
+
+
+def chunk_documents_ref(docs, chunk_size):
+    tokenized = docs.select(F.col("doc_id"), words_ref(F.col("text")).alias("__ws"))
+    return tokenized.select(
+        F.col("doc_id"),
+        F.posexplode(chunks_ref(F.col("__ws"), chunk_size)).alias("chunk_id", "chunk_text"),
+    ).withColumn(
+        "chunk_key", F.concat_ws("_", F.col("doc_id").cast("string"), F.col("chunk_id"))
+    )
+
+
+def _long_doc(n: int) -> str:
+    # stopwords, punctuation and every word length up to 13, so the
+    # quality and language heuristics see more than one branch
+    pool = ["the", "Data,", "x", "of", "retrieval", "a;b", "encyclopaedias", "(is)"]
+    return " ".join(pool[j % len(pool)] + str(j % 3) * (j % 2) for j in range(n))
+
+
+EDGE_TEXTS = [
+    "",
+    " ",
+    "   ",
+    "\t\x0b\x0c\r",
+    "\n\t \n",
+    "tabs\tand\nnewlines  and   runs\rof\x0bspaces\x0cend",
+    "  leading and trailing whitespace  ",
+    "The cat is on the mat and this is that.",
+    "Hello, world! (yes) 'quoted' \"double\" a-b; c: d?",
+    "!!! ??? ...",
+    "naïve café résumé über straße",
+    "日本語 の テキスト です",
+    "emoji 😀 and 𝔘𝔫𝔦𝔠𝔬𝔡𝔢 4-byte 😀😀 text",
+    None,
+    _long_doc(511),
+    _long_doc(512),
+    _long_doc(513),
+    _long_doc(1100),
+]
+
+
+def _edge_docs(spark):
+    return spark.createDataFrame(
+        [(i, t) for i, t in enumerate(EDGE_TEXTS)], "doc_id long, text string"
+    )
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def test_text_rules_sql_equal_column_forms(spark):
+    """Every text rule of functions/text, parsed from SQL, equals its
+    Column composition exactly (values and schema) on edge texts: empty,
+    whitespace of every kind, non-ASCII, 4-byte UTF-8, null, and
+    documents of 511-1,100 words."""
+    docs = _edge_docs(spark)
+    got = docs.select(
+        "doc_id",
+        "text",
+        TX.clean_text("text").alias("clean"),
+        TX.words_of("text").alias("ws"),
+        TX.token_count("text").alias("n"),
+        TX.punct_ratio("text").alias("punct"),
+        TX.quality_score("text").alias("quality"),
+        TX.lang_id("text").alias("lang"),
+        TX.lang_id("text", 0.3).alias("lang_30"),
+        TX.fingerprint("text").alias("fp"),
+    ).select(
+        "*",
+        TX.stopword_count_ws("ws").alias("n_stop"),
+        TX.stopword_ratio_ws("ws").alias("stop_ratio"),
+        TX.avg_word_len_ws("ws").alias("awl"),
+        TX.quality_score_ws("ws", "text").alias("quality_ws"),
+        TX.lang_id_ws("ws").alias("lang_ws"),
+        TX.fingerprint_ws("ws").alias("fp_ws"),
+    )
+    ws, text = words_ref(F.col("text")), F.col("text")
+    want = docs.select(
+        "doc_id",
+        "text",
+        F.trim(F.regexp_replace(text, "\n", " ")).alias("clean"),
+        ws.alias("ws"),
+        F.size(ws).alias("n"),
+        punct_ratio_ref(text).alias("punct"),
+        quality_score_ref(ws, text).alias("quality"),
+        lang_id_ref(ws).alias("lang"),
+        lang_id_ref(ws, 0.3).alias("lang_30"),
+        fingerprint_ref(ws).alias("fp"),
+    ).select(
+        "*",
+        stopword_count_ref(F.col("ws")).alias("n_stop"),
+        stopword_ratio_ref(F.col("ws")).alias("stop_ratio"),
+        avg_word_len_ref(F.col("ws")).alias("awl"),
+        quality_score_ref(F.col("ws"), text).alias("quality_ws"),
+        lang_id_ref(F.col("ws")).alias("lang_ws"),
+        fingerprint_ref(F.col("ws")).alias("fp_ws"),
+    )
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want)
+    # the cases exercise both sides of each heuristic's branches
+    rows = got.select("lang", "quality").collect()
+    assert {r.lang for r in rows} == {"en", "unk"}
+    assert len({r.quality for r in rows}) > 3
+
+
+def test_chunkers_sql_equal_column_forms(spark):
+    """chunk_documents and both chunk-array rules equal their Column
+    compositions exactly on the edge texts, at chunk sizes on either
+    side of the 511-1,100-word documents."""
+    docs = _edge_docs(spark)
+    for size in (7, 511, 512):
+        got, want = chunk_documents(docs, chunk_size=size), chunk_documents_ref(docs, size)
+        assert got.schema == want.schema
+        assert _rows(got) == _rows(want), size
+    pre = docs.select("doc_id", TX.words_of("text").alias("ws"))
+    ws = F.col("ws")
+    shapes = ((7, 7), (16, 12), (512, 384), (512, 512), (3, 1))
+    got = pre.select(
+        "doc_id",
+        chunk_array_from_words("ws").alias("c"),
+        *[
+            overlap_chunk_array_from_words("ws", c, s).alias(f"o_{c}_{s}")
+            for c, s in shapes
+        ],
+    )
+    want = pre.select(
+        "doc_id",
+        chunks_ref(ws, 512).alias("c"),
+        *[overlap_chunks_ref(ws, c, s).alias(f"o_{c}_{s}") for c, s in shapes],
+    )
+    assert got.schema == want.schema
+    assert _rows(got) == _rows(want)
 
 TEXTS = st.lists(
     st.text(
@@ -95,10 +312,10 @@ def test_overlap_chunking_invariants(spark):
          for i, n in enumerate([1, 3, 16, 17, 40, 100])],
         ["doc_id", "text"],
     )
-    out = df.select(
+    out = df.select("doc_id", words_of("text").alias("ws")).select(
         "doc_id",
-        F.size(words_of(F.col("text"))).alias("n"),
-        overlap_chunk_array_from_words(words_of(F.col("text")), 16, 12).alias("cs"),
+        F.size("ws").alias("n"),
+        overlap_chunk_array_from_words("ws", 16, 12).alias("cs"),
     ).collect()
     for r in out:
         chunks = [c.split(" ") for c in r.cs]
@@ -170,7 +387,7 @@ def test_bigram_perplexity_shape_and_order_sensitivity(spark, sf_dir):
     rows = out.collect()
     docs = load_table(spark, sf_dir, "documents")
     n_eligible = docs.filter(
-        F.size(TX.words_of(F.col("text"))) >= 2
+        F.size(TX.words_of("text")) >= 2
     ).count()
     assert len(rows) == n_eligible
     for r in rows[:50]:
@@ -251,7 +468,7 @@ def test_span_corruption_masks_are_valid_spans(spark, sf_dir):
     lens = {
         r.doc_id: r.n
         for r in load_table(spark, sf_dir, "documents")
-        .select("doc_id", F.size(words_of(F.col("text"))).alias("n"))
+        .select("doc_id", F.size(words_of("text")).alias("n"))
         .collect()
     }
     by_doc = {}

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from semantic_query_engine_spark.functions.vectors import (
     const_array,
+    const_sql,
     cosine,
     dot,
     l2_norm,
@@ -182,11 +183,11 @@ def _scores(df) -> list[tuple]:
 def test_score_against_sql_form_bit_identical_to_cosine(spark, elem):
     """score_against equals cosine(vec, const_array(q)) exactly, on a
     zero-norm row, tied duplicate rows (ranked by id) and an all-zero
-    query; cache.probe (threshold_probe) hits a score at exactly the
-    threshold and misses one ulp above it."""
+    query; the DataFrame cache probe (test_driver_serving.probe) hits a
+    score at exactly the threshold and misses one ulp above it."""
     import math
 
-    from semantic_query_engine_spark.operators import cache
+    from test_driver_serving import probe
     from semantic_query_engine_spark.operators.retrieval import (
         score_against,
         topk_similar,
@@ -216,9 +217,9 @@ def test_score_against_sql_form_bit_identical_to_cosine(spark, elem):
         F.col("embedding").cast("array<double>").alias("embedding"),
         F.concat(F.lit("r"), F.col("vec_id").cast("string")).alias("response"),
     )
-    hit = cache.probe(entries, q, threshold=best).collect()
+    hit = probe(entries, q, threshold=best).collect()
     assert [(r.entry_id, r.score, r.response) for r in hit] == [(3, best, "r3")]
-    assert cache.probe(entries, q, threshold=math.nextafter(best, 2.0)).collect() == []
+    assert probe(entries, q, threshold=math.nextafter(best, 2.0)).collect() == []
 
 
 # -- the operator folds: SRP keys, PQ distance tables, integer projection.
@@ -286,6 +287,25 @@ def pq_codes_ref(nv, codebooks) -> Column:
         return (F.array_position(d, F.array_min(d)) - 1).cast("int")
 
     return F.transform(F.sequence(F.lit(0), F.lit(len(codebooks) - 1)), code_for)
+
+
+def adc_chain_ref(tables) -> Column:
+    """pq_topk's ADC score: an m-term element_at chain, one literal
+    table per subspace."""
+    approx = F.lit(0.0)
+    for j, t in enumerate(tables):
+        approx = approx + F.element_at(const_array(t), F.element_at("codes", j + 1) + 1)
+    return approx
+
+
+def adc_fold_ref(dtab: str) -> Column:
+    """ivfpq_knn_join's ADC score: a zip_with/aggregate fold over a
+    per-row table column."""
+    return F.aggregate(
+        F.zip_with("codes", F.col(dtab), lambda c, t: F.element_at(t, c + 1)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
 
 
 def int_project_ref(mat_sql: str, v) -> Column:
@@ -358,6 +378,33 @@ def test_pq_codes_and_adc_tables_bit_identical_to_reference(spark, elem):
     assert codes.dtypes == ref.dtypes
     assert _exact(codes) == _exact(ref)
     assert all(r.codes[0] != 1 for r in codes.collect() if r.codes)
+
+
+def test_adc_score_bit_identical_to_both_reference_forms(spark):
+    """operators/pq._adc equals pq_topk's element_at chain over a
+    literal table and ivfpq_knn_join's fold over a table column, bit
+    for bit; the entries span 12 orders of magnitude, so a sum in any
+    other order rounds differently."""
+    from semantic_query_engine_spark.operators.pq import _adc
+
+    rnd = random.Random(11)
+    m, k = 6, 5
+    tables = [
+        [rnd.uniform(0, 4) * 10.0 ** rnd.randint(-6, 6) for _ in range(k)] for _ in range(m)
+    ]
+    rows = [(i, [rnd.randrange(k) for _ in range(m)]) for i in range(40)]
+    df = spark.createDataFrame(rows, "id long, codes array<int>").select(
+        "id", "codes", const_array(tables).alias("dtab")
+    )
+    got = df.select("id", F.expr(_adc("codes", const_sql(tables))).alias("s"))
+    assert got.dtypes == [("id", "bigint"), ("s", "double")]
+    want = df.select("id", adc_chain_ref(tables).alias("s"))
+    assert _exact(got) == _exact(want)
+    got = df.select("id", F.expr(_adc("codes", "dtab")).alias("s"))
+    assert _exact(got) == _exact(df.select("id", adc_fold_ref("dtab").alias("s")))
+    backwards = "reverse(zip_with(codes, dtab, (c, t) -> element_at(t, c + 1)))"
+    reordered = df.select("id", F.expr(f"aggregate({backwards}, 0D, (a, x) -> a + x)").alias("s"))
+    assert _exact(got) != _exact(reordered)
 
 
 @pytest.mark.parametrize("elem", ["float", "double"])

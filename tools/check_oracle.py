@@ -13,13 +13,18 @@ value equality, making it at least as strict as the driver.
 Usage: python tools/check_oracle.py [--json OUT.json] [sf_dir] [query ...]
 
 With --json, a per-query machine-readable record
-{name: {pass, rows, seconds, oracle, problems}} plus a summary header
-is written to OUT.json — the per-round auditable full-gate artifact
-(GATE_r{N}.json) the round-6 verdict asked for.
+{name: {pass, rows, seconds, oracle, problems, sha256}} plus a summary
+header is written to OUT.json — the per-round auditable full-gate
+artifact (GATE_r{N}.json) the round-6 verdict asked for.  `sha256` is
+the digest of the Spark result's rows, each rendered as the repr of its
+(column, value) pairs in column-name order, sorted; two commits' JSONs
+can be diffed on it to show the values are identical (null when Spark
+raised).
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import sys
 import time
@@ -149,6 +154,16 @@ def compare(
     return problems
 
 
+def rows_sha256(arrow_tbl) -> str:
+    """Order-insensitive digest of an Arrow table's rows: repr is exact
+    for floats (round-trip) and tells -0.0 from 0.0."""
+    cols = sorted(arrow_tbl.column_names)
+    rows = sorted(
+        repr([(c, r[c]) for c in cols]) for r in arrow_tbl.to_pylist()
+    )
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest()
+
+
 def main() -> int:
     import argparse
     import json
@@ -202,7 +217,7 @@ def main() -> int:
     failures = 0
     records: dict[str, dict] = {}
 
-    def record(name, ok, rows, t0, oracle, problems=None):
+    def record(name, ok, rows, t0, oracle, problems=None, sha256=None):
         # ok is True/False for oracle-checked queries, None for rows-only
         # ones (ADVICE r8: a null pass flag can't be summed into a
         # "189/189 value-verified" misreading; status disambiguates).
@@ -214,6 +229,7 @@ def main() -> int:
             "seconds": round(time.time() - t0, 2),
             "oracle": oracle,
             "problems": problems or [],
+            "sha256": sha256,
         }
 
     for name in names:
@@ -223,6 +239,7 @@ def main() -> int:
             spark_tbl = spec.fn(spark, sf_dir).toArrow()
             spark_pdf = spark_tbl.to_pandas()
             spark_fam = type_families(spark_tbl.schema)
+            digest = rows_sha256(spark_tbl)
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark raised {type(e).__name__}: {e}")
             failures += 1
@@ -236,7 +253,7 @@ def main() -> int:
                 f"rows  {name}: {len(spark_pdf)} rows (no oracle){note} "
                 f"[{time.time()-t0:.1f}s]"
             )
-            record(name, None, len(spark_pdf), t0, False)
+            record(name, None, len(spark_pdf), t0, False, sha256=digest)
             continue
         try:
             duck_tbl = con.execute(spec.oracle).fetch_arrow_table()
@@ -246,7 +263,7 @@ def main() -> int:
             print(f"FAIL  {name}: duckdb raised {type(e).__name__}: {e}")
             failures += 1
             record(name, False, len(spark_pdf), t0, True,
-                   [f"duckdb raised {type(e).__name__}: {e}"])
+                   [f"duckdb raised {type(e).__name__}: {e}"], digest)
             continue
         problems = compare(spark_pdf, duck_pdf, spark_fam, duck_fam)
         if problems:
@@ -254,7 +271,7 @@ def main() -> int:
             print(f"FAIL  {name}: {'; '.join(problems)} [{time.time()-t0:.1f}s]")
         else:
             print(f"OK    {name}: {len(spark_pdf)} rows [{time.time()-t0:.1f}s]")
-        record(name, not problems, len(spark_pdf), t0, True, problems)
+        record(name, not problems, len(spark_pdf), t0, True, problems, digest)
     print(f"\n{len(names) - failures}/{len(names)} passed")
     if json_out:
         payload = {
