@@ -219,8 +219,8 @@ HEADLINE = [
     #                      build-dominated; at scale the index is built
     #                      once and probed millions of times
     "ivf_topk_partitioned",  # probe over the write_ivf_index partitioned
-    #                      layout: times the DPP-pruned scan (r9); a jump
-    #                      toward ann_ivf_topk means the DPP trigger broke
+    #                      layout: times the partition-pruned scan (r9); a
+    #                      jump toward ann_ivf_topk means the pruning broke
     "stream_dedup",      # exactly-once streaming dedup (state store)
     "training_data_prep",  # composed clean->dedup->split->pack pipeline
     "training_data_prep_neardup",  # + capped-jaccard near-dedup + CC stage

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from .operators import cache as cache_ops
 from .operators.chunking import chunk_documents
-from .operators.retrieval import _seq_dot, score_against
+from .operators.retrieval import _cosine_rows, score_against
 from .plans.index_build import embed_index, fit_index
 from .plans.rag import SYSTEM_RULES
 from .functions.plan import truncate_eager
@@ -131,6 +131,8 @@ class SemanticQueryEngine:
             raise ValueError("filename must be non-empty")
         if not filename.endswith(".txt"):
             raise ValueError("only .txt uploads are accepted")
+        if content is None:
+            raise ValueError("content must be a string")
         index = self._require_index()
         stem = filename[: -len(".txt")]
         doc_id = f"{stem}_{batch_ts}"
@@ -321,12 +323,3 @@ class SemanticQueryEngine:
             "total_hits": int(self._cache_freq.sum()),
         }
 
-
-def _cosine_rows(m: np.ndarray, v: np.ndarray) -> np.ndarray:
-    """functions.vectors.cosine of each row of m against v, zero-norm
-    guard included."""
-    nm = np.sqrt(_seq_dot(m * m, np.ones(m.shape[1])))
-    nv = np.sqrt(_seq_dot(v[None, :] * v, np.ones(len(v)))[0])
-    with np.errstate(divide="ignore", invalid="ignore"):
-        s = _seq_dot(m, v) / (nm * nv)
-    return np.where((nm == 0.0) | (nv == 0.0), 0.0, s)

@@ -17,7 +17,8 @@ pre-projected column: the slice sits inside the chunk lambda, and an
 inline tokenizer there would re-split the document once per chunk.
 
 Invariants (tested): ' '.join(chunks) == ' '.join(words(cleaned)); every
-chunk has <= chunk_size words; chunk count == ceil(n_words/chunk_size).
+chunk has <= chunk_size words; chunk count == ceil(n_words/chunk_size),
+so a null or empty document gives no chunk.
 """
 
 from __future__ import annotations
@@ -41,8 +42,13 @@ def _windows(ws: str, n: str, stride: int, chunk_size: int) -> str:
     )
 
 
+def _size(ws: str) -> str:
+    """Word count of `ws`; a null array counts as empty."""
+    return f"coalesce(size({ws}), 0)"
+
+
 def _chunks(ws: str, chunk_size: int) -> str:
-    n = f"CAST(ceil(size({ws}) / {float(chunk_size)!r}D) AS INT)"
+    n = f"CAST(ceil({_size(ws)} / {float(chunk_size)!r}D) AS INT)"
     return (
         f"CASE WHEN {n} <= 0 THEN {_EMPTY} "
         f"ELSE {_windows(ws, f'greatest(1, {n})', chunk_size, chunk_size)} END"
@@ -51,15 +57,15 @@ def _chunks(ws: str, chunk_size: int) -> str:
 
 def _overlap_chunks(ws: str, chunk_size: int, stride: int) -> str:
     overlap = chunk_size - stride
-    n = f"greatest(1, CAST(ceil((size({ws}) - {overlap}) / {float(stride)!r}D) AS INT))"
-    return f"CASE WHEN size({ws}) = 0 THEN {_EMPTY} ELSE {_windows(ws, n, stride, chunk_size)} END"
+    n = f"greatest(1, CAST(ceil(({_size(ws)} - {overlap}) / {float(stride)!r}D) AS INT))"
+    return f"CASE WHEN {_size(ws)} = 0 THEN {_EMPTY} ELSE {_windows(ws, n, stride, chunk_size)} END"
 
 
 def chunk_array_from_words(ws: str, chunk_size: int = DEFAULT_CHUNK_SIZE) -> Column:
     """Chunk array from the pre-tokenized words column `ws`.  Zero
     words -> zero chunks, matching the reference's
     range(0, len(words), size) loop (empty documents produce nothing,
-    not one empty chunk)."""
+    not one empty chunk); a null document counts as empty."""
     return F.expr(_chunks(sql_ident(ws), chunk_size))
 
 

@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from ..functions.plan import truncate_plan
 
+MAX_ITER = 50  # large+small star round pairs; see connected_components
+
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """One large-star round: (u,v) edges -> (v, min(N(u)+{u})) for v>u.
@@ -102,7 +104,6 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     nodes: DataFrame | None = None,
-    max_iter: int = 50,
     driver_cc_threshold: int = 250_000,
 ) -> DataFrame:
     """(node, component) for every node, component = min node id in its
@@ -131,7 +132,7 @@ def connected_components(
     test_connected_components_paths_agree_at_threshold_boundary pins
     them equal across the boundary).
 
-    max_iter bounds large+small round PAIRS; convergence needs
+    MAX_ITER bounds large+small round PAIRS; convergence needs
     O(log n) of them, so 50 covers any graph that fits in storage —
     the loud failure below guards algorithm bugs, not graph shape.
     """
@@ -188,7 +189,7 @@ def connected_components(
 
     prev = None
     converged = False
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         e = _small_star(_large_star(e)).transform(truncate_plan)
         # one-row fingerprint action materializes the lazy checkpoint;
         # (count, xor of content hashes) is order-insensitive, cannot
@@ -208,7 +209,7 @@ def connected_components(
         # loudly — hitting this means a bug, not a big graph (50
         # alternating rounds handle any representable diameter).
         raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
+            f"connected_components did not converge within MAX_ITER={MAX_ITER} "
             "large/small-star round pairs"
         )
     # At fixpoint every non-root node has exactly one star edge to its

@@ -1,5 +1,6 @@
 """Product quantization (PQ) — the memory rung of the ANN ladder
-(SURVEY §4.3), complementing IVF partition pruning (operators/ann.py).
+(operators/retrieval.py, SURVEY §4.3), complementing IVF partition
+pruning (operators/ann.py).
 
 Why it exists at 100 TB: raw 1024-dim float vectors cost ~8 KB each;
 PQ with m=8 subspaces x 16 codes stores ONE BYTE per subspace — 8 bytes
@@ -8,19 +9,24 @@ billion-vector index live in executor memory for asymmetric-distance
 (ADC) scoring.  This is the FAISS IVF-PQ design re-expressed in
 DataFrame terms:
 
-- build_pq: codebooks are trained on a bounded driver-side SAMPLE with
-  seeded numpy Lloyd iterations — the standard practice (FAISS trains
-  on samples too); the collect is bounded by the training-sample size,
-  never the corpus.
+- build_pq: PQ_M codebooks of PQ_K codewords, trained on a bounded
+  driver-side SAMPLE with seeded numpy Lloyd iterations — the standard
+  practice (FAISS trains on samples too); the collect is bounded by the
+  training-sample size, never the corpus.
 - pq_encode: assigning each subvector to its nearest codeword is a pure
-  expression — m x k zip_with/aggregate squared distances inside
-  whole-stage codegen; map-only, no shuffle, no UDF, no fitted-model
-  broadcast.
+  expression — the argmins of one m x k distance table (_dist_table)
+  inside whole-stage codegen; map-only, no shuffle, no UDF, no
+  fitted-model broadcast.
 - pq_topk: the query's distance table (m x k floats) is computed
   driver-side from the query vector alone and enters the plan as a
-  LITERAL; scoring a vector is m array lookups + adds.  Optional exact
-  re-rank of the top `refine` ADC candidates recovers near-exact
-  recall (ADC is a lossy estimate).
+  LITERAL; scoring a vector is m array lookups + adds (_adc).  Exact
+  re-rank of the top `refine` ADC candidates recovers near-exact recall
+  (ADC is a lossy estimate).
+- ivfpq_probe: one query over a code table that carries cluster_id —
+  the clusters are ann.nearest_clusters' pick, so the scan prunes to
+  nprobe clusters; ivfpq_topk joins cluster_id onto the codes first.
+- ivfpq_knn_join: a batch of probes, their clusters ranked in the plan
+  by ann._probe_clusters (the same pick, bit for bit).
 
 All distances are squared L2 on L2-NORMALIZED vectors, monotone in
 cosine (d2 = 2 - 2cos), matching the reference's cosinesimil intent
@@ -35,47 +41,45 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import sql_ident
-from ..functions.vectors import _sqdist, const_sql, cosine, l2_normalize
-from .retrieval import score_against
+from ..functions.vectors import _norm, _sqdist, const_sql, l2_normalize, with_cosine
+from .ann import _probe_clusters, assign_with_centroids, nearest_clusters, sample_vectors
+from .retrieval import _top_per, score_against
 
 SEED = 42
+PQ_M = 8  # subspaces, one code byte each
+PQ_K = 16  # codewords per subspace
+PQ_ITERS = 10  # Lloyd iterations per codebook
 
 
 def build_pq(
     index: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    sample: int = 2048,
-    iters: int = 10,
     vec_col: str = "embedding",
     sample_X=None,
 ) -> list[list[list[float]]]:
-    """Train PQ codebooks: m codebooks of k centroids over dim/m-wide
-    subvectors, via seeded Lloyd iterations on a bounded sample
-    (pass sample_X from ann.sample_vectors to share one pull with
-    build_ivf).  Returns plain nested lists (a plan constant, like
+    """Train PQ codebooks: PQ_M codebooks of PQ_K centroids over
+    dim/PQ_M-wide subvectors, via seeded Lloyd iterations on a bounded
+    sample (pass sample_X from ann.sample_vectors to share one pull
+    with build_ivf).  Returns plain nested lists (a plan constant, like
     _srp_planes)."""
     import numpy as np
 
-    from .ann import sample_vectors
-
-    X = sample_vectors(index, vec_col, sample) if sample_X is None else sample_X
+    X = sample_vectors(index, vec_col) if sample_X is None else sample_X
     n, dim = X.shape
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    sub = dim // m
+    if dim % PQ_M:
+        raise ValueError(f"dim {dim} not divisible by PQ_M={PQ_M}")
+    sub = dim // PQ_M
     rng = np.random.default_rng(SEED)
     books: list[list[list[float]]] = []
-    for j in range(m):
+    for j in range(PQ_M):
         S = X[:, j * sub : (j + 1) * sub]
-        C = S[rng.choice(n, size=k, replace=False)]
-        for _ in range(iters):
+        C = S[rng.choice(n, size=PQ_K, replace=False)]
+        for _ in range(PQ_ITERS):
             # matmul distance form (see ann.py): identical argmin,
             # no n x k x sub broadcast tensor per iteration
             cn = (C * C).sum(axis=1)
             d = cn[None, :] - 2.0 * (S @ C.T)
             assign = d.argmin(axis=1)
-            for c in range(k):
+            for c in range(PQ_K):
                 members = S[assign == c]
                 if len(members):
                     C[c] = members.mean(axis=0)
@@ -178,36 +182,6 @@ def pq_topk(
     )
 
 
-def _probe_cluster_ids(
-    centroids: DataFrame, query_vec: Iterable[float], nprobe: int
-) -> list:
-    """The nprobe cluster ids nearest the query, picked DRIVER-SIDE
-    from the centroid table (n_clusters rows — kilobytes by
-    construction; FAISS likewise keeps centroids in RAM).  Entering the
-    plan as a literal isin() makes the cluster filter a pushable
-    predicate that prunes partitions at PLAN time under a
-    partitionBy(cluster_id) layout."""
-    import numpy as np
-
-    qn = np.asarray(list(query_vec), dtype="float64")
-    qn = qn / (np.linalg.norm(qn) + 1e-9)
-    cent = centroids.select("cluster_id", "centroid").collect()
-    order = sorted(
-        (
-            -float(
-                np.dot(
-                    qn,
-                    np.asarray(r["centroid"], dtype="float64")
-                    / (np.linalg.norm(r["centroid"]) + 1e-9),
-                )
-            ),
-            r["cluster_id"],
-        )
-        for r in cent
-    )
-    return [cid for _, cid in order[:nprobe]]
-
-
 def ivfpq_topk(
     assigned: DataFrame,
     centroids: DataFrame,
@@ -221,27 +195,15 @@ def ivfpq_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF-PQ — the billion-scale composition (FAISS IndexIVFPQ intent):
-    IVF partition pruning cuts the scan to nprobe/n_clusters of the
-    index (file-level pruning when the codes table is written
-    partitionBy(cluster_id)), PQ-ADC scores the survivors reading ~m
-    bytes a vector, and the exact re-rank touches only `refine` raw
-    vectors.  The probed cluster ids are picked DRIVER-SIDE from the
-    centroid table (n_clusters rows — kilobytes by construction; FAISS
-    likewise keeps centroids in RAM) and enter the plan as a literal
-    isin() filter: a pushable predicate that prunes partitions at PLAN
-    time under a partitionBy(cluster_id) layout, and one fewer
-    broadcast job + codegen pass than the DataFrame-side semi join
-    (measured ~1.7s of fixed overhead on the fixture)."""
-    probe_ids = _probe_cluster_ids(centroids, query_vec, nprobe)
-    pruned = (
-        encoded.join(assigned.select(id_col, "cluster_id"), id_col)
-        .filter(F.col("cluster_id").isin(probe_ids))
-        .select(id_col, "codes")
-    )
-    return pq_topk(
-        pruned, index, codebooks, query_vec,
-        k=k, refine=refine, id_col=id_col, vec_col=vec_col,
+    """IVF-PQ — the billion-scale composition (FAISS IndexIVFPQ intent)
+    over an in-memory build: ivfpq_probe over the codes joined to their
+    cluster_id.  IVF pruning cuts the scan to nprobe/n_clusters of the
+    index, PQ-ADC scores the survivors reading ~m bytes a vector, and
+    the exact re-rank touches only `refine` raw vectors."""
+    return ivfpq_probe(
+        encoded.join(assigned.select(id_col, "cluster_id"), id_col),
+        centroids, index, codebooks, query_vec,
+        k=k, nprobe=nprobe, refine=refine, id_col=id_col, vec_col=vec_col,
     )
 
 
@@ -265,8 +227,9 @@ def ivfpq_knn_join(
     unlike the single-query path there is NO driver-side centroid
     collect — everything is a plan:
 
-    1. every probe ranks the broadcast centroid table and keeps its
-       nprobe nearest clusters (|probes| x nlist rows, tiny window);
+    1. every probe keeps its nprobe nearest clusters
+       (ann._probe_clusters, ivf_knn_join's step 1: the broadcast
+       centroid table ranked in the plan, |probes| x nlist rows);
     2. every probe computes its m x k ADC DISTANCE TABLE ONCE as a
        nested-array expression over the codebook literal (O(dim * k)
        per probe — this is the PQ asymmetry: per-candidate scoring
@@ -276,62 +239,39 @@ def ivfpq_knn_join(
        rest), scored by m table lookups:
        aggregate(zip_with(codes, dtab, (c, t) -> t[c+1]), +);
     4. the top `refine` per probe by ADC are re-ranked with the exact
-       cosine (a join that touches refine rows per probe, never the
-       corpus), exact top-k out.
+       cosine (with_cosine over the probe norm of step 1; a join that
+       touches refine rows per probe, never the corpus), exact top-k
+       out.  Both per-probe ranks are retrieval._top_per.
 
     Scale shape: shuffle is keyed by cluster_id then probe_id and
     bounded by candidate rows; the dim-width vectors appear only in
     step 4's refine-sized join.  Returns (probe_id, vec_id, score,
     knn_rank) like ivf_knn_join."""
-    from pyspark.sql import Window
-
-    p = probes.select(
-        F.col(probe_id).alias("__pid"),
-        F.col(probe_vec).alias("__pvec"),
-        l2_normalize(probe_vec).alias("__pnv"),
-    )
-    # step 1: nprobe nearest clusters per probe
-    # bounded: centroids is nlist rows (kilobytes), never corpus-sized
-    pc = p.crossJoin(F.broadcast(centroids)).select(
-        "__pid",
-        "__pvec",
-        "__pnv",
-        "cluster_id",
-        cosine("centroid", "__pvec").alias("__csim"),
-    )
-    wc = Window.partitionBy("__pid").orderBy(F.desc("__csim"), F.asc("cluster_id"))
-    probe_clusters = (
-        pc.withColumn("__cr", F.row_number().over(wc))
-        .filter(F.col("__cr") <= nprobe)
-        .select("__pid", "__pvec", "__pnv", "cluster_id")
-    )
+    pid, iid = sql_ident(probe_id), sql_ident(index_id)
+    pvec = sql_ident(probe_vec)
+    p = probes.selectExpr(
+        f"{pid} AS __pid", f"{pvec} AS __pvec", f"{_norm(pvec)} AS __pnorm"
+    ).withColumn("__pnv", l2_normalize("__pvec"))
     # step 2: per-probe ADC table over the codebook literal; a literal,
     # not a broadcast 1-row data side, lets codegen specialize the loop
     # (the data-side variant measured 5x slower to evaluate)
-    dtab = F.expr(_dist_table("__pnv", codebooks))
-    with_tab = probe_clusters.select("__pid", "__pvec", "cluster_id", dtab.alias("__dtab"))
+    with_tab = _probe_clusters(p, centroids, nprobe).selectExpr(
+        "__pid", "__pvec", "__pnorm", "cluster_id", f"{_dist_table('__pnv', codebooks)} AS __dtab"
+    )
     # step 3: cluster-keyed candidates, m-lookup ADC score
     cands = with_tab.join(codes, "cluster_id").selectExpr(
-        "__pid", "__pvec", sql_ident(index_id), f"{_adc('codes', '__dtab')} AS __adc"
+        "__pid", "__pvec", "__pnorm", iid, f"{_adc('codes', '__dtab')} AS __adc"
     )
-    wr = Window.partitionBy("__pid").orderBy(F.asc("__adc"), F.asc(index_id))
-    shortlist = (
-        cands.withColumn("__ar", F.row_number().over(wr))
-        .filter(F.col("__ar") <= refine)
-        .select("__pid", "__pvec", index_id)
-    )
+    shortlist = _top_per(cands, "__pid", f"__adc, {iid}", refine, "__ar")
     # step 4: exact re-rank of refine rows per probe
-    rescored = shortlist.join(
-        index.select(index_id, F.col(index_vec).alias("__ivec")), index_id
-    ).select(
-        F.col("__pid").alias(probe_id),
-        F.col(index_id),
-        F.round(cosine("__ivec", "__pvec"), 6).alias("score"),
-    )
-    w = Window.partitionBy(probe_id).orderBy(F.desc("score"), F.asc(index_id))
-    return rescored.withColumn("knn_rank", F.row_number().over(w)).filter(
-        F.col("knn_rank") <= k
-    )
+    rescored = with_cosine(
+        shortlist.join(index.selectExpr(iid, f"{sql_ident(index_vec)} AS __ivec"), index_id),
+        "__ivec",
+        "__pvec",
+        "__s",
+        norm_b="__pnorm",
+    ).selectExpr(f"__pid AS {pid}", iid, "round(__s, 6) AS score")
+    return _top_per(rescored, pid, f"score DESC, {iid}", k, "knn_rank")
 
 
 def write_ivfpq_index(
@@ -396,16 +336,12 @@ def append_ivfpq_index(
     import json
     import os
 
-    from .ann import assign_with_centroids
-
     spark = new_rows.sparkSession
     centroids = spark.read.parquet(os.path.join(path, "centroids"))
     with open(os.path.join(path, "codebooks.json")) as f:
         books = json.load(f)
     enc = pq_encode(new_rows, books, id_col=id_col, vec_col=vec_col)
-    assigned = assign_with_centroids(
-        new_rows, centroids, id_col=id_col, vec_col=vec_col
-    )
+    assigned = assign_with_centroids(new_rows, centroids, vec_col=vec_col)
     assigned.select(id_col, "cluster_id").join(enc, id_col).write.partitionBy(
         "cluster_id"
     ).mode("append").parquet(os.path.join(path, "codes"))
@@ -438,14 +374,14 @@ def ivfpq_probe(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Per-query probe over the PERSISTED layout: NO training, NO
-    encode, NO assignment join in-plan — centroid rank driver-side,
-    literal isin() cluster filter (static partition pruning on the
+    encode, NO assignment join in-plan — the centroid rank on the
+    driver (ann.nearest_clusters), a literal isin() cluster filter (static partition pruning on the
     partitionBy(cluster_id) layout, pinned by
     tests/test_ivf_partition_pruning.py), ADC over the ~m-byte codes of
     the probed clusters, exact re-rank of the top `refine`.  This is
     the 100-TB serving path: probe cost scales with
     nprobe/n_clusters of the code table, decoupled from build cost."""
-    probe_ids = _probe_cluster_ids(centroids, query_vec, nprobe)
+    probe_ids = nearest_clusters(centroids, query_vec, nprobe)
     pruned = codes.filter(F.col("cluster_id").isin(probe_ids)).select(
         id_col, "codes"
     )

@@ -6,14 +6,24 @@ Strategy ladder (SURVEY §4.3):
    functions.vectors.with_cosine over the query literal, with the query
    norm folded on the driver: each row's dot and L2 norm are
    pre-projected, 2 array aggregates per row; orderBy().limit(k)
-   compiles to TakeOrderedAndProject: per-partition top-k then a k-row merge on the driver — embarrassingly
-   parallel, no full sort, no shuffle of the scored set.  At 100 TB this
-   is a single scan whose cost is bounded by I/O.
+   compiles to TakeOrderedAndProject: per-partition top-k then a k-row
+   merge on the driver — embarrassingly parallel, no full sort, no
+   shuffle of the scored set.  At 100 TB this is a single scan whose
+   cost is bounded by I/O.  knn_join is its batched form.
 2. LSH (operators/ann.py): MLlib BucketedRandomProjectionLSH for
    sublinear candidate generation.
-3. IVF partition pruning (operators/ann.py): KMeans centroids ->
-   cluster-partitioned layout -> probe nearest clusters only — the
-   DataFrame analog of the reference's HNSW intent.
+3. IVF (operators/ann.py): centroids -> cluster-partitioned layout ->
+   scan only the nearest clusters, the DataFrame analog of the
+   reference's HNSW intent.  One query picks its clusters on the
+   driver (ann.nearest_clusters); a batch of probes ranks them in the
+   plan (ann.ivf_knn_join).
+4. PQ / IVF-PQ (operators/pq.py): the same probes over ~m-byte codes.
+
+Every per-probe top-k of the batched joins (knn_join, ann.ivf_knn_join,
+pq.ivfpq_knn_join) is one `row_number() OVER (PARTITION BY … ORDER BY
+…)` rendered as SQL text (_top_per).  _seq_dot and _cosine_rows are the
+numpy twins of functions.vectors' dot and cosine, bit for bit, for the
+driver-side probes (the facade's cache, ann.nearest_clusters).
 """
 
 from __future__ import annotations
@@ -21,10 +31,11 @@ from __future__ import annotations
 from typing import Iterable
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vectors import const_sql, l2_norm, with_cosine
+from ..functions.text import sql_ident
+from ..functions.vectors import _norm, const_sql, with_cosine
 
 DEFAULT_TOP_K = 3  # /root/reference/app/main.py:467,601
 
@@ -55,6 +66,25 @@ def _seq_dot(m: np.ndarray, v: np.ndarray) -> np.ndarray:
     for j in range(m.shape[1]):
         acc = acc + m[:, j] * v[j]
     return acc
+
+
+def _cosine_rows(m: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """functions.vectors.cosine of each row of m against v, zero-norm
+    guard included."""
+    nm = np.sqrt(_seq_dot(m * m, np.ones(m.shape[1])))
+    nv = np.sqrt(_seq_dot(v[None, :] * v, np.ones(len(v)))[0])
+    with np.errstate(divide="ignore", invalid="ignore"):
+        s = _seq_dot(m, v) / (nm * nv)
+    return np.where((nm == 0.0) | (nv == 0.0), 0.0, s)
+
+
+def _top_per(df: DataFrame, part: str, order: str, k: int, rank: str) -> DataFrame:
+    """The rows of `df` ranked 1..k within each `part` by `order` (SQL
+    text), the rank appended as column `rank`: one row_number window
+    parsed from SQL."""
+    return df.selectExpr(
+        "*", f"row_number() OVER (PARTITION BY {part} ORDER BY {order}) AS {rank}"
+    ).filter(f"{rank} <= {int(k)}")
 
 
 def topk_similar(
@@ -93,12 +123,13 @@ def knn_join(
     |probes| * |index| rows never materialize beyond the window's
     per-partition top-k with AQE.
     """
-    p = probes.select(
-        F.col(probe_id).alias("__pid"),
-        F.col(probe_vec).alias("__pvec"),
+    pid, iid = sql_ident(probe_id), sql_ident(index_id)
+    p = probes.selectExpr(
+        f"{pid} AS __pid",
+        f"{sql_ident(probe_vec)} AS __pvec",
         # probe norms computed ONCE on the (small) probe side instead of
         # twice per (index row x probe) pair (r14, with_cosine)
-        l2_norm(probe_vec).alias("__pnorm"),
+        f"{_norm(sql_ident(probe_vec))} AS __pnorm",
     )
     scored = with_cosine(
         # bounded: a batch of probe queries, sized by the caller, never
@@ -108,13 +139,9 @@ def knn_join(
         "__pvec",
         "score",
         norm_b="__pnorm",
-    ).select(F.col("__pid").alias(probe_id), F.col(index_id), "score")
+    ).selectExpr(f"__pid AS {pid}", iid, "score")
     if exclude_self:
         # drop the probe's own index row BEFORE ranking (a probe that is
         # itself a member of the index, as in dedup-style self-kNN)
-        scored = scored.filter(F.col(index_id) != F.col(probe_id))
-    w = Window.partitionBy(probe_id).orderBy(F.desc("score"), F.asc(index_id))
-    return (
-        scored.withColumn("knn_rank", F.row_number().over(w))
-        .filter(F.col("knn_rank") <= k)
-    )
+        scored = scored.filter(f"{iid} != {pid}")
+    return _top_per(scored, pid, f"score DESC, {iid}", k, "knn_rank")

@@ -503,19 +503,19 @@ def ivf_knn_join_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # sf_dir -> (layout path, centroid parquet path, query vector); the
 # layout is written once per bench process (warmup pays it), so the
-# timed runs below measure ONLY the DPP-pruned probe.
+# timed runs below measure ONLY the partition-pruned probe.
 _IVF_LAYOUT_CACHE: dict[str, tuple[str, str, list[float]]] = {}
 
 
 def ivf_topk_partitioned_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NOT registered — the bench twin of the write_ivf_index
     cluster-partitioned layout (VERDICT r8 #4).  The measured
-    dynamic-partition-pruning win lived only in pytest
+    partition-pruning win lived only in pytest
     (tests/test_ivf_partition_pruning.py); this row makes BENCH track
-    the pruned-scan cost, so a future regression in the DPP trigger
-    (the coalesce(csim,-1) >= -1 no-op filter, operators/ann.py) shows
-    up as a timing jump toward the unpartitioned ann_ivf_topk twin,
-    not just a test failure.  Build + partitionBy write happen once
+    the pruned-scan cost, so a regression in the pruning (ivf_topk's
+    literal isin() cluster filter, operators/ann.py) shows up as a
+    timing jump toward the unpartitioned ann_ivf_topk twin, not just a
+    test failure.  Build + partitionBy write happen once
     per process (bench warmup); timed runs probe the read-back layout
     only — the 100-TB read path, where each query touches
     ~nprobe/n_clusters of the index files."""
@@ -588,7 +588,7 @@ def ivfpq_topk_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
         index = emb.filter(F.col("vec_id") >= 8)
         X = sample_vectors(index)
         assigned, centroids = build_ivf(index, n_clusters=8, sample_X=X)
-        books = build_pq(index, m=8, k=16, sample_X=X)
+        books = build_pq(index, sample_X=X)
         enc = pq_encode(index, books)
         path = scratch_path("ivfpq_" + key.replace("/", "_"))
         assigned.select("vec_id", "cluster_id").join(enc, "vec_id").write.mode(
@@ -851,11 +851,11 @@ def ann_ivf_topk_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ann_ivf_topk probed through the `write_ivf_index`
     cluster-partitioned PHYSICAL layout (VERDICT r9 #2): the planted
     index is written `partitionBy('cluster_id')`, read back, and the
-    probe's cluster filter prunes at the FILE level (the 100-TB serving
-    path — each query touches ~nprobe/n_clusters of the index files;
-    operators/ann.py:156).  Same accuracy gate and oracle as
+    probe's literal cluster filter (operators/ann.py nearest_clusters)
+    prunes at the FILE level at plan time (the 100-TB serving path —
+    each query touches ~nprobe/n_clusters of the index files).  Same accuracy gate and oracle as
     ann_ivf_topk, so the layout round-trip (partition-column type
-    rewrite on read-back, DPP-triggering filter shape) sits inside the
+    rewrite on read-back, the pruning cluster filter) sits inside the
     full oracle gate rather than resting only on
     tests/test_ivf_partition_pruning.py; the bench timing twin
     (`ivf_topk_partitioned`, queries/dedup_q.py ivf_topk_partitioned_bench)
@@ -986,7 +986,7 @@ def _ensure_ivfpq_knn_index(spark: SparkSession, sf_dir: str):
         _, index = _planted_knn_pool(spark, sf_dir)
         X = sample_vectors(index)
         assigned, centroids = build_ivf(index, n_clusters=8, sample_X=X)
-        books = build_pq(index, m=8, k=16, sample_X=X)
+        books = build_pq(index, sample_X=X)
         enc = pq_encode(index, books)
         path = scratch_path("ivfpq_knn_" + key.replace("/", "_"))
         write_ivfpq_index(assigned, enc, centroids, books, path)
@@ -1266,7 +1266,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.pq import build_pq, pq_encode, pq_topk
 
     index, qvec = _planted_query_index(spark, sf_dir)
-    books = build_pq(index, m=8, k=16)
+    books = build_pq(index)
     enc = pq_encode(index, books)
     approx = pq_topk(enc, index, books, qvec, k=3, refine=100).select("vec_id")
     return _checked_ann_topk(index, qvec, approx)
@@ -1291,7 +1291,7 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     index, qvec = _planted_query_index(spark, sf_dir, spread=True)
     X = sample_vectors(index)  # one pull feeds both trainers
     assigned, centroids = build_ivf(index, n_clusters=8, sample_X=X)
-    books = build_pq(index, m=8, k=16, sample_X=X)
+    books = build_pq(index, sample_X=X)
     enc = pq_encode(index, books)
     approx = ivfpq_topk(
         assigned, centroids, enc, index, books, qvec, k=3, nprobe=4, refine=100
@@ -1324,7 +1324,7 @@ def _ensure_ivfpq_serving_index(spark: SparkSession, sf_dir: str):
         index, _ = _planted_query_index(spark, sf_dir)
         X = sample_vectors(index)
         assigned, centroids = build_ivf(index, n_clusters=8, sample_X=X)
-        books = build_pq(index, m=8, k=16, sample_X=X)
+        books = build_pq(index, sample_X=X)
         enc = pq_encode(index, books)
         path = scratch_path("ivfpq_serving_" + key.replace("/", "_"))
         write_ivfpq_index(assigned, enc, centroids, books, path)
@@ -1409,7 +1409,7 @@ def _ensure_ivfpq_append_index(spark: SparkSession, sf_dir: str):
         base = _emb_double(spark, sf_dir).filter(F.col("vec_id") != 0)
         X = sample_vectors(base)
         assigned, centroids = build_ivf(base, n_clusters=8, sample_X=X)
-        books = build_pq(base, m=8, k=16, sample_X=X)
+        books = build_pq(base, sample_X=X)
         enc = pq_encode(base, books)
         path = scratch_path("ivfpq_append_" + key.replace("/", "_"))
         write_ivfpq_index(assigned, enc, centroids, books, path)
@@ -1488,9 +1488,7 @@ def ann_ivf_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate rides INTO the pruned scan as a pushable conjunct (at a
     partitioned layout it prunes files alongside the cluster filter);
     nprobe=4 of 8 clusters bounds the scanned fraction."""
-    from ..operators.ann import build_ivf, sample_vectors
-    from ..operators.pq import _probe_cluster_ids
-    from ..operators.retrieval import topk_similar
+    from ..operators.ann import build_ivf, ivf_topk
 
     index, qvec = _planted_query_index(spark, sf_dir)
     q = _emb_double(spark, sf_dir).filter(F.col("vec_id") == 0)
@@ -1501,11 +1499,8 @@ def ann_ivf_topk_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     full = index.unionByName(decoy)
     pred = (F.col("vec_id") % 4) != 0
 
-    X = sample_vectors(full)
-    assigned, centroids = build_ivf(full, n_clusters=8, sample_X=X)
-    probe_ids = _probe_cluster_ids(centroids, qvec, nprobe=4)
-    cands = assigned.filter(F.col("cluster_id").isin(probe_ids)).filter(pred)
-    approx = topk_similar(cands, qvec, k=3).select("vec_id")
+    assigned, centroids = build_ivf(full, n_clusters=8)
+    approx = ivf_topk(assigned.filter(pred), centroids, qvec, k=3, nprobe=4).select("vec_id")
     return _checked_ann_topk(full.filter(pred), qvec, approx)
 
 

@@ -202,6 +202,19 @@ def test_upload_text_validation_and_tenancy(engine):
     assert indexed and all(r.user_id == "u1" for r in indexed)
 
 
+def test_upload_of_null_content_raises_before_spark_work(engine, count_py4j_calls):
+    """A null document is refused with the filename checks, before any
+    Spark work: no py4j call, no new index segment."""
+    before = engine.index
+
+    def upload():
+        with pytest.raises(ValueError, match="content"):
+            engine.upload_text("u1", "notes.txt", None, batch_ts=124)
+
+    assert count_py4j_calls(upload) == 0
+    assert engine.index is before
+
+
 def _docs(spark, sf_dir, n):
     from semantic_query_engine_spark.sources.fixtures import load_table
 

@@ -482,7 +482,7 @@ def test_pq_recall_and_exactness(spark):
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )
     index = allv.filter(F.col("vec_id") >= 10).localCheckpoint()
-    books = build_pq(index, m=8, k=16)
+    books = build_pq(index)
     enc = pq_encode(index, books).localCheckpoint()
     exact = topk_sets(knn_join(probes, index, k=3), 3)
     hits = denom = 0
@@ -533,7 +533,7 @@ def test_ivfpq_recall_dim1024_clustered(spark):
     index = allv.filter(F.col("vec_id") >= 10).localCheckpoint()
     assigned, centroids = build_ivf(index, n_clusters=10)
     assigned = assigned.localCheckpoint()
-    books = build_pq(index, m=8, k=16)
+    books = build_pq(index)
     enc = pq_encode(index, books).localCheckpoint()
     exact = topk_sets(knn_join(probes, index, k=3), 3)
     hits = denom = 0
@@ -820,7 +820,7 @@ def test_ivfpq_knn_join_exact_at_full_breadth(spark):
     index = allv.filter(F.col("vec_id") >= 6)
     X = sample_vectors(index)
     assigned, centroids = build_ivf(index, n_clusters=5, sample_X=X)
-    books = build_pq(index, m=8, k=16, sample_X=X)
+    books = build_pq(index, sample_X=X)
     codes = assigned.select("vec_id", "cluster_id").join(
         pq_encode(index, books), "vec_id"
     )

@@ -1,20 +1,19 @@
-"""IVF cluster-partitioned layout: dynamic partition pruning, MEASURED.
+"""IVF cluster-partitioned layout: partition pruning, MEASURED.
 
-VERDICT r6 #6: "DPP-ready" was the one 100-TB claim in the ANN ladder
-backed by prose instead of a measurement.  This test writes the
+VERDICT r6 #6: "prunes at scale" was the one 100-TB claim in the ANN
+ladder backed by prose instead of a measurement.  This test writes the
 assigned index `partitionBy('cluster_id')` (operators/ann.py
 write_ivf_index), runs ivf_topk over the read-back layout, and asserts
 
-  (a) the optimized plan carries a `dynamicpruning` subquery in the
-      scan's partition filters,
-  (b) the EXECUTED scan's metrics show file-level pruning:
-      numFiles < staticFilesNum and numPartitions == nprobe,
-  (c) the pruned result equals the unpartitioned path bit-for-bit.
+  (a) the EXECUTED scan reads only the probed clusters: numPartitions
+      == nprobe and numFiles below the files the layout holds on disk,
+  (b) the pruned result equals the unpartitioned path bit-for-bit.
 
-The DPP trigger is the `csim >= -1` no-op filter in ivf_topk: Spark's
-PartitionPruning rule requires a "likely selective" dimension-side
-predicate (a bare Limit does not qualify), so dropping that filter
-silently reverts the scan to all-files — exactly what (b) would catch.
+The pruning is static: ivf_topk picks the query's nprobe clusters on
+the driver (ann.nearest_clusters) and filters on them as a literal
+isin(), which Spark prunes partitions with at plan time.  The IVF-PQ
+serving layout (operators/pq.py write_ivfpq_index, ivfpq_probe) is
+held to the same two claims.
 """
 
 from __future__ import annotations
@@ -66,28 +65,23 @@ def ivf(spark, sf_dir, tmp_path_factory):
     return assigned, centroids, read_ivf_index(spark, path), qv
 
 
-def test_dpp_subquery_is_planned(ivf):
-    from semantic_query_engine_spark.operators.ann import ivf_topk
-
-    _, centroids, idx, qv = ivf
-    res = ivf_topk(idx, centroids, qv, k=3, nprobe=NPROBE)
-    plan = res._sc._jvm.PythonSQLUtils.explainString(
-        res._jdf.queryExecution(), "formatted"
-    )
-    assert "dynamicpruning" in plan.lower(), plan
-
-
 def test_files_are_pruned_at_run_time(ivf):
+    import glob
+
     from semantic_query_engine_spark.operators.ann import ivf_topk
 
     _, centroids, idx, qv = ivf
+    layout_files = glob.glob(
+        idx.inputFiles()[0].rsplit("/cluster_id=", 1)[0].replace("file:", "")
+        + "/cluster_id=*/*.parquet"
+    )
     res = ivf_topk(idx, centroids, qv, k=3, nprobe=NPROBE)
     res.collect()
     m = _scan_metrics(res)
     assert m, "no parquet scan metrics found in executed plan"
-    assert m["staticFilesNum"] >= N_CLUSTERS  # one file per cluster dir
+    assert len(layout_files) >= N_CLUSTERS  # one file per cluster dir
     assert m["numPartitions"] == NPROBE, m
-    assert m["numFiles"] < m["staticFilesNum"], m
+    assert m["numFiles"] < len(layout_files), (m, len(layout_files))
 
 
 def test_partitioned_layout_matches_unpartitioned_path(ivf):
@@ -133,7 +127,7 @@ def ivfpq_layout(spark, sf_dir, tmp_path_factory):
     )
     X = sample_vectors(emb)
     assigned, centroids = build_ivf(emb, n_clusters=N_CLUSTERS, sample_X=X)
-    books = build_pq(emb, m=8, k=16, sample_X=X)
+    books = build_pq(emb, sample_X=X)
     enc = pq_encode(emb, books)
     path = str(tmp_path_factory.mktemp("ivfpq") / "serving")
     write_ivfpq_index(assigned, enc, centroids, books, path)

@@ -38,7 +38,7 @@ def _build_layout(spark, sf_dir, path):
     base = _emb(spark, sf_dir).filter(F.col("vec_id") != 0)
     X = sample_vectors(base)
     assigned, centroids = build_ivf(base, n_clusters=N_CLUSTERS, sample_X=X)
-    books = build_pq(base, m=8, k=16, sample_X=X)
+    books = build_pq(base, sample_X=X)
     write_ivfpq_index(assigned, pq_encode(base, books), centroids, books, path)
     return base
 

@@ -77,7 +77,8 @@ def fingerprint_ref(ws):
 
 
 def chunks_ref(ws, chunk_size):
-    n_chunks = F.ceil(F.size(ws) / F.lit(float(chunk_size))).cast("int")
+    # a null words array counts as empty
+    n_chunks = F.ceil(F.coalesce(F.size(ws), F.lit(0)) / F.lit(float(chunk_size))).cast("int")
     return F.when(n_chunks <= 0, F.array().cast("array<string>")).otherwise(
         F.transform(
             F.sequence(F.lit(0), F.greatest(F.lit(1), n_chunks) - 1),
@@ -88,11 +89,12 @@ def chunks_ref(ws, chunk_size):
 
 def overlap_chunks_ref(ws, chunk_size, stride):
     overlap = chunk_size - stride
+    n_words = F.coalesce(F.size(ws), F.lit(0))
     n_chunks = F.greatest(
         F.lit(1),
-        F.ceil((F.size(ws) - F.lit(overlap)) / F.lit(float(stride))).cast("int"),
+        F.ceil((n_words - F.lit(overlap)) / F.lit(float(stride))).cast("int"),
     )
-    return F.when(F.size(ws) == 0, F.array().cast("array<string>")).otherwise(
+    return F.when(n_words == 0, F.array().cast("array<string>")).otherwise(
         F.transform(
             F.sequence(F.lit(0), n_chunks - 1),
             lambda i: F.array_join(F.slice(ws, i * stride + 1, chunk_size), " "),
@@ -231,6 +233,18 @@ def test_chunkers_sql_equal_column_forms(spark):
     )
     assert got.schema == want.schema
     assert _rows(got) == _rows(want)
+
+def test_null_and_empty_documents_give_no_chunks(spark):
+    """A null document chunks like an empty one: zero chunks from
+    chunk_documents and an empty array from both chunk-array rules."""
+    docs = spark.createDataFrame([("n", None), ("e", "")], "doc_id string, text string")
+    assert chunk_documents(docs, chunk_size=4).count() == 0
+    rows = docs.select(TX.words_of("text").alias("ws")).select(
+        chunk_array_from_words("ws", 4).alias("c"),
+        overlap_chunk_array_from_words("ws", 4, 2).alias("o"),
+    ).collect()
+    assert [(r.c, r.o) for r in rows] == [([], [])] * 2
+
 
 TEXTS = st.lists(
     st.text(
