@@ -132,8 +132,12 @@ def with_cosine(
     tokenize-once rework relies on, pinned by tests/test_scale_shapes.py
     ::test_text_heuristics_tokenize_once).  A caller that already holds
     a norm passes it as `norm_a`/`norm_b` (SQL text: a column computed
-    once on a bounded side, or a driver-folded `const_sql` literal the
-    guard constant-folds), and that norm is not recomputed per row.
+    once on a bounded side, or a norm folded on the driver), and that
+    norm is not recomputed per row.  A driver-folded norm passed as a
+    `const_sql` double would be inlined into the generated Java, so each
+    new value would compile new classes; operators.retrieval.
+    score_against reads it from a one-element array literal instead,
+    which codegen passes by reference.
 
     A caller that passes both norms is a pair join with its norms
     pre-projected per side, filtered on `out` by a threshold.  Catalyst

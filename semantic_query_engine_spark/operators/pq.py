@@ -164,19 +164,17 @@ def pq_topk(
         qs = q[j * sub : (j + 1) * sub]
         tables.append([float(((qs - np.asarray(cw)) ** 2).sum()) for cw in book])
 
+    iid = sql_ident(id_col)
     cand = (
-        encoded.selectExpr(
-            sql_ident(id_col), f"{_adc('codes', const_sql(tables))} AS adc_dist"
-        )
-        .orderBy(F.asc("adc_dist"), F.asc(id_col))
+        encoded.selectExpr(iid, f"{_adc('codes', const_sql(tables))} AS adc_dist")
+        .orderBy("adc_dist", id_col)
         .limit(refine)
-        .select(id_col)
     )
-    # bounded: cand is limit(refine) rows
+    # bounded: cand is limit(refine) rows; the semi join reads only its id
     refined = index.join(F.broadcast(cand), id_col, "left_semi")
     return (
         score_against(refined, q, vec_col)
-        .select(F.col(id_col), F.round("score", 6).alias("score"))
+        .selectExpr(iid, "round(score, 6) AS score")
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
     )
@@ -382,8 +380,8 @@ def ivfpq_probe(
     the 100-TB serving path: probe cost scales with
     nprobe/n_clusters of the code table, decoupled from build cost."""
     probe_ids = nearest_clusters(centroids, query_vec, nprobe)
-    pruned = codes.filter(F.col("cluster_id").isin(probe_ids)).select(
-        id_col, "codes"
+    pruned = codes.filter(F.col("cluster_id").isin(probe_ids)).selectExpr(
+        sql_ident(id_col), "codes"
     )
     return pq_topk(
         pruned, index, codebooks, query_vec,

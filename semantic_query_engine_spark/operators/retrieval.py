@@ -4,7 +4,8 @@
 Strategy ladder (SURVEY §4.3):
 1. exact brute force (this module): score_against is
    functions.vectors.with_cosine over the query literal, with the query
-   norm folded on the driver: each row's dot and L2 norm are
+   norm folded on the driver (and kept out of the generated code, so a
+   new query compiles nothing): each row's dot and L2 norm are
    pre-projected, 2 array aggregates per row; orderBy().limit(k)
    compiles to TakeOrderedAndProject: per-partition top-k then a k-row
    merge on the driver — embarrassingly parallel, no full sort, no
@@ -50,12 +51,17 @@ def score_against(
     expression itself is the index probe): with_cosine over the query
     literal, whose norm is folded on the driver, so per row the plan
     computes one dot and the row norm.  Values are bit-identical to
-    functions.vectors.cosine."""
+    functions.vectors.cosine.
+
+    No query value reaches the text of the generated Java, so every
+    query after the first reuses the compiled classes: codegen passes
+    an array literal by reference, but inlines a double literal into
+    the source.  So the norm rides in as a one-element array, read back
+    by an `aggregate` that Catalyst does not constant-fold."""
     q = np.array([float(x) for x in query_vec])
     qn = np.sqrt(_seq_dot(q[None, :], q)[0])
-    return with_cosine(
-        index, f"`{vec_col}`", const_sql(list(q)), "score", norm_b=const_sql(qn)
-    )
+    norm = f"aggregate({const_sql([qn])}, 0D, (acc, x) -> x)"
+    return with_cosine(index, f"`{vec_col}`", const_sql(list(q)), "score", norm_b=norm)
 
 
 def _seq_dot(m: np.ndarray, v: np.ndarray) -> np.ndarray:

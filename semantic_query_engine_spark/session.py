@@ -56,7 +56,11 @@ def resources(env=os.environ) -> tuple[str, int, str]:
 
 def get_spark(app_name: str = "semantic-query-engine-spark") -> SparkSession:
     """Return the active session if one exists (the driver harness owns its
-    own session), else build one with `resources()`."""
+    own session), else build one with `resources()`.  A built session
+    also drops the stage id from generated class names
+    (`spark.sql.codegen.useIdInClassName=false`), so a search over an
+    index that gained an upload reuses its compiled code; a session
+    the caller built keeps its own codegen settings."""
     active = SparkSession.getActiveSession()
     if active is not None:
         return active
@@ -83,6 +87,10 @@ def get_spark(app_name: str = "semantic-query-engine-spark") -> SparkSession:
         # whole-stage-codegen classes (the 1024-dim vector plans compile
         # in seconds, not millis) on every eviction round-trip
         .config("spark.sql.codegen.cache.maxEntries", "2000")
+        # generated class names leave out the whole-stage stage id, so a
+        # plan keeps its source text, and its cache entry, when a union
+        # gains a child and the ids shift (each facade upload does)
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # no web UI: nothing reads it, and it costs startup and ports
         .config("spark.ui.enabled", "false")
     )

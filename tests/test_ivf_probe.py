@@ -2,7 +2,8 @@
 driver) and a batch of probes (ann.ivf_knn_join, in the plan) rank the
 centroids by the same cosine with the same tie rule, so they pick the
 same clusters and return the same rows bit for bit.  The batched joins'
-plan builds stay within a py4j (Python-to-JVM call) budget."""
+and the single IVF-PQ probe's plan builds stay within a py4j
+(Python-to-JVM call) budget."""
 
 from __future__ import annotations
 
@@ -81,3 +82,18 @@ def test_batched_join_plan_build_py4j_budget(ivf_build, count_py4j_calls):
     assert count_py4j_calls(lambda: ivf_knn_join(probes, assigned, centroids)) < 160
     ivfpq_knn_join(probes, codes, centroids, index, books)
     assert count_py4j_calls(lambda: ivfpq_knn_join(probes, codes, centroids, index, books)) < 230
+
+
+def test_single_probe_plan_build_py4j_budget(ivf_build, count_py4j_calls):
+    """ivfpq_probe's ADC shortlist, semi join and rounded re-rank are
+    SQL text and column names: 156 py4j calls a plan build, 184 when
+    they were composed node by node."""
+    from semantic_query_engine_spark.operators.ann import sample_vectors
+    from semantic_query_engine_spark.operators.pq import build_pq, ivfpq_probe, pq_encode
+
+    probes, index, assigned, centroids = ivf_build
+    books = build_pq(index, sample_X=sample_vectors(index))
+    codes = assigned.select("vec_id", "cluster_id").join(pq_encode(index, books), "vec_id")
+    q = probes.first().probe_vec
+    ivfpq_probe(codes, centroids, index, books, q)  # warm the schema lookups
+    assert count_py4j_calls(lambda: ivfpq_probe(codes, centroids, index, books, q)) < 170

@@ -5,7 +5,8 @@ version), the heap-backed default stays on local masters (RocksDB costs
 ~0.7 s native-store overhead at test-SF state sizes), and an explicit
 SPARK_GRAFT_STATE_STORE request wins in both directions.  Also pins the
 session's machine-sized defaults (cores, driver heap) and their
-deployment overrides, without building a session."""
+deployment overrides, without building a session, and the codegen
+setting of the session the package builds."""
 
 import os
 
@@ -62,3 +63,10 @@ def test_deployment_variables_override_the_defaults(monkeypatch):
     assert resources({"SPARK_DRIVER_MEM": "2g"}) == ("local[4]", 4, "2g")
     env = {"SPARK_GRAFT_MASTER": "spark://host:7077", "SPARK_GRAFT_CPUS": "16"}
     assert resources(env) == ("spark://host:7077", 16, "7g")
+
+
+def test_built_session_keeps_stage_ids_out_of_class_names(spark):
+    """A union that gains a child shifts the whole-stage ids; with them
+    out of the generated class names a search after an upload reuses
+    its compiled code (tests/test_api.py::test_asks_reuse_compiled_code)."""
+    assert spark.conf.get("spark.sql.codegen.useIdInClassName") == "false"

@@ -5,10 +5,10 @@ The sf1 fixtures are generated from the driver's sf0.1 parquet by
 replicating rows 10x with id offsets (text/vectors perturbed per
 replica so exact/near-dedup stages see distinct content) — see
 SCALE.md for the construction.  A query whose input scales 10x should
-show time growth well under 10x on local[32] (partial aggregation,
-pushdown, bounded shuffles); a query bounded by construction
-(doc_id < K filters) should stay flat because the filter reaches the
-scan.
+show time growth well under 10x on the session's machine-sized
+local[<cores>] master (partial aggregation, pushdown, bounded
+shuffles); a query bounded by construction (doc_id < K filters) should
+stay flat because the filter reaches the scan.
 
 Usage: python tools/scale_run.py [sf_small_dir] [sf_big_dir]
 Prints one JSON line: {query: {"small": s, "big": s, "ratio": r}, ...}
@@ -200,9 +200,10 @@ def main() -> None:
         return
     out = {}
     for name in names:
-        # fresh SparkContext per query: a long-lived 48g local session
-        # develops multi-second pauses after a few hundred heavy jobs
-        # (measured: the same query 1.4s fresh, 11s late in a sweep,
+        # fresh SparkContext per query: a long-lived local session (heap
+        # sized by session.resources) develops multi-second pauses after
+        # a few hundred heavy jobs (measured with a 48g heap: the same
+        # query 1.4s fresh, 11s late in a sweep,
         # with all persistent RDDs released).  NOTE this is context-
         # level isolation only — spark.stop() + getOrCreate reuses the
         # same JVM through the persistent py4j gateway, so block-manager
