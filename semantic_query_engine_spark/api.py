@@ -136,12 +136,14 @@ class SemanticQueryEngine:
         index = self._require_index()
         stem = filename[: -len(".txt")]
         doc_id = f"{stem}_{batch_ts}"
-        # one partition: createDataFrame spreads a local list over the
-        # default parallelism, and every partition of every segment
-        # is one more task per search
-        docs = self.spark.createDataFrame(
-            [(doc_id, content)], "doc_id string, text string"
-        ).coalesce(1)
+        # one row of two bound parameters over Spark's one-row relation:
+        # one partition (every partition of every segment is one more
+        # task per search), and no local-data round trip through a temp
+        # file as createDataFrame makes
+        docs = self.spark.sql(
+            "SELECT :doc_id AS doc_id, :text AS text",
+            args={"doc_id": doc_id, "text": content},
+        )
         embedded = (
             embed_index(chunk_documents(docs, chunk_size=self.chunk_size), self._embedder)
             .withColumn("user_id", F.lit(user_id))

@@ -17,9 +17,10 @@ Each IVF rule is written once:
 - one query's probe: nearest_clusters ranks the centroid table on the
   driver (n_clusters rows, kilobytes) with retrieval._cosine_rows, the
   numpy twin of functions.vectors.cosine, ties to the lowest
-  cluster_id.  The ids enter the plan as a literal isin(), a pushable
-  predicate that prunes a partitionBy(cluster_id) layout at plan time
-  (ivf_topk here, pq.ivfpq_probe);
+  cluster_id.  The ids enter the plan as one array literal
+  (in_clusters), a predicate on the partition column that prunes a
+  partitionBy(cluster_id) layout at plan time (ivf_topk here,
+  pq.ivfpq_probe);
 - a batch of probes: _probe_clusters ranks the broadcast centroid table
   in the plan with the same cosine and tie rule (ivf_knn_join,
   pq.ivfpq_knn_join), so both probes pick the same clusters bit for
@@ -200,12 +201,24 @@ def nearest_clusters(centroids: DataFrame, query_vec: Iterable[float], nprobe: i
     """The nprobe cluster ids nearest the query by cosine, ties to the
     lowest cluster id, picked on the driver: the rank ivf_knn_join's
     step 1 computes in the plan, bit for bit (retrieval._cosine_rows is
-    the numpy twin of functions.vectors.cosine).  As a literal isin()
-    the ids are a pushable predicate that prunes a
-    partitionBy(cluster_id) layout at plan time."""
+    the numpy twin of functions.vectors.cosine).  The plan filters on
+    them with in_clusters."""
     cids, C = _centroid_matrix(centroids)
     s = _cosine_rows(C, np.asarray([float(x) for x in query_vec]))
     return [int(c) for c in cids[np.lexsort((cids, -s))][:nprobe]]
+
+
+def in_clusters(cluster_ids: list) -> F.Column:
+    """`cluster_id` is one of `cluster_ids`, the ids held in one array
+    literal.  Codegen passes an array literal to the generated Java by
+    reference, so an unseen cluster set reuses the compiled code; an
+    isin() of int literals inlined each id and compiled 3 classes per
+    set.  A predicate on the partition column alone, it prunes a
+    partitionBy(cluster_id) layout at plan time."""
+    if not cluster_ids:
+        return F.lit(False)
+    ids = ", ".join(str(int(c)) for c in cluster_ids)
+    return F.expr(f"array_contains(array({ids}), cluster_id)")
 
 
 def write_ivf_index(assigned: DataFrame, path: str) -> None:
@@ -235,7 +248,7 @@ def ivf_topk(
     """Probe the nprobe nearest clusters (nearest_clusters), exact top-k
     inside them."""
     probe_ids = nearest_clusters(centroids, query_vec, nprobe)
-    pruned = assigned.filter(F.col("cluster_id").isin(probe_ids))
+    pruned = assigned.filter(in_clusters(probe_ids))
     return topk_similar(pruned, query_vec, k=k, id_col=id_col, vec_col=vec_col)
 
 

@@ -42,7 +42,13 @@ from pyspark.sql import functions as F
 
 from ..functions.text import sql_ident
 from ..functions.vectors import _norm, _sqdist, const_sql, l2_normalize, with_cosine
-from .ann import _probe_clusters, assign_with_centroids, nearest_clusters, sample_vectors
+from .ann import (
+    _probe_clusters,
+    assign_with_centroids,
+    in_clusters,
+    nearest_clusters,
+    sample_vectors,
+)
 from .retrieval import _top_per, score_against
 
 SEED = 42
@@ -289,9 +295,9 @@ def write_ivfpq_index(
     pays it once:
 
     - `<path>/codes`: the (id, codes) table written
-      partitionBy(cluster_id) — the probe's literal isin(cluster_ids)
-      filter then prunes at PLAN time to nprobe/n_clusters of the
-      files, the same physical contract as ann.write_ivf_index, with
+      partitionBy(cluster_id) — the probe's cluster filter
+      (ann.in_clusters) then prunes at PLAN time to nprobe/n_clusters
+      of the files, the same physical contract as ann.write_ivf_index, with
       ~m BYTES per vector instead of the raw 4-8 KB.
     - `<path>/centroids`: n_clusters rows, read whole (kilobytes).
     - `<path>/codebooks.json`: the m x k x dim/m trained codebooks —
@@ -373,14 +379,14 @@ def ivfpq_probe(
 ) -> DataFrame:
     """Per-query probe over the PERSISTED layout: NO training, NO
     encode, NO assignment join in-plan — the centroid rank on the
-    driver (ann.nearest_clusters), a literal isin() cluster filter (static partition pruning on the
-    partitionBy(cluster_id) layout, pinned by
-    tests/test_ivf_partition_pruning.py), ADC over the ~m-byte codes of
-    the probed clusters, exact re-rank of the top `refine`.  This is
+    driver (ann.nearest_clusters), a cluster filter (ann.in_clusters:
+    static partition pruning on the partitionBy(cluster_id) layout,
+    pinned by tests/test_ivf_partition_pruning.py), ADC over the ~m-byte
+    codes of the probed clusters, exact re-rank of the top `refine`.  This is
     the 100-TB serving path: probe cost scales with
     nprobe/n_clusters of the code table, decoupled from build cost."""
     probe_ids = nearest_clusters(centroids, query_vec, nprobe)
-    pruned = codes.filter(F.col("cluster_id").isin(probe_ids)).selectExpr(
+    pruned = codes.filter(in_clusters(probe_ids)).selectExpr(
         sql_ident(id_col), "codes"
     )
     return pq_topk(

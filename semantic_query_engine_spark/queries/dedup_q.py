@@ -513,7 +513,7 @@ def ivf_topk_partitioned_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruning win lived only in pytest
     (tests/test_ivf_partition_pruning.py); this row makes BENCH track
     the pruned-scan cost, so a regression in the pruning (ivf_topk's
-    literal isin() cluster filter, operators/ann.py) shows up as a
+    cluster filter, operators/ann.py in_clusters) shows up as a
     timing jump toward the unpartitioned ann_ivf_topk twin, not just a
     test failure.  Build + partitionBy write happen once
     per process (bench warmup); timed runs probe the read-back layout
@@ -1338,8 +1338,8 @@ def ann_ivfpq_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     #2): codebooks + cluster-partitioned code table are built ONCE into
     a parquet layout (operators/pq.py write_ivfpq_index — the
     write_ivf_index physical contract at ~8 bytes/vector) and the
-    registered query PROBES it — centroid rank driver-side, literal
-    isin() cluster filter pruning the partitioned scan at plan time,
+    registered query PROBES it — centroid rank driver-side, a
+    cluster filter pruning the partitioned scan at plan time,
     ADC over probed codes only, exact re-rank of the refine window.
     Same accuracy gate and oracle as ann_ivfpq_topk (the exact top-3
     payload is hash-checked and `recall_ok` guards the probe chain);

@@ -79,12 +79,14 @@ def test_search_plan_build_py4j_budget(engine, count_py4j_calls):
 
 
 def test_upload_py4j_budget(spark, sf_dir, count_py4j_calls):
-    """One upload_text — its plan build (createDataFrame ->
+    """One upload_text — its plan build (a one-row SQL select ->
     chunk_documents -> embed_index) and the materializing action —
-    stays under 100 Python-to-JVM calls (83 measured); with the chunker
-    and tokenizer composed as Columns it issued ~480, and ~150 while
-    the embed went through the Python pipeline model, which copies
-    every stage's params to the JVM on each transform.
+    stays within 62 Python-to-JVM calls (57 measured).  It issued 83
+    while the row went through createDataFrame's local-data temp file
+    (36 calls, 10 for the SQL select), ~480 with the chunker and
+    tokenizer composed as Columns, and ~150 while the embed went
+    through the Python pipeline model, which copies every stage's
+    params to the JVM on each transform.
     chunk_documents alone parses three SQL strings (~20 calls; ~350 as
     Columns)."""
     from semantic_query_engine_spark.api import SemanticQueryEngine
@@ -97,7 +99,7 @@ def test_upload_py4j_budget(spark, sf_dir, count_py4j_calls):
     eng = SemanticQueryEngine(spark, chunk_size=32).build_from_documents(docs)
     eng.upload_text("u1", "warm.txt", "warm the upload path up", 1)
     calls = count_py4j_calls(lambda: eng.upload_text("u1", "a.txt", "fast key order sort", 2))
-    assert calls < 100, calls
+    assert calls <= 62, calls
     assert count_py4j_calls(lambda: chunk_documents(docs, chunk_size=32)) <= 50
 
 

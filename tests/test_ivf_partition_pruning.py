@@ -10,8 +10,9 @@ write_ivf_index), runs ivf_topk over the read-back layout, and asserts
   (b) the pruned result equals the unpartitioned path bit-for-bit.
 
 The pruning is static: ivf_topk picks the query's nprobe clusters on
-the driver (ann.nearest_clusters) and filters on them as a literal
-isin(), which Spark prunes partitions with at plan time.  The IVF-PQ
+the driver (ann.nearest_clusters) and filters on them as one array
+literal (ann.in_clusters), which Spark prunes partitions with at plan
+time.  The IVF-PQ
 serving layout (operators/pq.py write_ivfpq_index, ivfpq_probe) is
 held to the same two claims.
 """
@@ -138,7 +139,7 @@ def ivfpq_layout(spark, sf_dir, tmp_path_factory):
 
 
 def test_ivfpq_serving_layout_prunes_statically(ivfpq_layout, tmp_path):
-    """The probe's literal isin(cluster_ids) filter prunes the
+    """The probe's cluster filter (ann.in_clusters) prunes the
     partitionBy(cluster_id) code-table scan at PLAN time (static
     pruning, so no `staticFilesNum`/DPP metrics — the non-probed files
     never enter the plan at all): the executed scan touches exactly

@@ -97,3 +97,33 @@ def test_single_probe_plan_build_py4j_budget(ivf_build, count_py4j_calls):
     q = probes.first().probe_vec
     ivfpq_probe(codes, centroids, index, books, q)  # warm the schema lookups
     assert count_py4j_calls(lambda: ivfpq_probe(codes, centroids, index, books, q)) < 170
+
+
+def test_unseen_cluster_sets_compile_no_classes(spark, ivf_build):
+    """The probed ids reach the plan as one array literal, which codegen
+    passes by reference: after one warm probe of each kind, three
+    unseen cluster sets compile 0 classes.  As an isin() of int
+    literals, inlined into the generated Java, each set compiled 3."""
+    from semantic_query_engine_spark.operators.ann import ivf_topk, nearest_clusters, sample_vectors
+    from semantic_query_engine_spark.operators.pq import build_pq, ivfpq_probe, pq_encode
+
+    _, index, assigned, centroids = ivf_build
+    books = build_pq(index, sample_X=sample_vectors(index))
+    codes = assigned.select("vec_id", "cluster_id").join(pq_encode(index, books), "vec_id").cache()
+    # each centroid is nearest to itself: one query per cluster set
+    queries, sets = [], []
+    for r in centroids.orderBy("cluster_id").collect():
+        probed = set(nearest_clusters(centroids, r.centroid, 2))
+        if probed not in sets:
+            queries.append(r.centroid)
+            sets.append(probed)
+    assert len(sets) >= 4, sets
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount
+    ivf_topk(assigned, centroids, queries[0], k=3, nprobe=2).collect()
+    ivfpq_probe(codes, centroids, index, books, queries[0], k=3, nprobe=2).collect()
+    before = compiled()
+    for q in queries[1:4]:
+        ivf_topk(assigned, centroids, q, k=3, nprobe=2).collect()
+        ivfpq_probe(codes, centroids, index, books, q, k=3, nprobe=2).collect()
+    assert compiled() - before == 0
