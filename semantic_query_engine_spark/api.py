@@ -17,8 +17,12 @@ Reference endpoints -> methods:
 State:
 - chunk index: a DataFrame (persist via plans.index_build.write_index),
   built and extended through plans.index_build (rows L2-normalized):
-  the cached build plus each upload's chunks, materialized once per
-  upload and folded into a new base every MAX_UPLOAD_SEGMENTS uploads
+  base ∪ delta, never more than two leaves for a search to scan.  The
+  base is the build, materialized in as many partitions as Spark's file
+  scan would split its estimated bytes into (file_split_count).  The
+  delta holds the uploads since the last fold, materialized again as
+  one partition by each upload; every MAX_UPLOAD_SEGMENTS + 1 uploads
+  fold base ∪ delta into a new base of the base's partition count
 - semantic LFU cache (A12-A14): plain driver memory, at most
   `cache_capacity` rows of a numpy matrix — like the reference's
   client-side scan over a Redis list.  tests/test_driver_serving checks
@@ -48,9 +52,25 @@ from .plans.rag import SYSTEM_RULES
 from .functions.plan import truncate_eager
 
 DEFAULT_TOP_K = 3  # /root/reference/app/main.py:467
-# uploads kept as separate materialized segments before they are folded
-# into one new base: bounds the union a search plans over
+# uploads gathered in the delta before base and delta fold into one new
+# base: each rewrites the delta, a fold rewrites the base
 MAX_UPLOAD_SEGMENTS = 8
+# at-rest size estimate of one index row: 8 bytes per embedding element,
+# and about 8 per chunk word (a word and its separator)
+_ELEMENT_BYTES = 8
+_WORD_BYTES = 8
+
+
+def file_split_count(
+    n_bytes: int, parallelism: int, max_partition_bytes: int, open_cost_bytes: int
+) -> int:
+    """Partitions Spark's file scan would split `n_bytes` of input into
+    (FilePartition.maxSplitBytes): splits of
+    min(maxPartitionBytes, max(openCostInBytes, bytes / parallelism))
+    bytes.  Small inputs get one partition, large ones about one per
+    core, and none is larger than maxPartitionBytes."""
+    split = min(max_partition_bytes, max(open_cost_bytes, -(-n_bytes // parallelism)))
+    return max(1, -(-n_bytes // split))
 
 
 def _default_generator(prompt: str) -> str:
@@ -84,10 +104,12 @@ class SemanticQueryEngine:
             raise ValueError("cache_capacity must be at least 1")
         self.cache_capacity = cache_capacity
         self.cache_threshold = cache_threshold
+        # base ∪ delta: never more than two leaves for a search to scan
         self.index: Optional[DataFrame] = None
-        # the materialized part of the index that uploads are unioned onto
         self._base: Optional[DataFrame] = None
-        self._upload_segments = 0
+        # the uploads since the last fold, materialized as one partition
+        self._delta: Optional[DataFrame] = None
+        self._upload_segments = 0  # uploads in the delta
         self._embedder = None  # the build's, from plans.index_build.fit_index
         # the LFU cache: row i is entry _cache_ids[i]; ids are the insert
         # sequence, so (freq, id) is the eviction order
@@ -104,15 +126,30 @@ class SemanticQueryEngine:
     # ------------------------------------------------------------------
 
     def build_from_documents(self, docs: DataFrame) -> "SemanticQueryEngine":
-        """Index build (A27) by plans.index_build.fit_index, cached.
+        """Index build (A27) by plans.index_build.fit_index, materialized
+        as the base in `_base_partitions()` partitions.
         Skips nothing here — idempotence guards live on the persisted
         path (plans.index_build.index_is_empty).  doc_id is indexed as a
         string, the type upload ids have."""
         docs = docs.withColumn("doc_id", F.col("doc_id").cast("string"))
         self._embedder, index = fit_index(docs, self.chunk_size, self.dim)
-        self.index = self._base = index.cache()
+        self.index = self._base = index.coalesce(self._base_partitions()).transform(truncate_eager)
+        self._delta = None
         self._upload_segments = 0
         return self
+
+    def _base_partitions(self) -> int:
+        """A search runs one task per partition, so the base is split as
+        Spark's file scan would split its estimated bytes: the fitted
+        IDF's document (chunk) count times a row's size."""
+        conf = self.spark._jsparkSession.sessionState().conf()
+        row_bytes = _ELEMENT_BYTES * self.dim + _WORD_BYTES * self.chunk_size
+        return file_split_count(
+            self._embedder.num_docs * row_bytes,
+            self.spark.sparkContext.defaultParallelism,
+            conf.filesMaxPartitionBytes(),
+            conf.filesOpenCostInBytes(),
+        )
 
     def build_from_corpus_dir(self, corpus_dir: str) -> "SemanticQueryEngine":
         from .sources.text_corpus import read_text_corpus
@@ -125,39 +162,46 @@ class SemanticQueryEngine:
         """A23: validate filename/extension, derive doc_id stem_ts,
         index the chunks under the tenant.  Returns the doc_id.
 
-        Requires a build, whose embedder embeds the chunks; they are
-        materialized here, once, so searches do not re-run their plan."""
+        Requires a build, whose embedder embeds the chunks.  They join
+        the delta, which is materialized again as one partition in one
+        job, so a search scans two leaves, base and delta, however many
+        uploads came before.  The upload that takes the delta past
+        MAX_UPLOAD_SEGMENTS uploads folds base ∪ delta into a new base
+        of the base's partition count instead."""
         if not filename:
             raise ValueError("filename must be non-empty")
         if not filename.endswith(".txt"):
             raise ValueError("only .txt uploads are accepted")
         if content is None:
             raise ValueError("content must be a string")
-        index = self._require_index()
+        self._require_index()
         stem = filename[: -len(".txt")]
         doc_id = f"{stem}_{batch_ts}"
-        # one row of two bound parameters over Spark's one-row relation:
-        # one partition (every partition of every segment is one more
-        # task per search), and no local-data round trip through a temp
-        # file as createDataFrame makes
+        # one row of two bound parameters over Spark's one-row relation,
+        # without the local-data round trip through a temp file that
+        # createDataFrame makes
         docs = self.spark.sql(
             "SELECT :doc_id AS doc_id, :text AS text",
             args={"doc_id": doc_id, "text": content},
         )
-        embedded = (
-            embed_index(chunk_documents(docs, chunk_size=self.chunk_size), self._embedder)
-            .withColumn("user_id", F.lit(user_id))
-            .transform(truncate_eager)
-        )
-        self.index = index.unionByName(embedded, allowMissingColumns=True)
+        chunks = embed_index(
+            chunk_documents(docs, chunk_size=self.chunk_size), self._embedder
+        ).withColumn("user_id", F.lit(user_id))
+        if self._delta is not None:
+            chunks = self._delta.unionByName(chunks)
         self._upload_segments += 1
         if self._upload_segments > MAX_UPLOAD_SEGMENTS:
-            # a union of unpartitioned inputs keeps the sum of their partitions
+            # a union keeps the sum of its inputs' partitions
             parts = self._base.rdd.getNumPartitions()
-            folded = self.index.coalesce(parts).transform(truncate_eager)
-            self._base.unpersist()
-            self.index = self._base = folded
-            self._upload_segments = 0
+            self._base = (
+                self._base.unionByName(chunks, allowMissingColumns=True)
+                .coalesce(parts)
+                .transform(truncate_eager)
+            )
+            self.index, self._delta, self._upload_segments = self._base, None, 0
+        else:
+            self._delta = chunks.coalesce(1).transform(truncate_eager)
+            self.index = self._base.unionByName(self._delta, allowMissingColumns=True)
         return doc_id
 
     # ------------------------------------------------------------------

@@ -106,6 +106,14 @@ class TfIdfEmbedder:
         self._java_model = self._model._to_java()
         return self
 
+    @property
+    def num_docs(self) -> int:
+        """How many documents the IDF was fitted on: kept by the fitted
+        model, so no Spark job."""
+        if self._model is None:
+            raise RuntimeError("call fit() first")
+        return self._model.stages[-1].numDocs
+
     def transform(self, docs: DataFrame) -> DataFrame:
         """Add `out_col` as array<double> (MLlib vector only transient).
         Transforms through the fitted JVM pipeline model in one call:

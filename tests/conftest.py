@@ -12,6 +12,42 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 # py4j protocol: memory command "m", delete subcommand "d"
 _PY4J_RELEASE = "m\nd\n"
+FAILURE_MESSAGE_CHARS = 200
+
+
+def failure_line(nodeid: str, exc: BaseException) -> str:
+    """One line naming a failure: node id, exception type, Spark error
+    condition ("-" when the exception carries none) and the first
+    FAILURE_MESSAGE_CHARS characters of its message, whitespace folded.
+    A JVM stack trace can fill a log's tail; this line keeps the head."""
+    try:
+        condition = exc.getCondition()  # PySparkException; may ask the JVM
+    except Exception:  # no condition, or the JVM cannot answer
+        condition = None
+    message = " ".join(str(exc).split())[:FAILURE_MESSAGE_CHARS]
+    return f"{nodeid} {type(exc).__name__} {condition or '-'} {message}"
+
+
+@pytest.hookimpl(hookwrapper=True)
+def pytest_runtest_makereport(item, call):
+    outcome = yield
+    report = outcome.get_result()
+    if report.failed and call.excinfo is not None:
+        report.failure_line = failure_line(report.nodeid, call.excinfo.value)
+
+
+@pytest.hookimpl(trylast=True)
+def pytest_terminal_summary(terminalreporter):
+    lines = [
+        r.failure_line
+        for key in ("failed", "error")
+        for r in terminalreporter.stats.get(key, [])
+        if hasattr(r, "failure_line")
+    ]
+    if lines:
+        terminalreporter.section("failure heads")
+        for line in lines:
+            terminalreporter.write_line(line)
 
 
 @pytest.fixture(scope="session")

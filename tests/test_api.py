@@ -161,9 +161,11 @@ def test_search_scores_bit_identical_to_cosine_across_uploads(spark, sf_dir):
 
 
 def test_index_partitions_bounded_across_uploads(spark, sf_dir):
-    """Each upload adds one partition and a fold returns to the base's
-    count: a search runs one task per partition, so an index that kept
-    every upload's default-parallelism spread grew without bound."""
+    """The uploads since the last fold are one partition, the delta, and
+    a fold returns to the base's count: a search runs one task per
+    partition, so an index that kept every upload's default-parallelism
+    spread grew without bound, and one that kept a partition per upload
+    ran up to MAX_UPLOAD_SEGMENTS more tasks."""
     from semantic_query_engine_spark.api import MAX_UPLOAD_SEGMENTS, SemanticQueryEngine
     from semantic_query_engine_spark.sources.fixtures import load_table
 
@@ -174,7 +176,85 @@ def test_index_partitions_bounded_across_uploads(spark, sf_dir):
     base = eng.index.rdd.getNumPartitions()
     for i in range(3 * MAX_UPLOAD_SEGMENTS):
         eng.upload_text("u", f"f{i}.txt", f"upload {i} nebula fjord", batch_ts=i)
-        assert eng.index.rdd.getNumPartitions() <= base + MAX_UPLOAD_SEGMENTS, i
+        assert eng.index.rdd.getNumPartitions() <= base + 1, i
+
+
+def _scan_leaves(df) -> int:
+    return df._jdf.queryExecution().optimizedPlan().collectLeaves().size()
+
+
+def test_search_plan_scans_base_and_delta(spark, sf_dir):
+    """A search plans one scan before any upload and after a fold, and
+    two, base and delta, however many uploads the delta holds."""
+    from semantic_query_engine_spark.api import MAX_UPLOAD_SEGMENTS, SemanticQueryEngine
+
+    eng = SemanticQueryEngine(spark, chunk_size=32).build_from_documents(_docs(spark, sf_dir, 20))
+    assert _scan_leaves(eng.search("nebula fjord")) == 1
+    leaves = {}
+    for i in range(1, MAX_UPLOAD_SEGMENTS + 2):
+        eng.upload_text("u", f"f{i}.txt", f"upload {i} nebula fjord", batch_ts=i)
+        leaves[i] = _scan_leaves(eng.search("nebula fjord"))
+    assert {i: leaves[i] for i in (1, 5, MAX_UPLOAD_SEGMENTS)} == {1: 2, 5: 2, MAX_UPLOAD_SEGMENTS: 2}
+    assert leaves[MAX_UPLOAD_SEGMENTS + 1] == 1  # the fold
+
+
+def test_miss_ask_tasks_bounded_by_base_plus_delta(spark, sf_dir):
+    """A cache-miss ask runs one task per partition of base and delta:
+    at most the base's partitions + 1, with three uploads in the delta."""
+    from semantic_query_engine_spark.api import SemanticQueryEngine
+
+    eng = SemanticQueryEngine(spark, chunk_size=32).build_from_documents(_docs(spark, sf_dir, 20))
+    base = eng._base.rdd.getNumPartitions()
+    for i in range(3):
+        eng.upload_text("u", f"f{i}.txt", f"upload {i} nebula fjord", batch_ts=i)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "miss-ask-tasks"
+    sc.setJobGroup(group, group)
+    try:
+        eng.ask("a question no cache entry holds")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = sum(
+        tracker.getStageInfo(s).numTasks for j in jobs for s in tracker.getJobInfo(j).stageIds
+    )
+    assert jobs and tasks <= base + 1, (len(jobs), tasks, base)
+
+
+MIB = 1 << 20
+
+
+@pytest.mark.parametrize("parallelism", [1, 4, 8])
+def test_file_split_count_at_fixture_sizes_is_one(parallelism):
+    """A few hundred rows at dim 64 and 512-word chunks (perfbench's ask
+    index: 174 rows) are under Spark's 4 MiB open cost: one partition."""
+    from semantic_query_engine_spark.api import file_split_count
+
+    for rows in (0, 1, 174, 500):
+        n_bytes = rows * (8 * 64 + 8 * 512)
+        assert file_split_count(n_bytes, parallelism, 128 * MIB, 4 * MIB) == 1
+
+
+@pytest.mark.parametrize("parallelism", [4, 8, 16])
+def test_file_split_count_at_reference_size_is_parallelism(parallelism):
+    """36,812 chunks at dim 1024 (the reference's corpus size, ~430 MiB)
+    split into one partition per core once a core's share is under
+    maxPartitionBytes."""
+    from semantic_query_engine_spark.api import file_split_count
+
+    n_bytes = 36_812 * (8 * 1024 + 8 * 512)
+    assert file_split_count(n_bytes, parallelism, 128 * MIB, 4 * MIB) == parallelism
+
+
+def test_file_split_count_never_splits_above_max_partition_bytes():
+    from semantic_query_engine_spark.api import file_split_count
+
+    for n_bytes in (128 * MIB, 128 * MIB + 1, 431 * MIB, 10 * 1024 * MIB):
+        for parallelism in (1, 2, 3, 4, 64):
+            parts = file_split_count(n_bytes, parallelism, 128 * MIB, 4 * MIB)
+            assert -(-n_bytes // parts) <= 128 * MIB, (n_bytes, parallelism, parts)
+            assert parts <= max(parallelism, -(-n_bytes // (128 * MIB))), (n_bytes, parallelism)
 
 
 def test_ask_stream_chunks_and_caches(engine):

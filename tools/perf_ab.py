@@ -1,15 +1,18 @@
 """A/B of perfbench between two checkouts, in alternating order.
 
 Usage: python tools/perf_ab.py PARENT_DIR CHANGE_DIR --workload W --seeds 42 43 ...
-       [--seconds 10]
+       [--seconds 10] [--trace 0|1]
 
 For every seed, runs `python3 perfbench/run.py --workload W --seed S
---seconds N --trace 0` once in each checkout, from the checkout's root.
+--seconds N --trace T` once in each checkout, from the checkout's root.
 The parent runs first in even pairs and second in odd ones, so a drift
-of the machine's load falls on both sides.  Prints each pair's
-`setup_s`, `op_cpu_s` and Spark start, then over the pairs: both
-medians, the parent's interquartile range and the pairs the change wins
-(lower is better for both metrics).
+of the machine's load falls on both sides.  Prints each pair's metrics
+and Spark start, then over the pairs: both medians, the parent's
+interquartile range and the pairs the change wins (lower is better for
+every metric).  The metrics are the end-to-end `setup_s` and
+`op_cpu_s` with --trace 0 (the default), and the per-layer
+`spark.tasks_per_ask` and `operators.retrieval.search_s` of a traced
+run with --trace 1.
 
 A run whose Spark start wrote the JVM class archive (a new archive
 appeared in the cache of semantic_query_engine_spark.session during
@@ -33,7 +36,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from semantic_query_engine_spark.session import cache_dir  # noqa: E402
 
-METRICS = ("setup_s", "op_cpu_s")
+# perfbench prints the end-to-end metrics untraced, the per-layer ones traced
+METRICS = {0: ("setup_s", "op_cpu_s"), 1: ("spark.tasks_per_ask", "operators.retrieval.search_s")}
 
 
 def _archives() -> set[str]:
@@ -41,12 +45,12 @@ def _archives() -> set[str]:
     return {n for n in os.listdir(d) if n.endswith(".jsa")} if os.path.isdir(d) else set()
 
 
-def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
+def run_once(checkout: str, workload: str, seed: int, seconds: float, trace: int) -> dict:
     before = _archives()
     out = subprocess.run(
         [
             "python3", "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-            "--seconds", str(seconds), "--trace", "0",
+            "--seconds", str(seconds), "--trace", str(trace),
         ],
         cwd=checkout, capture_output=True, text=True,
     )
@@ -54,7 +58,7 @@ def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
     run = {"wrote_archive": bool(_archives() - before)}
     try:
         result = json.loads(lines[-1])
-        run.update({k: result["metrics"][k]["value"] for k in METRICS})
+        run.update({k: result["metrics"][k]["value"] for k in METRICS[trace]})
         run["correct"] = result["correct"] and result["failed"] == 0
     except (IndexError, ValueError, KeyError, TypeError):
         run["correct"] = False
@@ -71,12 +75,12 @@ def _quartiles(xs: list[float]) -> tuple[float, float]:
     return q[0], q[2]
 
 
-def _fmt(run: dict) -> str:
-    if "setup_s" not in run:
+def _fmt(run: dict, metrics: tuple[str, ...]) -> str:
+    if "tail" in run:
         return "no result JSON on the last line:\n" + run["tail"]
     start = run["spark_start_s"]
-    text = (f"setup_s {run['setup_s']:7.3f}  op_cpu_s {run['op_cpu_s']:6.3f}  "
-            f"start {'-' if start is None else f'{start:6.3f}'}")
+    text = "  ".join(f"{k} {run[k]:7.3f}" for k in metrics)
+    text += f"  start {'-' if start is None else f'{start:6.3f}'}"
     if run["wrote_archive"]:
         text += "  wrote-archive"
     if not run["correct"]:
@@ -91,18 +95,20 @@ def main(argv=None) -> int:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", type=int, nargs="+", required=True)
     ap.add_argument("--seconds", type=float, default=10.0)
+    ap.add_argument("--trace", type=int, choices=sorted(METRICS), default=0)
     args = ap.parse_args(argv)
+    metrics = METRICS[args.trace]
 
     pairs = []
     for i, seed in enumerate(args.seeds):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         pair = {}
         for side in order:
-            pair[side] = run_once(getattr(args, side), args.workload, seed, args.seconds)
+            pair[side] = run_once(getattr(args, side), args.workload, seed, args.seconds, args.trace)
         pairs.append(pair)
         print(f"seed {seed} ({order[0]} first)", flush=True)
         for side in ("parent", "change"):
-            print(f"  {side:6s} {_fmt(pair[side])}", flush=True)
+            print(f"  {side:6s} {_fmt(pair[side], metrics)}", flush=True)
 
     clean = [
         p for p in pairs
@@ -110,7 +116,7 @@ def main(argv=None) -> int:
     ]
     print(f"{args.workload}: {len(clean)} of {len(pairs)} pairs summarized "
           f"(left out: runs that wrote the archive or are not correct)")
-    for k in METRICS:
+    for k in metrics:
         if not clean:
             break
         a = [p["parent"][k] for p in clean]
