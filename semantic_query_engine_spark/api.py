@@ -18,11 +18,15 @@ State:
 - chunk index: a DataFrame (persist via plans.index_build.write_index),
   built and extended through plans.index_build (rows L2-normalized):
   base ∪ delta, never more than two leaves for a search to scan.  The
-  base is the build, materialized in as many partitions as Spark's file
-  scan would split its estimated bytes into (file_split_count).  The
-  delta holds the uploads since the last fold, materialized again as
-  one partition by each upload; every MAX_UPLOAD_SEGMENTS + 1 uploads
-  fold base ∪ delta into a new base of the base's partition count
+  base is the build, checkpointed by the first action on it (lazily,
+  as a cache fills) in as many partitions as Spark's file scan would
+  split its estimated bytes into (file_split_count).  The delta holds
+  the uploads since the last fold, materialized again as one partition
+  by each upload; every MAX_UPLOAD_SEGMENTS + 1 uploads fold base ∪
+  delta into a new base of the base's partition count.  A superseded
+  base or delta keeps its executor blocks until a JVM GC lets Spark's
+  ContextCleaner drop them: DataFrames a caller still holds may read
+  them, so they are not released here
 - semantic LFU cache (A12-A14): plain driver memory, at most
   `cache_capacity` rows of a numpy matrix — like the reference's
   client-side scan over a Redis list.  tests/test_driver_serving checks
@@ -49,14 +53,16 @@ from .operators.chunking import chunk_documents
 from .operators.retrieval import _cosine_rows, score_against
 from .plans.index_build import embed_index, fit_index
 from .plans.rag import SYSTEM_RULES
-from .functions.plan import truncate_eager
+from .functions.plan import truncate_eager, truncate_plan
 
 DEFAULT_TOP_K = 3  # /root/reference/app/main.py:467
 # uploads gathered in the delta before base and delta fold into one new
 # base: each rewrites the delta, a fold rewrites the base
 MAX_UPLOAD_SEGMENTS = 8
 # at-rest size estimate of one index row: 8 bytes per embedding element,
-# and about 8 per chunk word (a word and its separator)
+# and about 8 per chunk word (a word and its separator); 7-16 % under the
+# stored size of the checkpointed base at 1,159 and 3,767 rows
+# (tools/index_size_ab.py)
 _ELEMENT_BYTES = 8
 _WORD_BYTES = 8
 
@@ -126,14 +132,14 @@ class SemanticQueryEngine:
     # ------------------------------------------------------------------
 
     def build_from_documents(self, docs: DataFrame) -> "SemanticQueryEngine":
-        """Index build (A27) by plans.index_build.fit_index, materialized
-        as the base in `_base_partitions()` partitions.
+        """Index build (A27) by plans.index_build.fit_index: the base, in
+        `_base_partitions()` partitions, checkpointed by its first action.
         Skips nothing here — idempotence guards live on the persisted
         path (plans.index_build.index_is_empty).  doc_id is indexed as a
         string, the type upload ids have."""
         docs = docs.withColumn("doc_id", F.col("doc_id").cast("string"))
         self._embedder, index = fit_index(docs, self.chunk_size, self.dim)
-        self.index = self._base = index.coalesce(self._base_partitions()).transform(truncate_eager)
+        self.index = self._base = index.coalesce(self._base_partitions()).transform(truncate_plan)
         self._delta = None
         self._upload_segments = 0
         return self
@@ -189,19 +195,23 @@ class SemanticQueryEngine:
         ).withColumn("user_id", F.lit(user_id))
         if self._delta is not None:
             chunks = self._delta.unionByName(chunks)
-        self._upload_segments += 1
-        if self._upload_segments > MAX_UPLOAD_SEGMENTS:
+        # the state changes only once the job has run: a failed upload
+        # leaves base, delta and their count as they were
+        uploads = self._upload_segments + 1
+        if uploads > MAX_UPLOAD_SEGMENTS:
             # a union keeps the sum of its inputs' partitions
             parts = self._base.rdd.getNumPartitions()
-            self._base = (
+            base = (
                 self._base.unionByName(chunks, allowMissingColumns=True)
                 .coalesce(parts)
                 .transform(truncate_eager)
             )
-            self.index, self._delta, self._upload_segments = self._base, None, 0
+            self.index = self._base = base
+            self._delta, self._upload_segments = None, 0
         else:
-            self._delta = chunks.coalesce(1).transform(truncate_eager)
-            self.index = self._base.unionByName(self._delta, allowMissingColumns=True)
+            delta = chunks.coalesce(1).transform(truncate_eager)
+            self.index = self._base.unionByName(delta, allowMissingColumns=True)
+            self._delta, self._upload_segments = delta, uploads
         return doc_id
 
     # ------------------------------------------------------------------

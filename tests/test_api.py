@@ -179,6 +179,49 @@ def test_index_partitions_bounded_across_uploads(spark, sf_dir):
         assert eng.index.rdd.getNumPartitions() <= base + 1, i
 
 
+def test_build_leaves_the_base_to_its_first_action(spark, sf_dir):
+    """The build runs no job of its own to fill the base: the caller's
+    first action does, as it filled the cache the base replaced."""
+    from semantic_query_engine_spark.api import SemanticQueryEngine
+
+    eng = SemanticQueryEngine(spark, chunk_size=32).build_from_documents(_docs(spark, sf_dir, 20))
+    base = eng._base._jdf.queryExecution().logical().rdd().id()
+
+    def stored():
+        return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+    assert base not in stored()
+    eng.index.count()
+    assert base in stored()
+
+
+def test_failed_upload_leaves_the_index_as_it_was(spark, sf_dir, monkeypatch):
+    """An upload whose job fails (here an expression error in the rows
+    it materializes) changes neither the index nor the count of uploads
+    in the delta: not on a delta rewrite, not on a fold."""
+    from semantic_query_engine_spark import api
+
+    eng = api.SemanticQueryEngine(spark, chunk_size=32).build_from_documents(_docs(spark, sf_dir, 20))
+    real = api.truncate_eager
+
+    def failing(df):
+        return real(df.withColumn("chunk_text", F.raise_error(F.lit("lost the upload"))))
+
+    for uploads in (0, 2, api.MAX_UPLOAD_SEGMENTS):  # no delta, a delta, the fold
+        while eng._upload_segments < uploads:
+            i = eng._upload_segments
+            eng.upload_text("u", f"f{i}.txt", f"upload {i} nebula fjord", batch_ts=i)
+        state = (eng.index, eng._base, eng._delta, eng._upload_segments)
+        rows = eng.index.count()
+        monkeypatch.setattr(api, "truncate_eager", failing)
+        with pytest.raises(Exception, match="lost the upload"):
+            eng.upload_text("u", "bad.txt", "an upload that fails nebula", batch_ts=99)
+        monkeypatch.setattr(api, "truncate_eager", real)
+        assert all(a is b for a, b in zip(state, (eng.index, eng._base, eng._delta))), uploads
+        assert eng._upload_segments == uploads
+        assert eng.index.count() == rows
+
+
 def _scan_leaves(df) -> int:
     return df._jdf.queryExecution().optimizedPlan().collectLeaves().size()
 
