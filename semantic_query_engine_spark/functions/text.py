@@ -157,8 +157,8 @@ def quality_score(c: str) -> Column:
     return F.expr(_quality(words_sql(sql_ident(c)), sql_ident(c)))
 
 
-def lang_id_ws(ws: str, threshold: float = 0.08) -> Column:
-    return F.expr(_lang_id(sql_ident(ws), threshold))
+def lang_id_ws(ws: str) -> Column:
+    return F.expr(_lang_id(sql_ident(ws), 0.08))
 
 
 def lang_id(c: str, threshold: float = 0.08) -> Column:

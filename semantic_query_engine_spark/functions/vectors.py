@@ -10,7 +10,8 @@ Each rule is written once, as a private renderer of SQL text:
 - `_dot`: the inner product, folded in double from 0D;
 - `_norm`: the L2 norm, sqrt of the self dot;
 - `_guard`: the cosine zero-norm guard over a dot and two norms;
-- `_normalize`: x / (||x|| + eps), the row norm evaluated once per row;
+- `_normalize`: x / (||x|| + 1e-9), the row norm evaluated once per
+  row; a zero vector stays zero;
 - `_sqdist`: the squared L2 distance, folded in double from 0D (PQ
   codeword assignment and ADC distance tables, operators/pq);
 - `_micro`: the 1e-6 integer quantization of each component;
@@ -90,11 +91,11 @@ def _idot(a: str, b: str) -> str:
     return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, (acc, p) -> acc + p)"
 
 
-def _normalize(a: str, eps: float) -> str:
+def _normalize(a: str) -> str:
     # the denominator rides in as an array so the row norm is evaluated
     # once per row: inside the lambda body Spark would evaluate it once
     # per element, and it does not hoist it out
-    denom = f"{_norm(a)} + {const_sql(eps)}"
+    denom = f"{_norm(a)} + {const_sql(1e-9)}"
     return f"zip_with({a}, array_repeat({denom}, size({a})), (x, d) -> CAST(x AS DOUBLE) / d)"
 
 
@@ -179,8 +180,8 @@ def with_cosine(
     )
 
 
-def l2_normalize(a: str, eps: float = 1e-9) -> Column:
-    """x / (||x|| + eps), the reference's pre-index / pre-search step
+def l2_normalize(a: str) -> Column:
+    """x / (||x|| + 1e-9), the reference's pre-index / pre-search step
     (/root/reference/app/main.py:315-316). Keeping vectors normalized at
     rest makes query-time cosine a single dot product."""
-    return F.expr(_normalize(a, eps))
+    return F.expr(_normalize(a))

@@ -148,19 +148,18 @@ def embed_with_pandas_udf(
     docs: DataFrame,
     embed_fn: Optional[Callable[[list[str]], list[list[float]]]] = None,
     dim: int = DEFAULT_DIM,
-    text_col: str = "text",
-    out_col: str = "embedding",
     max_retries: int = 2,
     backoff_s: float = 0.1,
     per_row_fallback: bool = False,
 ) -> DataFrame:
-    """Arrow-batched embedding via a Pandas iterator UDF.  `embed_fn`
-    maps a batch of texts to vectors; the default is a deterministic
-    hash-bucket embedder (a stand-in for a real model — the container
-    ships no model weights).  Empty text -> zero vector, matching the
-    reference's guard.  A flaky embed_fn is retried max_retries times
-    per batch and then degrades to zero vectors — the reference's
-    error path (app/embedding_gen.py:147-148), not a task failure.
+    """Arrow-batched embedding of `text` into an `embedding` column via a
+    Pandas iterator UDF.  `embed_fn` maps a batch of texts to vectors;
+    the default is a deterministic hash-bucket embedder (a stand-in for
+    a real model — the container ships no model weights).  Empty text
+    -> zero vector, matching the reference's guard.  A flaky embed_fn is
+    retried max_retries times per batch and then degrades to zero
+    vectors — the reference's error path
+    (app/embedding_gen.py:147-148), not a task failure.
     per_row_fallback=True isolates a poisoned row to itself instead of
     zeroing its whole Arrow batch (ml/resilience.py)."""
 
@@ -199,4 +198,4 @@ def embed_with_pandas_udf(
             texts = ["" if t is None else str(t) for t in batch.tolist()]
             yield pd.Series(resilient_fn(texts))
 
-    return docs.withColumn(out_col, _embed(F.col(text_col)))
+    return docs.withColumn("embedding", _embed(F.col("text")))

@@ -34,13 +34,11 @@ def deterministic_answer(n_docs: Column, top_doc_id: Column, top_score: Column) 
 def generate_with_pandas_udf(
     prompts: DataFrame,
     generate_fn: Optional[Callable[[list[str]], list[Optional[str]]]] = None,
-    prompt_col: str = "prompt",
-    out_col: str = "answer",
     max_retries: int = 2,
     backoff_s: float = 0.1,
-    per_row_fallback: bool = False,
 ) -> DataFrame:
-    """Batched generation via an Arrow iterator UDF.  `generate_fn` maps
+    """Batched generation of an `answer` column from `prompt` via an
+    Arrow iterator UDF.  `generate_fn` maps
     a batch of prompts to answers (None allowed per-row = generation
     failure).  Concurrency against an external service is bounded by
     partition count — the Spark analog of the reference's semaphore 5
@@ -67,7 +65,6 @@ def generate_with_pandas_udf(
         max_retries=max_retries,
         backoff_s=backoff_s,
         on_exhausted=null_answer_fallback,
-        per_row_fallback=per_row_fallback,
     )
 
     @pandas_udf("string")
@@ -75,4 +72,4 @@ def generate_with_pandas_udf(
         for batch in it:
             yield pd.Series(resilient_fn(batch.tolist()), dtype="object")
 
-    return prompts.withColumn(out_col, _gen(F.col(prompt_col)))
+    return prompts.withColumn("answer", _gen(F.col("prompt")))

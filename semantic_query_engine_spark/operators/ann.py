@@ -64,17 +64,16 @@ def lsh_topk(
     index: DataFrame,
     query_vec: Iterable[float],
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """approxNearestNeighbors over L2-normalized vectors.  On the unit
-    sphere, Euclidean distance is monotone in cosine (d² = 2 - 2cos), so
-    the random-projection buckets respect cosine ranking — the same
+    """(vec_id, approx_cos) from approxNearestNeighbors over the
+    L2-normalized `embedding` vectors.  On the unit sphere, Euclidean
+    distance is monotone in cosine (d² = 2 - 2cos), so the
+    random-projection buckets respect cosine ranking — the same
     space_type=cosinesimil intent as the reference's HNSW."""
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.linalg import Vectors
 
-    normed = index.withColumn("__nvec", l2_normalize(vec_col))
+    normed = index.withColumn("__nvec", l2_normalize("embedding"))
     feat = _to_mllib_vec(normed, "__nvec", "features")
     model = BucketedRandomProjectionLSH(
         inputCol="features",
@@ -87,19 +86,19 @@ def lsh_topk(
     q = q / (float(np.linalg.norm(q)) + 1e-9)
     hits = model.approxNearestNeighbors(feat, Vectors.dense(q), k)
     return hits.select(
-        id_col, F.round(1.0 - (F.col("distCol") ** 2) / 2.0, 6).alias("approx_cos")
+        "vec_id", F.round(1.0 - (F.col("distCol") ** 2) / 2.0, 6).alias("approx_cos")
     )
 
 
-def sample_vectors(index: DataFrame, vec_col: str = "embedding") -> np.ndarray:
-    """Bounded driver-side L2-normalized training sample (numpy n x dim,
-    n <= SAMPLE).  Pull ONCE and pass to build_ivf AND build_pq —
-    composed builds like ann_ivfpq_topk otherwise pay the toPandas job
-    twice."""
+def sample_vectors(index: DataFrame) -> np.ndarray:
+    """Bounded driver-side L2-normalized training sample of the
+    `embedding` column (numpy n x dim, n <= SAMPLE).  Pull ONCE and pass
+    to build_ivf AND build_pq — composed builds like ann_ivfpq_topk
+    otherwise pay the toPandas job twice."""
     # Arrow-batched toPandas + numpy-side normalization: ~3x faster to
     # pull the training sample than row-object collect of a HOF-normalized
     # projection
-    pdf = index.select(F.col(vec_col).alias("v")).limit(SAMPLE).toPandas()
+    pdf = index.select(F.col("embedding").alias("v")).limit(SAMPLE).toPandas()
     X = np.asarray(pdf["v"].tolist(), dtype="float64")
     return X / (np.linalg.norm(X, axis=1, keepdims=True) + 1e-9)
 
@@ -130,10 +129,29 @@ def _assigner(C: np.ndarray, cids: np.ndarray):
     return _assign
 
 
+def lloyd(X: np.ndarray, C: np.ndarray, iters: int) -> np.ndarray:
+    """`iters` Lloyd iterations over the rows of X from the initial
+    centroids C, updated in place and returned: assign each row to its
+    nearest centroid by squared L2, then move each centroid that has
+    members to their mean (one without members stays put).  The k-means
+    of build_ivf's coarse cells and of each of pq.build_pq's codebooks."""
+    for _ in range(iters):
+        # argmin_c ||x-c||^2 == argmin_c (||c||^2 - 2 x.c): one BLAS
+        # matmul instead of an n x k x dim broadcast tensor (the tensor
+        # form allocated ~30 MB per iteration and dominated build time)
+        cn = (C * C).sum(axis=1)
+        d = cn[None, :] - 2.0 * (X @ C.T)
+        a = d.argmin(axis=1)
+        for c in range(len(C)):
+            members = X[a == c]
+            if len(members):
+                C[c] = members.mean(axis=0)
+    return C
+
+
 def build_ivf(
     index: DataFrame,
     n_clusters: int = 10,
-    vec_col: str = "embedding",
     sample_X=None,
 ) -> tuple[DataFrame, DataFrame]:
     """One-time index build: coarse centroids trained on a bounded
@@ -146,21 +164,12 @@ def build_ivf(
     max-cosine — the reference's cosinesimil intent.  At scale the
     assigned DataFrame is written `partitionBy('cluster_id')` so probes
     prune at the file level."""
-    X = sample_vectors(index, vec_col) if sample_X is None else sample_X
+    X = sample_vectors(index) if sample_X is None else sample_X
     rng = np.random.default_rng(SEED)
-    C = X[rng.choice(len(X), size=min(n_clusters, len(X)), replace=False)].copy()
-    for _ in range(IVF_ITERS):
-        # argmin_c ||x-c||^2 == argmin_c (||c||^2 - 2 x.c): one BLAS
-        # matmul instead of an n x k x dim broadcast tensor (the tensor
-        # form allocated ~30 MB per iteration and dominated build time)
-        cn = (C * C).sum(axis=1)
-        d = cn[None, :] - 2.0 * (X @ C.T)
-        a = d.argmin(axis=1)
-        for c in range(len(C)):
-            members = X[a == c]
-            if len(members):
-                C[c] = members.mean(axis=0)
-    assigned = index.withColumn("cluster_id", _assigner(C, np.arange(len(C)))(F.col(vec_col)))
+    C = X[rng.choice(len(X), size=min(n_clusters, len(X)), replace=False)]
+    C = lloyd(X, C, IVF_ITERS)
+    assign = _assigner(C, np.arange(len(C)))
+    assigned = index.withColumn("cluster_id", assign(F.col("embedding")))
     centroids = index.sparkSession.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(C)],
         "cluster_id int, centroid array<double>",
@@ -180,13 +189,9 @@ def _centroid_matrix(centroids: DataFrame) -> tuple[np.ndarray, np.ndarray]:
     return cids, np.asarray([r["centroid"] for r in rows], dtype="float64")
 
 
-def assign_with_centroids(
-    index: DataFrame,
-    centroids: DataFrame,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Nearest-centroid assignment of NEW rows against an EXISTING
-    centroid table — the add half of build-once/serve-many.  The
+def assign_with_centroids(index: DataFrame, centroids: DataFrame) -> DataFrame:
+    """Nearest-centroid assignment of NEW `embedding` rows against an
+    EXISTING centroid table — the add half of build-once/serve-many.  The
     reference bulk-indexes new embeddings into the LIVE HNSW index
     without rebuilding it (/root/reference/app/main.py:309-345,
     add_embeddings -> _bulk_index);
@@ -194,7 +199,7 @@ def assign_with_centroids(
     same _assigner as build_ivf's, over the centroid table pulled to
     the driver.  Map-only: no shuffle, no fit job, no retraining."""
     cids, C = _centroid_matrix(centroids)
-    return index.withColumn("cluster_id", _assigner(C, cids)(F.col(vec_col)))
+    return index.withColumn("cluster_id", _assigner(C, cids)(F.col("embedding")))
 
 
 def nearest_clusters(centroids: DataFrame, query_vec: Iterable[float], nprobe: int) -> list:
@@ -242,14 +247,12 @@ def ivf_topk(
     query_vec: Iterable[float],
     k: int = 3,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Probe the nprobe nearest clusters (nearest_clusters), exact top-k
-    inside them."""
+    (vec_id, score) inside them."""
     probe_ids = nearest_clusters(centroids, query_vec, nprobe)
     pruned = assigned.filter(in_clusters(probe_ids))
-    return topk_similar(pruned, query_vec, k=k, id_col=id_col, vec_col=vec_col)
+    return topk_similar(pruned, query_vec, k=k)
 
 
 def _probe_clusters(p: DataFrame, centroids: DataFrame, nprobe: int) -> DataFrame:
@@ -273,13 +276,10 @@ def ivf_knn_join(
     centroids: DataFrame,
     k: int = 3,
     nprobe: int = 2,
-    probe_id: str = "probe_id",
-    probe_vec: str = "probe_vec",
-    index_id: str = "vec_id",
-    index_vec: str = "embedding",
 ) -> DataFrame:
     """Batch IVF kNN join — the set-based form of ivf_topk for MANY
-    probes at once: (1) every probe picks its nprobe nearest centroids
+    (probe_id, probe_vec) probes at once against (vec_id, embedding)
+    rows: (1) every probe picks its nprobe nearest centroids
     (_probe_clusters); (2) candidates come from an equality join on
     cluster_id (each probe scans only its probed clusters); (3) exact
     top-k per probe.
@@ -289,17 +289,13 @@ def ivf_knn_join(
     cluster-partitioned index — each probe reads nprobe/k of the data,
     and the shuffle is bounded by candidate rows, never the full
     |probes| x |index| cross product."""
-    pid, iid = sql_ident(probe_id), sql_ident(index_id)
+    pid, iid, pvec = sql_ident("probe_id"), sql_ident("vec_id"), sql_ident("probe_vec")
     # probe norms computed ONCE per probe row instead of twice per
     # scored pair (r14, with_cosine)
-    p = probes.selectExpr(
-        f"{pid} AS __pid",
-        f"{sql_ident(probe_vec)} AS __pvec",
-        f"{_norm(sql_ident(probe_vec))} AS __pnorm",
-    )
+    p = probes.selectExpr(f"{pid} AS __pid", f"{pvec} AS __pvec", f"{_norm(pvec)} AS __pnorm")
     cands = with_cosine(
         _probe_clusters(p, centroids, nprobe).join(assigned, "cluster_id"),
-        index_vec,
+        "embedding",
         "__pvec",
         "score",
         norm_b="__pnorm",

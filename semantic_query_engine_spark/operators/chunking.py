@@ -69,22 +69,18 @@ def chunk_array_from_words(ws: str, chunk_size: int = DEFAULT_CHUNK_SIZE) -> Col
     return F.expr(_chunks(sql_ident(ws), chunk_size))
 
 
-def chunk_documents(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    chunk_size: int = DEFAULT_CHUNK_SIZE,
-) -> DataFrame:
+def chunk_documents(docs: DataFrame, chunk_size: int = DEFAULT_CHUNK_SIZE) -> DataFrame:
     """1 document row -> N chunk rows (doc_id, chunk_id, chunk_text,
     chunk_key).  The composite id doc_id || '_' || chunk_id mirrors the
     reference's OpenSearch _id (/root/reference/app/main.py:325).
 
-    The words array is materialized in its own projection so the
-    expensive split() runs once per document; the posexplode (a
-    Generate) keeps the two projections apart."""
-    idc = sql_ident(id_col)
+    Documents are (doc_id, text) rows.  The words array is materialized
+    in its own projection so the expensive split() runs once per
+    document; the posexplode (a Generate) keeps the two projections
+    apart."""
+    idc = sql_ident("doc_id")
     return (
-        docs.selectExpr(idc, f"{words_sql(sql_ident(text_col))} AS __ws")
+        docs.selectExpr(idc, f"{words_sql(sql_ident('text'))} AS __ws")
         .selectExpr(idc, f"posexplode({_chunks('__ws', chunk_size)}) AS (chunk_id, chunk_text)")
         .selectExpr("*", f"concat_ws('_', CAST({idc} AS STRING), chunk_id) AS chunk_key")
     )

@@ -25,9 +25,7 @@ from ..functions.plan import truncate_plan
 from .simhash import portable_word_hash_sql
 
 
-def exact_dedup(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Keep the lowest-id representative of each exact-duplicate group
     (dup keyed on the md5 fingerprint of normalized text).
 
@@ -36,9 +34,9 @@ def exact_dedup(
     input splits and the survivors are recovered with a semi join on id.
     (A window over full rows would shuffle every body — the difference
     between GBs and TBs of shuffle at corpus scale.)"""
-    fp = docs.select(F.col(id_col), fingerprint(text_col).alias("fp"))
-    keep = fp.groupBy("fp").agg(F.min(id_col).alias(id_col)).select(id_col)
-    return docs.join(keep, id_col, "left_semi")
+    fp = docs.select(F.col("doc_id"), fingerprint("text").alias("fp"))
+    keep = fp.groupBy("fp").agg(F.min("doc_id").alias("doc_id")).select("doc_id")
+    return docs.join(keep, "doc_id", "left_semi")
 
 
 def _shingles_sql(ws: str, n: int) -> str:
@@ -82,8 +80,6 @@ def shingle_table(
 def jaccard_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     max_shingle_freq: int | None = None,
 ) -> DataFrame:
@@ -102,7 +98,7 @@ def jaccard_pairs(
     hottest reduce task; with no shingle above the cap the result is
     exactly the unfiltered Jaccard.
     """
-    sh = shingle_table(docs, text_col, id_col, n)
+    sh = shingle_table(docs, n=n)
     if max_shingle_freq is not None:
         freq = sh.groupBy("shingle").agg(F.count("*").alias("__df"))
         keep = freq.filter(F.col("__df") <= max_shingle_freq).select("shingle")
@@ -199,8 +195,6 @@ def minhash_band_table(
     docs: DataFrame,
     num_perm: int = 64,
     n_bands: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 2,
     portable: bool = False,
 ) -> DataFrame:
@@ -225,24 +219,20 @@ def minhash_band_table(
     ~70-180 calls and ~0.02 s.  Values are bit-identical to the Column
     form in both hash modes (tests/test_dedup.py keeps that form as the
     reference and compares band tables and pairs with exact ==)."""
-    return _band_table(
-        shingle_table(docs, text_col, id_col, n), num_perm, n_bands, portable
-    )
+    return _band_table(shingle_table(docs, n=n), num_perm, n_bands, portable)
 
 
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = 0.5,
-    num_perm: int = 64,
-    n_bands: int = 16,
-    text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 2,
     portable: bool = False,
 ) -> DataFrame:
     """Near-dup pairs by MinHash+LSH banding, confirmed with the exact
-    Jaccard over hashed shingle sets.  Returns (id_a, id_b,
-    jaccard_dist) with id_a < id_b and jaccard_dist <= threshold.
+    Jaccard over hashed shingle sets: 64 permutations in 16 bands of 4
+    (minhash_band_table).  Returns (id_a, id_b, jaccard_dist) with
+    id_a < id_b and jaccard_dist <= threshold.
 
     Plan shape (the 100 TB story): signatures and band keys are map-only
     expressions; candidates come from an equality join keyed on
@@ -261,14 +251,14 @@ def minhash_lsh_pairs(
     # (id, shingle) feeds the signature build AND the confirm table's
     # sizes/ea/eb: truncated once, the tokenize+shingle+explode chain
     # runs once per document.
-    sh = shingle_table(docs, text_col, id_col, n).transform(truncate_plan)
+    sh = shingle_table(docs, id_col=id_col, n=n).transform(truncate_plan)
     # Truncate the band table before the self-join.  AQE would share
     # the signature aggregation's exchange between the two sides
     # without it (ReusedExchange), saving one job, but each side then
     # re-runs the final aggregate and the band Generate: measured
     # alternating in one process, a perfbench curation pass cost ~9%
     # more CPU and a 200-doc call ~11% more.
-    bt = _band_table(sh, num_perm, n_bands, portable).transform(truncate_plan)
+    bt = _band_table(sh, 64, 16, portable).transform(truncate_plan)
     cand = (
         bt.alias("a")
         .join(
@@ -311,11 +301,9 @@ def srp_band_table(
     n_bands: int,
     bits: int,
     dim: int,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, band, key) sign-random-projection signature table.
+    """(id, band, key) sign-random-projection signature table of
+    (vec_id, embedding) rows.
     bit_i = sign(v . h_(band,i)); key packs the band's bits.  The
     hyperplanes ride along as one literal array, the band index is
     exploded FIRST so the per-row key expression stays small (one fold
@@ -325,15 +313,15 @@ def srp_band_table(
     The key is ONE SQL string (functions.vectors' dot over a slice of
     the plane literal, as wide as the vector), parsed JVM-side: the
     Column-composed form cost ~1,000 py4j calls per plan build."""
-    planes = const_sql(_srp_planes(n_bands, bits, dim, seed))
+    planes = const_sql(_srp_planes(n_bands, bits, dim, 42))
     plane = f"slice({planes}, (band * {bits} + i) * {dim} + 1, size(__v))"
     key = (
         f"aggregate(sequence(0, {bits - 1}), 0L, (k, i) -> "
         f"k + CASE WHEN {_dot('__v', plane)} >= 0D THEN shiftleft(1L, i) ELSE 0L END)"
     )
     return embeddings.selectExpr(
-        f"{sql_ident(id_col)} AS id",
-        f"{sql_ident(vec_col)} AS __v",
+        f"{sql_ident('vec_id')} AS id",
+        f"{sql_ident('embedding')} AS __v",
         f"explode(sequence(0, {n_bands - 1})) AS band",
     ).selectExpr("id", "band", f"{key} AS key")
 
@@ -341,15 +329,12 @@ def srp_band_table(
 def embedding_near_dups(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     block_col: str | None = None,
     srp_bands: int | None = None,
     srp_bits: int = 4,
     srp_dim: int = 64,
-    seed: int = 42,
 ) -> DataFrame:
-    """Near-dup pairs by embedding cosine >= threshold.
+    """Near-dup pairs of (vec_id, embedding) rows by cosine >= threshold.
 
     Candidate generation, in order of preference:
     - block_col set (e.g. a precomputed cluster/label id): equality join
@@ -371,9 +356,9 @@ def embedding_near_dups(
         # Truncated: both self-join sides derive from `bands`, so the
         # srp_bits x dim sign-projection HOFs ran twice per vector
         # without it.  (id, band, key) — 3 longs a row.
-        bands = srp_band_table(
-            embeddings, srp_bands, srp_bits, srp_dim, seed, id_col, vec_col
-        ).transform(truncate_plan)
+        bands = srp_band_table(embeddings, srp_bands, srp_bits, srp_dim).transform(
+            truncate_plan
+        )
         la, lb = bands.alias("ba"), bands.alias("bb")
         cand = (
             la.join(
@@ -388,27 +373,27 @@ def embedding_near_dups(
         # per-VECTOR norms, computed once per embedding row before the
         # pair join instead of per pair (r14, with_cosine docstring)
         va = embeddings.select(
-            F.col(id_col).alias("id_a"),
-            F.col(vec_col).alias("vec_a"),
-            l2_norm(vec_col).alias("__na"),
+            F.col("vec_id").alias("id_a"),
+            F.col("embedding").alias("vec_a"),
+            l2_norm("embedding").alias("__na"),
         )
         vb = embeddings.select(
-            F.col(id_col).alias("id_b"),
-            F.col(vec_col).alias("vec_b"),
-            l2_norm(vec_col).alias("__nb"),
+            F.col("vec_id").alias("id_b"),
+            F.col("embedding").alias("vec_b"),
+            l2_norm("embedding").alias("__nb"),
         )
         pairs = cand.join(va, "id_a").join(vb, "id_b")
     else:
         a = embeddings.select(
-            F.col(id_col).alias("id_a"),
-            F.col(vec_col).alias("vec_a"),
-            l2_norm(vec_col).alias("__na"),
+            F.col("vec_id").alias("id_a"),
+            F.col("embedding").alias("vec_a"),
+            l2_norm("embedding").alias("__na"),
             *( [F.col(block_col).alias("blk")] if block_col else [] ),
         )
         b = embeddings.select(
-            F.col(id_col).alias("id_b"),
-            F.col(vec_col).alias("vec_b"),
-            l2_norm(vec_col).alias("__nb"),
+            F.col("vec_id").alias("id_b"),
+            F.col("embedding").alias("vec_b"),
+            l2_norm("embedding").alias("__nb"),
             *( [F.col(block_col).alias("blk")] if block_col else [] ),
         )
         joined = a.join(b, "blk") if block_col else a.crossJoin(b)

@@ -101,15 +101,14 @@ def _union_find_labels(pairs) -> dict:
 
 def connected_components(
     edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
     nodes: DataFrame | None = None,
     driver_cc_threshold: int = 250_000,
 ) -> DataFrame:
     """(node, component) for every node, component = min node id in its
-    connected component.  `edges` is undirected pairs; `nodes` optionally
-    supplies isolated vertices (single-row column of ids) so they appear
-    in the output as their own singleton components.  Ids may be of any
+    connected component.  `edges` is undirected (id_a, id_b) pairs;
+    `nodes` optionally supplies isolated vertices (single-row column of
+    ids) so they appear in the output as their own singleton
+    components.  Ids may be of any
     ordered type (bigint, string): both paths only compare them, and
     the output keeps the input ids' type.  A self-loop's node and the
     endpoints of an edge with a null id are singletons of their own; a
@@ -136,7 +135,7 @@ def connected_components(
     O(log n) of them, so 50 covers any graph that fits in storage —
     the loud failure below guards algorithm bugs, not graph shape.
     """
-    ep = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    ep = edges.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
     # One probe job decides the path AND delivers the edges: pull at
     # most threshold+1 distinct pairs (limit stops early on big
     # graphs).  Arrow, not pandas: a bigint column holding a null

@@ -192,17 +192,20 @@ def dhash64(payload: bytes) -> Optional[int]:
     return bits - (1 << 64) if bits >= (1 << 63) else bits
 
 
-def bmp_band_profile(payload: bytes, n_bands: int = 16) -> Optional[list]:
+PROFILE_BANDS = 16
+
+
+def bmp_band_profile(payload: bytes) -> Optional[list]:
     """Image feature vector from a GENUINELY PARSED uncompressed 24-bit
-    BMP: total grayscale mass per horizontal band (band(r) = r*n_bands
-    // height), the same parse discipline as dhash64 (header offset,
-    row padding, bottom-up order, blue-channel stride).  Integer-exact:
-    a sum of raw pixel bytes, so both engines agree bit-for-bit.  The
-    16-d profile is the stand-in for a CLIP-style image embedding in
-    the image-text alignment demo — a real encoder slots into the same
-    mapInPandas signature (payload batch in, fixed-dim vector out).
-    Quarantine contract: None for anything but a complete uncompressed
-    24-bit BMP (see dhash64), never an exception."""
+    BMP: total grayscale mass per horizontal band (band(r) =
+    r*PROFILE_BANDS // height), the same parse discipline as dhash64
+    (header offset, row padding, bottom-up order, blue-channel stride).
+    Integer-exact: a sum of raw pixel bytes, so both engines agree
+    bit-for-bit.  The 16-d profile is the stand-in for a CLIP-style
+    image embedding in the image-text alignment demo — a real encoder
+    slots into the same mapInPandas signature (payload batch in,
+    fixed-dim vector out).  Quarantine contract: None for anything but a
+    complete uncompressed 24-bit BMP (see dhash64), never an exception."""
     import struct
 
     if len(payload) < 30 or payload[:2] != b"BM":
@@ -216,10 +219,10 @@ def bmp_band_profile(payload: bytes, n_bands: int = 16) -> Optional[list]:
         off + height * row_bytes > len(payload)
     ):
         return None
-    bands = [0] * n_bands
+    bands = [0] * PROFILE_BANDS
     for r_img in range(height):
         base = off + (height - 1 - r_img) * row_bytes
-        bands[r_img * n_bands // height] += sum(
+        bands[r_img * PROFILE_BANDS // height] += sum(
             payload[base + c * 3] for c in range(width)
         )
     return bands
@@ -265,55 +268,52 @@ def audio_fingerprint64(payload: bytes) -> Optional[int]:
     return bits - (1 << 64) if bits >= (1 << 63) else bits
 
 
-def attach_real_payload(
-    docs: DataFrame, id_col: str = "doc_id", seed_col: str = "n_chars"
-) -> DataFrame:
+def attach_real_payload(docs: DataFrame) -> DataFrame:
     """Materialize GENUINE container bytes: even doc_ids get a real BMP
     (width/height derived from doc_id), odd doc_ids a real WAV (sample
-    count derived from `seed_col`) — built per Arrow batch, decoded
+    count derived from `n_chars`) — built per Arrow batch, decoded
     back by real_decode's actual header parsing.  Map-only; payloads
     are created and consumed inside their split."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads = []
-            for doc_id, seed in zip(pdf[id_col], pdf[seed_col]):
+            for doc_id, seed in zip(pdf["doc_id"], pdf["n_chars"]):
                 d, s = int(doc_id), int(seed)
                 if d % 2 == 0:
                     payloads.append(encode_bmp(d % 64 + 1, d % 48 + 1, s))
                 else:
                     payloads.append(encode_wav(s % 1000 + 8, seed=d))
-            yield pd.DataFrame({"doc_id": pdf[id_col].values, "payload": payloads})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"].values, "payload": payloads})
 
-    return docs.select(id_col, seed_col).mapInPandas(
+    return docs.select("doc_id", "n_chars").mapInPandas(
         run, "doc_id long, payload binary"
     )
 
 
-def attach_binary_payload(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Materialize an opaque binary column (UTF-8 bytes of the text
+def attach_binary_payload(docs: DataFrame) -> DataFrame:
+    """Materialize an opaque binary column (UTF-8 bytes of `text`
     standing in for image bytes) — the fixture has no true binary
     column, but the pipeline downstream treats it as opaque."""
-    return docs.withColumn("payload", F.encode(F.col(text_col), "UTF-8"))
+    return docs.withColumn("payload", F.encode(F.col("text"), "UTF-8"))
 
 
 def decode_metadata(
     df: DataFrame,
     decode_fn: Optional[Callable[[bytes], dict]] = None,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
 ) -> DataFrame:
-    """mapInPandas decode: binary -> typed metadata rows."""
+    """mapInPandas decode: (doc_id, payload) binary -> typed metadata
+    rows."""
     decode = decode_fn or _fake_decode
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            metas = [decode(bytes(b)) for b in pdf[payload_col]]
+            metas = [decode(bytes(b)) for b in pdf["payload"]]
             out = pd.DataFrame(metas)
-            out.insert(0, "doc_id", pdf[id_col].values)
+            out.insert(0, "doc_id", pdf["doc_id"].values)
             yield out
 
-    return df.select(id_col, payload_col).mapInPandas(run, DECODE_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(run, DECODE_SCHEMA)
 
 
 def frame_sample(
@@ -336,14 +336,10 @@ def frame_sample(
 FEATURE_BINS = 16
 
 
-def extract_features(
-    df: DataFrame,
-    n_bins: int = FEATURE_BINS,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Feature extraction over opaque binary payloads: a normalized
-    byte-histogram embedding (n_bins buckets of 256/n_bins byte values),
+def extract_features(df: DataFrame) -> DataFrame:
+    """Feature extraction over opaque (doc_id, payload) binary payloads:
+    a normalized byte-histogram embedding (FEATURE_BINS buckets of
+    256/FEATURE_BINS byte values),
     as an Arrow-batched pandas UDF — the multimodal analog of the text
     embedder, and the exact batch shape a real CLIP/wav2vec feature
     extractor would use (payload batch in -> fixed-dim vector batch
@@ -352,7 +348,7 @@ def extract_features(
     import numpy as np
     from pyspark.sql.pandas.functions import pandas_udf
 
-    width = 256 // n_bins
+    width = 256 // FEATURE_BINS
 
     # micro-unit integer output (count * 1e6 // size — PURE integer
     # arithmetic): the repo-wide determinism discipline.  The earlier
@@ -365,29 +361,28 @@ def extract_features(
         for b in payloads:
             arr = np.frombuffer(bytes(b), dtype=np.uint8)
             if arr.size == 0:
-                out.append([0] * n_bins)
+                out.append([0] * FEATURE_BINS)
                 continue
-            hist = np.bincount(arr // width, minlength=n_bins).astype("int64")
+            hist = np.bincount(arr // width, minlength=FEATURE_BINS).astype("int64")
             micro = hist * 1_000_000 // arr.size
             out.append([int(x) for x in micro])
         return pd.Series(out)
 
-    return df.select(id_col, feats(F.col(payload_col)).alias("features"))
+    return df.select("doc_id", feats(F.col("payload")).alias("features"))
 
 
 def resize_stub(
     df: DataFrame,
     out_w: int = 8,
     out_h: int = 8,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
 ) -> DataFrame:
-    """'Resize' for opaque payloads: nearest-neighbor byte resampling to
-    out_w*out_h bytes via mapInPandas — a deterministic stand-in for a
-    real image resize (no codecs in the container; a libvips/PIL-backed
-    fn slots into the same signature).  Output schema carries the new
-    payload plus its dimensions, mirroring how a real pipeline feeds
-    resized tensors downstream.  Map-only, Arrow-batched."""
+    """'Resize' for opaque (doc_id, payload) payloads: nearest-neighbor
+    byte resampling to out_w*out_h bytes via mapInPandas — a
+    deterministic stand-in for a real image resize (no codecs in the
+    container; a libvips/PIL-backed fn slots into the same signature).
+    Output schema carries the new payload plus its dimensions, mirroring
+    how a real pipeline feeds resized tensors downstream.  Map-only,
+    Arrow-batched."""
     import numpy as np
 
     target = out_w * out_h
@@ -395,7 +390,7 @@ def resize_stub(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             payloads, sizes = [], []
-            for b in pdf[payload_col]:
+            for b in pdf["payload"]:
                 arr = np.frombuffer(bytes(b), dtype=np.uint8)
                 if arr.size == 0:
                     res = np.zeros(target, dtype=np.uint8)
@@ -408,7 +403,7 @@ def resize_stub(
                 sizes.append(int(arr.size))
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col].values,
+                    "doc_id": pdf["doc_id"].values,
                     "n_bytes_in": sizes,
                     "out_w": out_w,
                     "out_h": out_h,
@@ -416,6 +411,6 @@ def resize_stub(
                 }
             )
 
-    return df.select(id_col, payload_col).mapInPandas(
+    return df.select("doc_id", "payload").mapInPandas(
         run, "doc_id long, n_bytes_in long, out_w int, out_h int, resized binary"
     )

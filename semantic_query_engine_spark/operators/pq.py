@@ -46,6 +46,7 @@ from .ann import (
     _probe_clusters,
     assign_with_centroids,
     in_clusters,
+    lloyd,
     nearest_clusters,
     sample_vectors,
 )
@@ -57,11 +58,7 @@ PQ_K = 16  # codewords per subspace
 PQ_ITERS = 10  # Lloyd iterations per codebook
 
 
-def build_pq(
-    index: DataFrame,
-    vec_col: str = "embedding",
-    sample_X=None,
-) -> list[list[list[float]]]:
+def build_pq(index: DataFrame, sample_X=None) -> list[list[list[float]]]:
     """Train PQ codebooks: PQ_M codebooks of PQ_K centroids over
     dim/PQ_M-wide subvectors, via seeded Lloyd iterations on a bounded
     sample (pass sample_X from ann.sample_vectors to share one pull
@@ -69,7 +66,7 @@ def build_pq(
     _srp_planes)."""
     import numpy as np
 
-    X = sample_vectors(index, vec_col) if sample_X is None else sample_X
+    X = sample_vectors(index) if sample_X is None else sample_X
     n, dim = X.shape
     if dim % PQ_M:
         raise ValueError(f"dim {dim} not divisible by PQ_M={PQ_M}")
@@ -78,40 +75,25 @@ def build_pq(
     books: list[list[list[float]]] = []
     for j in range(PQ_M):
         S = X[:, j * sub : (j + 1) * sub]
-        C = S[rng.choice(n, size=PQ_K, replace=False)]
-        for _ in range(PQ_ITERS):
-            # matmul distance form (see ann.py): identical argmin,
-            # no n x k x sub broadcast tensor per iteration
-            cn = (C * C).sum(axis=1)
-            d = cn[None, :] - 2.0 * (S @ C.T)
-            assign = d.argmin(axis=1)
-            for c in range(PQ_K):
-                members = S[assign == c]
-                if len(members):
-                    C[c] = members.mean(axis=0)
+        C = lloyd(S, S[rng.choice(n, size=PQ_K, replace=False)], PQ_ITERS)
         books.append([[float(x) for x in row] for row in C])
     return books
 
 
-def pq_encode(
-    index: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, codes array<int>): nearest-codeword assignment per subspace,
-    entirely in codegen (the 100 TB path: encoding is a map-only scan;
-    the encoded index is ~m bytes/vector).
+def pq_encode(index: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
+    """(vec_id, codes array<int>): nearest-codeword assignment of each
+    `embedding` per subspace, entirely in codegen (the 100 TB path:
+    encoding is a map-only scan; the encoded index is ~m bytes/vector).
 
     The m assignments are the argmins of ONE distance table
     (_dist_table) over ALL codebooks as a single nested literal — the
     per-subspace loop built an O(m*k) expression tree whose analysis +
     Janino compile dominated the tiny-data bench (~2s of the ivfpq
     query)."""
-    nv = index.select(F.col(id_col), l2_normalize(vec_col).alias("__nv"))
+    nv = index.select(F.col("vec_id"), l2_normalize("embedding").alias("__nv"))
     d = _dist_table("__nv", codebooks)
     codes = F.expr(f"transform({d}, t -> CAST(array_position(t, array_min(t)) - 1 AS INT))")
-    return nv.select(id_col, codes.alias("codes"))
+    return nv.select("vec_id", codes.alias("codes"))
 
 
 def _dist_table(nv: str, codebooks: list[list[list[float]]]) -> str:
@@ -150,15 +132,13 @@ def pq_topk(
     query_vec: Iterable[float],
     k: int = 3,
     refine: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ADC top-k: per-vector score = sum_j table_j[code_j], where the
     m x k distance table comes from the query alone and rides in the
     plan as a literal.  The ADC pass reads ONLY (id, codes) — never the
     raw vectors — then the top `refine` candidates are re-ranked with
     the exact cosine via a semi join back to the full-vector table
-    (reads `refine` vectors, not the corpus).  Returns (id, score)
+    (reads `refine` vectors, not the corpus).  Returns (vec_id, score)
     sorted by exact cosine desc."""
     import numpy as np
 
@@ -170,18 +150,18 @@ def pq_topk(
         qs = q[j * sub : (j + 1) * sub]
         tables.append([float(((qs - np.asarray(cw)) ** 2).sum()) for cw in book])
 
-    iid = sql_ident(id_col)
+    iid = sql_ident("vec_id")
     cand = (
         encoded.selectExpr(iid, f"{_adc('codes', const_sql(tables))} AS adc_dist")
-        .orderBy("adc_dist", id_col)
+        .orderBy("adc_dist", "vec_id")
         .limit(refine)
     )
     # bounded: cand is limit(refine) rows; the semi join reads only its id
-    refined = index.join(F.broadcast(cand), id_col, "left_semi")
+    refined = index.join(F.broadcast(cand), "vec_id", "left_semi")
     return (
-        score_against(refined, q, vec_col)
+        score_against(refined, q)
         .selectExpr(iid, "round(score, 6) AS score")
-        .orderBy(F.desc("score"), F.asc(id_col))
+        .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
     )
 
@@ -196,8 +176,6 @@ def ivfpq_topk(
     k: int = 3,
     nprobe: int = 2,
     refine: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ — the billion-scale composition (FAISS IndexIVFPQ intent)
     over an in-memory build: ivfpq_probe over the codes joined to their
@@ -205,9 +183,9 @@ def ivfpq_topk(
     index, PQ-ADC scores the survivors reading ~m bytes a vector, and
     the exact re-rank touches only `refine` raw vectors."""
     return ivfpq_probe(
-        encoded.join(assigned.select(id_col, "cluster_id"), id_col),
+        encoded.join(assigned.select("vec_id", "cluster_id"), "vec_id"),
         centroids, index, codebooks, query_vec,
-        k=k, nprobe=nprobe, refine=refine, id_col=id_col, vec_col=vec_col,
+        k=k, nprobe=nprobe, refine=refine,
     )
 
 
@@ -220,13 +198,10 @@ def ivfpq_knn_join(
     k: int = 3,
     nprobe: int = 2,
     refine: int = 50,
-    probe_id: str = "probe_id",
-    probe_vec: str = "probe_vec",
-    index_id: str = "vec_id",
-    index_vec: str = "embedding",
 ) -> DataFrame:
     """Batch IVF-PQ kNN join — the set-based form of ivfpq_probe for
-    MANY probes at once, the shape a bulk pipeline job uses against a
+    MANY (probe_id, probe_vec) probes at once against (vec_id,
+    embedding) rows, the shape a bulk pipeline job uses against a
     persisted serving index (write_ivfpq_index).  Fully declarative;
     unlike the single-query path there is NO driver-side centroid
     collect — everything is a plan:
@@ -251,8 +226,8 @@ def ivfpq_knn_join(
     bounded by candidate rows; the dim-width vectors appear only in
     step 4's refine-sized join.  Returns (probe_id, vec_id, score,
     knn_rank) like ivf_knn_join."""
-    pid, iid = sql_ident(probe_id), sql_ident(index_id)
-    pvec = sql_ident(probe_vec)
+    pid, iid = sql_ident("probe_id"), sql_ident("vec_id")
+    pvec = sql_ident("probe_vec")
     p = probes.selectExpr(
         f"{pid} AS __pid", f"{pvec} AS __pvec", f"{_norm(pvec)} AS __pnorm"
     ).withColumn("__pnv", l2_normalize("__pvec"))
@@ -269,7 +244,7 @@ def ivfpq_knn_join(
     shortlist = _top_per(cands, "__pid", f"__adc, {iid}", refine, "__ar")
     # step 4: exact re-rank of refine rows per probe
     rescored = with_cosine(
-        shortlist.join(index.selectExpr(iid, f"{sql_ident(index_vec)} AS __ivec"), index_id),
+        shortlist.join(index.selectExpr(iid, f"{sql_ident('embedding')} AS __ivec"), "vec_id"),
         "__ivec",
         "__pvec",
         "__s",
@@ -284,7 +259,6 @@ def write_ivfpq_index(
     centroids: DataFrame,
     codebooks: list[list[list[float]]],
     path: str,
-    id_col: str = "vec_id",
 ) -> None:
     """Persist the BUILT IVF-PQ index as a serving layout (VERDICT r13
     #2) — the build-once/serve-many shape the reference gets from HNSW
@@ -307,7 +281,7 @@ def write_ivfpq_index(
     import os
 
     os.makedirs(path, exist_ok=True)
-    codes = assigned.select(id_col, "cluster_id").join(encoded, id_col)
+    codes = assigned.select("vec_id", "cluster_id").join(encoded, "vec_id")
     codes.write.partitionBy("cluster_id").mode("overwrite").parquet(
         os.path.join(path, "codes")
     )
@@ -316,13 +290,9 @@ def write_ivfpq_index(
         json.dump(codebooks, f)
 
 
-def append_ivfpq_index(
-    new_rows: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Incremental add to a write_ivfpq_index layout WITHOUT retraining
+def append_ivfpq_index(new_rows: DataFrame, path: str) -> None:
+    """Incremental add of (vec_id, embedding) rows to a
+    write_ivfpq_index layout WITHOUT retraining
     — the reference's live-index add (/root/reference/app/main.py:
     309-345: add_embeddings bulk-indexes new vectors into the running
     HNSW index; FAISS IndexIVFPQ.add likewise encodes with frozen
@@ -344,9 +314,9 @@ def append_ivfpq_index(
     centroids = spark.read.parquet(os.path.join(path, "centroids"))
     with open(os.path.join(path, "codebooks.json")) as f:
         books = json.load(f)
-    enc = pq_encode(new_rows, books, id_col=id_col, vec_col=vec_col)
-    assigned = assign_with_centroids(new_rows, centroids, vec_col=vec_col)
-    assigned.select(id_col, "cluster_id").join(enc, id_col).write.partitionBy(
+    enc = pq_encode(new_rows, books)
+    assigned = assign_with_centroids(new_rows, centroids)
+    assigned.select("vec_id", "cluster_id").join(enc, "vec_id").write.partitionBy(
         "cluster_id"
     ).mode("append").parquet(os.path.join(path, "codes"))
 
@@ -374,8 +344,6 @@ def ivfpq_probe(
     k: int = 3,
     nprobe: int = 2,
     refine: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Per-query probe over the PERSISTED layout: NO training, NO
     encode, NO assignment join in-plan — the centroid rank on the
@@ -386,10 +354,5 @@ def ivfpq_probe(
     the 100-TB serving path: probe cost scales with
     nprobe/n_clusters of the code table, decoupled from build cost."""
     probe_ids = nearest_clusters(centroids, query_vec, nprobe)
-    pruned = codes.filter(in_clusters(probe_ids)).selectExpr(
-        sql_ident(id_col), "codes"
-    )
-    return pq_topk(
-        pruned, index, codebooks, query_vec,
-        k=k, refine=refine, id_col=id_col, vec_col=vec_col,
-    )
+    pruned = codes.filter(in_clusters(probe_ids)).selectExpr(sql_ident("vec_id"), "codes")
+    return pq_topk(pruned, index, codebooks, query_vec, k=k, refine=refine)

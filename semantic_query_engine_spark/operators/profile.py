@@ -4,10 +4,9 @@ the reference ingests its corpus unvalidated, /root/reference/app/main.py:413-45
 
 Scale shapes:
 - profile(): ONE aggregation job per profiled column batch; every
-  statistic is map-side combinable (count / min / max), except distinct
-  counts which default to exact (count_distinct — an Expand plan, fine
-  to a few columns) and switch to approx_count_distinct(rsd) at corpus
-  scale via `exact=False` — same output schema, documented estimate.
+  statistic is map-side combinable (count / min / max), except the
+  exact distinct count (count_distinct — an Expand plan, fine to a few
+  columns).
 - expect(): each rule is a filter + count over one scan; all rules run
   in a single job via conditional aggregation (sum(case when violated)),
   so a 100 TB validation pass costs one read.
@@ -19,21 +18,18 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def profile(df: DataFrame, cols: list[str], exact: bool = True) -> DataFrame:
-    """One row per profiled column: row count, non-null count, distinct
-    count (exact or approx), min/max rendered as strings (so mixed-type
-    columns share one schema).  Output sorted by column name."""
+def profile(df: DataFrame, cols: list[str]) -> DataFrame:
+    """One row per profiled column: row count, non-null count, exact
+    distinct count, min/max rendered as strings (so mixed-type columns
+    share one schema).  Output sorted by column name."""
     parts = []
     for c in cols:
-        distinct = (
-            F.count_distinct(F.col(c)) if exact else F.approx_count_distinct(c, 0.01)
-        )
         parts.append(
             df.agg(
                 F.lit(c).alias("column_name"),
                 F.count(F.lit(1)).alias("n_rows"),
                 F.count(c).alias("n_nonnull"),
-                distinct.alias("n_distinct"),
+                F.count_distinct(F.col(c)).alias("n_distinct"),
                 F.min(F.col(c).cast("string")).alias("min_v"),
                 F.max(F.col(c).cast("string")).alias("max_v"),
             )

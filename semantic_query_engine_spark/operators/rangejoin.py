@@ -29,25 +29,20 @@ from pyspark.sql import functions as F
 def interval_join(
     points: DataFrame,
     intervals: DataFrame,
-    ts_col: str = "ts",
-    start_col: str = "start_ts",
-    end_col: str = "end_ts",
     bucket_width_s: int = 900,
 ) -> DataFrame:
     """Inner-join every point row to every interval row with
-    start <= ts < end (end-exclusive).  Returns all columns from both
-    sides (names must not collide, except the join machinery's
+    start_ts <= ts < end_ts (end-exclusive).  Returns all columns from
+    both sides (names must not collide, except the join machinery's
     internal `__cell`)."""
     cell = lambda c: F.floor(F.unix_timestamp(F.col(c)) / F.lit(bucket_width_s))  # noqa: E731
     iv = intervals.withColumn(
         "__cell",
-        F.explode(F.sequence(cell(start_col), cell(end_col))),
+        F.explode(F.sequence(cell("start_ts"), cell("end_ts"))),
     )
-    pt = points.withColumn("__cell", cell(ts_col))
+    pt = points.withColumn("__cell", cell("ts"))
     return (
         pt.join(iv, "__cell")
-        .filter(
-            (F.col(ts_col) >= F.col(start_col)) & (F.col(ts_col) < F.col(end_col))
-        )
+        .filter((F.col("ts") >= F.col("start_ts")) & (F.col("ts") < F.col("end_ts")))
         .drop("__cell")
     )

@@ -41,12 +41,9 @@ from ..functions.vectors import _norm, const_sql, with_cosine
 DEFAULT_TOP_K = 3  # /root/reference/app/main.py:467,601
 
 
-def score_against(
-    index: DataFrame,
-    query_vec: Iterable[float],
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Add a cosine `score` column against a constant query vector
+def score_against(index: DataFrame, query_vec: Iterable[float]) -> DataFrame:
+    """Add a cosine `score` column of `embedding` against a constant
+    query vector
     (the reference normalizes then HNSW-searches; here the scoring
     expression itself is the index probe): with_cosine over the query
     literal, whose norm is folded on the driver, so per row the plan
@@ -61,7 +58,7 @@ def score_against(
     q = np.array([float(x) for x in query_vec])
     qn = np.sqrt(_seq_dot(q[None, :], q)[0])
     norm = f"aggregate({const_sql([qn])}, 0D, (acc, x) -> x)"
-    return with_cosine(index, f"`{vec_col}`", const_sql(list(q)), "score", norm_b=norm)
+    return with_cosine(index, "`embedding`", const_sql(list(q)), "score", norm_b=norm)
 
 
 def _seq_dot(m: np.ndarray, v: np.ndarray) -> np.ndarray:
@@ -97,15 +94,14 @@ def topk_similar(
     index: DataFrame,
     query_vec: Iterable[float],
     k: int = DEFAULT_TOP_K,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact top-k by cosine (SURVEY A15).  Deterministic tie-break on id
-    so the result set is stable across partitionings."""
-    scored = score_against(index, query_vec, vec_col)
+    """Exact top-k (vec_id, score) by cosine (SURVEY A15).
+    Deterministic tie-break on id so the result set is stable across
+    partitionings."""
+    scored = score_against(index, query_vec)
     return (
-        scored.select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
+        scored.select("vec_id", "score")
+        .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
     )
 
@@ -114,14 +110,11 @@ def knn_join(
     probes: DataFrame,
     index: DataFrame,
     k: int = DEFAULT_TOP_K,
-    probe_id: str = "probe_id",
-    probe_vec: str = "probe_vec",
-    index_id: str = "vec_id",
-    index_vec: str = "embedding",
     exclude_self: bool = False,
 ) -> DataFrame:
-    """kNN join: every probe row -> its k nearest index rows (the
-    engine's signature join, SURVEY §2 Part B joins).
+    """kNN join: every (probe_id, probe_vec) row -> its k nearest
+    (vec_id, embedding) index rows (the engine's signature join,
+    SURVEY §2 Part B joins).
 
     Scale shape: broadcast the (small) probe set against the (huge)
     index so scoring is a map-only stage over index splits; the only
@@ -129,19 +122,19 @@ def knn_join(
     |probes| * |index| rows never materialize beyond the window's
     per-partition top-k with AQE.
     """
-    pid, iid = sql_ident(probe_id), sql_ident(index_id)
+    pid, iid, pvec = sql_ident("probe_id"), sql_ident("vec_id"), sql_ident("probe_vec")
     p = probes.selectExpr(
         f"{pid} AS __pid",
-        f"{sql_ident(probe_vec)} AS __pvec",
+        f"{pvec} AS __pvec",
         # probe norms computed ONCE on the (small) probe side instead of
         # twice per (index row x probe) pair (r14, with_cosine)
-        f"{_norm(sql_ident(probe_vec))} AS __pnorm",
+        f"{_norm(pvec)} AS __pnorm",
     )
     scored = with_cosine(
         # bounded: a batch of probe queries, sized by the caller, never
         # by the index
         index.crossJoin(F.broadcast(p)),
-        index_vec,
+        "embedding",
         "__pvec",
         "score",
         norm_b="__pnorm",

@@ -73,7 +73,6 @@ def write_shingle_index(
     hist_shingles: DataFrame,
     cap: int,
     key: str,
-    buckets: int = _BUCKETS,
 ) -> tuple[str, str, str]:
     """Materialize the index: the shingle table bucketed+sorted on the
     join key, sizes and stop-shingles as plain tables.  Returns the
@@ -83,7 +82,7 @@ def write_shingle_index(
     sh_t, sz_t, hot_t = _table_names(key)
     hsh, hsz, hot = build_shingle_index(hist_shingles, cap)
     (
-        hsh.write.bucketBy(buckets, "shingle")
+        hsh.write.bucketBy(_BUCKETS, "shingle")
         .sortBy("shingle")
         .mode("overwrite")
         .saveAsTable(sh_t)

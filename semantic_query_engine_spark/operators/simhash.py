@@ -104,15 +104,14 @@ def _band_values(sig: str) -> str:
 def simhash_pairs(
     docs: DataFrame,
     max_hamming: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     portable: bool = False,
 ) -> DataFrame:
-    """Candidate pairs sharing at least one 16-bit band, verified by
-    Hamming distance <= max_hamming.  Returns (id_a, id_b, hamming)."""
+    """Candidate pairs of (doc_id, text) rows sharing at least one
+    16-bit band, verified by Hamming distance <= max_hamming.  Returns
+    (id_a, id_b, hamming)."""
     sigs = docs.selectExpr(
-        f"{sql_ident(id_col)} AS id",
-        f"{_word_hashes(sql_ident(text_col), portable)} AS _wh",
+        f"{sql_ident('doc_id')} AS id",
+        f"{_word_hashes(sql_ident('text'), portable)} AS _wh",
     ).selectExpr("id", f"{_simhash('_wh')} AS sig")
     return banded_hamming_pairs(sigs, max_hamming)
 

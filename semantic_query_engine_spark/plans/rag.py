@@ -30,15 +30,14 @@ SYSTEM_RULES = (
 def rag_ask(
     spark: SparkSession,
     sf_dir: str,
-    query_vec_id: int = 0,
     top_k: int = 3,  # /root/reference/app/main.py:467
 ) -> DataFrame:
     """One-row answer DataFrame: (query_id, n_docs, context, prompt,
     answer, top_doc_id, top_score).
 
-    The query embedding is taken in-plan from the embeddings fixture
-    (broadcast 1-row join) — the analog of embed_query (SURVEY A6).
-    There is no cache probe: the path demonstrated is the cache-miss
+    The query embedding is row vec_id 0 of the embeddings fixture,
+    taken in-plan (broadcast 1-row join) — the analog of embed_query
+    (SURVEY A6).  There is no cache probe: the path demonstrated is the cache-miss
     -> retrieve -> assemble -> generate pipeline, and retrieval excludes
     the query row itself.
     """
@@ -49,7 +48,7 @@ def rag_ask(
     # the broadcast side) instead of twice per scored row (r14,
     # with_cosine docstring)
     qside = F.broadcast(
-        emb.filter(F.col("vec_id") == query_vec_id).select(
+        emb.filter(F.col("vec_id") == 0).select(
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("qvec"),
             l2_norm("embedding").alias("qnorm"),
@@ -58,7 +57,7 @@ def rag_ask(
 
     # Retrieval (A15): score all, top-k, deterministic tie-break.
     scored = with_cosine(
-        emb.filter(F.col("vec_id") != query_vec_id).crossJoin(qside),
+        emb.filter(F.col("vec_id") != 0).crossJoin(qside),
         "embedding",
         "qvec",
         "score",

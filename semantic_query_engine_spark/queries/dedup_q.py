@@ -26,16 +26,16 @@ _WORDS = f"regexp_split_to_array({_CLEAN}, '\\s+')"
 
 
 def _docs_with_truncated_copies(
-    spark: SparkSession, sf_dir: str, limit: int = 100, spread: bool = False
+    spark: SparkSession, sf_dir: str, spread: bool = False
 ) -> DataFrame:
-    """documents[:limit] plus an 80%-prefix copy of each at id+10000.
+    """documents[:100] plus an 80%-prefix copy of each at id+10000.
 
     `spread=True` is passed by map-dominated consumers (lsh_bucket_stats:
     64-perm signature build then one agg); join-heavy consumers
     (dedup_eval_lsh, minhash_lsh_pairs) measured FASTER unspread — see
     sources/fixtures.load_table."""
     docs = load_table(spark, sf_dir, "documents", spread=spread).filter(
-        F.col("doc_id") < limit
+        F.col("doc_id") < 100
     ).select(
         "doc_id", "text"
     )
@@ -295,16 +295,19 @@ _SIGNED64 = (
 )
 
 
-def _minhash_bands_sql(num_perm: int = 64, n_bands: int = 16) -> str:
+_PERM, _BANDS = 64, 16  # the portable MinHash oracles' signature: 16 bands of 4
+
+
+def _minhash_bands_sql() -> str:
     """Shared DuckDB CTE prefix of the portable-hash MinHash+LSH
     pipeline, through the `bands` (id, band, key) table: permutation i
     = signed 64-bit md5 hash of "i|shingle", conditional-MIN signature
     slots, string band keys.  Consumed by _minhash_oracle (candidate
     join + exact-Jaccard confirm) and the lsh_bucket_stats oracle
     (occupancy aggregation)."""
-    r = num_perm // n_bands
+    r = _PERM // _BANDS
     mins = ",\n           ".join(
-        f"MIN(CASE WHEN i = {i} THEN s END) AS mh_{i}" for i in range(num_perm)
+        f"MIN(CASE WHEN i = {i} THEN s END) AS mh_{i}" for i in range(_PERM)
     )
     band_rows = "\n      UNION ALL ".join(
         "SELECT id, {b} AS band, {key} AS key FROM sig".format(
@@ -313,7 +316,7 @@ def _minhash_bands_sql(num_perm: int = 64, n_bands: int = 16) -> str:
                 f"CAST(mh_{b * r + j} AS VARCHAR)" for j in range(r)
             ),
         )
-        for b in range(n_bands)
+        for b in range(_BANDS)
     )
     return f"""
     WITH base AS (
@@ -329,7 +332,7 @@ def _minhash_bands_sql(num_perm: int = 64, n_bands: int = 16) -> str:
       FROM alldocs),
     hm AS (
       SELECT id, i, md5(CAST(i AS VARCHAR) || '|' || shingle) AS m
-      FROM (SELECT id, shingle, unnest(range({num_perm})) AS i FROM sh0)),
+      FROM (SELECT id, shingle, unnest(range({_PERM})) AS i FROM sh0)),
     hv AS (SELECT id, i,
                   CAST({_md5_poly(1)} AS HUGEINT) * 4294967296 + ({_md5_poly(9)}) AS h
            FROM hm),
@@ -340,12 +343,12 @@ def _minhash_bands_sql(num_perm: int = 64, n_bands: int = 16) -> str:
       {band_rows})"""
 
 
-def _minhash_oracle(num_perm: int = 64, n_bands: int = 16) -> str:
+def _minhash_oracle() -> str:
     """Generate the full DuckDB twin of the MinHash+LSH pipeline in
     portable-hash mode: the shared band-table prefix plus the
     band-keyed candidate join and the exact-Jaccard confirm over the
     same md5-hashed shingle sets."""
-    return f"""{_minhash_bands_sql(num_perm, n_bands)},
+    return f"""{_minhash_bands_sql()},
     cand AS (
       SELECT DISTINCT a.id AS id_a, b.id AS id_b
       FROM bands a JOIN bands b
@@ -376,12 +379,11 @@ def _attach_recall(
     exact: DataFrame,
     approx: DataFrame,
     id_cols: tuple[str, ...],
-    threshold: float = 0.9,
 ) -> DataFrame:
     """Attach an in-plan accuracy gate to an exact result set: mark each
     exact row found by the approximate method (left join on the id
     columns), aggregate hits/total into one boolean `recall_ok`
-    (recall >= threshold), and broadcast the 1-row flag onto every
+    (recall >= 0.9), and broadcast the 1-row flag onto every
     exact row.  The exact payload stays fully value-hash-checkable by
     the DuckDB oracle (which asserts TRUE); if the approximate path
     regresses below the recall floor the flag flips and the hash gate
@@ -401,7 +403,7 @@ def _attach_recall(
     flag = marked.agg(
         (
             F.coalesce(F.sum("__hit"), F.lit(0))
-            >= F.count("*") * F.lit(threshold)
+            >= F.count("*") * F.lit(0.9)
         ).alias("recall_ok")
     )
     # bounded: 1-row recall flag
@@ -1025,12 +1027,12 @@ def ann_ivfpq_knn_join_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _trunc_80(df: DataFrame, id_shift: int = 10000) -> DataFrame:
-    """id+shift copy of each doc keeping the first 80% of its words."""
+def _trunc_80(df: DataFrame) -> DataFrame:
+    """id+10000 copy of each doc keeping the first 80% of its words."""
     ws = words_of("text")
     keep = F.ceil(F.size(ws) * 0.8).cast("int")
     return df.select(
-        (F.col("doc_id") + id_shift).alias("doc_id"),
+        (F.col("doc_id") + 10000).alias("doc_id"),
         F.array_join(F.slice(ws, 1, keep), " ").alias("text"),
     )
 
@@ -2230,20 +2232,20 @@ def dedup_eval_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _banding_theory_milli(r: int, b: int, s: float = 0.8) -> int:
+def _banding_theory_milli(r: int, b: int) -> int:
     """floor(1000 * P(detect)) under classic LSH banding theory
     (Leskovec/Rajaraman/Ullman, Mining of Massive Datasets ch.3):
     P(candidate | Jaccard s) = 1 - (1 - s^r)^b for b bands of r rows.
     Evaluated at the plant's DESIGN similarity s=0.8 (an 80%-prefix
     copy), in Python at registration time and inlined as a literal in
     BOTH engines — so no cross-engine pow() ulp can move the hash."""
-    return int(1000 * (1 - (1 - s**r) ** b))
+    return int(1000 * (1 - (1 - 0.8**r) ** b))
 
 
 _SWEEP_BANDS = (8, 16, 32)  # r = 8 / 4 / 2 rows per band over 64 perms
 
 
-def _eval_sweep_oracle(num_perm: int = 64) -> str:
+def _eval_sweep_oracle() -> str:
     """Generate the DuckDB twin of dedup_eval_sweep: ONE materialized
     signature table (the 64 per-doc minhash slots) and ONE materialized
     exact-Jaccard truth set, then per banding config a band table,
@@ -2252,7 +2254,7 @@ def _eval_sweep_oracle(num_perm: int = 64) -> str:
     inlining would recompute the shingle/hash pipeline 56x (the same
     re-expansion class the generated BPE oracle documents)."""
     mins = ",\n           ".join(
-        f"MIN(CASE WHEN i = {i} THEN s END) AS mh_{i}" for i in range(num_perm)
+        f"MIN(CASE WHEN i = {i} THEN s END) AS mh_{i}" for i in range(_PERM)
     )
     parts = [
         f"""
@@ -2269,7 +2271,7 @@ def _eval_sweep_oracle(num_perm: int = 64) -> str:
       FROM alldocs),
     hm AS (
       SELECT id, i, md5(CAST(i AS VARCHAR) || '|' || shingle) AS m
-      FROM (SELECT id, shingle, unnest(range({num_perm})) AS i FROM sh0)),
+      FROM (SELECT id, shingle, unnest(range({_PERM})) AS i FROM sh0)),
     hv AS (SELECT id, i,
                   CAST({_md5_poly(1)} AS HUGEINT) * 4294967296
                     + ({_md5_poly(9)}) AS h
@@ -2297,7 +2299,7 @@ def _eval_sweep_oracle(num_perm: int = 64) -> str:
     ]
     legs = []
     for nb in _SWEEP_BANDS:
-        r = num_perm // nb
+        r = _PERM // nb
         band_rows = "\n      UNION ALL ".join(
             "SELECT id, {b} AS band, {key} AS key FROM sig".format(
                 b=b,

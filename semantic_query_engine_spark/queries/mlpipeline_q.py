@@ -675,8 +675,7 @@ def profile_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data profiling (operators/profile.py): per-column row/non-null/
     distinct counts and min/max over the documents table — the
     governance pass a pipeline runs before trusting a data drop.  Exact
-    distinct here (oracle-checkable); `exact=False` switches to HLL
-    approx_count_distinct at corpus scale with the same schema."""
+    distinct counts, so the result is oracle-checkable."""
     from ..operators.profile import profile
 
     docs = load_table(spark, sf_dir, "documents")

@@ -198,11 +198,11 @@ _SIG_TAIL = f"""
         ON a.band_idx = b.band_idx AND a.band_val = b.band_val
            AND a.id < b.id)
     SELECT id_a, id_b, CAST({_SIG_HAM} AS INT) AS hamming
-    FROM cand WHERE {_SIG_HAM} <= {{max_hamming}}
+    FROM cand WHERE {_SIG_HAM} <= 3
     """
 
 
-def _phash_oracle(max_hamming: int = 3, cap: int = 1200) -> str:
+def _phash_oracle(cap: int = 1200) -> str:
     """Generate the DuckDB twin of the image dHash near-dup pipeline:
     the 9x8 sampled grayscale grid recomputed ANALYTICALLY from the BMP
     generation parameters (encode_bmp's pixel formula — pixel k of a
@@ -222,7 +222,7 @@ def _phash_oracle(max_hamming: int = 3, cap: int = 1200) -> str:
              n_chars + 1
       FROM documents WHERE doc_id < {cap} AND doc_id % 8 = 0),
     {_DHASH_SIGS_CTES},
-    {_SIG_TAIL.format(max_hamming=max_hamming)}"""
+    {_SIG_TAIL}"""
 
 
 # imgs (id, w, h, seed) -> sigs (id, HUGEINT sig): the analytic dHash
@@ -313,7 +313,7 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return banded_hamming_pairs(sigs, max_hamming=3)
 
 
-def _audio_oracle(max_hamming: int = 3, cap: int = 1200) -> str:
+def _audio_oracle(cap: int = 1200) -> str:
     """Generate the DuckDB twin of the audio fingerprint dedup: PCM
     samples recomputed ANALYTICALLY from encode_wav's generation
     formula at quad_step=9 (sample i = (i*37 + i*i*9 + seed) % 65536
@@ -353,7 +353,7 @@ def _audio_oracle(max_hamming: int = 3, cap: int = 1200) -> str:
              SUM(CAST(bit AS HUGEINT)
                  * (CAST(1 AS HUGEINT) << CAST(f AS INT))) AS sig
       FROM bits GROUP BY id),
-    {_SIG_TAIL.format(max_hamming=max_hamming)}"""
+    {_SIG_TAIL}"""
 
 
 @register("multimodal_audio_dedup", oracle=_audio_oracle(cap=_PHASH_CAP))

@@ -144,11 +144,11 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _morton_sql(c1: str, c2: str, bits: int = 16) -> str:
-    """DuckDB twin of the Morton interleave: bit i of c1 lands at 2i,
-    bit i of c2 at 2i+1 — plain &/<<//>> on BIGINT, loop-unrolled."""
+def _morton_sql(c1: str, c2: str) -> str:
+    """DuckDB twin of the 16-bit Morton interleave: bit i of c1 lands at
+    2i, bit i of c2 at 2i+1 — plain &/<<//>> on BIGINT, loop-unrolled."""
     terms = []
-    for i in range(bits):
+    for i in range(16):
         terms.append(f"((({c1} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({c2} >> {i}) & 1) << {2 * i + 1})")
     return " | ".join(terms)

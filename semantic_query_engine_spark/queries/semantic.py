@@ -708,9 +708,9 @@ def semantic_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return selected.select("vec_id", "mmr", "rank")
 
 
-def _srp_matrix(out_dims: int = 16, in_dims: int = 64) -> list[list[int]]:
-    """Deterministic ±1 random-projection matrix: sign(j, i) is the
-    parity of the first md5 byte of "srp|j|i".  Generated in plain
+def _srp_matrix() -> list[list[int]]:
+    """Deterministic 16 x 64 ±1 random-projection matrix: sign(j, i) is
+    the parity of the first md5 byte of "srp|j|i".  Generated in plain
     Python at registration time and embedded as a LITERAL in both the
     Spark plan and the DuckDB oracle, so no cross-engine hash-function
     agreement is ever needed — both engines multiply the same
@@ -722,9 +722,9 @@ def _srp_matrix(out_dims: int = 16, in_dims: int = 64) -> list[list[int]]:
             1
             if hashlib.md5(f"srp|{j}|{i}".encode()).digest()[0] % 2 == 0
             else -1
-            for i in range(in_dims)
+            for i in range(64)
         ]
-        for j in range(out_dims)
+        for j in range(16)
     ]
 
 

@@ -924,12 +924,14 @@ def _disjoint_prefix(tops, complete: bool = True) -> list:
     return batch
 
 
+_BPE_CHECKPOINT_EVERY = 16  # merge jobs between lineage truncations
+
+
 def _bpe_learn(
     spark: SparkSession,
     sf_dir: str,
     n_rounds: int = 3,
     vocab_target: int | None = None,
-    checkpoint_every: int = 16,
     batch: int = 1,
 ):
     """Run up to `n_rounds` driver-coordinated BPE merges, stopping
@@ -953,16 +955,16 @@ def _bpe_learn(
     the realized merges-per-job ratio (~4-6x on this fixture's English
     text at batch=8, where top candidates share letters often).
 
-    checkpoint_every truncates the merge lineage: without it, job r's
-    symbol table is r chained replace() selects over the persisted
-    base, so every pair count re-evaluates ALL prior merges and the
-    analyzer re-walks an r-deep plan — per-round cost grows ~linearly
-    in depth and training is O(n^2) overall (measured: SCALE.md
-    "Round 13: BPE production depth").  A localCheckpoint every
-    K jobs materializes the vocab-sized table (cheap by construction)
-    and resets the chain, making per-round cost flat at production
-    depth.  0 disables (the measured baseline mode); values are
-    identical either way, so the generated oracle is untouched."""
+    Every _BPE_CHECKPOINT_EVERY jobs the merge lineage is truncated:
+    without it, job r's symbol table is r chained replace() selects
+    over the persisted base, so every pair count re-evaluates ALL prior
+    merges and the analyzer re-walks an r-deep plan — per-round cost
+    grows ~linearly in depth and training is O(n^2) overall (measured:
+    SCALE.md "Round 13: BPE production depth").  A localCheckpoint
+    every K jobs materializes the vocab-sized table (cheap by
+    construction) and resets the chain, making per-round cost flat at
+    production depth.  Values are identical either way, so the
+    generated oracle is untouched."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         F.explode(TX.words_of("text")).alias("w0")
@@ -1029,7 +1031,7 @@ def _bpe_learn(
                 scol, F.lit(f" {top['pair']} "), F.lit(f" {merged} ")
             )
         cur = cur.select("w", scol.alias("s"), "freq")
-        if checkpoint_every and jobs % checkpoint_every == 0:
+        if jobs % _BPE_CHECKPOINT_EVERY == 0:
             cur = cur.transform(truncate_eager)
     return base, cur, rows
 

@@ -8,6 +8,7 @@ them.
 
 from __future__ import annotations
 
+import math
 import random
 
 from pyspark.sql import functions as F
@@ -52,6 +53,24 @@ def test_build_index_bit_identical_to_untruncated_composition(spark):
         assert got.columns == want.columns
         rows = lambda df: sorted(tuple(r) for r in df.collect())  # noqa: E731
         assert rows(got) == rows(want), user_col
+
+
+def test_chunk_of_terms_in_every_chunk_embeds_to_zero(spark):
+    """Every term of document 1 occurs in every chunk, so each has IDF
+    0 and the chunk's TF-IDF vector is zero.  x / (||x|| + 1e-9) keeps
+    it zero, with no NaN, as the reference's normalize does: such an
+    index row has norm 0, not 1."""
+    from semantic_query_engine_spark.plans.index_build import build_index
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "beta gamma alpha"), (3, "alpha delta beta")],
+        "doc_id long, text string",
+    )
+    rows = {r.doc_id: r.embedding for r in build_index(docs, chunk_size=16, dim=32).collect()}
+    assert rows[1] == [0.0] * 32
+    for doc_id in (2, 3):
+        norm = math.sqrt(sum(x * x for x in rows[doc_id]))
+        assert abs(norm - 1.0) < 1e-6, (doc_id, norm)
 
 
 def _write_corpus(path) -> None:

@@ -127,3 +127,63 @@ def test_unseen_cluster_sets_compile_no_classes(spark, ivf_build):
         ivf_topk(assigned, centroids, q, k=3, nprobe=2).collect()
         ivfpq_probe(codes, centroids, index, books, q, k=3, nprobe=2).collect()
     assert compiled() - before == 0
+
+
+def _ref_ivf_centroids(X, n_clusters):
+    """build_ivf's coarse k-means as it was before ann.lloyd: the seeded
+    draw, then IVF_ITERS matmul-argmin / mean-update iterations."""
+    from semantic_query_engine_spark.operators.ann import IVF_ITERS, SEED
+
+    rng = np.random.default_rng(SEED)
+    C = X[rng.choice(len(X), size=min(n_clusters, len(X)), replace=False)].copy()
+    for _ in range(IVF_ITERS):
+        cn = (C * C).sum(axis=1)
+        d = cn[None, :] - 2.0 * (X @ C.T)
+        a = d.argmin(axis=1)
+        for c in range(len(C)):
+            members = X[a == c]
+            if len(members):
+                C[c] = members.mean(axis=0)
+    return C
+
+
+def _ref_pq_books(X):
+    """build_pq's codebooks as they were before ann.lloyd: one seeded
+    generator, PQ_M subspaces drawn in order, PQ_ITERS iterations each."""
+    from semantic_query_engine_spark.operators.pq import PQ_ITERS, PQ_K, PQ_M, SEED
+
+    n, dim = X.shape
+    sub = dim // PQ_M
+    rng = np.random.default_rng(SEED)
+    books = []
+    for j in range(PQ_M):
+        S = X[:, j * sub : (j + 1) * sub]
+        C = S[rng.choice(n, size=PQ_K, replace=False)]
+        for _ in range(PQ_ITERS):
+            cn = (C * C).sum(axis=1)
+            d = cn[None, :] - 2.0 * (S @ C.T)
+            assign = d.argmin(axis=1)
+            for c in range(PQ_K):
+                members = S[assign == c]
+                if len(members):
+                    C[c] = members.mean(axis=0)
+        books.append([[float(x) for x in row] for row in C])
+    return books
+
+
+def test_build_ivf_and_build_pq_equal_their_own_lloyd_loops(spark):
+    """build_ivf's centroids and build_pq's codebooks, both trained by
+    the one ann.lloyd loop, equal the loops each function carried
+    before, bit for bit, on the same training sample."""
+    from semantic_query_engine_spark.operators.ann import build_ivf
+    from semantic_query_engine_spark.operators.pq import build_pq
+
+    X = np.random.default_rng(5).normal(size=(300, 16))
+    X /= np.linalg.norm(X, axis=1, keepdims=True) + 1e-9
+    assert build_pq(None, sample_X=X) == _ref_pq_books(X)
+    index = spark.createDataFrame(
+        [(i, [float(x) for x in X[i]]) for i in range(20)], "vec_id long, embedding array<double>"
+    )
+    _, centroids = build_ivf(index, n_clusters=6, sample_X=X)
+    got = [r.centroid for r in centroids.orderBy("cluster_id").collect()]
+    assert got == [[float(x) for x in c] for c in _ref_ivf_centroids(X, 6)]

@@ -2,9 +2,9 @@
 tools/scale_run.py.  Deliberately OUTSIDE the library package: these
 helpers mutate global JVM state in ways library code must never do
 (ADVICE r5 — release_persistent_rdds unpersists EVERY pinned RDD,
-including caches owned by api.py's SearchIndex and localCheckpoint
-blocks backing DataFrames a caller still holds, which are not
-recomputable)."""
+including the localCheckpoint blocks behind the base and delta
+segments of api.SemanticQueryEngine's index and behind DataFrames a
+caller still holds, which are not recomputable)."""
 
 from __future__ import annotations
 
@@ -19,8 +19,8 @@ def release_persistent_rdds(spark: SparkSession) -> int:
     lifetime — measured to slow later queries in a long session up to
     4-9x once storage squeezes execution memory.  Unpersisting a
     localCheckpoint makes ITS DataFrame unusable (checkpoint blocks are
-    not recomputable), and a library .cache() (e.g. api.SearchIndex)
-    is silently dropped — so call this only between queries whose
+    not recomputable; the facade's base and delta checkpoints are
+    among them) — so call this only between queries whose
     results have been fully consumed, never from library code."""
     sc = spark.sparkContext._jsc.sc()
     rdds = sc.getPersistentRDDs().toList()

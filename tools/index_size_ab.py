@@ -20,7 +20,7 @@ and, over the asks after the first three, the median CPU seconds of the
 process tree (perfbench/cpu.py), the median wall seconds and the tasks
 per ask; a digest of the prompts shows both sides retrieved the same.
 Over the pairs: both medians, the parent's interquartile range and the
-pairs the change wins (lower is better).
+pairs the change wins (lower is better), printed by perf_ab.summarize.
 """
 
 from __future__ import annotations
@@ -152,6 +152,9 @@ def main(argv=None) -> int:
         return 0
     if not (args.parent and args.change):
         ap.error("PARENT_DIR and CHANGE_DIR are required")
+    # not at the top: perf_ab imports the package of its own checkout,
+    # and a --run process must import the package of the checkout it runs in
+    from perf_ab import summarize
 
     sys.path.insert(0, os.path.join(os.path.abspath(args.change), "perfbench"))
     import gen
@@ -178,16 +181,7 @@ def main(argv=None) -> int:
     same = sum(p["parent"]["answers_sha"] == p["change"]["answers_sha"] for p in clean)
     print(f"{args.docs} docs: {len(clean)} of {len(pairs)} pairs summarized, "
           f"answers equal in {same}/{len(clean)}")
-    for k in METRICS:
-        if not clean:
-            break
-        a = [p["parent"][k] for p in clean]
-        b = [p["change"][k] for p in clean]
-        q = statistics.quantiles(a, n=4) if len(a) > 1 else [a[0], a[0], a[0]]
-        ma, mb = statistics.median(a), statistics.median(b)
-        wins = sum(y < x for x, y in zip(a, b))
-        print(f"  {k}: median {ma:.4f} -> {mb:.4f} ({(mb - ma) / ma:+.1%}), "
-              f"parent IQR {q[2] - q[0]:.4f}, change lower in {wins}/{len(clean)} pairs")
+    summarize(clean, METRICS)
     return 0 if len(clean) == len(pairs) and same == len(clean) else 1
 
 

@@ -75,6 +75,19 @@ def _quartiles(xs: list[float]) -> tuple[float, float]:
     return q[0], q[2]
 
 
+def summarize(pairs: list[dict], metrics) -> None:
+    """Print, per metric over the pairs, both medians, the parent's
+    interquartile range and the pairs in which the change is lower."""
+    for k in metrics if pairs else ():
+        a = [p["parent"][k] for p in pairs]
+        b = [p["change"][k] for p in pairs]
+        q1, q3 = _quartiles(a)
+        ma, mb = statistics.median(a), statistics.median(b)
+        wins = sum(y < x for x, y in zip(a, b))
+        print(f"  {k}: median {ma:.4f} -> {mb:.4f} ({(mb - ma) / ma:+.1%}), "
+              f"parent IQR {q3 - q1:.4f}, change lower in {wins}/{len(pairs)} pairs")
+
+
 def _fmt(run: dict, metrics: tuple[str, ...]) -> str:
     if "tail" in run:
         return "no result JSON on the last line:\n" + run["tail"]
@@ -116,16 +129,7 @@ def main(argv=None) -> int:
     ]
     print(f"{args.workload}: {len(clean)} of {len(pairs)} pairs summarized "
           f"(left out: runs that wrote the archive or are not correct)")
-    for k in metrics:
-        if not clean:
-            break
-        a = [p["parent"][k] for p in clean]
-        b = [p["change"][k] for p in clean]
-        q1, q3 = _quartiles(a)
-        ma, mb = statistics.median(a), statistics.median(b)
-        wins = sum(y < x for x, y in zip(a, b))
-        print(f"  {k}: median {ma:.4f} -> {mb:.4f} ({(mb - ma) / ma:+.1%}), "
-              f"parent IQR {q3 - q1:.4f}, change lower in {wins}/{len(clean)} pairs")
+    summarize(clean, metrics)
     return 0 if all(r["correct"] for p in pairs for r in p.values()) else 1
 
 
