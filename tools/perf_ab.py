@@ -78,7 +78,9 @@ def _quartiles(xs: list[float]) -> tuple[float, float]:
 def summarize(pairs: list[dict], metrics) -> None:
     """Print, per metric over the pairs, both medians, the parent's
     interquartile range and the pairs in which the change is lower."""
-    for k in metrics if pairs else ():
+    if not pairs:
+        return
+    for k in metrics:
         a = [p["parent"][k] for p in pairs]
         b = [p["change"][k] for p in pairs]
         q1, q3 = _quartiles(a)
